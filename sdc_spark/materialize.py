@@ -88,37 +88,7 @@ def materialize(df: DataFrame, truncate: bool = False) -> DataFrame:
     localCheckpoint (truncated; executor loss requires a restart — the
     trade the loop cannot avoid, since lineage-kept persist is unusable
     for it). Single-pass DAG-reuse sites keep the default."""
-    spark = df.sparkSession
-    mode = spark.conf.get(MODE_KEY, "localCheckpoint")
-    if mode not in _VALID:
-        raise ValueError(f"{MODE_KEY}={mode!r}; expected one of {_VALID}")
-    if mode == "localCheckpoint":
-        out = df.localCheckpoint(eager=True)
-        _record_plan(df)
-        return out
-    if mode == "persist":
-        if truncate:
-            if _checkpoint_dir(spark) is not None:
-                out = df.checkpoint(eager=True)
-            else:
-                out = df.localCheckpoint(eager=True)
-            _record_plan(df)
-            return out
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()  # eager: all branches must see one computation
-        _record_plan(out)
-        return out
-    # mode == "checkpoint"
-    if _checkpoint_dir(df.sparkSession) is None:
-        raise ValueError(
-            f"materialize mode 'checkpoint' needs {DIR_KEY} or "
-            "sparkContext.setCheckpointDir()"
-        )
-    out = df.checkpoint(eager=True)
-    _record_plan(df)
-    return out
+    return _materialize(df, truncate, eager=True)
 
 
 def materialize_lazy(df: DataFrame, truncate: bool = False) -> DataFrame:
@@ -138,29 +108,34 @@ def materialize_lazy(df: DataFrame, truncate: bool = False) -> DataFrame:
     ``materialize``: localCheckpoint/checkpoint have native lazy forms;
     ``persist`` without truncate is naturally lazy; ``persist`` with
     truncate escalates exactly like the eager path."""
+    return _materialize(df, truncate, eager=False)
+
+
+def _materialize(df: DataFrame, truncate: bool, eager: bool) -> DataFrame:
+    """The one mode dispatch behind ``materialize`` (eager) and
+    ``materialize_lazy``: plain ``persist`` pins in the cache (eager adds
+    the computing ``count()``); every other case is a checkpoint, reliable
+    when a checkpoint dir resolves (required in ``checkpoint`` mode, the
+    escalation target of ``persist`` + ``truncate``), local otherwise."""
     spark = df.sparkSession
     mode = spark.conf.get(MODE_KEY, "localCheckpoint")
     if mode not in _VALID:
         raise ValueError(f"{MODE_KEY}={mode!r}; expected one of {_VALID}")
-    if mode == "localCheckpoint":
-        out = df.localCheckpoint(eager=False)
-    elif mode == "persist":
-        if truncate:
-            if _checkpoint_dir(spark) is not None:
-                out = df.checkpoint(eager=False)
-            else:
-                out = df.localCheckpoint(eager=False)
-        else:
-            from pyspark import StorageLevel
+    if mode == "persist" and not truncate:
+        from pyspark import StorageLevel
 
-            out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    else:  # mode == "checkpoint"
-        if _checkpoint_dir(spark) is None:
-            raise ValueError(
-                f"materialize mode 'checkpoint' needs {DIR_KEY} or "
-                "sparkContext.setCheckpointDir()"
-            )
-        out = df.checkpoint(eager=False)
+        out = df.persist(StorageLevel.MEMORY_AND_DISK)
+        if eager:
+            out.count()  # eager: all branches must see one computation
+        _record_plan(out)
+        return out
+    reliable = mode != "localCheckpoint" and _checkpoint_dir(spark) is not None
+    if mode == "checkpoint" and not reliable:
+        raise ValueError(
+            f"materialize mode 'checkpoint' needs {DIR_KEY} or "
+            "sparkContext.setCheckpointDir()"
+        )
+    out = df.checkpoint(eager=eager) if reliable else df.localCheckpoint(eager=eager)
     _record_plan(df)
     return out
 

@@ -31,25 +31,6 @@ from sdc_spark.materialize import unmaterialize as _unmaterialize
 from sdc_spark.operators.scan import spread_scan
 
 
-def _materialize_iter(df):
-    """Per-round materialization for the iterative loops below: lineage
-    MUST be truncated every round (round N's plan embeds round N-1's, so
-    kept lineage doubles Catalyst's analysis cost per iteration — under
-    persist mode this escalates to checkpoint/localCheckpoint; see
-    sdc_spark.materialize)."""
-    return _materialize(df, truncate=True)
-
-
-def _materialize_iter_lazy(df):
-    """Lazy twin of ``_materialize_iter`` for loops whose convergence
-    aggregate immediately follows the round materialization: the
-    aggregate IS the materializing action, fusing two jobs (checkpoint
-    then agg-over-blocks) into one per round (guide §1.2 — the loops are
-    driver-fixed-cost bound at bench scale: profiled ~120 ms of job gap
-    per job on dedup_components_star)."""
-    return _materialize_lazy(df, truncate=True)
-
-
 def normalized_text(col) -> Column:
     """Canonical text form for hashing: lowercase, collapsed whitespace."""
     c = F.col(col) if isinstance(col, str) else col
@@ -651,154 +632,15 @@ def dedup_components(
 ) -> DataFrame:
     """Connected components over duplicate pairs — the grouping step that
     turns pairwise near-dup hits into dedup clusters (keep min-id per
-    component, drop the rest).
+    component, drop the rest). Output (doc, component) with component =
+    min node id in the component, deterministic; ids may be any
+    orderable type (component = lexicographic min for strings).
 
-    Pregel-lite min-label propagation: every node starts labeled with its
-    own id; each round takes the min of its label and its neighbors',
-    until a fixpoint (driver-side convergence check — the loop count is
-    the cluster diameter, tiny for dup clusters). Deterministic:
-    component id = min doc id in the component.
-
-    Round mechanics (r11 restructure — same fixpoint, half the per-round
-    fixed cost): the edge set carries a SELF-LOOP per node, so one round
-    is a single join + min-aggregate referencing the label frame ONCE
-    (min over self ∪ neighbors == least(own, min(neighbors))); TWO
-    rounds are fused per ``localCheckpoint`` + convergence check, since
-    the unmaterialized 2-round chain is still linear (each subplan
-    consumed once — no duplicated work), while checkpoints and
-    convergence jobs are pure driver-side fixed cost at scale.
-    Convergence: labels are per-node monotone non-increasing, so the
-    label SUM (exact decimal) is strictly decreasing until fixpoint —
-    equal consecutive sums == no node changed. An extra no-op round
-    inside the last fused block is a no-op by idempotence. Because
-    sum-equality observes the fixpoint one fused block late, ``max_iter``
-    should exceed the expected component diameter by ~2; a final
-    uncounted single-round probe rescues the boundary case before the
-    loud failure. Ids must be INTEGRAL (checked) — the exact-sum check
-    is not injective for strings/floats."""
-    # one reference to `pairs` (it usually arrives UN-materialized — e.g.
-    # minhash's verify subtree — so N references would replay it N times):
-    # each input pair explodes into both edge directions plus both
-    # endpoints' self-loops, then one distinct. The self-loops make a
-    # propagation round's min over the in-neighborhood include the node's
-    # own label, removing the second reference to the label frame.
-    edges_self = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
-                    F.struct(F.col(b_col).alias("u"), F.col(a_col).alias("v")),
-                    F.struct(F.col(a_col).alias("u"), F.col(a_col).alias("v")),
-                    F.struct(F.col(b_col).alias("u"), F.col(b_col).alias("v")),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
-        .transform(_materialize)
-    )
-    # every node carries a self-loop, so the u side of the checkpointed
-    # edge set IS the node set
-    labels = edges_self.select("u").distinct().select("u", F.col("u").alias("lbl"))
-    # The sum-equality convergence check below is only sound for INTEGRAL
-    # ids: a string id either throws under ANSI (CAST_INVALID_INPUT) or
-    # casts to all-null with ANSI off — the None sum would declare
-    # convergence after one fused block and return silently WRONG
-    # components; zero-padded numeric strings ('007' vs '7') alias under
-    # the non-injective cast; float ids truncate. Fail loudly instead
-    # (the operator's existing diameter-failure contract) — callers with
-    # non-integral ids should hash/recode them to longs first.
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    lbl_type = labels.schema["lbl"].dataType
-    if not isinstance(lbl_type, (ByteType, ShortType, IntegerType, LongType)):
-        raise TypeError(
-            "dedup_components: id/label column must be an integral type "
-            f"(got {lbl_type.simpleString()}) — the exact label-sum "
-            "convergence check is not injective for non-integral ids; "
-            "recode ids to longs (e.g. xxhash64) before calling."
-        )
-    prev_snap = None
-    prev_sum = None
-    converged = False
-    rounds = 0
-    while rounds < max_iter:
-        cur = labels
-        for _ in range(2):  # two propagation rounds per checkpoint
-            cur = (
-                edges_self.join(
-                    cur.select(F.col("u").alias("v"), F.col("lbl").alias("vlbl")),
-                    "v",
-                )
-                .groupBy("u")
-                .agg(F.min("vlbl").alias("lbl"))
-            )
-            rounds += 1
-            if rounds >= max_iter:
-                break
-        # lazy + agg = ONE job per fused block: the sum is the action
-        # that computes and pins the round's labels (checkpoint-then-agg
-        # was two jobs plus an inter-job driver gap)
-        snap = cur.transform(_materialize_iter_lazy)
-        s = snap.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
-        labels = snap
-        # persist-mode hygiene: the superseded round's blocks are never
-        # read again — release them so unbounded iteration can't
-        # accumulate cached state (no-op under the checkpoint modes)
-        if prev_snap is not None:
-            _unmaterialize(prev_snap)
-        prev_snap = snap
-        # s is None only for an EMPTY label set (sum over zero rows) —
-        # trivially a fixpoint; otherwise equal consecutive exact sums
-        # == no node changed (monotone non-increasing labels)
-        if s is None or (prev_sum is not None and s == prev_sum):
-            converged = True
-            break
-        prev_sum = s
-    if not converged:
-        # Sum-equality observes the fixpoint one block LATE (a block must
-        # change nothing for the sums to match), so a diameter within ~2
-        # of max_iter would raise spuriously even though the labels are
-        # already correct. One extra single-round probe (not counted
-        # against max_iter) distinguishes "at the fixpoint, just not yet
-        # observed" from a genuinely under-iterated component.
-        probe = (
-            edges_self.join(
-                labels.select(F.col("u").alias("v"), F.col("lbl").alias("vlbl")),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("vlbl").alias("lbl"))
-            .agg(F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"))
-            .first()["s"]
-        )
-        converged = probe is None or probe == prev_sum
-    if not converged:
-        # propagation moves a label ONE hop per round, so a component whose
-        # diameter exceeds max_iter would silently mislabel its far nodes —
-        # fail loudly and point at the diameter-independent alternative
-        raise RuntimeError(
-            f"dedup_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter or use "
-            "components_star, which converges in O(log n) rounds."
-        )
-    return labels.select(F.col("u").alias("doc"), F.col("lbl").alias("component"))
-
-
-def components_star(
-    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b", max_iter: int = 25
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm). Same contract as ``dedup_components``:
-    output (doc, component) with component = min node id, deterministic.
-
-    Why a second implementation: min-label propagation runs for
-    *diameter* rounds — fine for near-clique dup clusters, but a 100-TB
-    corpus also produces chain-shaped components (temporally drifting
-    near-dup chains, redirect chains), where diameter is unbounded.
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14 — public algorithm).
+    Min-label propagation would need *diameter* rounds, and a 100-TB
+    corpus produces chain-shaped components (temporally drifting near-dup
+    chains, redirect chains) whose diameter is unbounded.
     Large-star/small-star halves tree heights every alternation and
     converges in O(log n) rounds regardless of diameter: large-star
     re-hangs every strictly-larger neighbor of each center onto the
@@ -865,7 +707,9 @@ def components_star(
             .filter(F.col("n") != F.col("m"))
             .distinct()
             .select(F.col("n").alias("u"), F.col("m").alias("v"))
-            .transform(_materialize_iter_lazy)
+            # truncated every round: round N's plan embeds round N-1's, so
+            # kept lineage would double Catalyst's analysis cost per round
+            .transform(lambda df: _materialize_lazy(df, truncate=True))
         )
         # set fingerprint: edges are distinct, so count + bit_xor of row
         # hashes identifies the set (xor never overflows under ANSI mode).
@@ -890,11 +734,12 @@ def components_star(
     if not converged:
         # a non-fixpoint edge set can still be multi-level (a node hung on
         # a non-minimum), i.e. labels would be WRONG, not merely stale —
-        # mirror dedup_components' loud failure instead of returning them
+        # fail loudly instead of returning them
         raise RuntimeError(
-            f"components_star did not reach a fixpoint in {max_iter} "
-            "alternations (expected O(log n)); raise max_iter — returning "
-            "non-converged labels would mislabel components."
+            f"dedup_components did not converge: the edge set did not reach "
+            f"a fixpoint in {max_iter} alternations (expected O(log n)); "
+            "raise max_iter — returning non-converged labels would mislabel "
+            "components."
         )
     # node set from the MATERIALIZED base (self-pairs preserved isolated
     # nodes), not from `pairs` — the old union replayed the whole pair
@@ -2064,7 +1909,7 @@ def _delete_from_substring_index_locked(
     ids = removed_docs.select(F.col(id_col).alias("doc")).distinct()
     if spark.catalog.tableExists(deldocs_t):
         ids = ids.join(spark.table(deldocs_t), "doc", "left_anti")
-    fresh_ids = _materialize_iter(ids)
+    fresh_ids = _materialize(ids, truncate=True)
     batch = removed_docs.join(
         fresh_ids.select(F.col("doc").alias(id_col)), id_col, "left_semi"
     )
@@ -2105,7 +1950,7 @@ def _delete_from_substring_index_locked(
         .filter(F.col("bcnt") + F.col("dcnt") <= 0)
         .select("h")
     )
-    staged_dead = _materialize_iter(dead)
+    staged_dead = _materialize(dead, truncate=True)
     dead_t = f"sub_dead_{name}"
     spark.sql(f"DROP TABLE IF EXISTS {dead_t}")
     import shutil

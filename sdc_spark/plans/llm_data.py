@@ -9,7 +9,7 @@ hash-match the exact all-pairs SQL; float-scored outputs emit ids only.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sdc_spark.functions import text as stext
@@ -55,6 +55,50 @@ _GRAMS_SQL = r"""
     )
 """
 
+# Shared DuckDB connected-components CTE over _GRAMS_SQL's verified pairs
+# (J >= 0.8): recursive transitive closure, component = min reachable id —
+# the SQL twin of operators.dedup.dedup_components. Needs WITH RECURSIVE.
+_COMPONENTS_SQL = """
+    e AS (
+        SELECT doc_a AS u, doc_b AS v FROM pairs WHERE jac >= 0.8
+        UNION ALL
+        SELECT doc_b, doc_a FROM pairs WHERE jac >= 0.8
+    ),
+    walk(u, lbl) AS (
+        SELECT u, u FROM (SELECT DISTINCT u FROM e)
+        UNION
+        SELECT e.u, w.lbl FROM e JOIN walk w ON e.v = w.u
+    ),
+    comp AS (SELECT u AS doc, min(lbl) AS component FROM walk GROUP BY u)
+"""
+
+_COMPONENTS_ORACLE = (
+    f"WITH RECURSIVE {_GRAMS_SQL}, {_COMPONENTS_SQL} SELECT doc, component FROM comp"
+)
+
+# Re-injected duplicates carry ``doc_id + DUPE_ID_OFFSET`` (dedup_exact,
+# dedup_containment, pipeline_dump_release); the oracles inject the same
+# offset, and the release query's held-out guard tells originals from
+# copies by ``doc_id < DUPE_ID_OFFSET``.
+DUPE_ID_OFFSET = 1_000_000
+
+
+def offset_dupe_id(doc_id: Column) -> Column:
+    """``doc_id + DUPE_ID_OFFSET`` for a re-injected copy. Raises inside
+    the copy's own projection (no extra job) when ``doc_id`` reaches the
+    offset: the copy's id would then alias a real doc id, and the
+    release query's ``doc_id < DUPE_ID_OFFSET`` held-out guard would
+    silently drop the original. Every held-out doc (doc_id % 50 == 0) is
+    in the copied slice (doc_id % 10 == 0), so the guard is covered."""
+    return F.when(doc_id < DUPE_ID_OFFSET, doc_id + DUPE_ID_OFFSET).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"doc_id must be < DUPE_ID_OFFSET={DUPE_ID_OFFSET}, got "),
+                doc_id.cast("string"),
+            )
+        )
+    )
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, sf_dir, name)
@@ -67,20 +111,20 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     shifted id — groups of size 2 must keep the original id."""
     doc = _t(spark, sf_dir, "documents")
     dupes = doc.filter(F.col("doc_id") % 10 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 1000000
+        "doc_id", offset_dupe_id(F.col("doc_id"))
     )
     return sdedup.exact_dedup(doc.unionByName(dupes), "text", "doc_id")
 
 
 oracle(
     "dedup_exact",
-    r"""
+    rf"""
     SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS content_hash,
            min(doc_id) AS keep_id, count(*) AS n_copies
     FROM (
         SELECT doc_id, text FROM documents
         UNION ALL
-        SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0
+        SELECT doc_id + {DUPE_ID_OFFSET}, text FROM documents WHERE doc_id % 10 = 0
     )
     GROUP BY 1
     """,
@@ -132,7 +176,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes)."""
     doc = _t(spark, sf_dir, "documents").select("doc_id", "text")
     wrapped = doc.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
+        offset_dupe_id(F.col("doc_id")).alias("doc_id"),
         F.concat(
             F.col("text"),
             F.lit(
@@ -161,11 +205,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 oracle(
     "dedup_containment",
-    r"""
+    rf"""
     WITH corpus AS (
         SELECT doc_id, text FROM documents
         UNION ALL
-        SELECT doc_id + 1000000,
+        SELECT doc_id + {DUPE_ID_OFFSET},
                text || ' standard footer legal notice applies contact site admin'
                     || ' for removal requests all rights reserved'
         FROM documents WHERE doc_id % 10 = 0
@@ -1167,68 +1211,22 @@ oracle(
 
 
 @query("dedup_components")
+@query("dedup_components_star")
 def dedup_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over verified near-dup pairs (J ≥ 0.8) — the
-    cluster-grouping step after pair finding: iterative min-label
-    propagation (Pregel-lite, one shuffle per round, lineage truncated per
-    iteration). Oracle: DuckDB recursive-CTE transitive closure."""
+    cluster-grouping step after pair finding: alternating large-star/
+    small-star (Kiveris et al. SoCC'14), O(log n) rounds whatever the
+    component diameter, lineage truncated per round. Oracle: DuckDB
+    recursive-CTE transitive closure. Also registered as
+    `dedup_components_star`, the name the bench history and the
+    dedup_index benchmark workload key on."""
     pairs = sdedup.minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), "text", "doc_id", threshold=0.8
     )
     return sdedup.dedup_components(pairs)
 
 
-oracle(
-    "dedup_components",
-    f"""
-    WITH RECURSIVE {_GRAMS_SQL},
-    e AS (
-        SELECT doc_a AS u, doc_b AS v FROM pairs WHERE jac >= 0.8
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs WHERE jac >= 0.8
-    ),
-    walk(u, lbl) AS (
-        SELECT u, u FROM (SELECT DISTINCT u FROM e)
-        UNION
-        SELECT e.u, w.lbl FROM e JOIN walk w ON e.v = w.u
-    )
-    SELECT u AS doc, min(lbl) AS component FROM walk GROUP BY u
-    """,
-)
-
-
-_COMPONENTS_ORACLE = f"""
-    WITH RECURSIVE {_GRAMS_SQL},
-    e AS (
-        SELECT doc_a AS u, doc_b AS v FROM pairs WHERE jac >= 0.8
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs WHERE jac >= 0.8
-    ),
-    walk(u, lbl) AS (
-        SELECT u, u FROM (SELECT DISTINCT u FROM e)
-        UNION
-        SELECT e.u, w.lbl FROM e JOIN walk w ON e.v = w.u
-    )
-    SELECT u AS doc, min(lbl) AS component FROM walk GROUP BY u
-    """
-
-
-@query("dedup_components_star")
-def dedup_components_star_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al. SoCC'14) over the same verified near-dup pairs as
-    `dedup_components` — the diameter-INDEPENDENT scale path: min-label
-    propagation needs diameter rounds (chain-shaped components at 100 TB
-    make that unbounded, and it now fails loudly past max_iter), where
-    the star alternation halves tree heights every round and converges
-    in O(log n) rounds. Identical deterministic contract (component =
-    min doc id), same recursive-CTE oracle."""
-    pairs = sdedup.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", threshold=0.8
-    )
-    return sdedup.components_star(pairs)
-
-
+oracle("dedup_components", _COMPONENTS_ORACLE)
 oracle("dedup_components_star", _COMPONENTS_ORACLE)
 
 
@@ -1447,7 +1445,7 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster size distribution — the dedup audit readout
     operators teams actually look at (how much of the corpus sits in
     2-clusters vs mega-clusters). Derived from the connected components
-    (Pregel-lite min-label, one shuffle per round); the histogram itself
+    (large-star/small-star, O(log n) rounds); the histogram itself
     is two tiny aggregates over one row per doc."""
     doc = _t(spark, sf_dir, "documents")
     pairs = sdedup.minhash_lsh_pairs(doc, "text", "doc_id", threshold=0.8)
@@ -1463,18 +1461,7 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 oracle(
     "dedup_cluster_sizes",
     f"""
-    WITH RECURSIVE {_GRAMS_SQL},
-    e AS (
-        SELECT doc_a AS u, doc_b AS v FROM pairs WHERE jac >= 0.8
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs WHERE jac >= 0.8
-    ),
-    walk(u, lbl) AS (
-        SELECT u, u FROM (SELECT DISTINCT u FROM e)
-        UNION
-        SELECT e.u, w.lbl FROM e JOIN walk w ON e.v = w.u
-    ),
-    comp AS (SELECT u AS doc, min(lbl) AS component FROM walk GROUP BY u),
+    WITH RECURSIVE {_GRAMS_SQL}, {_COMPONENTS_SQL},
     csize AS (SELECT component, count(*) AS cluster_size FROM comp GROUP BY component)
     SELECT cluster_size, count(*) AS n_clusters
     FROM csize GROUP BY cluster_size ORDER BY cluster_size
@@ -1767,18 +1754,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 oracle(
     "split_leakage_safe",
     f"""
-    WITH RECURSIVE {_GRAMS_SQL},
-    e AS (
-        SELECT doc_a AS u, doc_b AS v FROM pairs WHERE jac >= 0.8
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs WHERE jac >= 0.8
-    ),
-    walk(u, lbl) AS (
-        SELECT u, u FROM (SELECT DISTINCT u FROM e)
-        UNION
-        SELECT e.u, w.lbl FROM e JOIN walk w ON e.v = w.u
-    ),
-    comp AS (SELECT u AS doc, min(lbl) AS component FROM walk GROUP BY u),
+    WITH RECURSIVE {_GRAMS_SQL}, {_COMPONENTS_SQL},
     r AS (
         SELECT d.doc_id, coalesce(c.component, d.doc_id) AS rep
         FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc
@@ -1820,18 +1796,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 oracle(
     "dedup_keep_best_quality",
     f"""
-    WITH RECURSIVE {_GRAMS_SQL},
-    e AS (
-        SELECT doc_a AS u, doc_b AS v FROM pairs WHERE jac >= 0.8
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs WHERE jac >= 0.8
-    ),
-    walk(u, lbl) AS (
-        SELECT u, u FROM (SELECT DISTINCT u FROM e)
-        UNION
-        SELECT e.u, w.lbl FROM e JOIN walk w ON e.v = w.u
-    ),
-    comp AS (SELECT u AS doc, min(lbl) AS component FROM walk GROUP BY u),
+    WITH RECURSIVE {_GRAMS_SQL}, {_COMPONENTS_SQL},
     c AS (
         SELECT doc_id,
                length(text) AS n_chars,

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from sdc_spark.functions import text as stext
 from sdc_spark.operators import dedup as sdedup
+from sdc_spark.plans.llm_data import DUPE_ID_OFFSET, offset_dupe_id
 from sdc_spark.plans.registry import oracle, query
 from sdc_spark.sources.readers import read_table
 
@@ -61,8 +62,10 @@ def pipeline_dump_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sdc_spark.operators.scan import spread_scan
 
     doc = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # offset_dupe_id raises on doc_id >= DUPE_ID_OFFSET, which also
+    # covers the held-out guard below (every doc_id % 50 doc is copied)
     dupes = doc.filter(F.col("doc_id") % 10 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 1000000
+        "doc_id", offset_dupe_id(F.col("doc_id"))
     )
     # Every stage frame is materialized: the manifest makes each one a
     # MULTI-consumer node (its own count/sum row AND the next gate), and
@@ -117,12 +120,12 @@ def pipeline_dump_release(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The held-out slice is read from the MATERIALIZED corpus, not the
     # parquet file: it is exactly the original docs with doc_id%50==0
-    # (re-injected dupes carry +1000000 ids, so the id-range guard
-    # excludes them; 1000000%50==0 would otherwise alias dupes in), and
+    # (re-injected dupes carry +DUPE_ID_OFFSET ids, so the id-range guard
+    # excludes them; DUPE_ID_OFFSET%50==0 would otherwise alias dupes in), and
     # the corpus blocks already hold their text — re-scanning the
     # one-file parquet cost a fourth 1-task full-text scan per run.
     bench = corpus.filter(
-        (F.col("doc_id") % 50 == 0) & (F.col("doc_id") < 1000000)
+        (F.col("doc_id") % 50 == 0) & (F.col("doc_id") < DUPE_ID_OFFSET)
     ).select("doc_id", "text")
     contaminated = sdedup.decontaminate(
         s2, bench, "text", "doc_id", ngram=8
@@ -172,11 +175,11 @@ def pipeline_dump_release(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 oracle(
     "pipeline_dump_release",
-    r"""
+    rf"""
     WITH RECURSIVE corpus AS (
         SELECT doc_id, text FROM documents
         UNION ALL
-        SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0
+        SELECT doc_id + {DUPE_ID_OFFSET}, text FROM documents WHERE doc_id % 10 = 0
     ),
     keep1 AS (
         SELECT min(doc_id) AS doc_id

@@ -58,6 +58,15 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # "RDD n was locally checkpointed, its lineage has been truncated and
+    # cannot be recomputed after unpersisting" is logged every time
+    # unmaterialize releases a localCheckpoint frame — the intended life
+    # cycle, so only that logger is raised to ERROR
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.rdd.MapPartitionsRDD",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark
 
 

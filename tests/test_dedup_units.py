@@ -59,49 +59,62 @@ def test_normalized_text(spark):
 
 
 def test_components_star_matches_ground_truth(spark):
-    """Both components implementations pinned against a union-find ground
-    truth on adversarial shapes: a 100-node chain (diameter stresses LP's
-    round count; the re-hanging stresses LSS), a clique, singleton
-    self-pairs, and a seeded random graph — one edge list, so
-    cross-component interference is exercised too. Also pins that LP
-    FAILS LOUDLY when max_iter < diameter instead of silently returning
-    mislabeled far nodes (the bug this test originally caught)."""
+    """dedup_components (large-star/small-star) pinned against a
+    union-find ground truth on adversarial shapes: a 100-node chain
+    (diameter 99 — the re-hanging has to halve it), a clique, singleton
+    self-pairs, a hub (one center with 600 leaves, component min a leaf —
+    the single-giant-component shape) and a seeded random graph — one
+    edge list, so cross-component interference is exercised too. Then a
+    string-id graph (component = lexicographic min) and an empty pair
+    frame. Also pins that an under-iterated run FAILS LOUDLY instead of
+    silently returning mislabeled far nodes."""
     import random
 
     import pytest
 
-    from sdc_spark.operators.dedup import components_star, dedup_components
+    from sdc_spark.operators.dedup import dedup_components
+
+    def ground_truth(edges):
+        parent = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        return {(n, find(n)) for n in parent}
+
+    def components(edges, schema):
+        df = spark.createDataFrame(edges, schema)
+        return {(r.doc, r.component) for r in dedup_components(df).collect()}
 
     rng = random.Random(7)
     edges = [(i, i + 1) for i in range(100, 200)]          # chain, comp min 100
     edges += [(a, b) for a in range(300, 306) for b in range(a + 1, 306)]  # clique
     edges += [(500, 500), (501, 501)]                      # isolated self-pairs
+    edges += [(2300, leaf) for leaf in range(2000, 2601) if leaf != 2300]  # hub
     nodes = list(range(1000, 1080))
     edges += [tuple(rng.sample(nodes, 2)) for _ in range(60)]  # random graph
     rng.shuffle(edges)
+    assert components(edges, "doc_a long, doc_b long") == ground_truth(edges)
 
-    parent: dict[int, int] = {}
+    str_edges = [("pear", "fig"), ("fig", "apple"), ("kiwi", "date"),
+                 ("lime", "lime"), ("plum", "kiwi")]
+    got = components(str_edges, "doc_a string, doc_b string")
+    assert got == ground_truth(str_edges)
+    assert dict(got)["pear"] == "apple" and dict(got)["plum"] == "date"
 
-    def find(x: int) -> int:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    truth = {(n, find(n)) for n in parent}
+    assert components([], "doc_a long, doc_b long") == set()
 
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    ss = {(r.doc, r.component) for r in components_star(df).collect()}
-    assert ss == truth
-    lp = {(r.doc, r.component) for r in dedup_components(df, max_iter=150).collect()}
-    assert lp == truth
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_components(df, max_iter=5).collect()
+    with pytest.raises(RuntimeError, match="did not reach a fixpoint"):
+        dedup_components(df, max_iter=3).collect()
 
 
 def test_lsh_params_for_threshold_properties():

@@ -155,8 +155,8 @@ def test_ann_ivf_recall(spark, sf_dir):
 
 
 def test_dedup_components_chain(spark):
-    """Min-label propagation must traverse chains (1-2, 2-3, 3-4 → one
-    component labeled 1) and keep disjoint clusters apart."""
+    """Components must traverse chains (1-2, 2-3, 3-4 → one component
+    labeled 1) and keep disjoint clusters apart."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
         "doc_a long, doc_b long",
@@ -169,6 +169,28 @@ def test_dedup_components_chain(spark):
         (10, 10), (11, 10),
         (20, 20), (21, 20), (22, 20),
     }
+
+
+def test_dupe_id_offset_collision_fails_loudly(spark, tmp_path):
+    """A doc_id at or past DUPE_ID_OFFSET would make a re-injected copy
+    alias a real id and let the release query's held-out guard
+    (doc_id < DUPE_ID_OFFSET) silently drop the original: both the
+    release pipeline and dedup_exact must raise instead."""
+    import pytest
+    from pyspark.errors import SparkRuntimeException
+
+    from sdc_spark.plans.llm_data import DUPE_ID_OFFSET, dedup_exact
+    from sdc_spark.plans.pipeline_release import pipeline_dump_release
+
+    spark.createDataFrame(
+        [(10, "the quick brown fox"), (11, "jumps over the lazy dog"),
+         (DUPE_ID_OFFSET + 50, "a held-out doc past the offset")],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    with pytest.raises(SparkRuntimeException, match="DUPE_ID_OFFSET"):
+        pipeline_dump_release(spark, str(tmp_path)).collect()
+    with pytest.raises(SparkRuntimeException, match="DUPE_ID_OFFSET"):
+        dedup_exact(spark, str(tmp_path)).collect()
 
 
 def test_pack_sequences_deterministic_and_exact(spark):

@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from sdc_spark.materialize import DIR_KEY, MODE_KEY, materialize
+from sdc_spark.materialize import DIR_KEY, MODE_KEY, materialize, materialize_lazy
 from sdc_spark.frame.core import from_pandas
 
 
@@ -52,14 +52,21 @@ def test_modes_bit_identical(spark, tmp_path, _restore_mode):
     pd.testing.assert_frame_equal(base, c)
 
 
+def _lazy_then_action(df):
+    out = materialize_lazy(df)
+    out.count()  # the one action the materialize_lazy contract requires
+    return out
+
+
 def test_materialize_is_eager_and_stable(spark, _restore_mode):
     # rand() would differ per re-execution; materialize pins one sample
     for mode in ("localCheckpoint", "persist"):
-        spark.conf.set(MODE_KEY, mode)
-        df = materialize(spark.range(1000).select("id", F.rand(seed=None).alias("r")))
-        a = df.agg(F.sum("r")).collect()[0][0]
-        b = df.agg(F.sum("r")).collect()[0][0]
-        assert a == b, mode
+        for pin in (materialize, _lazy_then_action):
+            spark.conf.set(MODE_KEY, mode)
+            df = pin(spark.range(1000).select("id", F.rand(seed=None).alias("r")))
+            a = df.agg(F.sum("r")).collect()[0][0]
+            b = df.agg(F.sum("r")).collect()[0][0]
+            assert a == b, (mode, pin.__name__)
 
 
 def test_invalid_mode_raises(spark, _restore_mode):

@@ -4,9 +4,9 @@ Under ``spark.sdc.materialize.mode=persist`` every loop round persists a
 new snapshot; the superseded round's blocks are never read again, so the
 loops must unpersist them as they go — otherwise a 100-round job on a
 100-TB intermediate accumulates the whole history in the block manager.
-These tests run the iterative connected-components algorithms on a chain
-graph (which forces many rounds) and assert the persisted-RDD count at
-the end is BOUNDED (final state only), not proportional to iterations.
+This test runs the iterative connected-components loop on a chain graph
+(which forces many rounds) and asserts the persisted-RDD count at the end
+is BOUNDED (final state only), not proportional to iterations.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sdc_spark.materialize import MODE_KEY
-from sdc_spark.operators.dedup import components_star, dedup_components
+from sdc_spark.operators.dedup import dedup_components
 
 
 def _n_persistent(spark) -> int:
@@ -43,25 +43,9 @@ def test_components_star_releases_superseded_rounds(persist_mode):
     edge set survives — it IS the result — plus one boundary frame)."""
     spark = persist_mode
     base = _n_persistent(spark)
-    out = components_star(_chain_pairs(spark, 64)).collect()
+    out = dedup_components(_chain_pairs(spark, 64)).collect()
     assert {r.component for r in out} == {0}
     assert len(out) == 64
-    after = _n_persistent(spark)
-    assert after - base <= 2, (
-        f"components_star leaked persisted RDDs: {base} -> {after} "
-        "(per-round unmaterialize missing?)"
-    )
-
-
-def test_min_label_components_releases_superseded_rounds(persist_mode):
-    """Min-label propagation on a 12-node chain runs ~11 rounds, each
-    materializing a labels snapshot; only the final snapshot may remain
-    persisted (plus the edge set it still reads)."""
-    spark = persist_mode
-    base = _n_persistent(spark)
-    out = dedup_components(_chain_pairs(spark, 12), max_iter=15).collect()
-    assert {r.component for r in out} == {0}
-    assert len(out) == 12
     after = _n_persistent(spark)
     assert after - base <= 2, (
         f"dedup_components leaked persisted RDDs: {base} -> {after} "

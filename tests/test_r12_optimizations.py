@@ -6,16 +6,9 @@ Pins the r12 mechanisms no other test observes directly:
    referenced side (orders for lineitem→orders) is fact-sized, and a
    forced broadcast of billions of keys OOMs the driver at corpus
    scale; AQE must be free to pick per edge.
-2. ``dedup_components`` loudly rejects non-integral id columns (the
-   exact label-sum convergence check is not injective for strings or
-   floats — with ANSI off a string id silently returned WRONG labels).
-3. ``dedup_components`` converges when the component diameter equals
-   ``max_iter`` exactly: sum-equality observes the fixpoint one fused
-   block late, and the final uncounted single-round probe rescues the
-   boundary instead of raising spuriously.
-4. The fused release-manifest tail reports n_docs = 0 (not NULL) for an
+2. The fused release-manifest tail reports n_docs = 0 (not NULL) for an
    empty stage-3 frame, matching the pre-fusion F.count behavior.
-5. ``run_concurrently`` chains simultaneous failures: the re-raised
+3. ``run_concurrently`` chains simultaneous failures: the re-raised
    primary error carries every other thunk's error in its __context__
    chain instead of silently dropping them.
 """
@@ -56,36 +49,11 @@ def test_fk_edge_join_has_no_broadcast_hint(spark):  # noqa: F811
     assert (row["n"], row["o_a"], row["o_b"]) == (4, 2, 1)
 
 
-def test_dedup_components_rejects_non_integral_ids(spark):  # noqa: F811
-    from sdc_spark.operators.dedup import dedup_components
-
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("b", "c")], "doc_a string, doc_b string"
-    )
-    with pytest.raises(TypeError, match="integral"):
-        dedup_components(pairs)
-
-
-def test_dedup_components_converges_at_diameter_boundary(spark):  # noqa: F811
-    from sdc_spark.operators.dedup import dedup_components
-
-    # chain 1-2-3-4: diameter 3. With max_iter=3 the loop exhausts before
-    # sum-equality can be OBSERVED (it needs one no-op block); the final
-    # uncounted probe must confirm the fixpoint instead of raising.
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], "doc_a long, doc_b long"
-    )
-    out = dedup_components(pairs, max_iter=3)
-    got = {(r["doc"], r["component"]) for r in out.collect()}
-    assert got == {(1, 1), (2, 1), (3, 1), (4, 1)}
-
-
 def test_dedup_components_still_raises_when_under_iterated(spark):  # noqa: F811
     from sdc_spark.operators.dedup import dedup_components
 
-    # chain of 8 nodes: diameter 7 > max_iter=3 (+1 probe round) — far
-    # nodes genuinely mislabeled, so the loud failure must survive the
-    # boundary-probe change.
+    # chain of 8 nodes: 3 alternations cannot both reach and confirm the
+    # fixpoint, so far nodes may be mislabeled — the run must fail loudly
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "doc_a long, doc_b long"
     )
@@ -149,7 +117,7 @@ def test_materialize_lazy_single_computation(spark):  # noqa: F811
 
 
 def test_components_star_keeps_self_pair_nodes(spark):  # noqa: F811
-    from sdc_spark.operators.dedup import components_star
+    from sdc_spark.operators.dedup import dedup_components
 
     # (5,5) is a self-pair: its node must survive into the output as its
     # own singleton component (the r12 base-frame rewrite derives the
@@ -157,7 +125,7 @@ def test_components_star_keeps_self_pair_nodes(spark):  # noqa: F811
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 5)], "doc_a long, doc_b long"
     )
-    got = {(r["doc"], r["component"]) for r in components_star(pairs).collect()}
+    got = {(r["doc"], r["component"]) for r in dedup_components(pairs).collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (5, 5)}
 
 
