@@ -28,6 +28,15 @@ from pyspark.sql import functions as F
 from sdc_spark.materialize import materialize as _materialize
 from sdc_spark.materialize import materialize_lazy as _materialize_lazy
 from sdc_spark.materialize import unmaterialize as _unmaterialize
+from sdc_spark.operators.maintenance import (
+    _drop,
+    _log,
+    _log_append,
+    _replace,
+    _save,
+    index_lock,
+    run_concurrently,
+)
 from sdc_spark.operators.scan import spread_scan
 
 
@@ -884,9 +893,6 @@ def gram_index(
     return _hashed_grams(df, text_col, id_col, ngram).distinct()
 
 
-_LSH_INDEX_BUCKETS = 16  # per-table bucket count; raise with corpus size
-
-
 def write_lsh_index(
     spark,
     df: DataFrame,
@@ -896,7 +902,6 @@ def write_lsh_index(
     num_hashes: int = 128,
     bands: int = 32,
     ngram: int = 3,
-    n_buckets: int = _LSH_INDEX_BUCKETS,
     path_root: str = "/tmp/sdc_spark_lshidx",
     overwrite: bool = False,
 ) -> tuple[str, str]:
@@ -928,35 +933,20 @@ def write_lsh_index(
     # scan; the write path now applies the same discipline).
     base = _hashed_grams(df, text_col, id_col, ngram).transform(_materialize)
 
-    def _write_bands() -> None:
-        (
-            _minhash_bands(base, num_hashes, bands)
-            .repartition(n_buckets, "band", "bhash")
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, "band", "bhash")
-            .sortBy("band", "bhash")
-            .option("path", f"{path_root}/{name}/bands")
-            .saveAsTable(bands_t)
-        )
-
-    def _write_grams() -> None:
-        (
-            base.distinct()
-            .repartition(n_buckets, "doc")
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, "doc")
-            .sortBy("doc")
-            .option("path", f"{path_root}/{name}/grams")
-            .saveAsTable(grams_t)
-        )
-
     # the two table writes read the same materialized base and are
     # independent — overlap them so the second's tasks back-fill the
     # executors the first's commit tail leaves idle (guide §2.6)
-    from sdc_spark.operators.maintenance import run_concurrently
-
     try:
-        run_concurrently(_write_bands, _write_grams)
+        run_concurrently(
+            lambda: _save(
+                _minhash_bands(base, num_hashes, bands), bands_t, "overwrite",
+                ("band", "bhash"), f"{path_root}/{name}/bands",
+            ),
+            lambda: _save(
+                base.distinct(), grams_t, "overwrite", ("doc",),
+                f"{path_root}/{name}/grams",
+            ),
+        )
     finally:
         # always release the materialized full-corpus hashed-gram blocks
         # — a write failure must not leak them for the session's lifetime
@@ -973,7 +963,6 @@ def append_lsh_index(
     num_hashes: int = 128,
     bands: int = 32,
     ngram: int = 3,
-    n_buckets: int = _LSH_INDEX_BUCKETS,
     path_root: str = "/tmp/sdc_spark_lshidx",
     hashed_grams: "DataFrame | None" = None,
 ) -> None:
@@ -990,8 +979,6 @@ def append_lsh_index(
     instead of once per operation (one redundant full batch scan saved
     at corpus scale). The frame must match (batch, text_col, id_col,
     ngram); ownership stays with the caller (not released here)."""
-    from sdc_spark.operators.maintenance import index_lock, run_concurrently
-
     own_base = hashed_grams is None
     with index_lock(f"{path_root}/{name}"):
         # same shared-scan discipline as write_lsh_index: one hashed-gram
@@ -1002,83 +989,34 @@ def append_lsh_index(
             if own_base
             else hashed_grams
         )
-
-        def _append_bands() -> None:
-            (
-                _minhash_bands(base, num_hashes, bands)
-                .repartition(n_buckets, "band", "bhash")
-                .write.mode("append")
-                .bucketBy(n_buckets, "band", "bhash")
-                .sortBy("band", "bhash")
-                .saveAsTable(f"lsh_bands_{name}")
-            )
-
-        def _append_grams() -> None:
-            (
-                base.distinct()
-                .repartition(n_buckets, "doc")
-                .write.mode("append")
-                .bucketBy(n_buckets, "doc")
-                .sortBy("doc")
-                .saveAsTable(f"lsh_grams_{name}")
-            )
-
         try:
-            run_concurrently(_append_bands, _append_grams)
+            run_concurrently(
+                lambda: _save(
+                    _minhash_bands(base, num_hashes, bands),
+                    f"lsh_bands_{name}", "append", ("band", "bhash"),
+                ),
+                lambda: _save(
+                    base.distinct(), f"lsh_grams_{name}", "append", ("doc",)
+                ),
+            )
         finally:
             if own_base:
                 _unmaterialize(base)
 
 
-def _rewrite_lsh_table(
-    spark,
-    table: str,
-    df: DataFrame,
-    keys: tuple[str, ...],
-    path: str,
-    n_buckets: int,
-) -> None:
-    """Atomic-enough table rewrite for index maintenance: the new content
-    is EAGERLY materialized with lineage truncation FIRST (a
-    lineage-kept persist would try to recompute lost blocks from the
-    files this function deletes), then the table+files are replaced with
-    the same bucket spec — so compaction/deletion never change the plan
-    shape consumers rely on."""
-    import shutil
-
-    from sdc_spark.materialize import materialize
-
-    # The repartition MUST survive into the staged frame (it is what
-    # bounds output files at one per bucket), so callers pass content
-    # read from the RAW parquet path, not the bucketed table: on top of
-    # a bucketed scan Catalyst partially elides the equal-key shuffle
-    # and the staged partitioning ends up neither the scan's nor the
-    # requested one.
-    staged = materialize(df.repartition(n_buckets, *keys), truncate=True)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    shutil.rmtree(path, ignore_errors=True)
-    w = staged.write.mode("overwrite").bucketBy(n_buckets, *keys).sortBy(*keys)
-    w.option("path", path).saveAsTable(table)
-
-
 def compact_lsh_index(
     spark,
     name: str,
-    n_buckets: int = _LSH_INDEX_BUCKETS,
     path_root: str = "/tmp/sdc_spark_lshidx",
 ) -> None:
     """Compact a persisted index back to ~one file per bucket. Every
     append adds a file per bucket, so a year of batches decays scan
     latency (open/footer cost per file) even though the bucket layout —
     and the zero-Exchange screen plan — survives; schedule this like any
-    LSM-ish maintenance. Pending tombstones (deferred takedowns) are
-    applied physically here and the log cleared; with none pending,
-    contents are bit-identical before/after (pinned by test). Holds the
-    index maintenance lock across the whole stage-then-replace window."""
-    from sdc_spark.operators.maintenance import index_lock
-
-    from sdc_spark.operators.maintenance import run_concurrently
-
+    LSM-ish maintenance. Pending tombstones (takedowns) are applied
+    physically here and the log cleared; with none pending, contents are
+    bit-identical before/after (pinned by test). Holds the index
+    maintenance lock across the whole stage-then-replace window."""
     with index_lock(f"{path_root}/{name}"):
         tomb = lsh_tombstones(spark, name)
         bands = spark.read.parquet(f"{path_root}/{name}/bands")
@@ -1089,28 +1027,17 @@ def compact_lsh_index(
         # the two rewrites touch disjoint tables/paths and each stages
         # its content before dropping anything — overlap them (§2.6)
         run_concurrently(
-            lambda: _rewrite_lsh_table(
-                spark,
-                f"lsh_bands_{name}",
-                bands,
-                ("band", "bhash"),
-                f"{path_root}/{name}/bands",
-                n_buckets,
+            lambda: _replace(
+                spark, f"lsh_bands_{name}", bands,
+                f"{path_root}/{name}/bands", ("band", "bhash"),
             ),
-            lambda: _rewrite_lsh_table(
-                spark,
-                f"lsh_grams_{name}",
-                grams,
-                ("doc",),
-                f"{path_root}/{name}/grams",
-                n_buckets,
+            lambda: _replace(
+                spark, f"lsh_grams_{name}", grams,
+                f"{path_root}/{name}/grams", ("doc",),
             ),
         )
         if tomb is not None:
-            import shutil
-
-            spark.sql(f"DROP TABLE IF EXISTS lsh_dels_{name}")
-            shutil.rmtree(f"{path_root}/{name}/tombstones", ignore_errors=True)
+            _drop(spark, (f"lsh_dels_{name}",), f"{path_root}/{name}/tombstones")
 
 
 def lsh_tombstones(spark, name: str) -> "DataFrame | None":
@@ -1118,24 +1045,19 @@ def lsh_tombstones(spark, name: str) -> "DataFrame | None":
     ids, or None when no takedown is pending. Pass it to
     ``screen_against_index(tombstones=...)``; ``compact_lsh_index``
     applies it physically and clears it."""
-    t = f"lsh_dels_{name}"
-    if not spark.catalog.tableExists(t):
-        return None
-    return spark.table(t)
+    return _log(spark, f"lsh_dels_{name}")
 
 
 def delete_from_lsh_index(
     spark,
     doc_ids: DataFrame,
     name: str,
-    n_buckets: int = _LSH_INDEX_BUCKETS,
     path_root: str = "/tmp/sdc_spark_lshidx",
-    deferred: bool = True,
 ) -> None:
     """Remove documents from a persisted index (takedown/expiry — the
     compliance path every long-lived corpus index needs).
 
-    Default is a TOMBSTONE log: the id batch appends to a tiny
+    The delete is a TOMBSTONE log: the id batch appends to a tiny
     ``lsh_dels_<name>`` side table — write cost O(|batch|); the band and
     gram tables are untouched. Screens exclude tombstoned docs at serve
     time (``screen_against_index`` anti-joins the log against the
@@ -1143,61 +1065,28 @@ def delete_from_lsh_index(
     the filter costs nothing at corpus scale); physical deletion is
     amortized into ``compact_lsh_index``, after which the index is
     bit-identical to one built without those docs (the signature family
-    is content-deterministic — pinned by test).
-
-    ``deferred=False`` keeps the eager full-rewrite for storage-level
-    compliance wipes. No join-strategy hints on any path: a bulk
-    expiry's id set can be corpus-scale — AQE picks."""
-    from sdc_spark.operators.maintenance import index_lock
-
+    is content-deterministic — pinned by test). No join-strategy hints:
+    a bulk expiry's id set can be corpus-scale — AQE picks."""
     ids = doc_ids.select(F.col(doc_ids.columns[0]).alias("doc")).distinct()
     with index_lock(f"{path_root}/{name}"):
-        if deferred:
-            from sdc_spark.materialize import materialize
-
-            t = f"lsh_dels_{name}"
-            prior = lsh_tombstones(spark, name)
-            if prior is not None:
-                ids = ids.join(prior, "doc", "left_anti")
-            fresh = materialize(ids, truncate=True)
-            if spark.catalog.tableExists(t):
-                fresh.write.mode("append").saveAsTable(t)
-            else:
-                (
-                    fresh.write.mode("overwrite")
-                    .option("path", f"{path_root}/{name}/tombstones")
-                    .saveAsTable(t)
-                )
-            return
-        _rewrite_lsh_table(
+        prior = lsh_tombstones(spark, name)
+        if prior is not None:
+            ids = ids.join(prior, "doc", "left_anti")
+        _log_append(
             spark,
-            f"lsh_bands_{name}",
-            spark.read.parquet(f"{path_root}/{name}/bands").join(
-                ids, "doc", "left_anti"
-            ),
-            ("band", "bhash"),
-            f"{path_root}/{name}/bands",
-            n_buckets,
-        )
-        _rewrite_lsh_table(
-            spark,
-            f"lsh_grams_{name}",
-            spark.read.parquet(f"{path_root}/{name}/grams").join(
-                ids, "doc", "left_anti"
-            ),
-            ("doc",),
-            f"{path_root}/{name}/grams",
-            n_buckets,
+            _materialize(ids, truncate=True),
+            f"lsh_dels_{name}",
+            f"{path_root}/{name}/tombstones",
         )
 
 
 def drop_lsh_index(spark, name: str, path_root: str = "/tmp/sdc_spark_lshidx") -> None:
     """Drop a persisted index's tables and files (fresh-rebuild path)."""
-    import shutil
-
-    for t in (f"lsh_bands_{name}", f"lsh_grams_{name}", f"lsh_dels_{name}"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    shutil.rmtree(f"{path_root}/{name}", ignore_errors=True)
+    _drop(
+        spark,
+        (f"lsh_bands_{name}", f"lsh_grams_{name}", f"lsh_dels_{name}"),
+        f"{path_root}/{name}",
+    )
 
 
 def incremental_near_dups(
@@ -1715,9 +1604,6 @@ def substring_decontaminate(
     return _cut_spans(base, spans)
 
 
-_SUB_INDEX_BUCKETS = 16  # per-table bucket count; raise with corpus size
-
-
 def write_substring_index(
     spark,
     df: DataFrame,
@@ -1725,7 +1611,6 @@ def write_substring_index(
     id_col: str,
     name: str,
     min_len: int = 50,
-    n_buckets: int = _SUB_INDEX_BUCKETS,
     path_root: str = "/tmp/sdc_spark_subidx",
     overwrite: bool = False,
 ) -> str:
@@ -1748,16 +1633,14 @@ def write_substring_index(
     table = f"sub_grams_{name}"
     if spark.catalog.tableExists(table) and not overwrite:
         return table
-    (
+    _save(
         _kgram_positions(df, text_col, id_col, int(min_len))
         .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .repartition(n_buckets, "h")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "h")
-        .sortBy("h")
-        .option("path", f"{path_root}/{name}/grams")
-        .saveAsTable(table)
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        table,
+        "overwrite",
+        ("h",),
+        f"{path_root}/{name}/grams",
     )
     return table
 
@@ -1769,7 +1652,6 @@ def append_substring_index(
     id_col: str,
     name: str,
     min_len: int = 50,
-    n_buckets: int = _SUB_INDEX_BUCKETS,
     path_root: str = "/tmp/sdc_spark_subidx",
     kgram_positions: "DataFrame | None" = None,
 ) -> None:
@@ -1788,29 +1670,23 @@ def append_substring_index(
     so the per-character explode+hash pass over the batch text runs
     once per batch instead of once per operation. Must match
     (batch, text_col, id_col, min_len); caller owns its release."""
-    from sdc_spark.operators.maintenance import index_lock
-
     src = (
         kgram_positions
         if kgram_positions is not None
         else _kgram_positions(batch, text_col, id_col, int(min_len))
     )
     with index_lock(f"{path_root}/{name}"):
-        (
-            src.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .repartition(n_buckets, "h")
-            .write.mode("append")
-            .bucketBy(n_buckets, "h")
-            .sortBy("h")
-            .saveAsTable(f"sub_grams_{name}")
+        _save(
+            src.groupBy("h").agg(F.count(F.lit(1)).alias("cnt")),
+            f"sub_grams_{name}",
+            "append",
+            ("h",),
         )
 
 
 def compact_substring_index(
     spark,
     name: str,
-    n_buckets: int = _SUB_INDEX_BUCKETS,
     path_root: str = "/tmp/sdc_spark_subidx",
 ) -> None:
     """Compact back to ~one file per bucket AND merge cross-append rows
@@ -1821,20 +1697,15 @@ def compact_substring_index(
     ``compact_lsh_index`` — raw-path read, eager materialization before
     the old files are deleted. Holds the index maintenance lock across
     the stage-then-replace window."""
-    from sdc_spark.operators.maintenance import index_lock
-
     with index_lock(f"{path_root}/{name}"):
         merged = (
             spark.read.parquet(f"{path_root}/{name}/grams")
             .groupBy("h")
             .agg(F.sum("cnt").alias("cnt"))
         )
-        dels_t = f"sub_dels_{name}"
-        had_dels = spark.catalog.tableExists(dels_t)
-        if had_dels:
-            lognet = (
-                spark.table(dels_t).groupBy("h").agg(F.sum("cnt").alias("dcnt"))
-            )
+        dels = _log(spark, f"sub_dels_{name}")
+        if dels is not None:
+            lognet = dels.groupBy("h").agg(F.sum("cnt").alias("dcnt"))
             merged = (
                 merged.join(lognet, "h", "left")
                 .select(
@@ -1845,24 +1716,12 @@ def compact_substring_index(
                 )
                 .filter(F.col("cnt") > 0)
             )
-        _rewrite_lsh_table(
-            spark,
-            f"sub_grams_{name}",
-            merged,
-            ("h",),
-            f"{path_root}/{name}/grams",
-            n_buckets,
+        _replace(
+            spark, f"sub_grams_{name}", merged, f"{path_root}/{name}/grams", ("h",)
         )
-        if had_dels:
-            import shutil
-
-            for t, sub in (
-                (dels_t, "dels"),
-                (f"sub_dead_{name}", "dead"),
-                (f"sub_deldocs_{name}", "deldocs"),
-            ):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-                shutil.rmtree(f"{path_root}/{name}/{sub}", ignore_errors=True)
+        if dels is not None:
+            for sub in ("dels", "dead", "deldocs"):
+                _drop(spark, (f"sub_{sub}_{name}",), f"{path_root}/{name}/{sub}")
 
 
 def delete_from_substring_index(
@@ -1893,74 +1752,40 @@ def delete_from_substring_index(
     takedowns): docs passed here must currently be IN the index, each
     at most once — a ``sub_deldocs_<name>`` id log makes re-deletes
     no-ops."""
-    from sdc_spark.operators.maintenance import index_lock
-
     with index_lock(f"{path_root}/{name}"):
-        _delete_from_substring_index_locked(
-            spark, removed_docs, text_col, id_col, name, min_len, path_root
+        deldocs_t = f"sub_deldocs_{name}"
+        ids = removed_docs.select(F.col(id_col).alias("doc")).distinct()
+        prior = _log(spark, deldocs_t)
+        if prior is not None:
+            ids = ids.join(prior, "doc", "left_anti")
+        fresh_ids = _materialize(ids, truncate=True)
+        batch = removed_docs.join(
+            fresh_ids.select(F.col("doc").alias(id_col)), id_col, "left_semi"
         )
-
-
-def _delete_from_substring_index_locked(
-    spark, removed_docs, text_col, id_col, name, min_len, path_root
-) -> None:
-    k = int(min_len)
-    deldocs_t = f"sub_deldocs_{name}"
-    ids = removed_docs.select(F.col(id_col).alias("doc")).distinct()
-    if spark.catalog.tableExists(deldocs_t):
-        ids = ids.join(spark.table(deldocs_t), "doc", "left_anti")
-    fresh_ids = _materialize(ids, truncate=True)
-    batch = removed_docs.join(
-        fresh_ids.select(F.col("doc").alias(id_col)), id_col, "left_semi"
-    )
-    negs = (
-        _kgram_positions(batch, text_col, id_col, k)
-        .groupBy("h")
-        .agg((-F.count(F.lit(1))).alias("cnt"))
-    )
-    dels_t = f"sub_dels_{name}"
-    if spark.catalog.tableExists(dels_t):
-        negs.write.mode("append").saveAsTable(dels_t)
-    else:
-        (
-            negs.write.mode("overwrite")
-            .option("path", f"{path_root}/{name}/dels")
-            .saveAsTable(dels_t)
+        negs = (
+            _kgram_positions(batch, text_col, id_col, int(min_len))
+            .groupBy("h")
+            .agg((-F.count(F.lit(1))).alias("cnt"))
         )
-    if spark.catalog.tableExists(deldocs_t):
-        fresh_ids.write.mode("append").saveAsTable(deldocs_t)
-    else:
-        (
-            fresh_ids.write.mode("overwrite")
-            .option("path", f"{path_root}/{name}/deldocs")
-            .saveAsTable(deldocs_t)
+        dels_t = f"sub_dels_{name}"
+        _log_append(spark, negs, dels_t, f"{path_root}/{name}/dels")
+        _log_append(spark, fresh_ids, deldocs_t, f"{path_root}/{name}/deldocs")
+        # refresh the dead set from net counts over the log's suspect hashes
+        # (the gram-table read is semi-join-pruned to those hashes; no hint —
+        # a bulk expiry's suspect set can be large, AQE picks)
+        lognet = spark.table(dels_t).groupBy("h").agg(F.sum("cnt").alias("dcnt"))
+        base = (
+            spark.table(f"sub_grams_{name}")
+            .join(lognet.select("h"), "h", "left_semi")
+            .groupBy("h")
+            .agg(F.sum("cnt").alias("bcnt"))
         )
-    # refresh the dead set from net counts over the log's suspect hashes
-    # (the gram-table read is semi-join-pruned to those hashes; no hint —
-    # a bulk expiry's suspect set can be large, AQE picks)
-    lognet = spark.table(dels_t).groupBy("h").agg(F.sum("cnt").alias("dcnt"))
-    base = (
-        spark.table(f"sub_grams_{name}")
-        .join(lognet.select("h"), "h", "left_semi")
-        .groupBy("h")
-        .agg(F.sum("cnt").alias("bcnt"))
-    )
-    dead = (
-        base.join(lognet, "h")
-        .filter(F.col("bcnt") + F.col("dcnt") <= 0)
-        .select("h")
-    )
-    staged_dead = _materialize(dead, truncate=True)
-    dead_t = f"sub_dead_{name}"
-    spark.sql(f"DROP TABLE IF EXISTS {dead_t}")
-    import shutil
-
-    shutil.rmtree(f"{path_root}/{name}/dead", ignore_errors=True)
-    (
-        staged_dead.write.mode("overwrite")
-        .option("path", f"{path_root}/{name}/dead")
-        .saveAsTable(dead_t)
-    )
+        dead = (
+            base.join(lognet, "h")
+            .filter(F.col("bcnt") + F.col("dcnt") <= 0)
+            .select("h")
+        )
+        _replace(spark, f"sub_dead_{name}", dead, f"{path_root}/{name}/dead")
 
 
 def substring_membership(spark, name: str) -> DataFrame:
@@ -1971,9 +1796,9 @@ def substring_membership(spark, name: str) -> DataFrame:
     the raw table's hash column (duplicates across appends are harmless
     to membership joins)."""
     member = spark.table(f"sub_grams_{name}").select("h")
-    dead_t = f"sub_dead_{name}"
-    if spark.catalog.tableExists(dead_t):
-        member = member.join(spark.table(dead_t), "h", "left_anti")
+    dead = _log(spark, f"sub_dead_{name}")
+    if dead is not None:
+        member = member.join(dead, "h", "left_anti")
     return member
 
 
@@ -1981,16 +1806,11 @@ def drop_substring_index(
     spark, name: str, path_root: str = "/tmp/sdc_spark_subidx"
 ) -> None:
     """Drop a persisted substring index's tables and files."""
-    import shutil
-
-    for t in (
-        f"sub_grams_{name}",
-        f"sub_dels_{name}",
-        f"sub_dead_{name}",
-        f"sub_deldocs_{name}",
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    shutil.rmtree(f"{path_root}/{name}", ignore_errors=True)
+    _drop(
+        spark,
+        [f"sub_{t}_{name}" for t in ("grams", "dels", "dead", "deldocs")],
+        f"{path_root}/{name}",
+    )
 
 
 def screen_substrings_against_index(

@@ -27,14 +27,34 @@ compaction that internally appends never self-deadlocks; a crashed
 holder leaves the lock dir behind — ``break_index_lock`` clears it
 (document the operational runbook: break only when no maintenance job
 is alive).
+
+The store primitives every catalog-backed family (LSH, substring,
+posting) writes through live here too, so a change to how an index is
+laid down is a one-module edit:
+
+- ``_save``: plain or bucketed table write (``INDEX_BUCKETS``, the one
+  bucket count, repartition-first so a write adds ~one file per bucket);
+- ``_replace``: staged replace — materialize with lineage truncation,
+  then DROP, delete the files and overwrite under the same spec;
+- ``_log`` / ``_log_append``: read a delete-side log (None when empty),
+  append to it or create it at its path;
+- ``_drop``: drop tables and their files (index drop, log clear);
+- ``_families``: kind → (delete, compact), the fan-out table behind
+  ``takedown_documents`` and ``compact_indexes``.
+
+IVF cells are plain ``partitionBy("cell")`` parquet outside the catalog
+and keep their own writes in ``operators/similarity.py``.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import shutil
 import threading
 import time
+
+from sdc_spark.materialize import materialize
 
 _LOCK_DIRNAME = "_maintenance_lock"
 # per-root in-process lock (threads of one session race each other too);
@@ -158,6 +178,114 @@ def run_concurrently(*thunks) -> None:
         raise head
 
 
+INDEX_BUCKETS = 16  # buckets per bucketed index table; raise with corpus size
+
+
+def _writer(df, mode: str, keys, path):
+    w = df.write.mode(mode)
+    if keys:
+        w = w.bucketBy(INDEX_BUCKETS, *keys).sortBy(*keys)
+    if path is not None:
+        w = w.option("path", path)
+    return w
+
+
+def _save(df, table: str, mode: str, keys=(), path: str | None = None) -> None:
+    """Write ``df`` as catalog table ``table``. With ``keys`` the table
+    is bucketed and sorted on them, and the rows are repartitioned onto
+    the same keys first, so each write lays down ~one file per bucket
+    instead of tasks x buckets small files. Appends must keep the spec
+    of the first write (hence one bucket count): that is what keeps the
+    screen joins Exchange-free as the index grows. ``path`` places a new
+    table's files; an append goes where the table already lives."""
+    if keys:
+        df = df.repartition(INDEX_BUCKETS, *keys)
+    _writer(df, mode, keys, path).saveAsTable(table)
+
+
+def _replace(spark, table: str, df, path: str, keys=()) -> None:
+    """Atomic-enough replace of one index table (compaction, stats
+    rebase, dead-set refresh): the new content is EAGERLY materialized
+    with lineage truncation FIRST (a lineage-kept persist would try to
+    recompute lost blocks from the files deleted next), then the table
+    and its files are replaced under the same spec, so maintenance never
+    changes the plan shape consumers rely on.
+
+    Bucketed content must be read from the RAW parquet path, not the
+    table: on top of a bucketed scan Catalyst partially elides the
+    equal-key repartition, and the staged partitioning — which bounds
+    the output at one file per bucket — ends up neither the scan's nor
+    the requested one."""
+    staged = materialize(
+        df.repartition(INDEX_BUCKETS, *keys) if keys else df, truncate=True
+    )
+    _drop(spark, (table,), path)
+    _writer(staged, "overwrite", keys, path).saveAsTable(table)
+
+
+def _log(spark, table: str):
+    """A delete-side log table, or None when nothing is logged."""
+    return spark.table(table) if spark.catalog.tableExists(table) else None
+
+
+def _log_append(spark, df, table: str, path: str) -> None:
+    """Append ``df`` to a log table, creating it at ``path`` on first use."""
+    if spark.catalog.tableExists(table):
+        _save(df, table, "append")
+    else:
+        _save(df, table, "overwrite", path=path)
+
+
+def _drop(spark, tables, path: str) -> None:
+    """Drop catalog ``tables`` and delete ``path``, the files under them."""
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    shutil.rmtree(path, ignore_errors=True)
+
+
+def _opts(d: dict, *keys) -> dict:
+    return {k: d[k] for k in keys if k in d}
+
+
+def _families() -> dict:
+    """kind → (delete, compact) for the four persisted-index families.
+    ``delete(spark, d, docs, ids, id_col, text_col)`` runs the family's
+    tombstone delete for descriptor ``d``; ``compact(spark, name, **kw)``
+    is the family's compaction."""
+    import sdc_spark.operators.dedup as dd
+    import sdc_spark.operators.retrieval as rt
+    import sdc_spark.operators.similarity as sm
+
+    return {
+        "posting": (
+            lambda spark, d, docs, ids, id_col, text_col: rt.delete_from_posting_index(
+                spark, ids, d["name"], id_col=id_col, **_opts(d, "path_root")
+            ),
+            rt.compact_posting_index,
+        ),
+        "lsh": (
+            lambda spark, d, docs, ids, id_col, text_col: dd.delete_from_lsh_index(
+                spark, ids, d["name"], **_opts(d, "path_root")
+            ),
+            dd.compact_lsh_index,
+        ),
+        "ivf": (
+            lambda spark, d, docs, ids, id_col, text_col: sm.delete_from_ivf_index(
+                spark, ids, d["name"], **_opts(d, "path_root")
+            ),
+            sm.compact_ivf_index,
+        ),
+        # the substring family stores no doc ids: it re-grams the text
+        "substring": (
+            lambda spark, d, docs, ids, id_col, text_col: dd.delete_from_substring_index(
+                spark, docs, text_col, id_col, d["name"],
+                **_opts(d, "path_root", "min_len"),
+            ),
+            dd.compact_substring_index,
+        ),
+    }
+
+
 def takedown_documents(
     spark,
     removed_docs,
@@ -192,10 +320,8 @@ def takedown_documents(
     The id frame is materialized once and shared by every delete, so
     the request's lineage (often a join against a takedown queue) runs
     one time, not once per index."""
-    from sdc_spark.materialize import materialize
-
-    kinds = {d.get("kind") for d in indexes}
-    unknown = kinds - {"posting", "lsh", "ivf", "substring"}
+    families = _families()
+    unknown = {d.get("kind") for d in indexes} - set(families)
     if unknown:
         raise ValueError(f"takedown_documents: unknown index kinds {unknown}")
     if any(d.get("kind") == "substring" for d in indexes):
@@ -207,29 +333,8 @@ def takedown_documents(
             )
     docs = materialize(removed_docs, truncate=True)
     ids = docs.select(id_col).distinct()
-
-    import sdc_spark.operators.dedup as _dedup
-    import sdc_spark.operators.retrieval as _ret
-    import sdc_spark.operators.similarity as _sim
-
     for d in indexes:
-        kind, name = d["kind"], d["name"]
-        if kind == "posting":
-            kw = {"path_root": d["path_root"]} if "path_root" in d else {}
-            _ret.delete_from_posting_index(spark, ids, name, id_col=id_col, **kw)
-        elif kind == "lsh":
-            kw = {"path_root": d["path_root"]} if "path_root" in d else {}
-            _dedup.delete_from_lsh_index(spark, ids, name, **kw)
-        elif kind == "ivf":
-            kw = {"path_root": d["path_root"]} if "path_root" in d else {}
-            _sim.delete_from_ivf_index(spark, ids, name, **kw)
-        else:  # substring
-            kw = {"path_root": d["path_root"]} if "path_root" in d else {}
-            if "min_len" in d:
-                kw["min_len"] = d["min_len"]
-            _dedup.delete_from_substring_index(
-                spark, docs, text_col, id_col, name, **kw
-            )
+        families[d["kind"]][0](spark, d, docs, ids, id_col, text_col)
 
 
 _DEFAULT_ROOTS = {
@@ -248,40 +353,27 @@ def compact_indexes(spark, indexes, only_if_needed: bool = False):
     (exceptions propagate after the loop, first error wins).
 
     ``only_if_needed=True`` consults ``needs_compaction`` per index
-    (descriptors may carry ``n_buckets``, ``max_files_per_bucket``,
-    ``max_log_fraction`` to tune the thresholds; defaults 16 / 4.0 /
-    0.05) and skips indexes under both the file-count and
-    tombstone-pressure thresholds — the cheap idempotent form a
-    maintenance cron calls hourly, paying rewrites only when the LSM
-    decay warrants them."""
-    import sdc_spark.operators.dedup as _dedup
-    import sdc_spark.operators.retrieval as _ret
-    import sdc_spark.operators.similarity as _sim
-
+    (descriptors may carry ``max_files_per_bucket`` and
+    ``max_log_fraction`` to tune the thresholds; defaults 4.0 / 0.05)
+    and skips indexes under both the file-count and tombstone-pressure
+    thresholds — the cheap idempotent form a maintenance cron calls
+    hourly, paying rewrites only when the LSM decay warrants them."""
+    families = _families()
     first_err = None
     for d in indexes:
         kind, name = d["kind"], d["name"]
-        kw = {"path_root": d["path_root"]} if "path_root" in d else {}
         if only_if_needed:
             root = d.get("path_root", _DEFAULT_ROOTS.get(kind, "/tmp"))
             if not needs_compaction(
                 f"{root}/{name}",
-                n_buckets=int(d.get("n_buckets", 16)),
                 max_files_per_bucket=float(d.get("max_files_per_bucket", 4.0)),
                 max_log_fraction=float(d.get("max_log_fraction", 0.05)),
             ):
                 continue
         try:
-            if kind == "posting":
-                _ret.compact_posting_index(spark, name, **kw)
-            elif kind == "lsh":
-                _dedup.compact_lsh_index(spark, name, **kw)
-            elif kind == "ivf":
-                _sim.compact_ivf_index(spark, name, **kw)
-            elif kind == "substring":
-                _dedup.compact_substring_index(spark, name, **kw)
-            else:
+            if kind not in families:
                 raise ValueError(f"compact_indexes: unknown kind {kind!r}")
+            families[kind][1](spark, name, **_opts(d, "path_root"))
         except Exception as e:  # noqa: BLE001
             if first_err is None:
                 first_err = e
@@ -327,7 +419,6 @@ def index_file_stats(index_root: str) -> dict:
 
 def needs_compaction(
     index_root: str,
-    n_buckets: int = 16,
     max_files_per_bucket: float = 4.0,
     max_log_fraction: float = 0.05,
 ) -> bool:
@@ -340,7 +431,7 @@ def needs_compaction(
     retained deleted rows). Pure filesystem arithmetic; no Spark jobs."""
     st = index_file_stats(index_root)
     for sub in st["data"].values():
-        if sub["files"] > max_files_per_bucket * n_buckets:
+        if sub["files"] > max_files_per_bucket * INDEX_BUCKETS:
             return True
     if st["logs"] and st["data_bytes"] > 0:
         if st["log_bytes"] > max_log_fraction * st["data_bytes"]:

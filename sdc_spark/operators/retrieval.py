@@ -41,6 +41,15 @@ from sdc_spark.materialize import materialize as _materialize
 from sdc_spark.materialize import materialize_lazy as _materialize_lazy
 from sdc_spark.materialize import unmaterialize as _unmaterialize
 from sdc_spark.operators.dedup import normalized_text
+from sdc_spark.operators.maintenance import (
+    _drop,
+    _log,
+    _log_append,
+    _replace,
+    _save,
+    index_lock,
+    run_concurrently,
+)
 
 
 def _tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -223,9 +232,6 @@ def bm25_multi(
     )
 
 
-_POSTING_BUCKETS = 16  # per-table bucket count; raise with corpus size
-
-
 def posting_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Materializable lexical index: (doc, token, tf, dl) posting rows
     with the document length DENORMALIZED onto every posting (classic
@@ -248,7 +254,6 @@ def write_posting_index(
     text_col: str,
     id_col: str,
     name: str,
-    n_buckets: int = _POSTING_BUCKETS,
     path_root: str = "/tmp/sdc_spark_postidx",
     overwrite: bool = False,
 ) -> tuple[str, str]:
@@ -270,35 +275,19 @@ def write_posting_index(
     if have and not overwrite:
         return post_t, stats_t
     posted = posting_table(df, text_col, id_col).transform(_materialize)
-
-    def _write_postings() -> None:
-        (
-            posted.repartition(n_buckets, "token")
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, "token")
-            .sortBy("token")
-            .option("path", f"{path_root}/{name}/postings")
-            .saveAsTable(post_t)
-        )
-
-    def _write_stats() -> None:
-        (
-            posted.groupBy("doc")
-            .agg(F.max("dl").alias("dl"))
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-            )
-            .write.mode("overwrite")
-            .option("path", f"{path_root}/{name}/stats")
-            .saveAsTable(stats_t)
-        )
-
     # both writes read the one materialized posting frame and target
     # disjoint tables — overlap them (optimization guide §2.6)
-    from sdc_spark.operators.maintenance import run_concurrently
-
     try:
-        run_concurrently(_write_postings, _write_stats)
+        run_concurrently(
+            lambda: _save(
+                posted, post_t, "overwrite", ("token",),
+                f"{path_root}/{name}/postings",
+            ),
+            lambda: _save(
+                _stats_row(posted), stats_t, "overwrite",
+                path=f"{path_root}/{name}/stats",
+            ),
+        )
     finally:
         # release the materialized corpus posting blocks even on write
         # failure — leaked, they pin a corpus-sized frame for the session
@@ -312,7 +301,6 @@ def append_posting_index(
     text_col: str,
     id_col: str,
     name: str,
-    n_buckets: int = _POSTING_BUCKETS,
     path_root: str = "/tmp/sdc_spark_postidx",
 ) -> None:
     """Append one ingested batch (NEW doc ids — the same contract as the
@@ -322,72 +310,30 @@ def append_posting_index(
     against concurrent compaction via the index maintenance lock
     (operators/maintenance.py) — an append landing inside compaction's
     stage-then-replace window would otherwise be lost."""
-    from sdc_spark.operators.maintenance import index_lock
-
-    from sdc_spark.operators.maintenance import run_concurrently
-
     posted = posting_table(batch, text_col, id_col).transform(_materialize)
     with index_lock(f"{path_root}/{name}"):
-
-        def _append_postings() -> None:
-            (
-                posted.repartition(n_buckets, "token")
-                .write.mode("append")
-                .bucketBy(n_buckets, "token")
-                .sortBy("token")
-                .saveAsTable(f"postings_{name}")
-            )
-
-        def _append_stats() -> None:
-            (
-                posted.groupBy("doc")
-                .agg(F.max("dl").alias("dl"))
-                .agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.sum("dl").alias("sum_dl"),
-                )
-                .write.mode("append")
-                .saveAsTable(f"lexstats_{name}")
-            )
-
         # disjoint tables fed by the one materialized frame (§2.6)
         try:
-            run_concurrently(_append_postings, _append_stats)
+            run_concurrently(
+                lambda: _save(posted, f"postings_{name}", "append", ("token",)),
+                lambda: _save(_stats_row(posted), f"lexstats_{name}", "append"),
+            )
         finally:
             _unmaterialize(posted)
 
 
-def _rewrite_posting_table(
-    spark, name: str, df: DataFrame, path_root: str, n_buckets: int
-) -> None:
-    """Same atomic-enough rewrite as the LSH/IVF maintenance path: stage
-    the new content with lineage truncation BEFORE dropping the old
-    files, keep the bucket spec so consumer plans don't change. Content
-    must be read from the RAW parquet path (Catalyst partially elides an
-    equal-key repartition on top of a bucketed scan — the dedup-index
-    compaction test found this)."""
-    import shutil
-
-    from sdc_spark.materialize import materialize
-
-    table = f"postings_{name}"
-    path = f"{path_root}/{name}/postings"
-    staged = materialize(df.repartition(n_buckets, "token"), truncate=True)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    shutil.rmtree(path, ignore_errors=True)
-    (
-        staged.write.mode("overwrite")
-        .bucketBy(n_buckets, "token")
-        .sortBy("token")
-        .option("path", path)
-        .saveAsTable(table)
+def _stats_row(postings: DataFrame) -> DataFrame:
+    """One additive (n_docs, sum_dl) stats row for a posting frame."""
+    return (
+        postings.groupBy("doc")
+        .agg(F.max("dl").alias("dl"))
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"))
     )
 
 
 def compact_posting_index(
     spark,
     name: str,
-    n_buckets: int = _POSTING_BUCKETS,
     path_root: str = "/tmp/sdc_spark_postidx",
 ) -> None:
     """Compact back to ~one file per bucket after append-driven file
@@ -398,31 +344,34 @@ def compact_posting_index(
     takedown time, amortized into this scheduled rewrite). After a
     tombstone-applying compaction the stats table is re-based to one
     exact row recomputed from the surviving postings. Holds the index
-    maintenance lock for the whole stage-then-replace window."""
-    from sdc_spark.operators.maintenance import index_lock
-
+    maintenance lock for the whole stage-then-replace window. The
+    physical anti-join carries no strategy hint: a bulk expiry's log
+    can be corpus-scale, and a forced broadcast of it is a driver OOM."""
     with index_lock(f"{path_root}/{name}"):
         content = spark.read.parquet(f"{path_root}/{name}/postings")
         tomb = posting_tombstones(spark, name)
         if tomb is not None:
             content = content.join(tomb, "doc", "left_anti")
-        _rewrite_posting_table(spark, name, content, path_root, n_buckets)
+        _replace(
+            spark, f"postings_{name}", content, f"{path_root}/{name}/postings",
+            ("token",),
+        )
         if tomb is not None:
-            _rebuild_posting_stats(spark, name, path_root)
-            import shutil
-
-            spark.sql(f"DROP TABLE IF EXISTS lexdel_{name}")
-            shutil.rmtree(f"{path_root}/{name}/tombstones", ignore_errors=True)
+            # re-base the additive stats rows to one exact row
+            _replace(
+                spark,
+                f"lexstats_{name}",
+                _stats_row(spark.table(f"postings_{name}")),
+                f"{path_root}/{name}/stats",
+            )
+            _drop(spark, (f"lexdel_{name}",), f"{path_root}/{name}/tombstones")
 
 
 def posting_tombstones(spark, name: str) -> DataFrame | None:
     """The index's delete log: a (doc) frame of tombstoned ids, or None
     when no takedown has happened since the last compaction. Serve paths
     anti-join it; ``compact_posting_index`` applies it physically."""
-    t = f"lexdel_{name}"
-    if not spark.catalog.tableExists(t):
-        return None
-    return spark.table(t)
+    return _log(spark, f"lexdel_{name}")
 
 
 def delete_from_posting_index(
@@ -430,102 +379,49 @@ def delete_from_posting_index(
     doc_ids: DataFrame,
     name: str,
     id_col: str = "doc_id",
-    n_buckets: int = _POSTING_BUCKETS,
     path_root: str = "/tmp/sdc_spark_postidx",
-    deferred: bool = True,
 ) -> None:
     """Takedown/expiry: remove documents from the persisted index.
 
-    Default is the LSM answer — a TOMBSTONE log: the id batch appends to
-    a tiny ``lexdel_<name>`` side table (write cost O(|batch|), the
+    The delete is the LSM answer — a TOMBSTONE log: the id batch appends
+    to a tiny ``lexdel_<name>`` side table (write cost O(|batch|), the
     multi-TB posting table is not touched) and the stats table gains one
     NEGATIVE additive row (-n_docs, -sum_dl) for the removed docs, so
     the reader's existing sum-of-rows reduction yields post-takedown
     (N, avgdl) with no rebuild. ``bm25_from_index`` anti-joins the log
     at serve time; physical deletion is deferred to
     ``compact_posting_index``. A weekly takedown batch on a 100-TB index
-    therefore writes kilobytes, not the index.
-
-    ``deferred=False`` keeps the eager path (anti-join + full rewrite +
-    stats rebuild) for callers that need the files gone NOW (e.g. a
-    storage-level compliance wipe). Neither path hints the anti-join
-    join strategy: a bulk expiry's id set can be corpus-scale, and a
-    forced broadcast of it would OOM the driver — AQE picks."""
-    from sdc_spark.materialize import materialize
-    from sdc_spark.operators.maintenance import index_lock
-
+    therefore writes kilobytes, not the index."""
     ids = doc_ids.select(F.col(id_col).alias("doc")).distinct()
     with index_lock(f"{path_root}/{name}"):
-        if deferred:
-            prior = posting_tombstones(spark, name)
-            if prior is not None:
-                # already-tombstoned ids must not subtract stats twice
-                ids = ids.join(prior, "doc", "left_anti")
-            fresh = materialize(ids, truncate=True)
-            neg = (
-                spark.table(f"postings_{name}")
-                .join(fresh, "doc", "left_semi")
-                .groupBy("doc")
-                .agg(F.max("dl").alias("dl"))
-                .agg(
-                    (-F.count(F.lit(1))).alias("n_docs"),
-                    (-F.coalesce(F.sum("dl"), F.lit(0))).alias("sum_dl"),
-                )
+        prior = posting_tombstones(spark, name)
+        if prior is not None:
+            # already-tombstoned ids must not subtract stats twice
+            ids = ids.join(prior, "doc", "left_anti")
+        fresh = _materialize(ids, truncate=True)
+        neg = (
+            spark.table(f"postings_{name}")
+            .join(fresh, "doc", "left_semi")
+            .groupBy("doc")
+            .agg(F.max("dl").alias("dl"))
+            .agg(
+                (-F.count(F.lit(1))).alias("n_docs"),
+                (-F.coalesce(F.sum("dl"), F.lit(0))).alias("sum_dl"),
             )
-            neg.write.mode("append").saveAsTable(f"lexstats_{name}")
-            t = f"lexdel_{name}"
-            if spark.catalog.tableExists(t):
-                fresh.write.mode("append").saveAsTable(t)
-            else:
-                (
-                    fresh.write.mode("overwrite")
-                    .option("path", f"{path_root}/{name}/tombstones")
-                    .saveAsTable(t)
-                )
-            return
-        remaining = (
-            spark.read.parquet(f"{path_root}/{name}/postings")
-            .join(ids, "doc", "left_anti")
         )
-        staged = materialize(remaining, truncate=True)
-        _rewrite_posting_table(spark, name, staged, path_root, n_buckets)
-        _rebuild_posting_stats(spark, name, path_root)
-
-
-def _rebuild_posting_stats(spark, name: str, path_root: str) -> None:
-    """Overwrite the stats table with one exact row recomputed from the
-    current (physically surviving) postings — the compaction-time reset
-    that re-bases the additive row stream."""
-    from sdc_spark.materialize import materialize
-
-    stats_t = f"lexstats_{name}"
-    new_stats = (
-        spark.table(f"postings_{name}")
-        .groupBy("doc")
-        .agg(F.max("dl").alias("dl"))
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"))
-    )
-    staged_stats = materialize(new_stats, truncate=True)
-    spark.sql(f"DROP TABLE IF EXISTS {stats_t}")
-    import shutil
-
-    shutil.rmtree(f"{path_root}/{name}/stats", ignore_errors=True)
-    (
-        staged_stats.write.mode("overwrite")
-        .option("path", f"{path_root}/{name}/stats")
-        .saveAsTable(stats_t)
-    )
+        _save(neg, f"lexstats_{name}", "append")
+        _log_append(spark, fresh, f"lexdel_{name}", f"{path_root}/{name}/tombstones")
 
 
 def drop_posting_index(
     spark, name: str, path_root: str = "/tmp/sdc_spark_postidx"
 ) -> None:
     """Drop the posting index tables and files (test/rebuild lifecycle)."""
-    import shutil
-
-    for t in (f"postings_{name}", f"lexstats_{name}", f"lexdel_{name}"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    shutil.rmtree(f"{path_root}/{name}", ignore_errors=True)
+    _drop(
+        spark,
+        (f"postings_{name}", f"lexstats_{name}", f"lexdel_{name}"),
+        f"{path_root}/{name}",
+    )
 
 
 def bm25_from_index(

@@ -21,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sdc_spark.materialize import materialize as _materialize
+from sdc_spark.operators.maintenance import _drop, index_lock, run_concurrently
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -455,8 +456,6 @@ def write_ivf_index(
             .parquet(cells_p)
         )
 
-    from sdc_spark.operators.maintenance import run_concurrently
-
     run_concurrently(_write_centroids, _write_cells)
     return cent_p, cells_p
 
@@ -538,8 +537,6 @@ def append_ivf_index(
     concurrent compaction via the index maintenance lock."""
     import os
 
-    from sdc_spark.operators.maintenance import index_lock
-
     with index_lock(os.path.dirname(cells_path.rstrip("/"))):
         centroids = spark.read.parquet(cent_path)
         n_cells = centroids.count()
@@ -562,9 +559,7 @@ def _rewrite_ivf_cells(spark, cells_path: str, content: DataFrame, n_cells: int)
     materialized with lineage truncation BEFORE the old files are
     replaced (lineage-kept persist would recompute lost blocks from the
     deleted files)."""
-    from sdc_spark.materialize import materialize
-
-    staged = materialize(content.repartition(n_cells, "cell"), truncate=True)
+    staged = _materialize(content.repartition(n_cells, "cell"), truncate=True)
     (
         staged.write.mode("overwrite").partitionBy("cell").parquet(cells_path)
     )
@@ -579,10 +574,6 @@ def compact_ivf_index(
     here and the log cleared; with none pending, contents are
     bit-identical before/after. Holds the index maintenance lock across
     the stage-then-replace window."""
-    import shutil
-
-    from sdc_spark.operators.maintenance import index_lock
-
     cent_p = f"{path_root}/{name}/centroids"
     cells_p = f"{path_root}/{name}/cells"
     with index_lock(f"{path_root}/{name}"):
@@ -593,7 +584,7 @@ def compact_ivf_index(
             content = content.join(tomb, "nid", "left_anti")
         _rewrite_ivf_cells(spark, cells_p, content, int(n_cells))
         if tomb is not None:
-            shutil.rmtree(_ivf_tomb_path(cells_p), ignore_errors=True)
+            _drop(spark, (), _ivf_tomb_path(cells_p))
 
 
 def delete_from_ivf_index(
@@ -601,43 +592,28 @@ def delete_from_ivf_index(
     ids: DataFrame,
     name: str,
     path_root: str = "/tmp/sdc_spark_ivfidx",
-    deferred: bool = True,
 ) -> None:
     """Remove vectors from a persisted IVF index (takedown/expiry).
 
-    Default is a TOMBSTONE log beside the cell directories: the id batch
-    appends O(|batch|) bytes and the multi-TB cell files are untouched;
-    ``ann_ivf_search_index`` anti-joins the log at serve time (over the
-    already-cell-pruned scan), so searches stop returning the ids
-    immediately. Physical deletion is amortized into
-    ``compact_ivf_index``. ``deferred=False`` keeps the eager full
-    cell rewrite for storage-level wipes. No join-strategy hints —
-    AQE picks (bulk-expiry id sets can be corpus-scale)."""
-    from sdc_spark.operators.maintenance import index_lock
-
-    cent_p = f"{path_root}/{name}/centroids"
-    cells_p = f"{path_root}/{name}/cells"
+    The delete is a TOMBSTONE log beside the cell directories: the id
+    batch appends O(|batch|) bytes and the multi-TB cell files are
+    untouched; ``ann_ivf_search_index`` anti-joins the log at serve time
+    (over the already-cell-pruned scan), so searches stop returning the
+    ids immediately. Physical deletion is amortized into
+    ``compact_ivf_index``. No join-strategy hints — AQE picks
+    (bulk-expiry id sets can be corpus-scale)."""
     idf = ids.select(F.col(ids.columns[0]).alias("nid")).distinct()
     with index_lock(f"{path_root}/{name}"):
-        if deferred:
-            # re-logging an already-tombstoned id is harmless (anti-join
-            # is idempotent) — no read of the existing log needed
-            idf.write.mode("append").parquet(_ivf_tomb_path(cells_p))
-            return
-        n_cells = spark.read.parquet(cent_p).count()
-        _rewrite_ivf_cells(
-            spark,
-            cells_p,
-            spark.read.parquet(cells_p).join(idf, "nid", "left_anti"),
-            int(n_cells),
+        # re-logging an already-tombstoned id is harmless (anti-join is
+        # idempotent) — no read of the existing log needed
+        idf.write.mode("append").parquet(
+            _ivf_tomb_path(f"{path_root}/{name}/cells")
         )
 
 
 def drop_ivf_index(name: str, path_root: str = "/tmp/sdc_spark_ivfidx") -> None:
     """Remove a persisted IVF index's files (fresh-rebuild path)."""
-    import shutil
-
-    shutil.rmtree(f"{path_root}/{name}", ignore_errors=True)
+    _drop(None, (), f"{path_root}/{name}")
 
 
 def pq_codebooks(v: DataFrame, dim: int, m: int = 8, ksub: int = 16) -> DataFrame:

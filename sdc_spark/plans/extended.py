@@ -155,9 +155,14 @@ def census_style_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .dropna()
     )
+    # the average runs in DECIMAL(18,4) on both engines so an exact
+    # half-way mean rounds the same way (a double average can land on
+    # either side of the tie)
     return derived.groupBy("order_year", "band").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(F.avg("price_k"), 4).alias("avg_price_k"),
+        F.round(F.avg(F.col("price_k").cast("decimal(18,4)")), 4)
+        .cast("double")
+        .alias("avg_price_k"),
     )
 
 
@@ -174,7 +179,9 @@ oracle(
         WHERE o_orderkey IS NOT NULL AND o_totalprice IS NOT NULL
           AND o_orderdate IS NOT NULL AND o_orderstatus IS NOT NULL
     )
-    SELECT order_year, band, count(*) AS n, round(avg(price_k), 4) AS avg_price_k
+    SELECT order_year, band, count(*) AS n,
+           CAST(round(avg(CAST(price_k AS DECIMAL(18,4))), 4) AS DOUBLE)
+               AS avg_price_k
     FROM derived GROUP BY 1, 2
     """,
 )

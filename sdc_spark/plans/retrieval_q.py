@@ -393,10 +393,12 @@ oracle(
 def retrieval_index_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Takedown/expiry graded end-to-end: build the posting index on the
     full corpus, DELETE every 7th document (the removal-request path —
-    postings anti-joined, stats REBUILT so idf and length normalization
-    shift), serve the 3-query workload. The oracle recomputes batch BM25
-    from raw text over the surviving corpus — so a stale posting, a
-    leaked stats row, or a layout-breaking rewrite is a value mismatch."""
+    the ids go to the tombstone log and the stats table gains one
+    negative row, so idf and length normalization shift with no index
+    rewrite), serve the 3-query workload, which anti-joins the log. The
+    oracle recomputes batch BM25 from raw text over the surviving corpus
+    — so a tombstoned posting that is still served or a wrong stats row
+    is a value mismatch."""
     import sdc_spark.operators.retrieval as sret
 
     doc = read_table(spark, sf_dir, "documents").select("doc_id", "text")

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from sdc_spark.materialize import start_plan_capture, stop_plan_capture
 from sdc_spark.operators import dedup as sdedup
+from sdc_spark.operators.maintenance import INDEX_BUCKETS
 from sdc_spark.sources.readers import read_table
 
 NAME = "layouttest"
@@ -132,7 +133,7 @@ def test_append_preserves_layout_and_bounds_files(
     spark, corpus_and_batch, index_tables
 ):
     """One append = ~one new file per bucket: after initial write + one
-    batch append each index table holds at most 2 x n_buckets data files
+    batch append each index table holds at most 2 x INDEX_BUCKETS data files
     — and the appended index screens identically to an index rebuilt
     from scratch over corpus ∪ batch."""
     (bands_t, grams_t), root = index_tables
@@ -146,7 +147,7 @@ def test_append_preserves_layout_and_bounds_files(
 
     for sub in ("bands", "grams"):
         files = glob.glob(f"{root}/{NAME}/{sub}/*.parquet")
-        assert 0 < len(files) <= 2 * sdedup._LSH_INDEX_BUCKETS, (sub, len(files))
+        assert 0 < len(files) <= 2 * INDEX_BUCKETS, (sub, len(files))
 
     appended = sdedup.screen_against_index(
         spark.table(bands_t), spark.table(grams_t), batch2, "text", "doc_id"
@@ -175,7 +176,7 @@ def test_compact_restores_file_bound_and_content(
 
     for sub in ("bands", "grams"):
         files = glob.glob(f"{root}/{NAME}/{sub}/*.parquet")
-        assert 0 < len(files) <= sdedup._LSH_INDEX_BUCKETS, (sub, len(files))
+        assert 0 < len(files) <= INDEX_BUCKETS, (sub, len(files))
     assert {tuple(r) for r in spark.table(bands_t).collect()} == before_bands
     assert {tuple(r) for r in spark.table(grams_t).collect()} == before_grams
 

@@ -134,6 +134,7 @@ def test_compaction_policy_from_file_stats(spark, docs):
     after compaction → False again; a large tombstone log trips the
     log-fraction threshold independently of file counts."""
     from sdc_spark.operators.maintenance import (
+        INDEX_BUCKETS,
         index_file_stats,
         needs_compaction,
     )
@@ -152,7 +153,7 @@ def test_compaction_policy_from_file_stats(spark, docs):
                 spark, docs.filter(F.col("doc_id") % 6 == i), "text", "doc_id", name
             )
         st = index_file_stats(idx_root)
-        assert st["data"]["postings"]["files"] > 2 * sret._POSTING_BUCKETS
+        assert st["data"]["postings"]["files"] > 2 * INDEX_BUCKETS
         assert needs_compaction(idx_root, max_files_per_bucket=2.0)
 
         sret.compact_posting_index(spark, name)

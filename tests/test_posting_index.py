@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+import sdc_spark.operators.maintenance as smaint
 import sdc_spark.operators.retrieval as sret
 
 NAME = "pytest_lexidx"
@@ -57,7 +58,7 @@ def test_index_serves_bm25_through_append(spark, docs):
         assert st["rows"] == 2 and st["n"] == docs.count()
         # append laid down ~one file per bucket, not a blizzard
         files = glob.glob(f"{ROOT}/{NAME}/postings/*.parquet")
-        assert 0 < len(files) <= 2 * sret._POSTING_BUCKETS, len(files)
+        assert 0 < len(files) <= 2 * smaint.INDEX_BUCKETS, len(files)
         # idempotent reuse: a second write call must NOT rebuild
         t1, t2 = sret.write_posting_index(spark, base, "text", "doc_id", NAME)
         assert (t1, t2) == (f"postings_{NAME}", f"lexstats_{NAME}")
@@ -80,8 +81,8 @@ def test_compact_and_delete_posting_index(spark, docs):
         sret.compact_posting_index(spark, NAME)
         assert _served(spark, q) == before  # bit-identical service
         files = glob.glob(f"{ROOT}/{NAME}/postings/*.parquet")
-        assert 0 < len(files) <= sret._POSTING_BUCKETS, len(files)
-        # takedown (deferred/tombstone default): served == in-session
+        assert 0 < len(files) <= smaint.INDEX_BUCKETS, len(files)
+        # takedown (tombstone log): served == in-session
         # BM25 on the surviving corpus, INCLUDING the shifted (N, avgdl)
         # normalization from the negative additive stats row
         def _index_files():
@@ -126,11 +127,12 @@ def test_compact_and_delete_posting_index(spark, docs):
         sret.drop_posting_index(spark, NAME)
 
 
-def test_eager_delete_has_no_forced_broadcast(spark, docs):
-    """The eager (deferred=False) takedown anti-join leaves join strategy
-    to AQE: a bulk expiry's id set can be corpus-scale, and a forced
-    broadcast of it is a driver OOM. Pin the plan shape: no broadcast
-    hint reaches the anti-join."""
+def test_eager_delete_has_no_forced_broadcast(spark, docs, monkeypatch):
+    """The physical delete — compaction's anti-join of the postings
+    against the tombstone log — leaves join strategy to AQE: a bulk
+    expiry's id set can be corpus-scale, and a forced broadcast of it is
+    a driver OOM. Pin the plan shape: no broadcast hint reaches the
+    anti-join."""
     base = docs.filter(F.col("doc_id") % 5 != 0)
     sret.drop_posting_index(spark, NAME)
     try:
@@ -138,19 +140,28 @@ def test_eager_delete_has_no_forced_broadcast(spark, docs):
         ids = docs.filter(F.col("doc_id") % 7 == 0).select(
             F.col("doc_id").alias("doc")
         ).distinct()
-        remaining = spark.read.parquet(f"{ROOT}/{NAME}/postings").join(
-            ids, "doc", "left_anti"
-        )
-        logical = remaining._jdf.queryExecution().logical().toString()
-        assert "UnresolvedHint" not in logical and "ResolvedHint" not in logical
-        # and the deferred path's serve-side anti-join is hint-free too
+        # the tombstoned serve-side anti-join works end-to-end
         sret.delete_from_posting_index(spark, ids, NAME, id_col="doc")
         q = spark.createDataFrame([(0, "vector")], "qid int, term string")
         served = {r["doc"] for r in sret.bm25_from_index(spark, NAME, q).collect()}
-        assert served  # tombstoned serve still works end-to-end
+        assert served
+        # capture the content compaction stages in place of the postings
+        staged = {}
+        replace = sret._replace
+
+        def spy(spark_, table, df, path, keys=()):
+            staged[table] = df._jdf.queryExecution().logical().toString()
+            replace(spark_, table, df, path, keys)
+
+        monkeypatch.setattr(sret, "_replace", spy)
+        sret.compact_posting_index(spark, NAME)
+        logical = staged[f"postings_{NAME}"]
+        assert "LeftAnti" in logical, logical
+        assert "UnresolvedHint" not in logical and "ResolvedHint" not in logical
         # source-level guard (the serve anti-join lives behind the
         # materialize boundary, so plan strings can't see it): no
-        # F.broadcast() is ever applied to a tombstone frame
+        # F.broadcast() is ever applied to a tombstone frame, neither in
+        # the posting lifecycle nor in the shared store primitives
         import inspect
 
         src = inspect.getsource(sret)
@@ -160,5 +171,13 @@ def test_eager_delete_has_no_forced_broadcast(spark, docs):
         serve_body = src.split("def bm25_from_index(")[1].split("\ndef ")[0]
         tomb_seg = serve_body.split("posting_tombstones")[1].split("_materialize")[0]
         assert "F.broadcast" not in tomb_seg
+        for fn in (
+            smaint._save,
+            smaint._replace,
+            smaint._log,
+            smaint._log_append,
+            smaint._drop,
+        ):
+            assert "broadcast" not in inspect.getsource(fn), fn.__name__
     finally:
         sret.drop_posting_index(spark, NAME)

@@ -7,12 +7,17 @@ contracts are pinned in their own suites; this pins the fan-out."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 import sdc_spark.operators.dedup as sdedup
 import sdc_spark.operators.retrieval as sret
 import sdc_spark.operators.similarity as ssim
-from sdc_spark.operators.maintenance import compact_indexes, takedown_documents
+from sdc_spark.operators.maintenance import (
+    compact_indexes,
+    index_file_stats,
+    takedown_documents,
+)
 from sdc_spark.sources.readers import read_table
 
 NAME = "tdorch"
@@ -113,9 +118,41 @@ def test_takedown_fans_across_all_four_families(spark, sf_dir, tmp_path_factory)
     assert sret.posting_tombstones(spark, NAME) is None
     assert sdedup.lsh_tombstones(spark, NAME) is None
     assert ssim.ivf_tombstones(spark, cells_p) is None
+    # no delete-side directory survives in any family (substring's
+    # dels/dead/deldocs included)
+    for fam in ("post", "lsh", "sub", "ivf"):
+        assert index_file_stats(f"{root}/{fam}/{NAME}")["logs"] == {}, fam
     assert_all_excluded()
 
     sret.drop_posting_index(spark, NAME, path_root=f"{root}/post")
     sdedup.drop_lsh_index(spark, NAME, path_root=f"{root}/lsh")
     sdedup.drop_substring_index(spark, NAME, path_root=f"{root}/sub")
     ssim.drop_ivf_index(NAME, path_root=f"{root}/ivf")
+
+
+def test_compact_indexes_survives_one_failed_index(spark, sf_dir, tmp_path_factory):
+    """compact_indexes' contract: one failing index (here: one that was
+    never written) does not skip the others — every listed index is
+    still compacted — and the first error is raised after the loop."""
+    root = str(tmp_path_factory.mktemp("compact_err"))
+    doc = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    name = "compact_err"
+    sret.drop_posting_index(spark, name, path_root=root)
+    sret.write_posting_index(spark, doc, "text", "doc_id", name, path_root=root)
+    try:
+        sret.delete_from_posting_index(
+            spark, doc.filter(F.col("doc_id") % 4 == 0), name, path_root=root
+        )
+        assert sret.posting_tombstones(spark, name) is not None
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            compact_indexes(
+                spark,
+                [
+                    {"kind": "posting", "name": "never_written", "path_root": root},
+                    {"kind": "posting", "name": name, "path_root": root},
+                ],
+            )
+        assert sret.posting_tombstones(spark, name) is None
+        assert index_file_stats(f"{root}/{name}")["logs"] == {}
+    finally:
+        sret.drop_posting_index(spark, name, path_root=root)
