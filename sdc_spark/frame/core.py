@@ -326,8 +326,8 @@ class SparkFrame:
 
         cols = self._numeric_cols()
         key, keep = self._row_order()
-        out = sorder.shifted_multi(
-            base._df.select(*keep, *cols), [key], cols, periods
+        out = sorder.shifted(
+            base._df.select(*keep, *cols), [key], {f"__sh_{c}__": F.col(c) for c in cols}, periods
         )
         # pandas_div: ±inf / NaN on zero divisors (ANSI `/` would raise)
         return SparkFrame(
@@ -1119,7 +1119,7 @@ def merge(
 
 def _frame_scan(sf: "SparkFrame", kind: str) -> "SparkFrame":
     """Shared frame-level prefix-scan driver: ALL numeric columns in ONE
-    range-partition pass (operators/order.scan_multi) — k columns cost the
+    range-partition pass (operators/order.scan) — k columns cost the
     same shuffles as one. NaN/null cells emit NaN and do not advance
     their column's scan (pandas skipna). Scans run in the frame's CURRENT
     row order (carried ``__ord__`` after sort_values, else index order),
@@ -1137,7 +1137,7 @@ def _frame_scan(sf: "SparkFrame", kind: str) -> "SparkFrame":
     from sdc_spark.operators import order as sorder
 
     key, keep = sf._row_order()
-    scanned = sorder.scan_multi(sf._df.select(*keep, *cols), [key], scans)
+    scanned = sorder.scan(sf._df.select(*keep, *cols), [key], scans)
     sel = [F.col(c) for c in keep]
     for c in cols:
         s = F.col(f"__s_{c}__")
@@ -1174,14 +1174,14 @@ def _add_frame_shift_ops() -> None:
 
     def shift(self, periods: int = 1, fill_value=None) -> SparkFrame:
         """pandas df.shift: every data column lagged/led in ONE
-        boundary-context pass (order.shifted_multi) — k columns cost the
+        boundary-context pass (order.shifted) — k columns cost the
         same shuffles as one. Shifts run in the frame's CURRENT row order
         (carried ``__ord__`` after sort_values, else index order)."""
         cols = self.columns
         dts = dict(self._df.dtypes)
         key, keep = self._row_order()
-        out = sorder.shifted_multi(
-            self._df.select(*keep, *cols), [key], cols, periods
+        out = sorder.shifted(
+            self._df.select(*keep, *cols), [key], {f"__sh_{c}__": F.col(c) for c in cols}, periods
         )
         sel = [F.col(c) for c in keep]
         for c in cols:
@@ -1201,8 +1201,8 @@ def _add_frame_shift_ops() -> None:
         dts = dict(self._df.dtypes)
         cols = [c for c in self.columns if dts[c] in num_types]
         key, keep = self._row_order()
-        out = sorder.shifted_multi(
-            self._df.select(*keep, *cols), [key], cols, periods
+        out = sorder.shifted(
+            self._df.select(*keep, *cols), [key], {f"__sh_{c}__": F.col(c) for c in cols}, periods
         )
         sel = [F.col(c) for c in keep] + [
             (F.col(c) - F.col(f"__sh_{c}__")).alias(c) for c in cols

@@ -400,7 +400,7 @@ class SparkSeries:
 
             def _val_ranks(col: str, out: str):
                 cnts = j.groupBy(col).agg(F.count(F.lit(1)).alias("__c__"))
-                cum = sorder.scan_sum(cnts, [col], F.col("__c__"), "__cum__")
+                cum = sorder.scan(cnts, [col], {"__cum__": ("sum", F.col("__c__"))})
                 return cum.select(
                     col,
                     (
@@ -479,9 +479,8 @@ class SparkSeries:
         out = sorder.shifted(
             self._df.drop("__ord__") if "__ord__" in self._df.columns else self._df,
             [IDX],
-            F.col(VAL),
+            {"__sh__": F.col(VAL)},
             periods,
-            "__sh__",
             fill_value,
         )
         return SparkSeries(
@@ -490,26 +489,10 @@ class SparkSeries:
             floating=self._floating,
         )
 
-    def cumsum(self) -> SparkSeries:
-        if self._floating:
-            # pandas: NaN stays NaN but doesn't poison the running sum
-            val = F.when(sexpr.notna(F.col(VAL), True), F.col(VAL))
-            out = sorder.scan_sum(self._df, [IDX], val, "__cs__")
-            keep = F.when(
-                sexpr.notna(F.col(VAL), True), F.col("__cs__")
-            ).otherwise(F.lit(float("nan")))
-            return SparkSeries(
-                out.select(IDX, keep.alias(VAL)), name=self.name, floating=True
-            )
-        out = sorder.scan_sum(self._df, [IDX], F.col(VAL), "__cs__")
-        return SparkSeries(
-            out.select(IDX, F.col("__cs__").alias(VAL)), name=self.name
-        )
-
     def _monotonic(self, increasing: bool) -> bool:
         """One boundary-context pass: any adjacent inversion (or missing
         value — pandas returns False then) anywhere falsifies."""
-        out = sorder.shifted(self._df, [IDX], F.col(VAL), 1, "__sh__")
+        out = sorder.shifted(self._df, [IDX], {"__sh__": F.col(VAL)}, 1)
         inv = F.col(VAL) < F.col("__sh__") if increasing else F.col(VAL) > F.col("__sh__")
         bad = F.when(~sexpr.notna(F.col(VAL), self._floating), True).otherwise(inv)
         row = out.agg(F.count(F.when(bad, 1)).alias("n")).collect()[0]
@@ -553,35 +536,34 @@ class SparkSeries:
         masked = self._df.select(
             IDX, F.when(sexpr.notna(F.col(VAL), self._floating), F.col(VAL)).alias(VAL)
         )
-        out = sorder.shifted(masked, [IDX], F.col(VAL), lag, "__sh__")
+        out = sorder.shifted(masked, [IDX], {"__sh__": F.col(VAL)}, lag)
         row = out.agg(F.corr(F.col(VAL), F.col("__sh__")).alias("c")).collect()[0]
         return float("nan") if row["c"] is None else row["c"]
 
-    def _scan(self, agg, combine, empty) -> SparkSeries:
-        if self._floating:
-            val = F.when(sexpr.notna(F.col(VAL), True), F.col(VAL))
-            out = sorder.scan_agg(self._df.select(IDX, VAL), [IDX], val, "__cs__", agg, combine, empty)
-            keep = F.when(sexpr.notna(F.col(VAL), True), F.col("__cs__")).otherwise(
-                F.lit(float("nan"))
-            )
-            return SparkSeries(
-                out.select(IDX, keep.alias(VAL)), name=self.name, floating=True
-            )
-        out = sorder.scan_agg(
-            self._df.select(IDX, VAL), [IDX], F.col(VAL), "__cs__", agg, combine, empty
+    def _scan(self, kind: str) -> SparkSeries:
+        """pandas cum*: missing values (NaN, or NA in a nullable int) never
+        advance the scan and re-emit as missing."""
+        notna = sexpr.notna(F.col(VAL), self._floating)
+        out = sorder.scan(
+            self._df.select(IDX, VAL), [IDX], {"__cs__": (kind, F.when(notna, F.col(VAL)))}
         )
+        missing = F.lit(float("nan")) if self._floating else F.lit(None)
+        keep = F.when(notna, F.col("__cs__")).otherwise(missing)
         return SparkSeries(
-            out.select(IDX, F.col("__cs__").alias(VAL)), name=self.name
+            out.select(IDX, keep.alias(VAL)), name=self.name, floating=self._floating
         )
+
+    def cumsum(self) -> SparkSeries:
+        return self._scan("sum")
 
     def cummax(self) -> SparkSeries:
-        return self._scan(F.max, F.greatest, None)
+        return self._scan("max")
 
     def cummin(self) -> SparkSeries:
-        return self._scan(F.min, F.least, None)
+        return self._scan("min")
 
     def cumprod(self) -> SparkSeries:
-        return self._scan(F.product, lambda a, b: a * b, None)
+        return self._scan("prod")
 
     def pct_change(
         self, periods: int = 1, fill_method: str | None = "pad"
@@ -597,7 +579,7 @@ class SparkSeries:
             base = self.bfill()
         elif fill_method is not None:
             raise ValueError(f"unsupported fill_method {fill_method!r}")
-        out = sorder.shifted(base._df, [IDX], F.col(VAL), periods, "__sh__")
+        out = sorder.shifted(base._df, [IDX], {"__sh__": F.col(VAL)}, periods)
         # pandas_div: ±inf / NaN on zero divisors (ANSI `/` would raise)
         change = F.when(
             F.col("__sh__").isNotNull(),
@@ -999,7 +981,7 @@ class SparkSeries:
 
     def diff(self, periods: int = 1) -> SparkSeries:
         """x - shift(x, periods) — NaN-propagating first differences."""
-        out = sorder.shifted(self._df, [IDX], F.col(VAL), periods, "__sh__")
+        out = sorder.shifted(self._df, [IDX], {"__sh__": F.col(VAL)}, periods)
         return SparkSeries(
             out.select(IDX, (F.col(VAL) - F.col("__sh__")).alias(VAL)),
             name=self.name,
@@ -1392,27 +1374,17 @@ class SeriesExpanding:
         val = F.when(sexpr.notna(F.col(VAL), s._floating), F.col(VAL))
         return s._df.select(IDX, val.alias("__v__"))
 
-    def _scanned(self, sq: bool = False):
-        """(IDX, __v__, __n__, __s__[, __ss__]) with ALL running sums from
-        ONE range partition + ONE P-row offsets broadcast (scan_sum_multi)
-        — a per-kernel scan_sum would re-shuffle and re-checkpoint once per
+    def _scanned(self, *stats: str):
+        """(IDX, __v__, __n__, *__stat__) — the running valid count plus
+        each requested running statistic ("sum", "sumsq", "min", "max")
+        from ONE range partition + ONE P-row prior broadcast (order.scan)
+        — a per-kernel scan would re-shuffle and re-checkpoint once per
         statistic (observed: expanding sum+mean = 4 exchanges; this is 1)."""
-        base = self._masked().select(
-            IDX,
-            "__v__",
-            F.when(F.col("__v__").isNotNull(), F.lit(1)).otherwise(F.lit(0)).alias("__f__"),
-            *([(F.col("__v__") * F.col("__v__")).alias("__q__")] if sq else []),
-        )
-        cols = ["__f__", "__v__"] + (["__q__"] if sq else [])
-        out = sorder.scan_sum_multi(base, [IDX], cols)
-        ren = out.select(
-            IDX,
-            "__v__",
-            F.col("__cs___f____").alias("__n__"),
-            F.col("__cs___v____").alias("__s__"),
-            *([F.col("__cs___q____").alias("__ss__")] if sq else []),
-        )
-        return ren
+        v = F.col("__v__")
+        kinds = {"sum": ("sum", v), "sumsq": ("sum", v * v), "min": ("min", v), "max": ("max", v)}
+        n = F.when(v.isNotNull(), F.lit(1)).otherwise(F.lit(0))
+        specs = {"__n__": ("sum", n), **{f"__{s}__": kinds[s] for s in stats}}
+        return sorder.scan(self._masked(), [IDX], specs)
 
     def _finish(self, df, expr) -> SparkSeries:
         out = df.select(
@@ -1421,55 +1393,28 @@ class SeriesExpanding:
         return SparkSeries(out, name=self._s.name, floating=True)
 
     def count(self) -> SparkSeries:
-        df = self._scanned()
-        return self._finish(df, F.col("__n__").cast("double"))
+        return self._finish(self._scanned(), F.col("__n__").cast("double"))
 
     def sum(self) -> SparkSeries:
-        return self._finish(self._scanned(), F.col("__s__"))
+        return self._finish(self._scanned("sum"), F.col("__sum__"))
 
     def mean(self) -> SparkSeries:
-        df = self._scanned()
-        return self._finish(df, F.col("__s__") / F.col("__n__"))
-
-    def _minmax_base(self):
-        df = self._masked()
-        return sorder.scan_sum(
-            df,
-            [IDX],
-            F.when(F.col("__v__").isNotNull(), F.lit(1)).otherwise(F.lit(0)),
-            "__n__",
-        )
+        return self._finish(self._scanned("sum"), F.col("__sum__") / F.col("__n__"))
 
     def min(self) -> SparkSeries:
-        df = sorder.scan_agg(
-            self._minmax_base(), [IDX], F.col("__v__"), "__m__", F.min, F.least, None
-        )
-        return self._finish(df, F.col("__m__"))
+        return self._finish(self._scanned("min"), F.col("__min__"))
 
     def max(self) -> SparkSeries:
-        df = sorder.scan_agg(
-            self._minmax_base(), [IDX], F.col("__v__"), "__m__", F.max, F.greatest, None
-        )
-        return self._finish(df, F.col("__m__"))
-
-    def _var_frame(self):
-        return self._scanned(sq=True)
+        return self._finish(self._scanned("max"), F.col("__max__"))
 
     def var(self, ddof: int = 1) -> SparkSeries:
-        df = self._var_frame()
         n = F.col("__n__").cast("double")
-        var = F.try_divide(
-            F.col("__ss__") - F.col("__s__") * F.col("__s__") / n, n - ddof
-        )
-        return self._finish(df, var)
+        s = F.col("__sum__")
+        var = F.try_divide(F.col("__sumsq__") - s * s / n, n - ddof)
+        return self._finish(self._scanned("sum", "sumsq"), var)
 
     def std(self, ddof: int = 1) -> SparkSeries:
-        df = self._var_frame()
-        n = F.col("__n__").cast("double")
-        var = F.try_divide(
-            F.col("__ss__") - F.col("__s__") * F.col("__s__") / n, n - ddof
-        )
-        return self._finish(df, F.sqrt(var))
+        return self.var(ddof)._unary(F.sqrt)
 
     def quantile(self, q: float = 0.5, max_buckets: int = 1024) -> SparkSeries:
         """Expanding quantile with pandas linear interpolation, via the

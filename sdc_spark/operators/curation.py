@@ -46,7 +46,7 @@ def pack_sequences(
     if isinstance(base.schema["doc"].dataType, _INT_TYPES):
         scanned = sorder.scan_sum_intkey(base, "doc", F.col("__tok__"), "__cum__")
     else:
-        scanned = sorder.scan_sum(base, ["doc"], F.col("__tok__"), "__cum__")
+        scanned = sorder.scan(base, ["doc"], {"__cum__": ("sum", F.col("__tok__"))})
     # Pure long arithmetic (SQL `div`): double division + cast truncation is
     # inexact above 2^53 tokens and truncates toward zero for the cum-1 < 0
     # edge (zero-token doc at stream head). A zero-token doc never spans a

@@ -16,8 +16,10 @@ a single-node array; this is their distributed re-expression.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Sequence
 
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -27,6 +29,11 @@ from sdc_spark.materialize import materialize as _materialize
 PID = "__pid__"
 POS = "__pos__"
 CTX = "__ctx__"
+
+# The Arrow passes ship closures that call this module's helpers (the
+# decay kernels); pickle those by value so executor Python workers never
+# have to import sdc_spark.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _cols(order_cols: Sequence[str | Column]) -> list[Column]:
@@ -95,6 +102,14 @@ def _pid_grouped(part: DataFrame):
     return part.repartition(n, PID).groupBy(PID)
 
 
+def _ddl(part: DataFrame, names: Sequence[str]) -> str:
+    """applyInPandas schema fields for the ``names`` columns of ``part``,
+    in ``part``'s column order."""
+    return ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}" for f in part.schema.fields if f.name in names
+    )
+
+
 def global_fill(
     df: DataFrame,
     order_cols: Sequence[str | Column],
@@ -143,12 +158,26 @@ def _one(pid: Column | str = PID) -> Column:
     return F.pmod(F.col(pid) if isinstance(pid, str) else pid, F.lit(1))
 
 
-def _offsets(part: DataFrame, agg: Column, alias: str) -> DataFrame:
-    """P-row table: for each pid, the running total of ``agg`` over all
-    PRIOR pids. The only single-partition window — over P rows."""
-    per = part.groupBy(PID).agg(agg.alias("__t__"))
+# kind -> (aggregate, combine): the associative pairs a prefix scan and
+# its P-row prior table are built from
+_KINDS = {
+    "sum": (F.sum, lambda a, b: a + b),
+    "max": (F.max, F.greatest),
+    "min": (F.min, F.least),
+    "prod": (F.product, lambda a, b: a * b),
+}
+
+
+def _prior(part: DataFrame, specs: dict[str, tuple[str, Column]]) -> DataFrame:
+    """P-row table: for each pid and each ``out -> (kind, value)`` spec,
+    the kind's aggregate of ``value`` over all PRIOR pids — null when no
+    prior pid holds a non-null value. The only single-partition window —
+    over P rows."""
+    per = part.groupBy(PID).agg(*[_KINDS[k][0](v).alias(o) for o, (k, v) in specs.items()])
     w = W.partitionBy(_one()).orderBy(PID).rowsBetween(W.unboundedPreceding, -1)
-    return per.select(PID, F.coalesce(F.sum("__t__").over(w), F.lit(0)).alias(alias))
+    return per.select(
+        PID, *[_KINDS[k][0](F.col(o)).over(w).alias(o) for o, (k, _) in specs.items()]
+    )
 
 
 def with_position(
@@ -160,76 +189,52 @@ def with_position(
     a P-row broadcast. No full-data single partition.
     """
     part = range_partitioned(df, order_cols)
-    offs = _offsets(part, F.count(F.lit(1)), "__off__")
+    offs = _prior(part, {"__off__": ("sum", F.lit(1))})
     w = W.partitionBy(PID).orderBy(*_cols(order_cols))
+    pos = F.row_number().over(w) + F.coalesce(F.col("__off__"), F.lit(0)) - 1
     return (
         part.join(F.broadcast(offs), PID)
-        .withColumn(pos_col, F.row_number().over(w) + F.col("__off__") - 1)
+        .withColumn(pos_col, pos)
         .drop(PID, "__off__")
     )
 
 
-def scan_agg(
+def scan(
     df: DataFrame,
     order_cols: Sequence[str | Column],
-    value: Column,
-    out_col: str,
-    agg,
-    combine,
-    empty,
+    scans: dict[str, tuple[str, Column]],
 ) -> DataFrame:
-    """Generalized global prefix-scan in (order_cols) order for any
-    associative aggregate: per-partition running ``agg`` plus a broadcast
-    of prior-partition totals folded with ``combine``. ``empty`` is the
-    identity for partitions with no prior data (null-safe via coalesce).
+    """Global prefix scans in (order_cols) order — the distributed block
+    scan. ``scans`` maps output column -> (kind, value) with kind in
+    {'sum', 'max', 'min', 'prod'}. Every spec shares ONE range partition,
+    ONE P-row prior table (each spec's aggregate over all earlier
+    partitions, broadcast back) and ONE window pass: k scans cost the
+    shuffles of one.
 
-    sum: (F.sum, a+b, 0) · max: (F.max, greatest, null) ·
-    min: (F.min, least, null) · product: (F.product, a*b, 1).
-    """
+    One null policy, independent of where the range partitioner cut: a
+    row's output is the kind's aggregate over every non-null ``value`` at
+    or before it in the global order, or null if there is none. Callers
+    apply pandas' output rule on top (cum*: missing at missing-input
+    rows; expanding: count >= min_periods)."""
     part = range_partitioned(df, order_cols)
-    per = part.groupBy(PID).agg(agg(value).alias("__t__"))
-    w0 = W.partitionBy(_one()).orderBy(PID).rowsBetween(W.unboundedPreceding, -1)
-    offs = per.select(PID, agg(F.col("__t__")).over(w0).alias("__soff__"))
+    prior = _prior(part, {f"__p_{o}__": spec for o, spec in scans.items()})
     w = (
         W.partitionBy(PID)
         .orderBy(*_cols(order_cols))
         .rowsBetween(W.unboundedPreceding, 0)
     )
-    run = agg(value).over(w)
-    merged = F.when(F.col("__soff__").isNull(), run).otherwise(
-        F.when(run.isNull(), F.col("__soff__")).otherwise(
-            combine(F.col("__soff__"), run)
-        )
-    )
-    if empty is not None:
-        merged = F.coalesce(merged, F.lit(empty))
+    # the running aggregate gets its own projection: referenced twice in
+    # the merge below, it would otherwise be computed twice by the window
+    runs = {o: _KINDS[kind][0](val).over(w) for o, (kind, val) in scans.items()}
+    merged = {}
+    for o, (kind, _) in scans.items():
+        run, p = F.col(o), F.col(f"__p_{o}__")
+        merged[o] = F.coalesce(_KINDS[kind][1](run, p), run, p)
     return (
-        part.join(F.broadcast(offs), PID, "left")
-        .withColumn(out_col, merged)
-        .drop(PID, "__soff__")
-    )
-
-
-def scan_sum(
-    df: DataFrame,
-    order_cols: Sequence[str | Column],
-    value: Column,
-    out_col: str,
-) -> DataFrame:
-    """Global running sum of ``value`` in (order_cols) order — the
-    distributed prefix-scan: per-partition running sums plus a broadcast
-    of prior-partition totals."""
-    part = range_partitioned(df, order_cols)
-    offs = _offsets(part, F.sum(value), "__soff__")
-    w = (
-        W.partitionBy(PID)
-        .orderBy(*_cols(order_cols))
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    return (
-        part.join(F.broadcast(offs), PID)
-        .withColumn(out_col, F.sum(value).over(w) + F.col("__soff__"))
-        .drop(PID, "__soff__")
+        part.join(F.broadcast(prior), PID)
+        .withColumns(runs)
+        .withColumns(merged)
+        .drop(PID, *[f"__p_{o}__" for o in scans])
     )
 
 
@@ -238,13 +243,12 @@ def scan_sum_intkey(
     key_col: str,
     value: Column,
     out_col: str,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Global running sum in ``key_col`` order for an INTEGER key, with
     bucket boundaries derived from (min, max) only — fully deterministic
     under ANY execution schedule, partition count, or session config.
 
-    The generic ``scan_sum`` range-partitions by sampling, which requires
+    The generic ``scan`` range-partitions by sampling, which requires
     a materialization barrier so every plan branch sees one boundary
     sample. Here the bucket of a row is a pure function of its key value
     (``(key - min) div width``), so the per-bucket totals branch and the
@@ -254,7 +258,7 @@ def scan_sum_intkey(
     bucket) but never correctness.
     """
     spark = df.sparkSession
-    n = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     lo, hi = df.agg(F.min(key_col), F.max(key_col)).first()
     if lo is None:
         return df.withColumn(out_col, F.lit(None).cast("long"))
@@ -279,64 +283,6 @@ def scan_sum_intkey(
         .withColumn(out_col, F.sum(value).over(w) + F.col("__soff__"))
         .drop("__b__", "__soff__")
     )
-
-
-def scan_sum_multi(
-    df: DataFrame,
-    order_cols: Sequence[str | Column],
-    cols: Sequence[str],
-    out_fmt: str = "__cs_{}__",
-) -> DataFrame:
-    """Running sums for SEVERAL columns in one range partition + one P-row
-    offsets broadcast + one window pass (a per-column scan_sum would
-    re-shuffle once per column)."""
-    part = range_partitioned(df, order_cols)
-    per = part.groupBy(PID).agg(*[F.sum(c).alias(c) for c in cols])
-    w0 = W.partitionBy(_one()).orderBy(PID).rowsBetween(W.unboundedPreceding, -1)
-    offs = per.select(
-        PID,
-        *[F.coalesce(F.sum(c).over(w0), F.lit(0)).alias(f"__off_{c}__") for c in cols],
-    )
-    w = (
-        W.partitionBy(PID)
-        .orderBy(*_cols(order_cols))
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    out = part.join(F.broadcast(offs), PID)
-    for c in cols:
-        out = out.withColumn(out_fmt.format(c), F.sum(c).over(w) + F.col(f"__off_{c}__"))
-    return out.drop(PID, *[f"__off_{c}__" for c in cols])
-
-
-def shifted_multi(
-    df: DataFrame,
-    order_cols: Sequence[str | Column],
-    cols: Sequence[str],
-    periods: int,
-    out_fmt: str = "__sh_{}__",
-) -> DataFrame:
-    """Global lag/lead of several columns via ONE boundary-context pass."""
-    if periods == 0:
-        out = df
-        for c in cols:
-            out = out.withColumn(out_fmt.format(c), F.col(c))
-        return out
-    ctx = with_context(
-        df,
-        order_cols,
-        before=periods if periods > 0 else 0,
-        after=-periods if periods < 0 else 0,
-    )
-    w = W.partitionBy(PID).orderBy(*_cols(order_cols))
-    out = ctx
-    for c in cols:
-        sh = (
-            F.lag(c, periods).over(w)
-            if periods > 0
-            else F.lead(c, -periods).over(w)
-        )
-        out = out.withColumn(out_fmt.format(c), sh)
-    return out.filter(~F.col(CTX)).drop(PID, CTX)
 
 
 def _ensure_min_partition_rows(
@@ -427,29 +373,24 @@ def with_context(
 def shifted(
     df: DataFrame,
     order_cols: Sequence[str | Column],
-    value: Column,
+    cols: dict[str, Column],
     periods: int,
-    out_col: str,
     fill_value=None,
 ) -> DataFrame:
-    """Global lag (periods > 0) / lead (periods < 0) of ``value`` in
-    (order_cols) order via boundary-context replication — no
+    """Global lag (periods > 0) / lead (periods < 0) in (order_cols) order
+    of every ``out -> value`` in ``cols``, via ONE boundary-context
+    replication pass — k columns cost the shuffles of one; no
     single-partition window, no self-join."""
     if periods == 0:
-        return df.withColumn(out_col, value)
-    ctx = with_context(
-        df,
-        order_cols,
-        before=periods if periods > 0 else 0,
-        after=-periods if periods < 0 else 0,
-    )
+        return df.withColumns(cols)
+    ctx = with_context(df, order_cols, before=max(periods, 0), after=max(-periods, 0))
     w = W.partitionBy(PID).orderBy(*_cols(order_cols))
-    sh = (
-        F.lag(value, periods, fill_value).over(w)
-        if periods > 0
-        else F.lead(value, -periods, fill_value).over(w)
+    sh = F.lag if periods > 0 else F.lead
+    return (
+        ctx.withColumns({o: sh(v, abs(periods), fill_value).over(w) for o, v in cols.items()})
+        .filter(~F.col(CTX))
+        .drop(PID, CTX)
     )
-    return ctx.withColumn(out_col, sh).filter(~F.col(CTX)).drop(PID, CTX)
 
 
 def scan_quantile(
@@ -548,12 +489,7 @@ def scan_quantile(
     offsets[1:] = np.cumsum(mat, axis=0)[:-1]
 
     chunk = max(256, (1 << 21) // k)
-    schema_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in part.schema.fields
-        if f.name in order_cols
-    )
-    out_schema = schema_fields + "".join(f", `{c}` double" for c in out_cols)
+    out_schema = _ddl(part, order_cols) + "".join(f", `{c}` double" for c in out_cols)
 
     def _quant(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(list(order_cols), kind="mergesort")
@@ -594,6 +530,63 @@ def scan_quantile(
     return _pid_grouped(part).applyInPandas(_quant, out_schema)
 
 
+def _chunk(dq: float) -> int:
+    """Decay-scan chunk length: keeps dq^(-chunk) <= e^600 (~4e260), so
+    even with the geometric cumsum growth and large |x| the scaled prefix
+    stays far from float64 overflow."""
+    import math
+
+    return max(16, min(4096, int(600.0 / -math.log(dq))))
+
+
+def _decay_tail(s: "np.ndarray", dq: float, chunk: int) -> float:
+    """Σ_j dq^(n-1-j)·s_j — the decayed state at the end of ``s`` —
+    without overflow: fold chunks left to right, decaying the running
+    value by dq^len(chunk); dq^n is never materialized."""
+    import numpy as np
+
+    acc = 0.0
+    for lo in range(0, len(s), chunk):
+        c = min(chunk, len(s) - lo)
+        pw = dq ** np.arange(c - 1, -1, -1, dtype="float64")
+        acc = acc * (dq**c) + float(np.dot(pw, s[lo : lo + c]))
+    return acc
+
+
+def _decay_prefix(s: "np.ndarray", dq: float, carry: float, chunk: int) -> "np.ndarray":
+    """Per-row decayed prefix Σ_{j<=k} dq^(k-j)·s_j + carry·dq^(k+1),
+    where ``carry`` is the state entering ``s``. Vectorized with the
+    scaling identity Σ_{j<=k} dq^(k-j)·s_j = dq^k · cumsum(s_j·dq^(-j)),
+    renormalized every ``chunk`` rows so dq^(-k) cannot overflow."""
+    import numpy as np
+
+    out = np.empty(len(s))
+    for lo in range(0, len(s), chunk):
+        hi = min(lo + chunk, len(s))
+        k = np.arange(hi - lo, dtype="float64")
+        out[lo:hi] = dq**k * np.cumsum(s[lo:hi] * dq**-k) + carry * dq ** (k + 1)
+        carry = out[hi - 1]
+    return out
+
+
+def _moment_decays(q: float) -> dict:
+    """Decay of each ewm moment sum; den2, the sum of squared weights,
+    decays at q²."""
+    return {"num": q, "num2": q, "den": q, "den2": q * q}
+
+
+def _moment_series(x: "np.ndarray", q: float) -> dict:
+    """The four decayed-moment series of ewm var/std as name ->
+    (series, decay): num = Σ q^d·x, num2 = Σ q^d·x², den = Σ q^d,
+    den2 = Σ q^(2d) (d = steps back; NaNs add nothing but advance d)."""
+    import numpy as np
+
+    v = ~np.isnan(x)
+    xz, vz = np.where(v, x, 0.0), v.astype("float64")
+    series = {"num": xz, "num2": xz * xz, "den": vz, "den2": vz}
+    return {m: (series[m], dq) for m, dq in _moment_decays(q).items()}
+
+
 def scan_ewm(
     df: DataFrame,
     order_cols: Sequence[str],
@@ -617,19 +610,14 @@ def scan_ewm(
        decayed weight D_p, and length n_p (q = 1-alpha). A P-row
        driver-side scan composes carries: S_p = S_{p-1}·q^{n_p} + N_p.
     3. Pass B: per partition, Arrow-batched; the within-partition prefix
-       is vectorized with the scaling identity
-       Σ_{j<=k} q^(k-j) v_j = q^k · cumsum(v_j·q^(-j)), applied in
-       chunks sized so q^(-chunk) cannot overflow
-       (chunk = min(4096, 600 / -ln q)); the incoming carry contributes
-       S_{p-1}·q^(k+1).
+       is the chunk-renormalized ``_decay_prefix`` seeded with the
+       incoming carry S_{p-1}.
 
     pandas semantics: NaN values contribute nothing but still advance the
     decay clock (ignore_na=False); outputs before the first valid value
     (or before ``min_periods`` valids) are null. Exact up to float
     reassociation (~1 ulp vs pandas' sequential recurrence).
     """
-    import math
-
     import numpy as np
     import pandas as pd
 
@@ -639,35 +627,20 @@ def scan_ewm(
     spark = df.sparkSession
     base = df.select(*[F.col(c) for c in order_cols], F.col(val_col).cast("double"))
     part = range_partitioned(base, order_cols, pin=True)
-    # chunk bound keeps q^(-chunk) <= e^600 (~4e260): even with the
-    # geometric cumsum growth and large |x| the scaled prefix stays far
-    # from float64 overflow
-    chunk = 4096 if q == 0.0 else max(16, min(4096, int(600.0 / -math.log(q))))
-
-    def _decayed_tail(x: "np.ndarray", v: "np.ndarray") -> tuple[float, float]:
-        """(Σ q^(n-1-j)·x_j·v_j, Σ q^(n-1-j)·v_j) without overflow: fold
-        chunks left-to-right, decaying the running value by q^len(chunk).
-        For q == 0 (alpha == 1, memoryless) the carry degenerates to the
-        LAST VALID value — pandas still carries it through trailing NaNs."""
-        if q == 0.0:
-            idx = np.flatnonzero(v)
-            if len(idx) == 0:
-                return 0.0, 0.0
-            return float(x[idx[-1]]), 1.0
-        num = den = 0.0
-        for lo in range(0, len(x), chunk):
-            xs, vs = x[lo : lo + chunk], v[lo : lo + chunk]
-            c = len(xs)
-            pw = q ** np.arange(c - 1, -1, -1, dtype="float64")
-            num = num * (q**c) + float(np.dot(pw, np.where(vs, xs, 0.0)))
-            den = den * (q**c) + float(np.dot(pw, vs.astype("float64")))
-        return num, den
+    chunk = _chunk(q) if q > 0.0 else 0
 
     def _summary(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(list(order_cols), kind="mergesort")
         x = pdf[val_col].to_numpy(dtype="float64")
         v = ~np.isnan(x)
-        num, den = _decayed_tail(x, v)
+        if q > 0.0:
+            num = _decay_tail(np.where(v, x, 0.0), q, chunk)
+            den = _decay_tail(v.astype("float64"), q, chunk)
+        else:
+            # alpha == 1 (memoryless): the carry is the LAST VALID value —
+            # pandas still carries it through trailing NaNs
+            idx = np.flatnonzero(v)
+            num, den = (float(x[idx[-1]]), 1.0) if len(idx) else (0.0, 0.0)
         return pd.DataFrame(
             {
                 "pid": [int(pdf[PID].iloc[0])],
@@ -703,12 +676,7 @@ def scan_ewm(
                 cd = cd * decay + r["den"]
             cc += r["nvalid"]
 
-    schema_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in part.schema.fields
-        if f.name in order_cols
-    )
-    out_schema = f"{schema_fields}, `{out_col}` double"
+    out_schema = f"{_ddl(part, order_cols)}, `{out_col}` double"
     minp = max(min_periods, 1)
 
     def _ewm(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -716,45 +684,19 @@ def scan_ewm(
         pid = int(pdf[PID].iloc[0])
         x = pdf[val_col].to_numpy(dtype="float64")
         valid = ~np.isnan(x)
-        n = len(x)
-        num = np.empty(n)
-        den = np.empty(n)
-        s_num, s_den = carry_num[pid], carry_den[pid]
-        for lo in range(0, n, chunk):
-            hi = min(lo + chunk, n)
-            c = hi - lo
-            k = np.arange(c, dtype="float64")
-            xs = np.where(valid[lo:hi], x[lo:hi], 0.0)
-            vs = valid[lo:hi].astype("float64")
-            if q > 0.0:
-                inv = q**-k
-                pw = q**k
-                loc_num = pw * np.cumsum(xs * inv)
-                loc_den = pw * np.cumsum(vs * inv)
-                num[lo:hi] = loc_num + s_num * q ** (k + 1)
-                den[lo:hi] = loc_den + s_den * q ** (k + 1)
-                s_num = num[hi - 1]
-                s_den = den[hi - 1]
-            else:
-                # alpha == 1: memoryless update, but pandas still CARRIES
-                # the last valid value through NaN rows — a forward fill
-                # seeded with the cross-partition carry
-                seg = np.where(valid[lo:hi], x[lo:hi], np.nan)
-                filled_idx = np.where(valid[lo:hi], np.arange(c), -1)
-                filled_idx = np.maximum.accumulate(filled_idx)
-                has_prev = s_den > 0.0
-                seg_out = np.where(
-                    filled_idx >= 0,
-                    seg[np.maximum(filled_idx, 0)],
-                    s_num if has_prev else np.nan,
-                )
-                num[lo:hi] = seg_out
-                den[lo:hi] = np.where(
-                    (filled_idx >= 0) | has_prev, 1.0, 0.0
-                )
-                if valid[lo:hi].any():
-                    s_num = seg[filled_idx[-1]]
-                    s_den = 1.0
+        if q > 0.0:
+            num = _decay_prefix(np.where(valid, x, 0.0), q, carry_num[pid], chunk)
+            den = _decay_prefix(valid.astype("float64"), q, carry_den[pid], chunk)
+        else:
+            # alpha == 1: memoryless update, but pandas still CARRIES the
+            # last valid value through NaN rows — a forward fill seeded
+            # with the cross-partition carry
+            filled = np.maximum.accumulate(np.where(valid, np.arange(len(x)), -1))
+            has_prev = carry_den[pid] > 0.0
+            num = np.where(
+                filled >= 0, x[np.maximum(filled, 0)], carry_num[pid] if has_prev else np.nan
+            )
+            den = np.where((filled >= 0) | has_prev, 1.0, 0.0)
         cum_valid = carry_cnt[pid] + np.cumsum(valid.astype("int64"))
         out = np.where((den > 0.0) & (cum_valid >= minp), num / np.maximum(den, 1e-300), np.nan)
         res = pdf[list(order_cols)].copy()
@@ -772,63 +714,34 @@ def scan_ewm_moments(
     min_periods: int = 0,
 ) -> DataFrame:
     """Per-row decayed-moment sums for ewm var/std (adjust=True,
-    ignore_na=False, bias=False): num = Σ q^d·x, num2 = Σ q^d·x²,
-    den = Σ q^d, den2 = Σ q^(2d) (d = steps back, NaNs advance d but add
-    nothing). Same segmented decay-scan shape as scan_ewm — per-partition
-    scalar reductions, P-scalar carry composition, chunk-renormalized
-    vectorized prefixes — just four parallel scans (den2 runs at decay
-    q²). Returns (order_cols..., __num__, __den__, __num2__, __den2__,
-    __cnt__).
+    ignore_na=False, bias=False): the four ``_moment_series`` (num, num2,
+    den at q; den2 at q²). Same segmented decay-scan shape as scan_ewm —
+    per-partition scalar reductions, P-scalar carry composition,
+    chunk-renormalized vectorized prefixes. Returns (order_cols...,
+    __num__, __den__, __num2__, __den2__, __cnt__).
 
     Requires alpha < 1: the memoryless case has an undefined
     reliability-weight correction (pandas returns all-NaN var there too).
     """
-    import math
-
     import numpy as np
     import pandas as pd
 
     if not (0.0 < alpha < 1.0):
         raise ValueError("ewm moments require alpha in (0, 1)")
     q = 1.0 - alpha
-    q2 = q * q
     spark = df.sparkSession
     base = df.select(*[F.col(c) for c in order_cols], F.col(val_col).cast("double"))
     part = range_partitioned(base, order_cols, pin=True)
-    chunk = max(16, min(4096, int(600.0 / -math.log(q2))))
-
-    def _tails(x, v):
-        """End-of-partition decayed sums for all four (series, decay)."""
-        outs = [0.0, 0.0, 0.0, 0.0]
-        specs = [
-            (np.where(v, x, 0.0), q),
-            (np.where(v, x * x, 0.0), q),
-            (v.astype("float64"), q),
-            (v.astype("float64"), q2),
-        ]
-        for lo in range(0, len(x), chunk):
-            c = min(chunk, len(x) - lo)
-            for i, (s, dq) in enumerate(specs):
-                pw = dq ** np.arange(c - 1, -1, -1, dtype="float64")
-                outs[i] = outs[i] * (dq**c) + float(np.dot(pw, s[lo : lo + c]))
-        return outs
+    chunk = _chunk(q * q)
 
     def _summary(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(list(order_cols), kind="mergesort")
         x = pdf[val_col].to_numpy(dtype="float64")
-        v = ~np.isnan(x)
-        num, num2, den, den2 = _tails(x, v)
-        return pd.DataFrame(
-            {
-                "pid": [int(pdf[PID].iloc[0])],
-                "n": [len(x)],
-                "nvalid": [int(v.sum())],
-                "num": [num],
-                "num2": [num2],
-                "den": [den],
-                "den2": [den2],
-            }
-        )
+        row = {"pid": [int(pdf[PID].iloc[0])], "n": [len(x)]}
+        row["nvalid"] = [int((~np.isnan(x)).sum())]
+        for name, (s, dq) in _moment_series(x, q).items():
+            row[name] = [_decay_tail(s, dq, chunk)]
+        return pd.DataFrame(row)
 
     rows = _pid_grouped(part).applyInPandas(
         _summary,
@@ -836,111 +749,33 @@ def scan_ewm_moments(
     ).collect()
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     info = {r["pid"]: r for r in rows}
-    carries = {p: None for p in range(n_part)}
-    state = [0.0, 0.0, 0.0, 0.0, 0]  # num, num2, den, den2, cnt
+    decays = _moment_decays(q)
+    carries = {}
+    state = dict.fromkeys(decays, 0.0) | {"cnt": 0}
     for p in range(n_part):
-        carries[p] = tuple(state)
+        carries[p] = dict(state)
         r = info.get(p)
         if r is not None:
-            d1, d2 = q ** r["n"], q2 ** r["n"]
-            state = [
-                state[0] * d1 + r["num"],
-                state[1] * d1 + r["num2"],
-                state[2] * d1 + r["den"],
-                state[3] * d2 + r["den2"],
-                state[4] + r["nvalid"],
-            ]
+            for m, dq in decays.items():
+                state[m] = state[m] * dq ** r["n"] + r[m]
+            state["cnt"] += r["nvalid"]
 
-    schema_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in part.schema.fields
-        if f.name in order_cols
-    )
     out_schema = (
-        f"{schema_fields}, `__num__` double, `__den__` double,"
+        f"{_ddl(part, order_cols)}, `__num__` double, `__den__` double,"
         " `__num2__` double, `__den2__` double, `__cnt__` long"
     )
 
     def _scan(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(list(order_cols), kind="mergesort")
-        pid = int(pdf[PID].iloc[0])
+        carry = carries[int(pdf[PID].iloc[0])]
         x = pdf[val_col].to_numpy(dtype="float64")
-        valid = ~np.isnan(x)
-        n = len(x)
-        c_num, c_num2, c_den, c_den2, c_cnt = carries[pid]
-        series = [
-            (np.where(valid, x, 0.0), q, c_num),
-            (np.where(valid, x * x, 0.0), q, c_num2),
-            (valid.astype("float64"), q, c_den),
-            (valid.astype("float64"), q2, c_den2),
-        ]
-        outs = [np.empty(n) for _ in series]
-        states = [s for _, _, s in series]
-        for lo in range(0, n, chunk):
-            hi = min(lo + chunk, n)
-            k = np.arange(hi - lo, dtype="float64")
-            for i, (s, dq, _) in enumerate(series):
-                inv = dq**-k
-                pw = dq**k
-                loc = pw * np.cumsum(s[lo:hi] * inv)
-                outs[i][lo:hi] = loc + states[i] * dq ** (k + 1)
-                states[i] = outs[i][hi - 1]
         res = pdf[list(order_cols)].copy()
-        res["__num__"], res["__num2__"] = outs[0], outs[1]
-        res["__den__"], res["__den2__"] = outs[2], outs[3]
-        res["__cnt__"] = c_cnt + np.cumsum(valid.astype("int64"))
+        for name, (s, dq) in _moment_series(x, q).items():
+            res[f"__{name}__"] = _decay_prefix(s, dq, carry[name], chunk)
+        res["__cnt__"] = carry["cnt"] + np.cumsum((~np.isnan(x)).astype("int64"))
         return res
 
     return _pid_grouped(part).applyInPandas(_scan, out_schema)
-
-
-def scan_multi(
-    df: DataFrame,
-    order_cols: Sequence[str | Column],
-    scans: dict[str, tuple[str, Column]],
-) -> DataFrame:
-    """Several prefix scans in ONE pass: ``scans`` maps output column ->
-    (kind, value) with kind in {'sum', 'max', 'min'}. One range partition,
-    one P-row offsets broadcast carrying every scan's per-partition
-    total, one window pass — a k-column frame cumsum costs the same
-    shuffle count as a single-column one.
-
-    max/min offsets combine with greatest/least (the prefix max over
-    prior partitions is the max of their maxes); null-safe: rows with a
-    null value don't advance any scan (aggregates skip nulls)."""
-    part = range_partitioned(df, order_cols)
-
-    aggs = []
-    for out, (kind, val) in scans.items():
-        agg = {"sum": F.sum, "max": F.max, "min": F.min}[kind](val)
-        aggs.append(agg.alias(f"__t_{out}__"))
-    per = part.groupBy(PID).agg(*aggs)
-    w0 = W.partitionBy(_one()).orderBy(PID).rowsBetween(W.unboundedPreceding, -1)
-    off_cols = []
-    for out, (kind, _) in scans.items():
-        c = F.col(f"__t_{out}__")
-        run = {"sum": F.sum, "max": F.max, "min": F.min}[kind](c).over(w0)
-        off_cols.append(run.alias(f"__o_{out}__"))
-    offs = per.select(PID, *off_cols)
-
-    w = (
-        W.partitionBy(PID)
-        .orderBy(*_cols(order_cols))
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    out_df = part.join(F.broadcast(offs), PID)
-    for out, (kind, val) in scans.items():
-        local = {"sum": F.sum, "max": F.max, "min": F.min}[kind](val).over(w)
-        o = F.col(f"__o_{out}__")
-        if kind == "sum":
-            combined = local + F.coalesce(o, F.lit(0))
-        elif kind == "max":
-            combined = F.when(o.isNull(), local).otherwise(F.greatest(local, o))
-        else:
-            combined = F.when(o.isNull(), local).otherwise(F.least(local, o))
-        out_df = out_df.withColumn(out, combined)
-    drop = [PID] + [f"__o_{out}__" for out in scans]
-    return out_df.drop(*drop)
 
 
 def scan_ewm_grouped(
@@ -963,7 +798,7 @@ def scan_ewm_grouped(
     straddles each partition boundary; so:
 
     - Pass A reduces each partition to one summary row describing only
-      its LAST group's segment (decayed num/den/num²/den² tails + valid
+      its LAST group's segment (decayed ``_moment_series`` tails + valid
       count, per value column) plus its first/last key — a P-row
       collect, bounded by the partition count exactly like scan_ewm.
     - A driver-side P-step fold composes each straddling group's carry
@@ -974,14 +809,11 @@ def scan_ewm_grouped(
       segment runs through pandas' cython groupby-ewm (one call per
       Arrow batch — fast even with millions of tiny groups); only the
       single carry-continuing first segment (if any) is computed by the
-      seeded chunk-renormalized scan (same scaling identity as
-      scan_ewm).
+      seeded chunk-renormalized ``_decay_prefix``.
 
     NaN group keys are dropped (pandas groupby semantics). Exact up to
     float reassociation vs pandas' sequential recurrence.
     """
-    import math
-
     import numpy as np
     import pandas as pd
 
@@ -990,7 +822,6 @@ def scan_ewm_grouped(
     if not (0.0 < alpha < 1.0):
         raise ValueError("scan_ewm_grouped requires alpha in (0, 1)")
     q = 1.0 - alpha
-    q2 = q * q
     keys = list(keys)
     order_cols = list(order_cols)
     val_cols = list(val_cols)
@@ -1001,27 +832,10 @@ def scan_ewm_grouped(
         *keys, *order_cols, *[F.col(c).cast("double").alias(c) for c in val_cols]
     )
     part = range_partitioned(base, [*keys, *order_cols], pin=True)
-    chunk = max(16, min(4096, int(600.0 / -math.log(q2))))
+    chunk = _chunk(q * q)
     sort_cols = [*keys, *order_cols]
     minp = max(min_periods, 1)
-
-    def _tails(x: "np.ndarray") -> tuple[float, float, float, float, int]:
-        """End-of-segment decayed sums (num, den at q; num2, den2 at q/q²)
-        via the chunk-renormalized fold — never materializes q^n."""
-        v = ~np.isnan(x)
-        num = den = num2 = den2 = 0.0
-        for lo in range(0, len(x), chunk):
-            xs, vs = x[lo : lo + chunk], v[lo : lo + chunk]
-            c = len(xs)
-            pw = q ** np.arange(c - 1, -1, -1, dtype="float64")
-            pw2 = q2 ** np.arange(c - 1, -1, -1, dtype="float64")
-            xz = np.where(vs, xs, 0.0)
-            vz = vs.astype("float64")
-            num = num * (q**c) + float(np.dot(pw, xz))
-            num2 = num2 * (q**c) + float(np.dot(pw, xz * xz))
-            den = den * (q**c) + float(np.dot(pw, vz))
-            den2 = den2 * (q2**c) + float(np.dot(pw2, vz))
-        return num, den, num2, den2, int(v.sum())
+    decays = _moment_decays(q)
 
     ktypes = {
         f.name: f.dataType.simpleString()
@@ -1033,8 +847,7 @@ def scan_ewm_grouped(
         + ", ".join(f"`__fk_{k}__` {ktypes[k]}, `__lk_{k}__` {ktypes[k]}" for k in keys)
         + ", "
         + ", ".join(
-            f"`__num_{c}__` double, `__den_{c}__` double, `__num2_{c}__` double,"
-            f" `__den2_{c}__` double, `__nv_{c}__` long"
+            ", ".join(f"`__{m}_{c}__` double" for m in decays) + f", `__nv_{c}__` long"
             for c in val_cols
         )
     )
@@ -1054,83 +867,47 @@ def scan_ewm_grouped(
             row[f"__fk_{k}__"] = [pdf[k].iloc[0]]
             row[f"__lk_{k}__"] = [pdf[k].iloc[-1]]
         for c in val_cols:
-            num, den, num2, den2, nv = _tails(seg[c].to_numpy(dtype="float64"))
-            row[f"__num_{c}__"] = [num]
-            row[f"__den_{c}__"] = [den]
-            row[f"__num2_{c}__"] = [num2]
-            row[f"__den2_{c}__"] = [den2]
-            row[f"__nv_{c}__"] = [nv]
+            x = seg[c].to_numpy(dtype="float64")
+            for m, (s, dq) in _moment_series(x, q).items():
+                row[f"__{m}_{c}__"] = [_decay_tail(s, dq, chunk)]
+            row[f"__nv_{c}__"] = [int((~np.isnan(x)).sum())]
         return pd.DataFrame(row)
 
     rows = _pid_grouped(part).applyInPandas(_summary, sum_schema).collect()
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     info = {r["pid"]: r for r in rows}
-    # carries[p] = (open_key tuple | None, {col: [num, den, num2, den2, cnt]})
+    # carries[p] = (open_key tuple | None, {col: {num, den, num2, den2, cnt}})
     carries: dict[int, tuple] = {}
     open_key: tuple | None = None
-    state = {c: [0.0, 0.0, 0.0, 0.0, 0] for c in val_cols}
+    state = {c: dict.fromkeys(decays, 0.0) | {"cnt": 0} for c in val_cols}
     for p in range(n_part):
-        carries[p] = (open_key, {c: list(s) for c, s in state.items()})
+        carries[p] = (open_key, {c: dict(s) for c, s in state.items()})
         r = info.get(p)
         if r is None:
             continue  # empty partition: open group passes through
         first = tuple(r[f"__fk_{k}__"] for k in keys)
         last = tuple(r[f"__lk_{k}__"] for k in keys)
-        if open_key is not None and first == open_key and first == last:
-            # whole partition is one segment of the open group: compose
-            d1, d2 = q ** r["n_seg"], q2 ** r["n_seg"]
-            for c in val_cols:
-                s = state[c]
-                state[c] = [
-                    s[0] * d1 + r[f"__num_{c}__"],
-                    s[1] * d1 + r[f"__den_{c}__"],
-                    s[2] * d1 + r[f"__num2_{c}__"],
-                    s[3] * d2 + r[f"__den2_{c}__"],
-                    s[4] + r[f"__nv_{c}__"],
-                ]
-        else:
-            # open group ends inside p (or p starts a new group): the new
-            # open group is p's last segment, carried fresh
-            for c in val_cols:
-                state[c] = [
-                    r[f"__num_{c}__"],
-                    r[f"__den_{c}__"],
-                    r[f"__num2_{c}__"],
-                    r[f"__den2_{c}__"],
-                    r[f"__nv_{c}__"],
-                ]
+        # whole partition is one segment of the open group: compose;
+        # otherwise the open group ends inside p (or p starts a new
+        # group) and the new open group is p's last segment, carried fresh
+        compose = open_key is not None and first == open_key and first == last
+        for c in val_cols:
+            s = state[c]
+            for m, dq in decays.items():
+                tail = r[f"__{m}_{c}__"]
+                s[m] = s[m] * dq ** r["n_seg"] + tail if compose else tail
+            s["cnt"] = s["cnt"] + r[f"__nv_{c}__"] if compose else r[f"__nv_{c}__"]
         open_key = last
 
-    ordered_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in part.schema.fields
-        if f.name in (*keys, *order_cols)
-    )
-    out_schema = ordered_fields + ", " + ", ".join(f"`{c}` double" for c in val_cols)
+    out_schema = _ddl(part, sort_cols) + ", " + ", ".join(f"`{c}` double" for c in val_cols)
 
-    def _seeded_stat(x: "np.ndarray", carry: list) -> "np.ndarray":
-        """Chunk-renormalized seeded scan for ONE carry-continuing segment."""
-        c_num, c_den, c_num2, c_den2, c_cnt = carry
-        n = len(x)
-        valid = ~np.isnan(x)
-        num = np.empty(n)
-        den = np.empty(n)
-        num2 = np.empty(n)
-        den2 = np.empty(n)
-        s = [c_num, c_den, c_num2, c_den2]
-        for lo in range(0, n, chunk):
-            hi = min(lo + chunk, n)
-            k = np.arange(hi - lo, dtype="float64")
-            xz = np.where(valid[lo:hi], x[lo:hi], 0.0)
-            vz = valid[lo:hi].astype("float64")
-            inv, pw = q**-k, q**k
-            inv2, pw2 = q2**-k, q2**k
-            num[lo:hi] = pw * np.cumsum(xz * inv) + s[0] * q ** (k + 1)
-            den[lo:hi] = pw * np.cumsum(vz * inv) + s[1] * q ** (k + 1)
-            num2[lo:hi] = pw * np.cumsum(xz * xz * inv) + s[2] * q ** (k + 1)
-            den2[lo:hi] = pw2 * np.cumsum(vz * inv2) + s[3] * q2 ** (k + 1)
-            s = [num[hi - 1], den[hi - 1], num2[hi - 1], den2[hi - 1]]
-        cnt = c_cnt + np.cumsum(valid.astype("int64"))
+    def _seeded_stat(x: "np.ndarray", carry: dict) -> "np.ndarray":
+        """The stat for ONE carry-continuing segment, from seeded prefixes."""
+        pre = {
+            m: _decay_prefix(s, dq, carry[m], chunk) for m, (s, dq) in _moment_series(x, q).items()
+        }
+        num, den, num2, den2 = pre["num"], pre["den"], pre["num2"], pre["den2"]
+        cnt = carry["cnt"] + np.cumsum((~np.isnan(x)).astype("int64"))
         with np.errstate(invalid="ignore", divide="ignore"):
             if stat == "mean":
                 out = np.where((den > 0) & (cnt >= minp), num / np.maximum(den, 1e-300), np.nan)

@@ -132,8 +132,8 @@ def frame_sorted_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sort_values(...).cumsum(): the scan runs in the SORTED row order
     (pandas semantics — the carried __ord__ rank is the scan key), not the
     original index order. Integer quantities keep the running sum exact.
-    One range partition + one P-row offsets broadcast for the whole frame
-    (operators/order.scan_multi)."""
+    One range partition + one P-row prior broadcast for the whole frame
+    (operators/order.scan)."""
     li = read_table(spark, sf_dir, "lineitem")
     base = _uniq_lineitem(
         li, "l_extendedprice", F.col("l_quantity").cast("long").alias("qty")

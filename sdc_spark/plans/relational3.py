@@ -461,7 +461,7 @@ oracle(
 def frame_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.cumsum() through the facade (ref series cumsum kernel
     numpy_like.py:875-958; frame level applies per column): BOTH numeric
-    columns ride ONE distributed prefix-scan pass (order.scan_multi —
+    columns ride ONE distributed prefix-scan pass (order.scan —
     same shuffle count as a single column). Values pre-scaled to integer
     cents so the running sums are exact longs."""
     from sdc_spark.frame.core import SparkFrame
@@ -498,7 +498,7 @@ oracle(
 def frame_shift_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.shift/df.diff through the facade (ref series shift
     …series_functions.py:1936; frame level is per-column codegen there):
-    both columns ride ONE boundary-context pass each (order.shifted_multi)
+    both columns ride ONE boundary-context pass each (order.shifted)
     — no per-column re-shuffle. Integer cents for exact diffs."""
     from sdc_spark.frame.core import SparkFrame
 

@@ -48,3 +48,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def uncoalesced(spark):
+    """8 shuffle partitions that AQE may not coalesce, so even a few dozen
+    rows are range-partitioned across several partitions and the scans'
+    cross-partition carry is exercised. Both settings are restored
+    afterwards."""
+    tuned = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k, None) for k in tuned}
+    try:
+        for k, v in tuned.items():
+            spark.conf.set(k, v)
+        yield spark
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -1732,3 +1732,36 @@ def test_expensive_plan_regex_matches_nodes_not_identifiers(spark):
     )
     assert _EXPENSIVE_PLAN_RE.search(plan(joined))
     assert _EXPENSIVE_PLAN_RE.search(plan(cheap.groupBy("Join").count()))
+
+
+def test_expanding_skips_nan_that_opens_a_partition(uncoalesced):
+    """Expanding sum/mean/std must carry the running statistic through a
+    NaN row even when that row opens a range partition: the answer may
+    not depend on where the partitioner cut (NaN every 5th row lands on
+    partition starts at 8 partitions)."""
+    ps = pd.Series([float("nan") if i % 5 == 0 else float(i) for i in range(40)], name="v")
+    s = from_pandas(uncoalesced, ps.to_frame())["v"]
+    for m in ("sum", "mean", "std"):
+        got = getattr(s.expanding(min_periods=1), m)().to_pandas()
+        exp = getattr(ps.expanding(min_periods=1), m)()
+        pd.testing.assert_series_equal(
+            got, exp, check_names=False, check_dtype=False, check_index_type=False, atol=1e-9
+        )
+
+
+def test_nullable_int_cum_scans_emit_na_at_na_rows(uncoalesced):
+    """Int64 cumsum/cummax/cummin/cumprod: NA rows stay NA (pandas skipna)
+    and do not advance the scan — at every partition count."""
+    ps = pd.Series(
+        pd.array([None if i % 5 == 0 else (i % 3) + 1 for i in range(40)], dtype="Int64"),
+        name="v",
+    )
+    s = from_pandas(uncoalesced, ps.to_frame())["v"]
+    for m in ("cumsum", "cummax", "cummin", "cumprod"):
+        got = getattr(s, m)().to_pandas()
+        exp = getattr(ps, m)()
+        np.testing.assert_array_equal(
+            got.to_numpy(dtype="float64", na_value=np.nan),
+            exp.to_numpy(dtype="float64", na_value=np.nan),
+            err_msg=m,
+        )

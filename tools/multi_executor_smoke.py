@@ -6,10 +6,12 @@ materialize mode (``persist`` + a reliable checkpoint dir).
 
 What it pins, and why these specifically:
 
-- the distributed total-order machinery (``with_position`` /
-  ``scan_multi`` / ``global_fill``): its P-row per-partition offset
+- the distributed total-order machinery (``with_position`` / ``scan``
+  / ``global_fill`` / ``scan_ewm``): its P-row per-partition offset
   tables are computed on executors and BROADCAST back — a single-JVM run
-  cannot tell a real broadcast from a local reference;
+  cannot tell a real broadcast from a local reference — and the decay
+  scan's Arrow passes call module-level ``order`` helpers, so executor
+  Python workers must import ``sdc_spark`` (``spark.executorEnv.PYTHONPATH``);
 - a full persisted posting-index lifecycle (write → serve → append →
   serve → tombstone delete → serve → compact → serve), with the index
   ``path_root`` on a directory every executor can reach. On this
@@ -76,13 +78,15 @@ def main() -> None:
 
 
 def _order_machinery(spark) -> None:
-    """with_position / scan_multi / global_fill vs a driver-side oracle,
+    """with_position / scan / global_fill / scan_ewm vs a driver-side oracle,
     on data laid out to straddle both executors."""
     import random
 
     from pyspark.sql import functions as F
 
-    from sdc_spark.operators.order import global_fill, scan_multi, with_position
+    import pandas as pd
+
+    from sdc_spark.operators.order import global_fill, scan, scan_ewm, with_position
 
     rng = random.Random(7)
     rows = [
@@ -101,7 +105,7 @@ def _order_machinery(spark) -> None:
 
     got_scan = {
         r["id"]: (r["cs"], r["cm"])
-        for r in scan_multi(
+        for r in scan(
             df, ["k", "id"], {"cs": ("sum", F.col("k")), "cm": ("max", F.col("k"))}
         )
         .select("id", "cs", "cm")
@@ -113,7 +117,7 @@ def _order_machinery(spark) -> None:
         k = by_id[i][0]
         cs += k
         cm = max(cm, k)
-        assert got_scan[i] == (cs, cm), f"scan_multi at id={i}"
+        assert got_scan[i] == (cs, cm), f"scan at id={i}"
 
     got_fill = {
         r["id"]: r["v"]
@@ -124,6 +128,16 @@ def _order_machinery(spark) -> None:
         if by_id[i][1] is not None:
             carry = by_id[i][1]
         assert got_fill[i] == carry, f"global_fill at id={i}"
+
+    got_ewm = (
+        scan_ewm(df.select("k", "id", "v"), ["k", "id"], "v", 0.3, "e")
+        .orderBy("k", "id")
+        .toPandas()["e"]
+    )
+    exp_ewm = pd.Series([by_id[i][1] for i in expect_order], dtype="float64").ewm(alpha=0.3).mean()
+    pd.testing.assert_series_equal(
+        got_ewm, exp_ewm, check_names=False, check_index=False, rtol=1e-9
+    )
 
 
 def _posting_lifecycle(spark, path_root: str) -> None:

@@ -67,10 +67,9 @@ def main() -> int:
     assert (exp["cum"] == want).all(), "scan result != pandas cumsum"
 
     # also exercise the generic sampled-range scan under retry
-    clean2 = sorder.scan_sum(base, ["k"], F.col("v"), "cum").orderBy("k").toPandas()
-    dirty2 = (
-        sorder.scan_sum(flaky_base, ["k"], F.col("v"), "cum").orderBy("k").toPandas()
-    )
+    spec = {"cum": ("sum", F.col("v"))}
+    clean2 = sorder.scan(base, ["k"], spec).orderBy("k").toPandas()
+    dirty2 = sorder.scan(flaky_base, ["k"], spec).orderBy("k").toPandas()
     pd.testing.assert_frame_equal(clean2, dirty2)
 
     print("retry probe OK: scans bit-identical under injected task retries")
