@@ -17,17 +17,21 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sdc_spark.frame.series import IDX, VAL, SparkSeries
 from sdc_spark.operators import order as sorder
 from sdc_spark.operators.rolling import (
-    _AGGS,
+    Kernel,
+    _guard,
     _pairwise,
     kurt_expr,
-    pair_count,
+    native,
+    over_once,
+    percentile,
+    row_count,
     skew_expr,
 )
 
@@ -98,7 +102,106 @@ def _check_win_type(win_type) -> None:
         )
 
 
-class SeriesRolling:
+class _Kernels:
+    """The kernel methods the series, group and frame rollings share. Each
+    subclass's ``_roll(kernel_fn, minp)`` builds ``kernel_fn(column, tag)``
+    for every column it rolls, guards it on ``minp`` (default: the
+    rolling's ``min_periods``; 0 = unguarded), evaluates the merged
+    aggregates once (operators/rolling.py over_once) and finishes."""
+
+    def sum(self):
+        return self._roll(lambda x, t: native("sum", x, t))
+
+    def mean(self):
+        return self._roll(lambda x, t: native("mean", x, t))
+
+    def min(self):
+        return self._roll(lambda x, t: native("min", x, t))
+
+    def max(self):
+        return self._roll(lambda x, t: native("max", x, t))
+
+    def std(self):
+        return self._roll(lambda x, t: native("std", x, t))
+
+    def var(self):
+        return self._roll(lambda x, t: native("var", x, t))
+
+    def median(self):
+        return self._roll(lambda x, t: native("median", x, t))
+
+    def quantile(self, q: float):
+        return self._roll(lambda x, t: percentile(x, t, q))
+
+    def count(self):
+        # pandas guards count on the window's ROW count (not non-null
+        # count): a full-size window emits its non-null count even if most
+        # values are NaN
+        return self._roll(lambda x, t: row_count(x, t, self._minp_count), 0)
+
+    def skew(self):
+        return self._roll(skew_expr, max(self._minp, 3))
+
+    def kurt(self):
+        return self._roll(kurt_expr, max(self._minp, 4))
+
+
+def _collect_apply(func):
+    """Kernel factory for rolling.apply: the raw window as a list, handed
+    to ``func`` by a vectorized UDF (ref …series_rolling_functions.py:758-796
+    — the sanctioned slow path). collect_list drops nulls; pandas hands
+    the raw window (NaNs included) to func — re-materialize nulls as NaN."""
+
+    @F.pandas_udf("double")
+    def udf(arrs: pd.Series) -> pd.Series:
+        return arrs.map(lambda a: float(func(np.asarray(a, dtype=float))))
+
+    def kernel(x: Column, tag: str) -> Kernel:
+        k = f"__list_{tag}"
+        vals = F.coalesce(x.cast("double"), F.lit(float("nan")))
+        return {k: F.collect_list(vals)}, udf(F.col(k))
+
+    return kernel
+
+
+def _last_valid(x: Column, tag: str) -> Kernel:
+    k = f"__last_{tag}"
+    return {k: F.last(x, ignorenulls=True)}, F.col(k)
+
+
+def _per_column(cols, kernel_fn, minp: int) -> dict[str, Kernel]:
+    """``kernel_fn(column, tag)`` for each column, guarded on ``minp``. The
+    tag is the column's position, so aggregate keys stay plain
+    identifiers whatever the column is called."""
+    return {
+        c: _guard(F.col(c), str(i), minp, kernel_fn(F.col(c), str(i)))
+        for i, c in enumerate(cols)
+    }
+
+
+def _merge(kernels: dict[str, Kernel]) -> tuple[dict[str, Column], list[Column]]:
+    """The union of the kernels' aggregates (an equal key is one aggregate)
+    and their finishers aliased to the output column names."""
+    aggs = {}
+    for a, _ in kernels.values():
+        aggs.update(a)
+    return aggs, [fin.alias(c) for c, (_, fin) in kernels.items()]
+
+
+def _eval_ctx(df: DataFrame, before: int, after: int, kernels: dict[str, Kernel]) -> DataFrame:
+    """Evaluate the kernels' aggregates once over the context-replicated
+    frame, drop context rows, then finish: (__index__, one column per
+    kernel)."""
+    c, w = _ctx_window(df, before, after)
+    aggs, fins = _merge(kernels)
+    return (
+        over_once(c, w, [IDX, sorder.CTX], aggs)
+        .filter(~F.col(sorder.CTX))
+        .select(IDX, *fins)
+    )
+
+
+class SeriesRolling(_Kernels):
     def __init__(
         self,
         s: SparkSeries,
@@ -116,84 +219,21 @@ class SeriesRolling:
         self._minp = window if min_periods is None else min_periods
         self._minp_count = 0 if min_periods is None else min_periods
 
-    def _eval(self, df: DataFrame, result_fn, out_cols):
-        """Run window expressions over the context frame, drop context rows."""
-        c, w = _ctx_window(df, self._before, self._after)
-        exprs = result_fn(w)
-        return (
-            c.select(IDX, F.col(sorder.CTX), *exprs)
-            .filter(~F.col(sorder.CTX))
-            .select(IDX, *out_cols)
-        )
+    def _series(self, df: DataFrame, kernels, name=None, floating=True) -> SparkSeries:
+        out = _eval_ctx(df, self._before, self._after, kernels)
+        return SparkSeries(out, name=name, floating=floating)
 
-    def _roll(self, expr_fn, floating: bool = True) -> SparkSeries:
-        minp = self._minp
-        out = self._eval(
-            self._s._df.select(IDX, VAL),
-            lambda w: [
-                F.when(F.count(VAL).over(w) >= minp, expr_fn(w)).alias("__r__")
-            ],
-            [F.col("__r__").alias(VAL)],
-        )
-        return SparkSeries(out, name=self._s.name, floating=floating)
-
-    def sum(self):
-        return self._roll(lambda w: F.sum(VAL).over(w))
-
-    def mean(self):
-        return self._roll(lambda w: F.avg(VAL).over(w))
-
-    def min(self):
-        return self._roll(lambda w: F.min(VAL).over(w))
-
-    def max(self):
-        return self._roll(lambda w: F.max(VAL).over(w))
+    def _roll(self, kernel_fn, minp: int | None = None) -> SparkSeries:
+        minp = self._minp if minp is None else minp
+        kernels = _per_column([VAL], kernel_fn, minp)
+        return self._series(self._s._df.select(IDX, VAL), kernels, name=self._s.name)
 
     def count(self):
-        # pandas guards count on the window's ROW count (not non-null
-        # count): a full-size window emits its non-null count even if most
-        # values are NaN
-        minp = self._minp_count
-        out = self._eval(
-            self._s._df.select(IDX, VAL),
-            lambda w: [
-                F.when(
-                    F.count(F.lit(1)).over(w) >= minp, F.count(VAL).over(w)
-                ).alias("__r__")
-            ],
-            [F.col("__r__").alias(VAL)],
-        )
-        return SparkSeries(out, floating=False)
+        kernels = _per_column([VAL], lambda x, t: row_count(x, t, self._minp_count), 0)
+        return self._series(self._s._df.select(IDX, VAL), kernels, floating=False)
 
-    def std(self):
-        return self._roll(lambda w: _AGGS["std"](VAL).over(w))
-
-    def var(self):
-        return self._roll(lambda w: _AGGS["var"](VAL).over(w))
-
-    def median(self):
-        return self._roll(lambda w: F.percentile(F.col(VAL), F.lit(0.5)).over(w))
-
-    def quantile(self, q: float):
-        return self._roll(lambda w: F.percentile(F.col(VAL), F.lit(q)).over(w))
-
-    def skew(self):
-        minp = max(self._minp, 3)
-        return self._roll_guarded(lambda w: skew_expr(F.col(VAL), w), minp)
-
-    def kurt(self):
-        minp = max(self._minp, 4)
-        return self._roll_guarded(lambda w: kurt_expr(F.col(VAL), w), minp)
-
-    def _roll_guarded(self, expr_fn, minp: int) -> SparkSeries:
-        out = self._eval(
-            self._s._df.select(IDX, VAL),
-            lambda w: [
-                F.when(F.count(VAL).over(w) >= minp, expr_fn(w)).alias("__r__")
-            ],
-            [F.col("__r__").alias(VAL)],
-        )
-        return SparkSeries(out, name=self._s.name, floating=True)
+    def apply(self, func):
+        return self._roll(_collect_apply(func))
 
     def corr(self, other: SparkSeries):
         return self._pair(other, "corr")
@@ -205,42 +245,10 @@ class SeriesRolling:
         a = self._s._df.select(IDX, F.col(VAL).alias("__l__"))
         b = other._df.select(IDX, F.col(VAL).alias("__r__"))
         j = a.join(b, IDX, "full")
-        minp = self._minp
-
-        def exprs(w):
-            # pandas counts valid PAIRS toward min_periods, not left values
-            guard = pair_count(F.col("__l__"), F.col("__r__"), w) >= minp
-            return [F.when(guard, _pairwise("__l__", "__r__", w, kind)).alias("__v__")]
-
-        out = self._eval(j, exprs, [F.col("__v__").alias(VAL)])
-        return SparkSeries(out, floating=True)
-
-    def apply(self, func):
-        """rolling.apply via collect_list over the window + vectorized UDF
-        (ref …series_rolling_functions.py:758-796 — the sanctioned slow
-        path)."""
-
-        @F.pandas_udf("double")
-        def udf(arrs: pd.Series) -> pd.Series:
-            return arrs.map(lambda a: float(func(np.asarray(a, dtype=float))))
-
-        minp = self._minp
-        # collect_list drops nulls; pandas hands the raw window (NaNs
-        # included) to func — re-materialize nulls as NaN
-        vals = F.coalesce(F.col(VAL).cast("double"), F.lit(float("nan")))
-        out = self._eval(
-            self._s._df.select(IDX, VAL),
-            lambda w: [
-                F.when(
-                    F.count(VAL).over(w) >= minp, udf(F.collect_list(vals).over(w))
-                ).alias("__r__")
-            ],
-            [F.col("__r__").alias(VAL)],
-        )
-        return SparkSeries(out, floating=True)
+        return self._series(j, {VAL: _pairwise(F.col("__l__"), F.col("__r__"), "lr", kind, self._minp)})
 
 
-class GroupRolling:
+class GroupRolling(_Kernels):
     """df.groupby(keys).rolling(window) — per-group trailing windows.
 
     Groups ARE the partitioning key, so this is the natively-scalable
@@ -258,60 +266,17 @@ class GroupRolling:
         self._minp = window if min_periods is None else min_periods
         self._minp_count = 0 if min_periods is None else min_periods
 
-    def _roll_all(self, fn, guard_minp=None):
+    def _roll(self, kernel_fn, minp: int | None = None):
         from sdc_spark.frame.core import SparkFrame
 
-        minp = self._minp if guard_minp is None else guard_minp
+        minp = self._minp if minp is None else minp
         cols = [c for c in self._frame._numeric_cols() if c not in self._keys]
-        w = self._w
-        exprs = [
-            F.when(F.count(c).over(w) >= minp, fn(c, w)).alias(c) for c in cols
-        ]
-        return SparkFrame(self._frame._df.select(IDX, *self._keys, *exprs))
-
-    def sum(self):
-        return self._roll_all(lambda c, w: F.sum(c).over(w))
-
-    def mean(self):
-        return self._roll_all(lambda c, w: F.avg(c).over(w))
-
-    def min(self):
-        return self._roll_all(lambda c, w: F.min(c).over(w))
-
-    def max(self):
-        return self._roll_all(lambda c, w: F.max(c).over(w))
-
-    def std(self):
-        return self._roll_all(lambda c, w: F.stddev_samp(c).over(w))
-
-    def var(self):
-        return self._roll_all(lambda c, w: F.var_samp(c).over(w))
-
-    def median(self):
-        return self._roll_all(lambda c, w: F.percentile(F.col(c), F.lit(0.5)).over(w))
-
-    def quantile(self, q: float):
-        return self._roll_all(lambda c, w: F.percentile(F.col(c), F.lit(q)).over(w))
-
-    def count(self):
-        minp = self._minp_count
-        return self._roll_all(
-            lambda c, w: F.when(F.count(F.lit(1)).over(w) >= minp, F.count(c).over(w)),
-            guard_minp=0,
-        )
-
-    def skew(self):
-        return self._roll_all(
-            lambda c, w: skew_expr(F.col(c), w), guard_minp=max(self._minp, 3)
-        )
-
-    def kurt(self):
-        return self._roll_all(
-            lambda c, w: kurt_expr(F.col(c), w), guard_minp=max(self._minp, 4)
-        )
+        aggs, fins = _merge(_per_column(cols, kernel_fn, minp))
+        out = over_once(self._frame._df, self._w, [IDX, *self._keys], aggs)
+        return SparkFrame(out.select(IDX, *self._keys, *fins))
 
 
-class FrameRolling:
+class FrameRolling(_Kernels):
     """df.rolling — all 14 reference kernels per numeric column
     (…dataframe_rolling_functions.py:86-472), incl. pairwise corr/cov
     against another frame (per matching column label) or a series (each
@@ -332,91 +297,18 @@ class FrameRolling:
         self._minp = window if min_periods is None else min_periods
         self._minp_count = 0 if min_periods is None else min_periods
 
-    def _eval_all(self, df: DataFrame, cols, expr_fn, guard_minp: int | None):
+    def _eval_all(self, df: DataFrame, kernels: dict[str, Kernel]):
         from sdc_spark.frame.core import SparkFrame
 
-        c, w = _ctx_window(df, self._before, self._after)
-        exprs = []
-        for col in cols:
-            e = expr_fn(col, w)
-            if guard_minp is not None:
-                e = F.when(F.count(col).over(w) >= guard_minp, e)
-            exprs.append(e.alias(col))
-        out = (
-            c.select(IDX, F.col(sorder.CTX), *exprs)
-            .filter(~F.col(sorder.CTX))
-            .select(IDX, *cols)
-        )
-        return SparkFrame(out)
+        return SparkFrame(_eval_ctx(df, self._before, self._after, kernels))
 
-    def _roll_all(self, fn, guard: bool = True, minp: int | None = None):
-        cols = self._frame._numeric_cols()
-        return self._eval_all(
-            self._frame._df,
-            cols,
-            fn,
-            (minp if minp is not None else self._minp) if guard else None,
-        )
-
-    def sum(self):
-        return self._roll_all(lambda c, w: F.sum(c).over(w))
-
-    def mean(self):
-        return self._roll_all(lambda c, w: F.avg(c).over(w))
-
-    def min(self):
-        return self._roll_all(lambda c, w: F.min(c).over(w))
-
-    def max(self):
-        return self._roll_all(lambda c, w: F.max(c).over(w))
-
-    def std(self):
-        return self._roll_all(lambda c, w: F.stddev_samp(c).over(w))
-
-    def var(self):
-        return self._roll_all(lambda c, w: F.var_samp(c).over(w))
-
-    def median(self):
-        return self._roll_all(lambda c, w: F.percentile(F.col(c), F.lit(0.5)).over(w))
-
-    def count(self):
-        # row-count guard, not non-null guard (see SeriesRolling.count)
-        minp = self._minp_count
-        return self._roll_all(
-            lambda c, w: F.when(F.count(F.lit(1)).over(w) >= minp, F.count(c).over(w)),
-            guard=False,
-        )
-
-    def quantile(self, q: float):
-        return self._roll_all(lambda c, w: F.percentile(F.col(c), F.lit(q)).over(w))
-
-    def skew(self):
-        return self._roll_all(
-            lambda c, w: skew_expr(F.col(c), w), minp=max(self._minp, 3)
-        )
-
-    def kurt(self):
-        return self._roll_all(
-            lambda c, w: kurt_expr(F.col(c), w), minp=max(self._minp, 4)
-        )
+    def _roll(self, kernel_fn, minp: int | None = None):
+        minp = self._minp if minp is None else minp
+        kernels = _per_column(self._frame._numeric_cols(), kernel_fn, minp)
+        return self._eval_all(self._frame._df, kernels)
 
     def apply(self, func):
-        @F.pandas_udf("double")
-        def udf(arrs: pd.Series) -> pd.Series:
-            return arrs.map(lambda a: float(func(np.asarray(a, dtype=float))))
-
-        minp = self._minp
-        return self._roll_all(
-            lambda c, w: F.when(
-                F.count(c).over(w) >= minp,
-                udf(
-                    F.collect_list(
-                        F.coalesce(F.col(c).cast("double"), F.lit(float("nan")))
-                    ).over(w)
-                ),
-            ),
-            guard=False,
-        )
+        return self._roll(_collect_apply(func))
 
     def corr(self, other):
         return self._pair_all(other, "corr")
@@ -429,7 +321,6 @@ class FrameRolling:
         SparkSeries → every column against it."""
         from sdc_spark.frame.core import SparkFrame
 
-        minp = self._minp
         if isinstance(other, SparkSeries):
             o = other._df.select(IDX, F.col(VAL).alias("__o__"))
             cols = self._frame._numeric_cols()
@@ -444,13 +335,11 @@ class FrameRolling:
             pairs = {c: f"__o_{c}" for c in cols}
         else:
             raise TypeError("rolling corr/cov needs a SparkFrame or SparkSeries other")
-
-        def expr_fn(c, w):
-            oc = pairs[c]
-            guard = pair_count(F.col(c), F.col(oc), w) >= minp
-            return F.when(guard, _pairwise(c, oc, w, kind))
-
-        return self._eval_all(j, list(pairs), expr_fn, None)
+        kernels = {
+            c: _pairwise(F.col(c), F.col(oc), str(i), kind, self._minp)
+            for i, (c, oc) in enumerate(pairs.items())
+        }
+        return self._eval_all(j, kernels)
 
 
 class GroupExpanding(GroupRolling):
@@ -525,16 +414,12 @@ class GroupEwm:
             .orderBy(IDX)
             .rowsBetween(W.unboundedPreceding, 0)
         )
-        minp = max(self._minp, 1)
-        sel = [F.col(IDX), *[F.col(k) for k in self._keys]]
-        for c in cols:
-            if name == "mean":
-                v = F.last(F.col(c), ignorenulls=True).over(w)
-                nvalid = F.count(F.col(c)).over(w)
-                sel.append(F.when(nvalid >= minp, v).alias(c))
-            else:  # var/std of a single-weight window: NaN (pandas)
-                sel.append(F.lit(None).cast("double").alias(c))
-        return SparkFrame(src.filter(cond).select(*sel))
+        keep = [IDX, *self._keys]
+        if name != "mean":  # var/std of a single-weight window: NaN (pandas)
+            nan = [F.lit(None).cast("double").alias(c) for c in cols]
+            return SparkFrame(src.filter(cond).select(*keep, *nan))
+        aggs, fins = _merge(_per_column(cols, _last_valid, max(self._minp, 1)))
+        return SparkFrame(over_once(src.filter(cond), w, keep, aggs).select(*keep, *fins))
 
     def mean(self):
         return self._stat("mean")

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from sdc_spark.operators.dedup import ngrams_of_tokens, normalized_text, word_ngrams
+from sdc_spark.operators.dedup import ngrams_of_tokens, normalized_text
 
 
 def _c(x) -> Column:
@@ -87,25 +87,6 @@ def quality_score(x) -> Column:
         q["alpha_ratio"] * 0.4
         + (1.0 - q["punct_ratio"]) * 0.2
         + F.least(q["stopword_ratio"] * 4.0, F.lit(1.0)) * 0.4
-    )
-
-
-def fingerprint_md5(x) -> Column:
-    """Content fingerprint: md5 of the normalized text."""
-    return F.md5(normalized_text(_c(x)).cast("binary"))
-
-
-def fingerprint_shingle_min(x, ngram: int = 3) -> Column:
-    """Rolling-hash-style robust fingerprint: the lexicographic min of the
-    shingle md5s — stable under small edits away from the minimal shingle
-    (1-hash MinHash).
-
-    PERFORMANCE: inline form — only for pre-materialized short inputs
-    (see operators/dedup.py word_ngrams warning: the captured normalize+
-    split pipeline is re-evaluated per array element, O(tokens²) regex
-    work). Pipelines over raw text must use ``with_fingerprints``."""
-    return F.array_min(
-        F.transform(word_ngrams(_c(x), ngram), lambda g: F.md5(g.cast("binary")))
     )
 
 

@@ -464,42 +464,6 @@ def keep_best_in_cluster(
     )
 
 
-def _simhash_bits(g: Column, bits: int) -> Column:
-    """±1 vote vector from the shingle's 64-bit hash (bit positions are
-    Python literals — shift counts must be ints)."""
-    h = F.xxhash64(g)
-    return F.array(
-        *[
-            F.when(
-                F.shiftrightunsigned(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1).cast("long")
-            ).otherwise(F.lit(-1).cast("long"))
-            for b in range(bits)
-        ]
-    )
-
-
-def simhash_votes(grams: Column, bits: int = 64) -> Column:
-    """Per-bit vote tally over shingle hashes (array<long> of length bits)."""
-    return F.aggregate(
-        grams,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, g: F.zip_with(acc, _simhash_bits(g, bits), lambda a, v: a + v),
-    )
-
-
-def pack_votes(votes: Column, bits: int = 64) -> Column:
-    """Majority votes → packed signed-64 signature. The bit weights are
-    Python-side constants (shiftleft needs a literal shift count); bit 63
-    is long-min to stay in signed range."""
-    sig = F.lit(0).cast("long")
-    for b in range(bits):
-        weight = (1 << b) if b < 63 else -(1 << 63)
-        sig = sig.bitwiseOR(
-            F.when(F.get(votes, b) > 0, F.lit(weight).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    return sig
-
-
 def simhash_near_dups(
     df: DataFrame, text_col: str, id_col: str, max_hamming: int = 8, ngram: int = 3
 ) -> DataFrame:

@@ -680,11 +680,6 @@ def _box_down(plane: np.ndarray, sh: int, sv: int) -> np.ndarray:
     return p.reshape(ph // sv, sv, pw // sh, sh).mean(axis=(1, 3))
 
 
-def _box_half(plane: np.ndarray) -> np.ndarray:
-    """2x2 box-mean downsample (kept for the shared 4:2:0 path)."""
-    return _box_down(plane, 2, 2)
-
-
 def _sub_geometry(h: int, w: int, quality: int, sh: int, sv: int):
     """Quant tables + MCU grid for the subsampled encoders (4:2:0 when
     (sh, sv) = (2, 2); 4:2:2 when (2, 1))."""

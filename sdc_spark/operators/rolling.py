@@ -15,6 +15,19 @@ Semantics reproduced:
   the frame (pandas counts non-null, not rows) — expressed as a
   ``count(col) over w >= min_periods`` guard;
 - ddof=1 for var/std (sample), matching pandas defaults.
+
+Evaluate-once rule. Spark extracts EVERY reference to ``agg.over(w)`` in
+a projection as its own window expression — holding the Column in a
+Python variable and using it five times computes it five times — and a
+sliding ROWS frame rebuilds each window expression from the whole frame
+for every row. So no kernel here calls ``.over``. A kernel is a pair
+``(aggs, finisher)``: ``aggs`` maps a key (role and input tag, e.g.
+``__sx_x``) to an unwindowed aggregate, and ``finisher`` is the
+arithmetic over those keys' columns. Callers merge the kernels' ``aggs``
+(equal keys are one aggregate, so the ``min_periods`` guard shares the
+kernel's own count), evaluate them with ``over_once`` — one projection,
+each aggregate once — and select the finishers on top. The SDC
+reference keeps each moment sum once per window the same way.
 """
 
 from __future__ import annotations
@@ -26,6 +39,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.window import WindowSpec
 
+Kernel = tuple[dict[str, Column], Column]
+
 
 def rolling_window(
     order_by: Sequence[str | Column],
@@ -36,77 +51,17 @@ def rolling_window(
     return w.orderBy(*order_by).rowsBetween(-(window - 1), 0)
 
 
-def _guard(col: str | Column, w: WindowSpec, min_periods: int, expr: Column) -> Column:
-    if min_periods <= 0:
-        return expr
-    return F.when(F.count(col).over(w) >= min_periods, expr)
+def over_once(
+    df: DataFrame, w: WindowSpec, keep: Sequence[str | Column], aggs: dict[str, Column]
+) -> DataFrame:
+    """``keep`` plus each of ``aggs`` evaluated over ``w`` exactly once, as a
+    column named by its key — the one place a rolling aggregate meets its
+    window."""
+    return df.select(*keep, *[a.over(w).alias(k) for k, a in aggs.items()])
 
 
-def _pairwise(col: str | Column, other: str | Column, w: WindowSpec, kind: str) -> Column:
-    """Windowed Pearson corr / sample covariance from co-moment sums.
-
-    Spark's native corr/covar window aggregates raise DIVIDE_BY_ZERO under
-    ANSI mode when a frame holds <2 rows (the window is evaluated for every
-    row before any CASE guard applies), so we build them from sum/count —
-    try_divide yields NULL on degenerate frames, matching pandas/DuckDB.
-    Only rows where BOTH values are non-null participate (pandas pairwise
-    semantics).
-
-    Numerics: the caller pre-centers both columns on their global means
-    (rolling_agg), so the co-moment sums here are over deviations — this
-    kills the catastrophic cancellation the raw two-pass formula suffers on
-    large-magnitude data and keeps us bit-comparable with single-pass
-    (Welford) engines after rounding."""
-    x, y = F.col(col) if isinstance(col, str) else col, F.col(other) if isinstance(other, str) else other
-    both = x.isNotNull() & y.isNotNull()
-    xv = F.when(both, x)
-    yv = F.when(both, y)
-    n = F.count(xv).over(w).cast("double")
-    sx = F.sum(xv).over(w)
-    sy = F.sum(yv).over(w)
-    sxy = F.sum(xv * yv).over(w)
-    if kind == "cov":
-        return F.try_divide(sxy - sx * sy / n, n - 1)
-    sxx = F.sum(xv * xv).over(w)
-    syy = F.sum(yv * yv).over(w)
-    return F.try_divide(
-        n * sxy - sx * sy,
-        F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy),
-    )
-
-
-def skew_expr(x: Column, w: WindowSpec) -> Column:
-    """pandas sample-adjusted rolling skew G1 = sqrt(n(n-1))/(n-2) · g1
-    from raw power sums (Spark's skewness() is population g1; reference
-    formula sdc/functions/statistics.py:32-40 is the pandas one)."""
-    n = F.count(x).over(w).cast("double")
-    m = F.avg(x).over(w)
-    ex2 = F.avg(x * x).over(w)
-    ex3 = F.avg(x * x * x).over(w)
-    m2 = ex2 - m * m
-    m3 = ex3 - 3 * m * ex2 + 2 * m * m * m
-    g1 = F.try_divide(m3, F.pow(m2, 1.5))
-    return g1 * F.try_divide(F.sqrt(n * (n - 1)), n - 2)
-
-
-def kurt_expr(x: Column, w: WindowSpec) -> Column:
-    """pandas sample excess kurtosis from power sums:
-    ((n+1)·g2 + 6) · (n−1)/((n−2)(n−3)) with g2 = m4/m2² − 3."""
-    n = F.count(x).over(w).cast("double")
-    m = F.avg(x).over(w)
-    ex2 = F.avg(x * x).over(w)
-    ex3 = F.avg(x * x * x).over(w)
-    ex4 = F.avg(x * x * x * x).over(w)
-    m2 = ex2 - m * m
-    m4 = ex4 - 4 * m * ex3 + 6 * m * m * ex2 - 3 * m * m * m * m
-    g2 = F.try_divide(m4, m2 * m2) - 3
-    return F.try_divide((n + 1) * g2 + 6, (n - 2) * (n - 3)) * (n - 1)
-
-
-def pair_count(x: Column, y: Column, w: WindowSpec) -> Column:
-    """Count of valid PAIRS in the frame — what pandas weighs against
-    min_periods for rolling corr/cov."""
-    return F.count(F.when(x.isNotNull() & y.isNotNull(), 1)).over(w)
+def _key(role: str, tag: str) -> str:
+    return f"__{role}_{tag}"
 
 
 _AGGS = {
@@ -124,6 +79,116 @@ _AGGS = {
 }
 
 
+def native(agg: str, x: Column, tag: str) -> Kernel:
+    """One native Spark aggregate as a kernel. ``count`` is keyed as the
+    guard's count, so a counted and guarded column counts once."""
+    k = _key("n" if agg == "count" else agg, tag)
+    return {k: _AGGS[agg](x)}, F.col(k)
+
+
+def percentile(x: Column, tag: str, q: float) -> Kernel:
+    k = _key("quantile", tag)
+    return {k: F.percentile(x, F.lit(q))}, F.col(k)
+
+
+def _guard(x: Column, tag: str, min_periods: int, kernel: Kernel) -> Kernel:
+    """NULL until ``count(x)`` over the frame reaches ``min_periods``. The
+    count is keyed like the kernel's own ``n``: a kernel that counts the
+    same input shares it."""
+    if min_periods <= 0:
+        return kernel
+    aggs, fin = kernel
+    n = _key("n", tag)
+    return {n: F.count(x), **aggs}, F.when(F.col(n) >= min_periods, fin)
+
+
+def row_count(x: Column, tag: str, min_periods: int) -> Kernel:
+    """pandas rolling count: the non-null count, guarded on the frame's ROW
+    count (a full-size window emits its count even if most values are
+    NaN). The row count is shared by every column of one window."""
+    n = _key("n", tag)
+    if min_periods <= 0:
+        return {n: F.count(x)}, F.col(n)
+    rows = _key("rows", "")
+    return (
+        {rows: F.count(F.lit(1)), n: F.count(x)},
+        F.when(F.col(rows) >= min_periods, F.col(n)),
+    )
+
+
+def _pairwise(x: Column, y: Column, tag: str, kind: str, min_periods: int) -> Kernel:
+    """Windowed Pearson corr / sample covariance from co-moment sums.
+
+    Spark's native corr/covar window aggregates raise DIVIDE_BY_ZERO under
+    ANSI mode when a frame holds <2 rows (the window is evaluated for every
+    row before any CASE guard applies), so we build them from sum/count —
+    try_divide yields NULL on degenerate frames, matching pandas/DuckDB.
+    Only rows where BOTH values are non-null participate (pandas pairwise
+    semantics), and ``min_periods`` is weighed against that pair count —
+    the kernel's own ``n``.
+
+    Numerics: rolling_agg pre-centers both columns on their global means,
+    so the co-moment sums there are over deviations — this kills the
+    catastrophic cancellation the raw two-pass formula suffers on
+    large-magnitude data and keeps us bit-comparable with single-pass
+    (Welford) engines after rounding."""
+    both = x.isNotNull() & y.isNotNull()
+    xv = F.when(both, x)
+    yv = F.when(both, y)
+    k = lambda role: _key(role, tag)  # noqa: E731
+    aggs = {
+        k("n"): F.count(xv),
+        k("sx"): F.sum(xv),
+        k("sy"): F.sum(yv),
+        k("sxy"): F.sum(xv * yv),
+    }
+    n = F.col(k("n")).cast("double")
+    sx, sy, sxy = F.col(k("sx")), F.col(k("sy")), F.col(k("sxy"))
+    if kind == "cov":
+        fin = F.try_divide(sxy - sx * sy / n, n - 1)
+    else:
+        aggs[k("sxx")] = F.sum(xv * xv)
+        aggs[k("syy")] = F.sum(yv * yv)
+        sxx, syy = F.col(k("sxx")), F.col(k("syy"))
+        fin = F.try_divide(
+            n * sxy - sx * sy,
+            F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy),
+        )
+    return _guard(xv, tag, min_periods, (aggs, fin))
+
+
+def _moments(x: Column, tag: str, top: int) -> tuple[dict[str, Column], list[Column]]:
+    """count(x) and the raw power means E[x], …, E[x^top] as aggregates,
+    plus their columns (count cast to double)."""
+    aggs = {_key("n", tag): F.count(x)}
+    p = x
+    for i in range(1, top + 1):
+        aggs[_key(f"ex{i}", tag)] = F.avg(p)
+        p = p * x
+    return aggs, [F.col(k) if i else F.col(k).cast("double") for i, k in enumerate(aggs)]
+
+
+def skew_expr(x: Column, tag: str) -> Kernel:
+    """pandas sample-adjusted rolling skew G1 = sqrt(n(n-1))/(n-2) · g1
+    from raw power sums (Spark's skewness() is population g1; reference
+    formula sdc/functions/statistics.py:32-40 is the pandas one)."""
+    aggs, (n, m, ex2, ex3) = _moments(x, tag, 3)
+    m2 = ex2 - m * m
+    m3 = ex3 - 3 * m * ex2 + 2 * m * m * m
+    g1 = F.try_divide(m3, F.pow(m2, 1.5))
+    return aggs, g1 * F.try_divide(F.sqrt(n * (n - 1)), n - 2)
+
+
+def kurt_expr(x: Column, tag: str) -> Kernel:
+    """pandas sample excess kurtosis from power sums:
+    ((n+1)·g2 + 6) · (n−1)/((n−2)(n−3)) with g2 = m4/m2² − 3."""
+    aggs, (n, m, ex2, ex3, ex4) = _moments(x, tag, 4)
+    m2 = ex2 - m * m
+    m4 = ex4 - 4 * m * ex3 + 6 * m * m * ex2 - 3 * m * m * m * m
+    g2 = F.try_divide(m4, m2 * m2) - 3
+    return aggs, F.try_divide((n + 1) * g2 + 6, (n - 2) * (n - 3)) * (n - 1)
+
+
 def scaled_long(col: str | Column, decimals: int) -> Column:
     """Exact integer encoding of a decimal-quantized column: x·10^d as long.
 
@@ -136,36 +201,42 @@ def scaled_long(col: str | Column, decimals: int) -> Column:
 
 
 def exact_var_std(
-    x_long: Column, w: WindowSpec, scale: int, ddof: int = 1
-) -> tuple[Column, Column]:
+    x_long: Column, tag: str, scale: int, ddof: int = 1
+) -> tuple[dict[str, Column], Column, Column, Column]:
     """Sample variance/stddev over a window from integer co-moments:
     var = (n·Σx² − (Σx)²) / (n·(n−ddof)) / scale². All products stay in
     long (exact) until the final double division — the same arithmetic an
-    oracle engine performs on the same integers, so results match bitwise."""
-    n = F.count(x_long).over(w)
-    sx = F.sum(x_long).over(w)
-    sxx = F.sum(x_long * x_long).over(w)
+    oracle engine performs on the same integers, so results match bitwise.
+    Returns (aggs, n, var, std); ``n`` is there for the caller's guard."""
+    k = lambda role: _key(role, tag)  # noqa: E731
+    aggs = {k("n"): F.count(x_long), k("sx"): F.sum(x_long), k("sxx"): F.sum(x_long * x_long)}
+    n, sx, sxx = (F.col(c) for c in aggs)
     num = (n * sxx - sx * sx).cast("double")
     var = F.try_divide(num, (n * (n - ddof)).cast("double")) / float(scale) ** 2
-    return var, F.sqrt(var)
+    return aggs, n, var, F.sqrt(var)
 
 
 def exact_cov_corr(
-    x_long: Column, y_long: Column, w: WindowSpec, scale_x: int, scale_y: int
-) -> tuple[Column, Column]:
+    x_long: Column, y_long: Column, tag: str, scale_x: int, scale_y: int
+) -> tuple[dict[str, Column], Column, Column, Column]:
     """Pairwise sample covariance + Pearson corr from integer co-moments
-    (same cross-engine-exact scheme as exact_var_std)."""
-    n = F.count(x_long).over(w)
-    sx = F.sum(x_long).over(w)
-    sy = F.sum(y_long).over(w)
-    sxy = F.sum(x_long * y_long).over(w)
-    sxx = F.sum(x_long * x_long).over(w)
-    syy = F.sum(y_long * y_long).over(w)
+    (same cross-engine-exact scheme as exact_var_std). Returns
+    (aggs, n, cov, corr)."""
+    k = lambda role: _key(role, tag)  # noqa: E731
+    aggs = {
+        k("n"): F.count(x_long),
+        k("sx"): F.sum(x_long),
+        k("sy"): F.sum(y_long),
+        k("sxy"): F.sum(x_long * y_long),
+        k("sxx"): F.sum(x_long * x_long),
+        k("syy"): F.sum(y_long * y_long),
+    }
+    n, sx, sy, sxy, sxx, syy = (F.col(c) for c in aggs)
     num = (n * sxy - sx * sy).cast("double")
     cov = F.try_divide(num, (n * (n - 1)).cast("double")) / float(scale_x * scale_y)
     den = F.sqrt((n * sxx - sx * sx).cast("double")) * F.sqrt((n * syy - sy * sy).cast("double"))
     corr = F.try_divide(num, den)
-    return cov, corr
+    return aggs, n, cov, corr
 
 
 def rolling_agg(
@@ -182,43 +253,33 @@ def rolling_agg(
     """Append ``{agg}_{col}`` rolling columns. ``other`` is the second column
     for corr/cov (pairwise kernels, ref rolling corr/cov overloads)."""
     w = rolling_window(order_by, partition_by, window)
-    out = df
-    centered = False
+    base = df
     if any(a in ("corr", "cov") for a in aggs):
         # Pre-center on global means (shift-invariant for corr/cov): one
         # scalar aggregate broadcast to every partition — O(1) network.
         centers = df.agg(
             F.avg(col).alias("__cx__"), F.avg(other).alias("__cy__")
         )
-        out = out.crossJoin(F.broadcast(centers))
-        centered = True
+        base = df.crossJoin(F.broadcast(centers))
+    x = F.col(col)
+    window_aggs, outs = {}, []
     for agg in aggs:
-        name = f"{agg}_{col}"
-        if agg in _AGGS:
-            expr = _AGGS[agg](col).over(w)
-        elif agg == "quantile":
-            expr = F.percentile(col, F.lit(quantile)).over(w)
-            name = f"quantile_{col}"
-        elif agg in ("corr", "cov"):
-            expr = _pairwise(
-                F.col(col) - F.col("__cx__"), F.col(other) - F.col("__cy__"), w, agg
-            )
-        else:
-            raise ValueError(f"unsupported rolling agg {agg!r}")
         if agg == "count":
             # pandas rolling.count has min_periods=0 flavor: count of non-null
-            out = out.withColumn(name, F.count(col).over(w))
+            kernel = native("count", x, "x")
+        elif agg in _AGGS:
+            kernel = _guard(x, "x", min_periods, native(agg, x, "x"))
+        elif agg == "quantile":
+            kernel = _guard(x, "x", min_periods, percentile(x, "x", quantile))
         elif agg in ("corr", "cov"):
-            # pandas guards corr/cov on valid PAIRS, not left-column values
-            if min_periods > 0:
-                out = out.withColumn(
-                    name,
-                    F.when(pair_count(F.col(col), F.col(other), w) >= min_periods, expr),
-                )
-            else:
-                out = out.withColumn(name, expr)
+            xc, yc = x - F.col("__cx__"), F.col(other) - F.col("__cy__")
+            kernel = _pairwise(xc, yc, "xy", agg, min_periods)
         else:
-            out = out.withColumn(name, _guard(col, w, min_periods, expr))
-    if centered:
-        out = out.drop("__cx__", "__cy__")
-    return out
+            raise ValueError(f"unsupported rolling agg {agg!r}")
+        window_aggs.update(kernel[0])
+        outs.append(kernel[1].alias(f"{agg}_{col}"))
+    return (
+        over_once(base, w, ["*"], window_aggs)
+        .select("*", *outs)
+        .drop(*window_aggs, "__cx__", "__cy__")
+    )

@@ -342,18 +342,27 @@ def rolling_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     pow() implementations differ at 1 ulp between libms, sqrt is IEEE
     correctly rounded). Skew/kurt are scale-invariant, so the 100x factor
     never needs dividing out."""
-    from sdc_spark.operators.rolling import rolling_window, scaled_long
+    from sdc_spark.operators.rolling import over_once, rolling_window, scaled_long
 
     ev = _t(spark, sf_dir, "events")
     w = rolling_window(["ts", "event_id"], ["user_id"], window=12)
     xv = scaled_long("value", 2)
     d = xv.cast("decimal(19,0)")
-    n = F.count("value").over(w)
+    s = over_once(
+        ev,
+        w,
+        ["user_id", "event_id"],
+        {
+            "n": F.count("value"),
+            "sx": F.sum(xv),
+            "sxx": F.sum(xv * xv),
+            "sxxx": F.sum(xv * xv * xv),
+            "sxxxx": F.sum((d * d) * (d * d)),
+        },
+    )
+    n = F.col("n")
     nd = n.cast("double")
-    sx = F.sum(xv).over(w).cast("double")
-    sxx = F.sum(xv * xv).over(w).cast("double")
-    sxxx = F.sum(xv * xv * xv).over(w).cast("double")
-    sxxxx = F.sum((d * d) * (d * d)).over(w).cast("double")
+    sx, sxx, sxxx, sxxxx = (F.col(c).cast("double") for c in ("sx", "sxx", "sxxx", "sxxxx"))
     m = sx / nd
     ex2 = sxx / nd
     ex3 = sxxx / nd
@@ -365,7 +374,7 @@ def rolling_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew = g1 * F.try_divide(F.sqrt(nd * (nd - 1)), nd - 2)
     g2 = F.try_divide(m4, m2 * m2) - 3
     kurt = F.try_divide(((nd + 1) * g2 + 6) * (nd - 1), (nd - 2) * (nd - 3))
-    return ev.select(
+    return s.select(
         "user_id",
         "event_id",
         F.when(n >= 5, skew).alias("roll_skew"),
@@ -426,17 +435,23 @@ def groupby_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-wide window aggregate (no self-join), plus the derived
     z-score. Integer co-moment variance for cross-engine exactness
     (acctbal is 2-decimal)."""
+    from sdc_spark.operators.rolling import over_once
+
     cust = _t(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment")
     xv = F.round(F.col("c_acctbal") * 100, 0).cast("long")
-    n = F.count("c_acctbal").over(w)
-    sx = F.sum(xv).over(w)
-    sxx = F.sum(xv * xv).over(w)
+    s = over_once(
+        cust,
+        w,
+        ["c_custkey", "c_mktsegment", "c_acctbal"],
+        {"n": F.count("c_acctbal"), "sx": F.sum(xv), "sxx": F.sum(xv * xv)},
+    )
+    n, sx, sxx = F.col("n"), F.col("sx"), F.col("sxx")
     var = F.try_divide((n * sxx - sx * sx).cast("double"), (n * (n - 1)).cast("double"))
     std = F.sqrt(var)
     mean = sx.cast("double") / n.cast("double")
     z = F.try_divide(xv.cast("double") - mean, std)
-    return cust.select(
+    return s.select(
         "c_custkey",
         "c_mktsegment",
         n.alias("seg_n"),

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from sdc_spark.operators.rolling import (
     exact_cov_corr,
     exact_var_std,
+    native,
+    over_once,
     rolling_agg,
     rolling_window,
     scaled_long,
@@ -216,22 +218,21 @@ def rolling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     on this data)."""
     ev = _t(spark, sf_dir, "events")
     w = rolling_window(["ts", "event_id"], ["user_id"], window=10)
-    xv = scaled_long("value", 2)
-    var, std = exact_var_std(xv, w, scale=100)
-    n = F.count("value").over(w)
+    aggs, n, var, std = exact_var_std(scaled_long("value", 2), "x", scale=100)
+    median_aggs, median = native("median", F.col("value"), "v")
+    s = over_once(ev, w, ["user_id", "event_id"], {**aggs, **median_aggs})
+    # the kernel's count of the scaled value is null exactly where value is
     guard = lambda e: F.when(n >= 5, e)  # noqa: E731
     # std/var are emitted UNROUNDED: both engines derive them from the same
     # exact integers with the same double ops, so the bit patterns match —
     # engine round() implementations disagree near boundaries, raw doubles
     # cannot.
-    return ev.select(
+    return s.select(
         "user_id",
         "event_id",
         guard(std).alias("roll_std"),
         guard(var).alias("roll_var"),
-        (F.round(guard(F.percentile("value", F.lit(0.5)).over(w)), 4) + 0.0).alias(
-            "roll_median"
-        ),
+        (F.round(guard(median), 4) + 0.0).alias("roll_median"),
     )
 
 
@@ -287,10 +288,11 @@ def rolling_corr_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["l_suppkey"],
         window=20,
     )
-    cov, corr = exact_cov_corr(q, p, w, scale_x=1, scale_y=100)
-    n = F.count("l_quantity").over(w)
+    aggs, n, cov, corr = exact_cov_corr(q, p, "qp", scale_x=1, scale_y=100)
+    s = over_once(li, w, ["l_suppkey", "l_orderkey", "l_linenumber"], aggs)
+    # guarded on the kernel's count(q), null exactly where l_quantity is;
     # unrounded on purpose — see rolling_stats
-    return li.select(
+    return s.select(
         "l_suppkey",
         "l_orderkey",
         "l_linenumber",

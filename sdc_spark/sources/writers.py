@@ -61,26 +61,6 @@ def to_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
 
 
-def to_bucketed_table(
-    df: DataFrame,
-    name: str,
-    path: str,
-    bucket_by: str,
-    n_buckets: int = 64,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed+sorted table write — the pay-the-shuffle-once layout for
-    repeated fact↔fact joins: both sides bucketed on the join key join
-    with NO exchange and no sort (tests/test_bucketing.py proves the plan
-    shape). Registers ``name`` in the session catalog with files at
-    ``path``."""
-    w = df.write.mode(mode).bucketBy(n_buckets, bucket_by)
-    if sort:
-        w = w.sortBy(bucket_by)
-    w.option("path", path).saveAsTable(name)
-
-
 def write_dataset(
     df: DataFrame,
     path: str,

@@ -122,23 +122,33 @@ def anomaly_zscore_batch(
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
+    from sdc_spark.operators.rolling import over_once
+
     w = (
         W.partitionBy("user_id")
         .orderBy("ts", "event_id")
         .rowsBetween(W.unboundedPreceding, -1)
     )
-    mean = F.avg("value").over(w)
-    std = F.stddev_samp("value").over(w)
-    n_prior = F.count("value").over(w)
+    s = over_once(
+        df,
+        w,
+        ["user_id", "event_id", "ts", "value"],
+        {
+            "__mean": F.avg("value"),
+            "__std": F.stddev_samp("value"),
+            "n_prior": F.count("value"),
+        },
+    )
+    mean, std, n_prior = F.col("__mean"), F.col("__std"), F.col("n_prior")
     z = F.when(
         (n_prior >= min_prior) & (std > 0.0), (F.col("value") - mean) / std
     )
-    return df.select(
+    return s.select(
         "user_id",
         "event_id",
         "ts",
         F.col("value").cast("double").alias("value"),
-        n_prior.alias("n_prior"),
+        n_prior,
         z.alias("zscore"),
         F.coalesce(F.abs(z) > z_threshold, F.lit(False)).alias("is_anomaly"),
     )

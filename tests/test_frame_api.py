@@ -185,6 +185,14 @@ def test_rolling_corr_apply(sf, pdf):
     eq_series(got2, exp2)
 
 
+def test_rolling_cov(sf, pdf):
+    got = sf["D"].rolling(10, min_periods=5).cov(sf["A"])
+    exp = pdf["D"].rolling(10, min_periods=5).cov(pdf["A"])
+    pd.testing.assert_series_equal(
+        got.to_pandas(), exp, check_names=False, check_dtype=False, atol=1e-9
+    )
+
+
 def test_map_apply(sf, pdf):
     eq_series(sf["B"].map({0: "zero", 1: "one"}), pdf["B"].map({0: "zero", 1: "one"}))
     eq_series(sf["D"].map(lambda x: x * 3.5), pdf["D"].map(lambda x: x * 3.5))

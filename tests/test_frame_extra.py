@@ -522,6 +522,22 @@ def test_groupby_rolling(spark):
         )
 
 
+def test_groupby_rolling_moments(spark):
+    """The kernels test_groupby_rolling leaves out: var, min, max and the
+    power-sum skew/kurt finishers, each guarded on the shared count."""
+    rng = np.random.RandomState(19)
+    pdf = pd.DataFrame({"k": rng.randint(0, 3, 90), "v": rng.randn(90) * 4 + 2})
+    pdf.loc[pdf.sample(9, random_state=4).index, "v"] = float("nan")
+    sf2 = from_pandas(spark, pdf)
+    for m in ("var", "min", "max", "skew", "kurt"):
+        got = getattr(sf2.groupby("k").rolling(6, min_periods=3), m)().to_pandas()
+        exp = getattr(pdf.groupby("k").rolling(6, min_periods=3), m)()["v"]
+        exp_flat = exp.reset_index(level=0, drop=True).sort_index()
+        pd.testing.assert_series_equal(
+            got["v"].sort_index(), exp_flat, check_names=False, check_dtype=False, atol=1e-7
+        )
+
+
 def test_series_expanding(spark):
     rng = np.random.RandomState(19)
     ps = pd.Series(rng.randn(250), name="v")

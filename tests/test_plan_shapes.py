@@ -8,10 +8,18 @@ from __future__ import annotations
 
 import re
 import sys
+from collections import Counter
+from pathlib import Path
 
 sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+
+import numpy as np
+import pandas as pd
 
 import sdc_spark.plans.all  # noqa: F401
+from explain_audit import window_nodes
+from sdc_spark.frame import from_pandas
 from sdc_spark.plans.registry import QUERIES
 
 
@@ -252,3 +260,40 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):
         i for i, ln in enumerate(lines) if "FileScan" in ln and "lineitem" in ln
     )
     assert any("might_contain" in ln for ln in lines[:scan_idx]), plan
+
+
+def repeated_window_exprs(df) -> list[str]:
+    """Window expressions that repeat inside one ``Window [...]`` node of
+    df's physical plan, exprIds and aliases ignored. Spark extracts every
+    Python reference to ``agg.over(w)`` as its own window expression, and a
+    sliding ROWS frame recomputes each one per row. The plan string is
+    untruncated so that wide nodes list every expression."""
+    plan = df._jdf.queryExecution().executedPlan().treeString(True, False, 2**31 - 1, False, False)
+    nodes = window_nodes(plan)
+    assert nodes, plan
+    return [e for node in nodes for e, k in Counter(node).items() if k > 1]
+
+
+def test_rolling_queries_evaluate_each_window_aggregate_once(spark, sf_dir):
+    for q in ("rolling_basic", "rolling_stats", "rolling_corr_cov", "rolling_skew_kurt"):
+        assert repeated_window_exprs(QUERIES[q](spark, sf_dir)) == [], q
+
+
+def test_rolling_api_evaluates_each_window_aggregate_once(spark):
+    rng = np.random.RandomState(5)
+    pdf = pd.DataFrame({"k": rng.randint(0, 3, 40), "x": rng.randn(40), "y": rng.randn(40)})
+    sf = from_pandas(spark, pdf)
+    r = sf["x"].rolling(6, min_periods=3)
+    g = sf.groupby("k").rolling(6, min_periods=3)
+    cases = {
+        "series.var": r.var(),
+        "series.skew": r.skew(),
+        "series.kurt": r.kurt(),
+        "series.corr": r.corr(sf["y"]),
+        "series.cov": r.cov(sf["y"]),
+        "frame.corr(series)": sf.rolling(6, min_periods=3).corr(sf["y"]),
+        "group.std": g.std(),
+        "group.skew": g.skew(),
+    }
+    for name, out in cases.items():
+        assert repeated_window_exprs(out._df) == [], name

@@ -104,3 +104,30 @@ def test_rolling_win_type_and_degenerates_raise(series_pair):
         s.rolling(1, closed="neither")
     with pytest.raises(ValueError):
         s.rolling(3, closed="sideways")
+
+
+def test_rolling_agg_pairwise_guard_counts_pairs(spark):
+    """operators.rolling_agg corr/cov with NaN on the y side only: the
+    min_periods guard must weigh valid PAIRS (the pairwise kernel's own
+    count), not the non-null x values, as pandas does."""
+    from sdc_spark.operators import rolling_agg
+
+    rng = np.random.RandomState(23)
+    x = rng.randn(60) * 3 + 1
+    y = 0.5 * x + rng.randn(60)
+    y[rng.choice(60, 15, replace=False)] = np.nan
+    rows = [(i, float(a), None if np.isnan(b) else float(b)) for i, (a, b) in enumerate(zip(x, y))]
+    df = spark.createDataFrame(rows, "id long, x double, y double")
+    got = (
+        rolling_agg(df, "x", ["corr", "cov"], order_by=["id"], window=8, min_periods=5, other="y")
+        .orderBy("id")
+        .toPandas()
+    )
+    px, py = pd.Series(x), pd.Series(y)
+    for kind in ("corr", "cov"):
+        exp = getattr(px.rolling(8, min_periods=5), kind)(py)
+        # rows where the x count alone would pass the guard but the pairs do not
+        assert (exp.isna() & (px.rolling(8, min_periods=1).count() >= 5)).any()
+        pd.testing.assert_series_equal(
+            got[f"{kind}_x"], exp, check_names=False, check_dtype=False, atol=1e-9
+        )

@@ -1,6 +1,10 @@
 """Plan audit: for each registered query, inspect the physical plan for the
 scale-critical properties — parquet filter pushdown, pruned ReadSchema,
-broadcast vs sort-merge joins, whole-stage codegen coverage, shuffle count.
+broadcast vs sort-merge joins, whole-stage codegen coverage, shuffle count,
+and window expressions evaluated more than once inside one Window node
+(``win=`` expressions, ``dupwin=`` repeats, flagged ``DUP-WINDOW``: Spark
+extracts every reference to ``agg.over(w)`` as its own window expression,
+and a sliding ROWS frame recomputes each one per row).
 
 Usage: python tools/explain_audit.py [sf_dir] [query ...]
        python tools/explain_audit.py --show q1_pricing_summary   # full plan
@@ -10,10 +14,46 @@ from __future__ import annotations
 
 import re
 import sys
+from collections import Counter
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from sdc_spark.session import get_spark  # noqa: E402
+
+
+def window_nodes(plan: str) -> list[list[str]]:
+    """The expressions of every ``Window [...]`` node in a plan string, with
+    exprIds and output aliases removed so that two evaluations of the same
+    aggregate over the same spec compare equal. Only the final plan of an
+    executed adaptive plan is read (its initial plan repeats every node).
+    The plan string must be untruncated (spark.sql.debug.maxToStringFields
+    above the widest node), or long nodes end in "... N more fields"."""
+    plan = plan.split("== Initial Plan ==")[0]
+    nodes = []
+    for m in re.finditer(r"\bWindow \[", plan):
+        depth, start, exprs = 0, m.end(), []
+        for i in range(m.end() - 1, len(plan)):
+            ch = plan[i]
+            if ch in "([":
+                depth += 1
+            elif ch in ")]":
+                depth -= 1
+                if depth == 0:
+                    exprs.append(plan[start:i])
+                    break
+            elif ch == "," and depth == 1:
+                exprs.append(plan[start:i])
+                start = i + 1
+        nodes.append(
+            [re.sub(r"#\d+L?", "", re.sub(r"\s+AS\s+\S+$", "", e.strip())) for e in exprs]
+        )
+    return nodes
+
+
+def duplicate_windows(plan: str) -> int:
+    """Window expressions repeated inside one Window node, summed over nodes."""
+    return sum(len(n) - len(Counter(n)) for n in window_nodes(plan))
 
 
 def audit(plan: str) -> dict:
@@ -33,6 +73,8 @@ def audit(plan: str) -> dict:
             | set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))
         ),
         "full_readschema": len(re.findall(r"ReadSchema: struct<[^>\n]{400,}", plan)),
+        "win": sum(map(len, window_nodes(plan))),
+        "dupwin": duplicate_windows(plan),
     }
 
 
@@ -48,6 +90,8 @@ def main() -> None:
     from sdc_spark.materialize import start_plan_capture, stop_plan_capture
 
     spark = get_spark("explain_audit")
+    # untruncated plan strings, so every Window node lists all expressions
+    spark.conf.set("spark.sql.debug.maxToStringFields", 100000)
     for name, fn in QUERIES.items():
         if only and name not in only:
             continue
@@ -86,10 +130,13 @@ def main() -> None:
                 flags.append("WIDE-SCAN")
             if a["smj"] and not a["broadcast_joins"]:
                 flags.append("SMJ-ONLY")
+            if a["dupwin"]:
+                flags.append("DUP-WINDOW")
             print(
                 f"{name:28s} scans={a['scans']} pushed={a['pushed_filters']} "
                 f"bcast={a['broadcast_joins']} smj={a['smj']} shuffles={a['shuffles']} "
-                f"wscg={a['wscg_spans']} mat={len(seg_plans)} {' '.join(flags)}"
+                f"wscg={a['wscg_spans']} mat={len(seg_plans)} win={a['win']} "
+                f"dupwin={a['dupwin']} {' '.join(flags)}"
             )
 
 
