@@ -343,7 +343,9 @@ class SparkFrame:
             )
         )
 
-    def ffill(self) -> SparkFrame:
+    def _fill(self, *direction: str) -> SparkFrame:
+        """ffill (no ``direction``) / bfill (``"suffix"``): a ``last`` scan
+        per column over the row order, NaN masked to missing first."""
         from sdc_spark.operators import order as sorder
 
         key, keep = self._row_order()
@@ -357,23 +359,14 @@ class SparkFrame:
                 for c in self.columns
             ],
         )
-        return SparkFrame(sorder.global_fill(masked, [key], self.columns, "forward"))
+        specs = {c: ("last", F.col(c), *direction) for c in self.columns}
+        return SparkFrame(sorder.scan(masked, [key], specs))
+
+    def ffill(self) -> SparkFrame:
+        return self._fill()
 
     def bfill(self) -> SparkFrame:
-        from sdc_spark.operators import order as sorder
-
-        key, keep = self._row_order()
-        floats = {c for c, t in self._df.dtypes if t in ("double", "float")}
-        masked = self._df.select(
-            *keep,
-            *[
-                F.when(~F.isnan(c) & F.col(c).isNotNull(), F.col(c)).alias(c)
-                if c in floats
-                else F.col(c)
-                for c in self.columns
-            ],
-        )
-        return SparkFrame(sorder.global_fill(masked, [key], self.columns, "backward"))
+        return self._fill("suffix")
 
     def drop_duplicates(
         self, subset: Sequence[str] | None = None, keep: str = "first"

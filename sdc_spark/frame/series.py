@@ -17,7 +17,7 @@ from typing import Any
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -143,22 +143,21 @@ class SparkSeries:
             raise ValueError(f"unsupported fill method {method!r}")
         return self._unary(lambda c: sexpr.fillna(c, value, self._floating))
 
-    def _fill_dir(self, direction: str) -> SparkSeries:
-        # NaN -> null first so the ignorenulls carry treats NaN as missing
-        base = self._df.select(
-            IDX, F.when(sexpr.notna(F.col(VAL), self._floating), F.col(VAL)).alias(VAL)
-        )
-        out = sorder.global_fill(base, [IDX], [VAL], direction)
+    def _fill(self, *direction: str) -> SparkSeries:
+        """ffill (no ``direction``) / bfill (``"suffix"``): one ``last``
+        scan, NaN masked to missing first so the carry skips it."""
+        ok = F.when(sexpr.notna(F.col(VAL), self._floating), F.col(VAL))
+        out = sorder.scan(self._df.select(IDX, VAL), [IDX], {VAL: ("last", ok, *direction)})
         return SparkSeries(out, name=self.name, floating=self._floating)
 
     def ffill(self) -> SparkSeries:
         """Forward fill over the global index order — range-partitioned
         carry + P-row boundary broadcast (operators/order.py), no
         single-partition window."""
-        return self._fill_dir("forward")
+        return self._fill()
 
     def bfill(self) -> SparkSeries:
-        return self._fill_dir("backward")
+        return self._fill("suffix")
 
     def interpolate(self, method: str = "linear") -> SparkSeries:
         """pandas Series.interpolate(method='linear'): interior NaN runs
@@ -166,36 +165,32 @@ class SparkSeries:
         trailing NaNs forward-filled, leading NaNs left missing
         (limit_direction='forward' default).
 
-        Distributed: carry struct(position, value) of the nearest valid
-        observation forward AND backward with the global_fill machinery,
-        then blend by position distance — three range-partitioned passes,
-        no single-partition window. ``method='nearest'`` snaps to the
-        positionally closer valid neighbor (ties -> previous, pandas
-        convention); ``'pad'``/``'ffill'`` alias the carry-forward fill."""
+        Distributed: ONE scan over one range partition gives each row its
+        position and carries struct(position, value) of the nearest valid
+        observation forward (``last``) and backward (its suffix), then
+        blends by position distance — no single-partition window.
+        ``method='nearest'`` snaps to the positionally closer valid
+        neighbor (ties -> previous, pandas convention);
+        ``'pad'``/``'ffill'`` alias the carry-forward fill."""
         if method in ("pad", "ffill"):
             return self.ffill()
         if method not in ("linear", "nearest"):
             raise NotImplementedError(f"interpolate method {method!r}")
-        base = sorder.with_position(self._df.select(IDX, VAL), [IDX], "__pos__")
         ok = sexpr.notna(F.col(VAL), self._floating)
-        obs = F.when(ok, F.struct(F.col("__pos__").alias("p"), F.col(VAL).alias("v")))
-        pre = base.select(IDX, VAL, "__pos__", obs.alias("__pf__"), obs.alias("__pb__"))
-        filled = sorder.global_fill(
-            sorder.global_fill(pre, [IDX], ["__pf__"], "forward"),
+
+        def obs(pos: Column) -> Column:
+            return F.when(ok, F.struct(pos.alias("p"), F.col(VAL).alias("v")))
+
+        filled = sorder.scan(
+            self._df.select(IDX, VAL),
             [IDX],
-            ["__pb__"],
-            "backward",
+            {"__pf__": ("last", obs), "__pb__": ("last", obs, "suffix")},
         )
-        pf, pb = F.col("__pf__"), F.col("__pb__")
+        pos, pf, pb = F.col(sorder.POS), F.col("__pf__"), F.col("__pb__")
         if method == "nearest":
-            blend = F.when(
-                (F.col("__pos__") - pf["p"]) <= (pb["p"] - F.col("__pos__")),
-                pf["v"],
-            ).otherwise(pb["v"])
+            blend = F.when((pos - pf["p"]) <= (pb["p"] - pos), pf["v"]).otherwise(pb["v"])
         else:
-            blend = pf["v"] + (pb["v"] - pf["v"]) * (
-                (F.col("__pos__") - pf["p"]) / (pb["p"] - pf["p"])
-            )
+            blend = pf["v"] + (pb["v"] - pf["v"]) * ((pos - pf["p"]) / (pb["p"] - pf["p"]))
         val = (
             F.when(ok, F.col(VAL))
             .when(pf.isNull(), F.col(VAL))  # leading gap stays missing
@@ -1495,7 +1490,9 @@ class SeriesEwm:
             IDX,
             F.when(
                 (F.col("__den__") > 0) & (F.col("__cnt__") >= minp),
-                F.greatest(var, F.lit(0.0)),  # clamp float-cancellation negatives
+                # clamp float-cancellation negatives; greatest() would also
+                # turn the first observation's null variance into 0.0
+                F.when(var < 0, F.lit(0.0)).otherwise(var),
             ).alias(VAL),
         )
         return SparkSeries(out, name=self._s.name, floating=True)

@@ -1,11 +1,13 @@
 """Cluster-durable materialization primitive.
 
-Several operators (scan machinery, as-of join, dedup banding, IVF
-assignment, iterative connected components) REQUIRE their intermediate to
-be computed exactly once: two plan branches re-executing a
-``repartitionByRange`` would re-sample range boundaries per branch and the
-P-row fix-up joins misalign; iterative algorithms need lineage truncation
-so round N's plan is O(1), not O(N).
+Several operators compute an intermediate ONCE and read it from more
+than one place: the order machinery's range-partitioned frame feeds a
+P-row offset branch and a per-row branch, dedup banding and IVF
+assignment fan out, and iterative connected components needs lineage
+truncation so round N's plan is O(1), not O(N). The order machinery does
+not depend on it for its answer (its range-partition id is a pure
+function of the row); there it only saves re-running the input per
+branch.
 
 ``materialize(df)`` is the one primitive they all use. The strategy is a
 session config so the SAME plan code runs in local mode and on a fleet:
@@ -27,10 +29,11 @@ session config so the SAME plan code runs in local mode and on a fleet:
   mode for 100+-round iterative jobs on preemptible fleets. Requires the
   dir to be set (falls back to sparkContext.setCheckpointDir value).
 
-All three are EAGER: when ``materialize`` returns, the data is computed
-and every downstream branch reads the same bytes. Correctness is
-mode-independent (pinned by tests/test_materialize.py which re-runs a
-boundary-sensitive scan query under each mode and compares bit-for-bit).
+``materialize`` is EAGER in all three: when it returns, the data is
+computed and every downstream branch reads the same bytes;
+``materialize_lazy`` defers that to the caller's next action. Answers
+are mode-independent (pinned by tests/test_materialize.py, which re-runs
+a cross-partition scan query under each mode and compares bit-for-bit).
 """
 
 from __future__ import annotations
@@ -62,11 +65,20 @@ def stop_plan_capture() -> None:
     _PLAN_CAPTURE = None
 
 
+def plan_string(df: DataFrame) -> str:
+    """``df``'s executed physical plan with every node printed in full.
+    ``executedPlan().toString()`` cuts each node's expression list at
+    spark.sql.debug.maxToStringFields (25) and appends "... N more
+    fields", so an audit of a wide node would see only a prefix."""
+    plan = df._jdf.queryExecution().executedPlan()
+    return plan.treeString(True, False, 2**31 - 1, False, False)
+
+
 def _record_plan(df: DataFrame) -> None:
     if _PLAN_CAPTURE is None:
         return
     try:  # classic mode only; never let auditing break the operator
-        _PLAN_CAPTURE.append(df._jdf.queryExecution().executedPlan().toString())
+        _PLAN_CAPTURE.append(plan_string(df))
     except Exception:  # noqa: BLE001
         pass
 
@@ -100,11 +112,12 @@ def materialize_lazy(df: DataFrame, truncate: bool = False) -> DataFrame:
     is driver gaps + job submission, measured ~100-300 ms each on the
     profiler, dwarfing the aggregate itself).
 
-    Contract: the caller MUST run exactly ONE action over the returned
-    frame before handing it to multiple consumers (the loops' convergence
-    check is that action). Until then the frame is a single lazy plan; a
-    first action from two branches concurrently could compute partitions
-    twice (persist races are correct but wasteful). Mode mapping mirrors
+    Contract: run ONE action over the returned frame before several
+    consumers read it (the loops' convergence check is that action).
+    Until then it is a single lazy plan, and branches whose first reads
+    race could each compute a partition: wasteful, and harmless only for
+    a deterministic plan (``order.range_partitioned`` relies on that: its
+    pid is a pure function of the row). Mode mapping mirrors
     ``materialize``: localCheckpoint/checkpoint have native lazy forms;
     ``persist`` without truncate is naturally lazy; ``persist`` with
     truncate escalates exactly like the eager path."""

@@ -22,14 +22,13 @@ With ``by``: the window partitions on the by-keys — one shuffle of
 |L|+|R| rows, AQE handles skewed groups.
 
 Without ``by`` (the scale trap: an empty ``partitionBy()`` funnels ALL
-rows through one task): ``repartitionByRange`` on the key, carry within
-each range partition via a window on ``spark_partition_id()``, then a
-boundary fix-up — each partition's last right-row payload (a P-row
-summary, P = shuffle partitions) is carried across partitions with a tiny
-window and broadcast-joined back; rows whose partition saw no earlier
-right row coalesce to the previous partition's boundary value. Full-data
-movement: the range exchange plus one pid-hash exchange — no
-SinglePartition anywhere.
+rows through one task): tag rows with the order machinery's deterministic
+range-partition id on the key (``order.range_partitioned``), carry within
+each pid via a window on it, then a boundary fix-up — each pid's last
+right-row payload (a P-row summary, P = shuffle partitions) is carried
+across pids with a tiny window and broadcast-joined back; rows whose pid
+saw no earlier right row coalesce to the previous pid's boundary value.
+Full-data movement: one pid-hash exchange — no SinglePartition anywhere.
 """
 
 from __future__ import annotations
@@ -40,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from sdc_spark.materialize import materialize as _materialize
+from sdc_spark.operators.order import range_partitioned
 
 _RKEY = "__rkey__"
 
@@ -76,30 +75,20 @@ def _with_carries(
             )
         return cur
 
-    # EXPLICIT partition count: AQE then cannot coalesce, so
-    # spark_partition_id is dense in [0, N) and the pid axis is a free
+    # One deterministic range partition on the key (order.range_partitioned):
+    # pid is a pure function of the key, so the carry and boundary-summary
+    # branches agree on it, and pid < N makes the pid axis a free
     # spark.range(N) instead of a third scan+shuffle branch over the data.
-    # The partitioned union is MATERIALIZED (EAGER localCheckpoint): the
-    # carry and boundary-summary branches must see the exact same range
-    # boundaries and pid assignment — per-branch re-execution re-samples
-    # the partitioner and misaligns the P-row fix-up join (same hazard as
-    # operators/order.py range_partitioned; see its docstring). Eager so
-    # no execution schedule can race the first materialization.
     spark = unioned.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    part = (
-        unioned.repartitionByRange(n_part, F.col("__key__"))
-        .withColumn("__pid__", F.spark_partition_id())
-        .transform(_materialize)
-    )
+    part = range_partitioned(unioned, ["__key__"])
     pid_axis_df = spark.range(n_part).select(
         F.col("id").cast("int").alias("__pid__")
     )
-    # EXPLICIT pid repartition for the carry windows: the checkpoint's
-    # physical layout is range(__key__), so partitionBy("__pid__") would
-    # insert an ENSURE_REQUIREMENTS exchange that AQE coalesces by SIZE —
-    # at small inputs the whole carry+finalize pipeline then ran on ONE
-    # task (profiled: merge_asof_nearest's final stage, 1.7s single-task).
+    # EXPLICIT pid repartition for the carry windows: partitionBy("__pid__")
+    # alone inserts an ENSURE_REQUIREMENTS exchange that AQE coalesces by
+    # SIZE — at small inputs the whole carry+finalize pipeline then ran on
+    # ONE task (profiled: merge_asof_nearest's final stage, 1.7s single-task).
     # A user-specified repartition pins the width; the windows reuse it,
     # so the exchange count is unchanged (same fix as order._pid_grouped).
     cur = part.repartition(n_part, "__pid__")

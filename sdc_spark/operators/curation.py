@@ -11,11 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 from sdc_spark.operators import order as sorder
-
-_INT_TYPES = (ByteType, ShortType, IntegerType, LongType)
 
 
 def pack_sequences(
@@ -39,14 +36,7 @@ def pack_sequences(
     t = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
     budget = int(budget)
     base = df.select(F.col(id_col).alias("doc"), t.cast("long").alias("__tok__"))
-    # integer ids take the value-bucketed scan (bucket = pure function of
-    # the key value — deterministic under any schedule/session/partition
-    # count, no materialization barrier); other key types fall back to the
-    # sampled range-partition scan
-    if isinstance(base.schema["doc"].dataType, _INT_TYPES):
-        scanned = sorder.scan_sum_intkey(base, "doc", F.col("__tok__"), "__cum__")
-    else:
-        scanned = sorder.scan(base, ["doc"], {"__cum__": ("sum", F.col("__tok__"))})
+    scanned = sorder.scan(base, ["doc"], {"__cum__": ("sum", F.col("__tok__"))})
     # Pure long arithmetic (SQL `div`): double division + cast truncation is
     # inexact above 2^53 tokens and truncates toward zero for the cum-1 < 0
     # edge (zero-token doc at stream head). A zero-token doc never spans a

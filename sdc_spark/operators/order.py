@@ -1,13 +1,15 @@
 """Distributed total-order machinery.
 
-The pandas surface (positional iloc, shift/cumsum, sort ranks,
-reset_index) needs a global row order. The naive Spark spelling —
+The pandas surface (positional iloc, shift/cumsum, ffill/bfill, sort
+ranks, reset_index) needs a global row order. The naive Spark spelling —
 ``row_number().over(Window.orderBy(...))`` with no partitionBy — funnels
 every row through ONE task. These helpers provide the same semantics at
-scale: ``repartitionByRange`` on the order keys, per-partition window
-work, and a P-row boundary/offset fix-up (P = shuffle partitions), so
-the only single-partition step is over the tiny per-partition summary
-table.
+scale with one deterministic range partitioner: ``range_partitioned``
+tags each row with a range-partition id (pid) that is a pure function of
+the row's order key and one set of sampled bounds, per-pid work runs as
+windows over ``partitionBy(pid)``, and a P-row boundary/offset table
+(P <= shuffle partitions) carries across pids, so the only
+single-partition step is over that tiny table.
 
 Reference parity: the reference's positional kernels (take/iloc/argsort,
 sdc/datatypes/hpat_pandas_series_functions.py:85-499, 2651, 3735) assume
@@ -17,18 +19,23 @@ a single-node array; this is their distributed re-expression.
 from __future__ import annotations
 
 import sys
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from functools import reduce
 
-from pyspark import cloudpickle
+from pyspark import SparkContext, cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
-from sdc_spark.materialize import materialize as _materialize
+from sdc_spark.materialize import materialize_lazy
 
 PID = "__pid__"
 POS = "__pos__"
 CTX = "__ctx__"
+
+# sampled rows per pid for the bounds, as Spark's RangePartitioner
+_SAMPLE_PER_PID = 20
 
 # The Arrow passes ship closures that call this module's helpers (the
 # decay kernels); pickle those by value so executor Python workers never
@@ -40,64 +47,120 @@ def _cols(order_cols: Sequence[str | Column]) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_cols]
 
 
-def range_partitioned(
-    df: DataFrame,
-    order_cols: Sequence[str | Column],
-    pin: bool = False,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Range-partition by the order keys and materialize the partition id
-    (partition ids are ascending in key order).
+def _sort_keys(order_cols: Sequence[str | Column]) -> list[tuple[Column, bool, bool]]:
+    """(key, ascending, nulls_first) of each order column, read the way
+    ``orderBy`` reads it: a name or a plain expression sorts ascending
+    with nulls first; an ``asc``/``desc``/``*_nulls_*`` Column says so."""
+    keys = []
+    for c in _cols(order_cols):
+        node = c._jc.node()
+        if node.getClass().getSimpleName() != "SortOrder":
+            keys.append((c, True, True))
+            continue
+        child = Column(SparkContext._jvm.org.apache.spark.sql.Column(node.child()))
+        asc = "Ascending" in node.sortDirection().toString()
+        keys.append((child, asc, "NullsFirst" in node.nullOrdering().toString()))
+    return keys
 
-    ``pin=True`` fixes the partition count to spark.sql.shuffle.partitions
-    so AQE cannot coalesce — pid is then dense in [0, N) and an N-row axis
-    table can come from spark.range(N) without touching the data. Leave
-    unpinned when density is NOT required (positions, scans, boundary
-    context): AQE's coalescing keeps small inputs in few, well-filled
-    partitions — which the context machinery (rows-per-partition >= window
-    length) depends on.
 
-    CORRECTNESS: the result is ALWAYS materialized (EAGER localCheckpoint).
-    Every consumer feeds this frame into 2+ plan branches (main + offsets/
-    boundary/context), and if each branch re-executed the exchange, the
-    range partitioner would re-SAMPLE boundaries per branch — rows near a
-    boundary then land in different pids in different branches and the
-    P-row fix-up joins misalign (observed: nondeterministic interpolation
-    results). Eager (not lazy) matters: a lazy checkpoint leaves a window
-    in which two branches scheduled in the same job can still race the
-    first materialization, which was the one observed correctness flake
-    (pack_sequences, round 2). One eager materialization = one boundary
-    sample = one pid assignment shared by all branches. The materialization
-    primitive is sdc_spark.materialize.materialize — set
-    spark.sdc.materialize.mode=persist|checkpoint on a cluster where
-    executor loss must be survivable (correctness is mode-independent,
-    pinned by tests/test_materialize.py)."""
-    if pin:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        part = df.repartitionByRange(n, *_cols(order_cols))
-    elif num_partitions is not None:
-        part = df.repartitionByRange(num_partitions, *_cols(order_cols))
-    else:
-        part = df.repartitionByRange(*_cols(order_cols))
-    return part.withColumn(PID, F.spark_partition_id()).transform(_materialize)
+def _sql_literal(v, t: DataType) -> str:
+    """``v``, a collected value of type ``t``, as a SQL literal that reads
+    back exactly (a timestamp by its epoch micros, a string by its UTF-8
+    bytes, a float by its shortest repr)."""
+    name = t.typeName()
+    if name == "timestamp":
+        return f"TIMESTAMP_MICROS({t.toInternal(v)})"
+    if name in ("string", "binary"):
+        raw = v.encode() if name == "string" else bytes(v)
+        return f"CAST(X'{raw.hex()}' AS {name})"
+    text = v.isoformat(" ") if name == "timestamp_ntz" else repr(v) if isinstance(v, float) else v
+    return f"CAST('{text}' AS {t.simpleString()})"
+
+
+def _at_or_after(keys: list, names: list, types: list, bound: tuple) -> str:
+    """SQL that is true where the row's key sorts at or after ``bound``:
+    the lexicographic compare ``orderBy`` makes (SQL ``>``/``<`` already
+    rank NaN above every number and -0.0 equal to 0.0)."""
+    out = "TRUE"
+    for (_, asc, nulls_first), m, t, v in reversed(list(zip(keys, names, types, bound))):
+        if v is None:
+            after, eq = (f"{m} IS NOT NULL" if nulls_first else "FALSE"), f"{m} IS NULL"
+        else:
+            b = _sql_literal(v, t)
+            after = f"coalesce({m} {'>' if asc else '<'} {b}, {not nulls_first})"
+            eq = f"{m} <=> {b}"
+        out = f"({after} OR ({eq} AND {out}))"
+    return out
+
+
+def _count_at_or_before(keys: list, names: list, types: list, bounds: list, lo: int, hi: int) -> str:
+    """SQL for ``lo`` + the number of ``bounds[lo:hi]`` that sort at or
+    before the row's key, as a binary search: log2 compares per row."""
+    if lo == hi:
+        return str(lo)
+    mid = (lo + hi) // 2
+    return (
+        f"CASE WHEN {_at_or_after(keys, names, types, bounds[mid])}"
+        f" THEN {_count_at_or_before(keys, names, types, bounds, mid + 1, hi)}"
+        f" ELSE {_count_at_or_before(keys, names, types, bounds, lo, mid)} END"
+    )
+
+
+def range_partitioned(df: DataFrame, order_cols: Sequence[str | Column]) -> DataFrame:
+    """Tag every row with ``PID``: the number of sampled bounds that sort
+    at or before the row's key under ``order_cols``' sort orders
+    (asc/desc, nulls first/last, NaN last — exactly as ``orderBy``).
+
+    The bounds come from ONE small deterministic sample job: the
+    ``_SAMPLE_PER_PID`` x P rows with the smallest row hash (never
+    ``rand()``), sorted by the keys in one partition, cut at P quantiles
+    and deduplicated, where P = spark.sql.shuffle.partitions. That leaves
+    at most P - 1 bounds, each a key of the data and none tied with the
+    sample's smallest key. So pids ascend in key order, are dense in
+    [0, len(bounds)] and non-empty, equal keys share a pid, and pid < P:
+    a P-slot table indexed by pid needs no data pass.
+
+    The pid is one SQL expression over the row and the literal bounds, so
+    every plan branch, replay and task retry assigns the same pid; no
+    exchange has to place rows, and a ``partitionBy(PID)`` window's own
+    hash exchange is the only full-data shuffle. ``df`` is materialized
+    lazily (``materialize_lazy``) only so that the sample and all
+    branches share one computation of it."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    df = materialize_lazy(df)  # the sample job below is its one action
+    keys = _sort_keys(order_cols)
+    names = [f"__k{i}__" for i in range(len(keys))]
+    keyed = df.withColumns({m: k for m, (k, _, _) in zip(names, keys)})
+    hashable = [
+        F.col(f"`{f.name}`") for f in df.schema.fields if "map<" not in f.dataType.simpleString()
+    ]
+    sample = (
+        keyed.withColumn("__h__", F.xxhash64(*(hashable or [F.col(m) for m in names])))
+        .orderBy("__h__")  # a column: the top-k compares it, not the hash
+        .limit(_SAMPLE_PER_PID * n)  # one partition: a local sort orders it
+        .sortWithinPartitions(*_cols(order_cols))
+        .select(*names)
+    )
+    types = [f.dataType for f in sample.schema.fields]
+    rows = [tuple(r) for r in sample.collect()] if n > 1 else []
+    picks = [rows[i * len(rows) // n] for i in range(n)] if rows else []
+    ties = [tuple("NaN" if v != v else v for v in p) for p in picks]  # NaN ties NaN
+    bounds = [picks[i] for i in range(1, len(picks)) if ties[i] != ties[i - 1]]
+    pid = F.expr(_count_at_or_before(keys, names, types, bounds, 0, len(bounds)))
+    return keyed.withColumn(PID, pid).drop(*names)
 
 
 def _pid_grouped(part: DataFrame):
     """``groupBy(PID)`` behind an EXPLICIT same-count hash repartition.
 
-    The Arrow passes below group a range-partitioned frame by its P pid
-    values and run heavy vectorized per-group compute (chunked 2-D
-    histograms, decay scans). A bare ``groupBy(PID)`` inserts an
-    ENSURE_REQUIREMENTS exchange that AQE coalesces by SIZE — and the
-    (order_col, value) projections are tiny even when the compute is
-    not, so at bench scale every group landed on ONE task (profiled:
+    The Arrow passes below run heavy vectorized per-pid compute (chunked
+    2-D histograms, decay scans) over tiny (order_col, value)
+    projections. A bare ``groupBy(PID)`` exchange is one AQE coalesces by
+    SIZE, so at bench scale every pid landed on ONE task (profiled:
     series_expanding_quantile's pass B ran 10s single-task while 31
-    cores idled). A user-specified ``repartition(n, PID)`` pins the
-    partition count (AQE never coalesces explicit repartitions), and
-    ``groupBy`` on the same key/count reuses the exchange — so the plan
-    still has exactly one shuffle, now guaranteed ≥ session-parallelism
-    wide. At real scale the groups are size-dominated and AQE would not
-    have coalesced anyway — this only removes the small-input collapse."""
+    cores idled). AQE never coalesces a user-specified
+    ``repartition(n, PID)``, and ``groupBy`` on the same key reuses it:
+    still one shuffle, now >= session-parallelism wide."""
     n = int(part.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return part.repartition(n, PID).groupBy(PID)
 
@@ -110,44 +173,6 @@ def _ddl(part: DataFrame, names: Sequence[str]) -> str:
     )
 
 
-def global_fill(
-    df: DataFrame,
-    order_cols: Sequence[str | Column],
-    cols: Sequence[str],
-    direction: str = "forward",
-) -> DataFrame:
-    """ffill/bfill over a global order, scale-safe: per-range-partition
-    carry (window over __pid__) plus a P-row per-partition-boundary table
-    carried across partitions and broadcast back — no full-data single
-    partition. Replaces each column in ``cols`` with its filled value."""
-    backward = direction == "backward"
-    part = range_partitioned(df, order_cols, pin=True)
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    ordc = _cols(order_cols)
-    ordk = [c.desc() for c in ordc] if backward else ordc
-    w = W.partitionBy(PID).orderBy(*ordk).rowsBetween(W.unboundedPreceding, 0)
-    cur = part.select(
-        "*", *[F.last(c, ignorenulls=True).over(w).alias(f"__f_{c}") for c in cols]
-    )
-    # last (first, for bfill) non-null value per partition, per column
-    pick = F.min_by if backward else F.max_by
-    key = F.struct(*ordc)
-    summary = part.groupBy(PID).agg(
-        *[pick(F.col(c), F.when(F.col(c).isNotNull(), key)).alias(c) for c in cols]
-    )
-    axis = df.sparkSession.range(n).select(F.col("id").cast("int").alias(PID))
-    ordp = F.col(PID).desc() if backward else F.col(PID).asc()
-    w2 = W.partitionBy(_one()).orderBy(ordp).rowsBetween(W.unboundedPreceding, -1)
-    prev = axis.join(summary, PID, "left").select(
-        PID, *[F.last(c, ignorenulls=True).over(w2).alias(f"__p_{c}") for c in cols]
-    )
-    sel = [
-        F.coalesce(F.col(f"__f_{c}"), F.col(f"__p_{c}")).alias(c) if c in cols else F.col(c)
-        for c in df.columns
-    ]
-    return cur.join(F.broadcast(prev), PID, "left").select(*sel)
-
-
 def _one(pid: Column | str = PID) -> Column:
     """Non-foldable all-equal partition key for the tiny P-row windows.
 
@@ -158,26 +183,73 @@ def _one(pid: Column | str = PID) -> Column:
     return F.pmod(F.col(pid) if isinstance(pid, str) else pid, F.lit(1))
 
 
-# kind -> (aggregate, combine): the associative pairs a prefix scan and
-# its P-row prior table are built from
+# kind -> (prefix aggregate, suffix aggregate, combine): the associative
+# pairs a scan and its P-row prior table are built from. ``last`` is the
+# last non-null value; read as a suffix it is the first one.
 _KINDS = {
-    "sum": (F.sum, lambda a, b: a + b),
-    "max": (F.max, F.greatest),
-    "min": (F.min, F.least),
-    "prod": (F.product, lambda a, b: a * b),
+    "sum": (F.sum, F.sum, lambda a, b: a + b),
+    "max": (F.max, F.max, F.greatest),
+    "min": (F.min, F.min, F.least),
+    "prod": (F.product, F.product, lambda a, b: a * b),
+    "last": (lambda v: F.last(v, True), lambda v: F.first(v, True), F.coalesce),
 }
 
 
-def _prior(part: DataFrame, specs: dict[str, tuple[str, Column]]) -> DataFrame:
-    """P-row table: for each pid and each ``out -> (kind, value)`` spec,
-    the kind's aggregate of ``value`` over all PRIOR pids — null when no
-    prior pid holds a non-null value. The only single-partition window —
-    over P rows."""
-    per = part.groupBy(PID).agg(*[_KINDS[k][0](v).alias(o) for o, (k, v) in specs.items()])
-    w = W.partitionBy(_one()).orderBy(PID).rowsBetween(W.unboundedPreceding, -1)
-    return per.select(
-        PID, *[_KINDS[k][0](F.col(o)).over(w).alias(o) for o, (k, _) in specs.items()]
+def _spec(spec: tuple) -> tuple[str, Column | Callable[[Column], Column], bool]:
+    """(kind, value, suffix) of a ``scan`` spec ``(kind, value[, "suffix"])``."""
+    kind, value, *rest = spec
+    if kind not in _KINDS or rest not in ([], ["suffix"]):
+        raise ValueError(f"unsupported scan spec {spec!r}")
+    return kind, value, bool(rest)
+
+
+def _pid_total(kind: str, value: Column, suffix: bool, order_cols) -> Column:
+    """One pid's aggregate of ``value``. ``last`` is order-sensitive, so it
+    is the value at the greatest (first, for a suffix) order key among
+    the pid's non-null values; that needs every key in one direction."""
+    if kind != "last":
+        return _KINDS[kind][0](value)
+    keys = _sort_keys(order_cols)
+    if len({asc for _, asc, _ in keys}) != 1:
+        raise ValueError("a 'last' scan needs every order key in one direction")
+    asc = keys[0][1]
+    # per key: a null-placement flag, then the key (structs compare
+    # ascending, NaN last); a descending order reads the struct reversed
+    key = F.struct(
+        *[
+            F.struct(F.when(k.isNull(), int(nf != asc)).otherwise(int(nf == asc)), k)
+            for k, _, nf in keys
+        ]
     )
+    pick = F.max_by if asc != suffix else F.min_by
+    return pick(value, F.when(value.isNotNull(), key))
+
+
+def _prior(part: DataFrame, specs: dict[str, tuple], order_cols) -> DataFrame:
+    """P-row table: for each pid and each ``out -> scan spec``, the kind's
+    aggregate of the value over all PRIOR pids (all LATER pids for a
+    suffix spec) — null when none holds a non-null value. The only
+    single-partition window — over P rows."""
+    parsed = {o: _spec(s) for o, s in specs.items()}
+    per = part.groupBy(PID).agg(
+        *[_pid_total(k, v, sfx, order_cols).alias(o) for o, (k, v, sfx) in parsed.items()]
+    )
+    w = W.partitionBy(_one()).orderBy(PID)
+    frames = (w.rowsBetween(W.unboundedPreceding, -1), w.rowsBetween(1, W.unboundedFollowing))
+    return per.select(
+        PID,
+        *[_KINDS[k][sfx](F.col(o)).over(frames[sfx]).alias(o) for o, (k, _, sfx) in parsed.items()],
+    )
+
+
+def _positioned(part: DataFrame, order_cols: Sequence[str | Column], pos_col: str) -> DataFrame:
+    """``part`` plus the 0-based global position in (order_cols) order:
+    the row number within its pid plus a P-row broadcast of the row
+    counts of all earlier pids."""
+    offs = _prior(part, {"__off__": ("sum", F.lit(1))}, order_cols)
+    w = W.partitionBy(PID).orderBy(*_cols(order_cols))
+    pos = F.row_number().over(w) + F.coalesce(F.col("__off__"), F.lit(0)) - 1
+    return part.join(F.broadcast(offs), PID).withColumn(pos_col, pos).drop("__off__")
 
 
 def with_position(
@@ -185,51 +257,52 @@ def with_position(
 ) -> DataFrame:
     """Add a 0-based global position column in (order_cols) order.
 
-    Two full-data exchanges (range + pid-hash for the window); offsets via
-    a P-row broadcast. No full-data single partition.
+    One full-data exchange (the pid-hash for the window); offsets via a
+    P-row broadcast. No full-data single partition.
     """
-    part = range_partitioned(df, order_cols)
-    offs = _prior(part, {"__off__": ("sum", F.lit(1))})
-    w = W.partitionBy(PID).orderBy(*_cols(order_cols))
-    pos = F.row_number().over(w) + F.coalesce(F.col("__off__"), F.lit(0)) - 1
-    return (
-        part.join(F.broadcast(offs), PID)
-        .withColumn(pos_col, pos)
-        .drop(PID, "__off__")
-    )
+    return _positioned(range_partitioned(df, order_cols), order_cols, pos_col).drop(PID)
 
 
 def scan(
     df: DataFrame,
     order_cols: Sequence[str | Column],
-    scans: dict[str, tuple[str, Column]],
+    scans: dict[str, tuple],
 ) -> DataFrame:
     """Global prefix scans in (order_cols) order — the distributed block
     scan. ``scans`` maps output column -> (kind, value) with kind in
-    {'sum', 'max', 'min', 'prod'}. Every spec shares ONE range partition,
-    ONE P-row prior table (each spec's aggregate over all earlier
-    partitions, broadcast back) and ONE window pass: k scans cost the
-    shuffles of one.
+    {'sum', 'max', 'min', 'prod', 'last'}; a third element ``"suffix"``
+    scans the other way (the row and everything after it). Every spec
+    shares ONE range partition, ONE P-row prior table (each spec's
+    aggregate over all earlier — later, for a suffix — pids, broadcast
+    back) and ONE window pass: k scans cost the shuffles of one.
+
+    A ``value`` may instead be a function of the row's 0-based global
+    position column; the output then keeps that column as ``POS``.
 
     One null policy, independent of where the range partitioner cut: a
     row's output is the kind's aggregate over every non-null ``value`` at
-    or before it in the global order, or null if there is none. Callers
-    apply pandas' output rule on top (cum*: missing at missing-input
-    rows; expanding: count >= min_periods)."""
+    or before it (at or after it, for a suffix) in the global order, or
+    null if there is none. ``last`` is so the forward fill, and its
+    suffix the backward fill. Callers apply pandas' output rule on top
+    (cum*: missing at missing-input rows; expanding: count >= min_periods)."""
     part = range_partitioned(df, order_cols)
-    prior = _prior(part, {f"__p_{o}__": spec for o, spec in scans.items()})
-    w = (
-        W.partitionBy(PID)
-        .orderBy(*_cols(order_cols))
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    # the running aggregate gets its own projection: referenced twice in
-    # the merge below, it would otherwise be computed twice by the window
-    runs = {o: _KINDS[kind][0](val).over(w) for o, (kind, val) in scans.items()}
-    merged = {}
-    for o, (kind, _) in scans.items():
+    if not all(isinstance(s[1], Column) for s in scans.values()):
+        part = _positioned(part, order_cols, POS)
+        scans = {
+            o: (s[0], s[1] if isinstance(s[1], Column) else s[1](F.col(POS)), *s[2:])
+            for o, s in scans.items()
+        }
+    prior = _prior(part, {f"__p_{o}__": s for o, s in scans.items()}, order_cols)
+    w = W.partitionBy(PID).orderBy(*_cols(order_cols))
+    frames = (w.rowsBetween(W.unboundedPreceding, 0), w.rowsBetween(0, W.unboundedFollowing))
+    runs, merged = {}, {}
+    for o, spec in scans.items():
+        kind, val, sfx = _spec(spec)
+        # the running aggregate gets its own projection: referenced twice
+        # in the merge below, it would otherwise be computed twice
+        runs[o] = _KINDS[kind][sfx](val).over(frames[sfx])
         run, p = F.col(o), F.col(f"__p_{o}__")
-        merged[o] = F.coalesce(_KINDS[kind][1](run, p), run, p)
+        merged[o] = F.coalesce(_KINDS[kind][2](run, p), run, p)
     return (
         part.join(F.broadcast(prior), PID)
         .withColumns(runs)
@@ -238,83 +311,25 @@ def scan(
     )
 
 
-def scan_sum_intkey(
-    df: DataFrame,
-    key_col: str,
-    value: Column,
-    out_col: str,
-) -> DataFrame:
-    """Global running sum in ``key_col`` order for an INTEGER key, with
-    bucket boundaries derived from (min, max) only — fully deterministic
-    under ANY execution schedule, partition count, or session config.
-
-    The generic ``scan`` range-partitions by sampling, which requires
-    a materialization barrier so every plan branch sees one boundary
-    sample. Here the bucket of a row is a pure function of its key value
-    (``(key - min) div width``), so the per-bucket totals branch and the
-    row-level branch agree by construction: no checkpoint, one hash
-    shuffle on the bucket id, P-row prefix broadcast. Dense-ish keys give
-    balanced buckets; pathological key skew degrades performance (one fat
-    bucket) but never correctness.
-    """
-    spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    lo, hi = df.agg(F.min(key_col), F.max(key_col)).first()
-    if lo is None:
-        return df.withColumn(out_col, F.lit(None).cast("long"))
-    lo, hi = int(lo), int(hi)
-    width = (hi - lo) // n + 1
-    b = F.expr(f"CAST((`{key_col}` - {lo}) DIV {width} AS INT)")
-    part = df.withColumn("__b__", b)
-    per = part.groupBy("__b__").agg(F.sum(value).alias("__t__"))
-    w0 = W.partitionBy(_one("__b__")).orderBy("__b__").rowsBetween(
-        W.unboundedPreceding, -1
-    )
-    offs = per.select(
-        "__b__", F.coalesce(F.sum("__t__").over(w0), F.lit(0)).alias("__soff__")
-    )
-    w = (
-        W.partitionBy("__b__")
-        .orderBy(key_col)
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    return (
-        part.join(F.broadcast(offs), "__b__")
-        .withColumn(out_col, F.sum(value).over(w) + F.col("__soff__"))
-        .drop("__b__", "__soff__")
-    )
-
-
-def _ensure_min_partition_rows(
-    df: DataFrame,
-    part: DataFrame,
-    order_cols: Sequence[str | Column],
-    need: int,
-) -> DataFrame:
-    """Return a range-partitioned frame where every partition holds >=
-    ``need`` rows and pids are gapless — the boundary-replication
-    precondition. ``part`` is already materialized, so the layout check is
-    a P-row aggregate over local checkpoint blocks."""
-
-    def layout_ok(p: DataFrame) -> tuple[bool, int]:
-        rows = p.groupBy(PID).count().collect()
-        if not rows:
-            return True, 0
-        pids = sorted(r[PID] for r in rows)
-        total = sum(r["count"] for r in rows)
-        gapless = pids == list(range(pids[0], pids[0] + len(pids)))
-        return (gapless and min(r["count"] for r in rows) >= need), total
-
-    ok, total = layout_ok(part)
-    if ok:
+def _ensure_min_partition_rows(part: DataFrame, need: int) -> DataFrame:
+    """Return ``part`` with every pid holding >= ``need`` rows and pids
+    gapless — the boundary-replication precondition. The per-pid row
+    counts (a P-row aggregate) decide; a too-fine layout (tiny input, or
+    skewed bounds) is coarsened by merging adjacent pids over the same
+    bounds until each holds >= 2x the window — no second sample."""
+    counts = dict(part.groupBy(PID).count().collect())
+    pids = sorted(counts)
+    if pids == list(range(len(pids))) and all(c >= need for c in counts.values()):
         return part
-    # Too-fine layout (tiny input, or skewed/AQE-coalesced boundaries):
-    # re-partition so each partition targets >= 2x the window length.
-    n_safe = max(1, total // max(2 * need, 1))
-    part = range_partitioned(df, order_cols, num_partitions=n_safe)
-    if n_safe > 1 and not layout_ok(part)[0]:
-        part = range_partitioned(df, order_cols, num_partitions=1)
-    return part
+    group, acc, g = {}, 0, 0
+    for p in pids:
+        group[p], acc = g, acc + counts[p]
+        if acc >= 2 * need:
+            g, acc = g + 1, 0
+    if 0 < acc < need and g:  # a short tail joins the group before it
+        group = {p: min(v, g - 1) for p, v in group.items()}
+    lookup = F.array(*[F.lit(group.get(p, 0)) for p in range(pids[-1] + 1)])
+    return part.withColumn(PID, F.element_at(lookup, F.col(PID) + 1))
 
 
 def with_context(
@@ -332,42 +347,31 @@ def with_context(
     Correct when before/after <= every partition's row count (window
     lengths are tiny relative to partition sizes at scale; a 100-row
     window against multi-million-row range partitions). That precondition
-    is ENFORCED, not assumed: the partition layout is checked (a cheap
-    P-row aggregate over the already-materialized checkpoint) and, when a
-    partition is smaller than the window — or an empty partition would
-    break the p -> p+1 replication chain — the data is re-partitioned
-    coarser (>= 2x window rows per partition; ultimately a single
+    is ENFORCED, not assumed: the partition layout is checked (a P-row
+    aggregate) and, when a partition is smaller than the window, adjacent
+    partitions are merged (>= 2x window rows each; ultimately a single
     partition, which is trivially correct and only ever reached when the
     total input is comparable to the window length).
     """
     part = range_partitioned(df, order_cols)
     need = max(before, after)
     if need:
-        part = _ensure_min_partition_rows(df, part, order_cols, need)
+        part = _ensure_min_partition_rows(part, need)
     asc = _cols(order_cols)
     pieces = [part.withColumn(CTX, F.lit(False))]
-    if before:
-        rn = F.row_number().over(W.partitionBy(PID).orderBy(*[c.desc() for c in asc]))
-        pieces.append(
-            part.withColumn("__rn__", rn)
-            .filter(F.col("__rn__") <= before)
-            .drop("__rn__")
-            .withColumn(PID, F.col(PID) + 1)
-            .withColumn(CTX, F.lit(True))
-        )
-    if after:
-        rn = F.row_number().over(W.partitionBy(PID).orderBy(*asc))
-        pieces.append(
-            part.withColumn("__rn__", rn)
-            .filter(F.col("__rn__") <= after)
-            .drop("__rn__")
-            .withColumn(PID, F.col(PID) - 1)
-            .withColumn(CTX, F.lit(True))
-        )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
+    # the last ``before`` rows of each pid move up one pid, the first
+    # ``after`` rows down one
+    for rows, step, order in ((before, 1, [c.desc() for c in asc]), (after, -1, asc)):
+        if rows:
+            rn = F.row_number().over(W.partitionBy(PID).orderBy(*order))
+            pieces.append(
+                part.withColumn("__rn__", rn)
+                .filter(F.col("__rn__") <= rows)
+                .drop("__rn__")
+                .withColumn(PID, F.col(PID) + step)
+                .withColumn(CTX, F.lit(True))
+            )
+    return reduce(DataFrame.unionByName, pieces)
 
 
 def shifted(
@@ -414,8 +418,8 @@ def scan_quantile(
     Design (value-bucketed prefix histogram, two passes, no full-data
     single partition):
 
-    1. Range-partition by the order keys (shared machinery; eager
-       materialization pins one boundary sample for both passes).
+    1. Range-partition by the order keys (shared machinery; the pid is a
+       pure function of the key, so both passes see one layout).
     2. Bucket boundaries from the value DOMAIN: if the column has
        <= max_buckets distinct values the boundaries ARE the sorted
        distinct values and every result is EXACT (pandas linear
@@ -443,9 +447,8 @@ def scan_quantile(
     if len(qs) != len(out_cols):
         raise ValueError("q and out_col must have the same length")
 
-    spark = df.sparkSession
     base = df.select(*[F.col(c) for c in order_cols], F.col(val_col).cast("double"))
-    part = range_partitioned(base, order_cols, pin=True)
+    part = range_partitioned(base, order_cols)
 
     distinct = [
         r[0]
@@ -481,7 +484,7 @@ def scan_quantile(
         )
 
     per = _pid_grouped(part).applyInPandas(_hist, "pid int, hist binary").collect()
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     mat = np.zeros((n_part, k), dtype="int64")
     for r in per:
         mat[r["pid"]] = np.frombuffer(r["hist"], dtype="int64")
@@ -624,9 +627,8 @@ def scan_ewm(
     if not (0.0 < alpha <= 1.0):
         raise ValueError("alpha must be in (0, 1]")
     q = 1.0 - alpha
-    spark = df.sparkSession
     base = df.select(*[F.col(c) for c in order_cols], F.col(val_col).cast("double"))
-    part = range_partitioned(base, order_cols, pin=True)
+    part = range_partitioned(base, order_cols)
     chunk = _chunk(q) if q > 0.0 else 0
 
     def _summary(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -654,15 +656,14 @@ def scan_ewm(
     rows = _pid_grouped(part).applyInPandas(
         _summary, "pid int, n long, nvalid long, num double, den double"
     ).collect()
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     info = {r["pid"]: r for r in rows}
-    carry_num = [0.0] * n_part  # decayed state ENTERING partition p
-    carry_den = [0.0] * n_part
-    carry_cnt = [0] * n_part  # valid count before partition p
+    # (decayed num, decayed den, valid count) ENTERING partition p
+    carries = []
     cn = cd = 0.0
     cc = 0
     for p in range(n_part):
-        carry_num[p], carry_den[p], carry_cnt[p] = cn, cd, cc
+        carries.append((cn, cd, cc))
         r = info.get(p)
         if r is not None:
             if q == 0.0:
@@ -681,23 +682,21 @@ def scan_ewm(
 
     def _ewm(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(list(order_cols), kind="mergesort")
-        pid = int(pdf[PID].iloc[0])
+        c_num, c_den, c_cnt = carries[int(pdf[PID].iloc[0])]
         x = pdf[val_col].to_numpy(dtype="float64")
         valid = ~np.isnan(x)
         if q > 0.0:
-            num = _decay_prefix(np.where(valid, x, 0.0), q, carry_num[pid], chunk)
-            den = _decay_prefix(valid.astype("float64"), q, carry_den[pid], chunk)
+            num = _decay_prefix(np.where(valid, x, 0.0), q, c_num, chunk)
+            den = _decay_prefix(valid.astype("float64"), q, c_den, chunk)
         else:
             # alpha == 1: memoryless update, but pandas still CARRIES the
             # last valid value through NaN rows — a forward fill seeded
             # with the cross-partition carry
             filled = np.maximum.accumulate(np.where(valid, np.arange(len(x)), -1))
-            has_prev = carry_den[pid] > 0.0
-            num = np.where(
-                filled >= 0, x[np.maximum(filled, 0)], carry_num[pid] if has_prev else np.nan
-            )
+            has_prev = c_den > 0.0
+            num = np.where(filled >= 0, x[np.maximum(filled, 0)], c_num if has_prev else np.nan)
             den = np.where((filled >= 0) | has_prev, 1.0, 0.0)
-        cum_valid = carry_cnt[pid] + np.cumsum(valid.astype("int64"))
+        cum_valid = c_cnt + np.cumsum(valid.astype("int64"))
         out = np.where((den > 0.0) & (cum_valid >= minp), num / np.maximum(den, 1e-300), np.nan)
         res = pdf[list(order_cols)].copy()
         res[out_col] = out
@@ -729,9 +728,8 @@ def scan_ewm_moments(
     if not (0.0 < alpha < 1.0):
         raise ValueError("ewm moments require alpha in (0, 1)")
     q = 1.0 - alpha
-    spark = df.sparkSession
     base = df.select(*[F.col(c) for c in order_cols], F.col(val_col).cast("double"))
-    part = range_partitioned(base, order_cols, pin=True)
+    part = range_partitioned(base, order_cols)
     chunk = _chunk(q * q)
 
     def _summary(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -747,7 +745,7 @@ def scan_ewm_moments(
         _summary,
         "pid int, n long, nvalid long, num double, num2 double, den double, den2 double",
     ).collect()
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     info = {r["pid"]: r for r in rows}
     decays = _moment_decays(q)
     carries = {}
@@ -831,7 +829,7 @@ def scan_ewm_grouped(
     base = df.filter(cond).select(
         *keys, *order_cols, *[F.col(c).cast("double").alias(c) for c in val_cols]
     )
-    part = range_partitioned(base, [*keys, *order_cols], pin=True)
+    part = range_partitioned(base, [*keys, *order_cols])
     chunk = _chunk(q * q)
     sort_cols = [*keys, *order_cols]
     minp = max(min_periods, 1)

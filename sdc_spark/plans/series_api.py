@@ -533,13 +533,15 @@ oracle(
                pow(0.9604, i) * sum(pow(0.9604, -i)) OVER w AS den2
         FROM t
         WINDOW w AS (ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+    ), v AS (
+        SELECT event_id,
+               (num2 / den - (num / den) * (num / den))
+                   * (den * den) / nullif(den * den - den2, 0.0) AS var
+        FROM s
     )
     SELECT event_id,
-           round(greatest(
-               (num2 / den - (num / den) * (num / den))
-                   * (den * den) / nullif(den * den - den2, 0.0),
-               0.0), 4) AS ewm_var
-    FROM s
+           round(CASE WHEN var < 0 THEN 0.0 ELSE var END, 4) AS ewm_var
+    FROM v
     """,
 )
 

@@ -630,10 +630,15 @@ def test_context_guard_repartitions_fine_layouts(spark):
     from sdc_spark.operators import order as so
 
     df = spark.range(200).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    part = so.range_partitioned(df, ["k"], num_partitions=20)
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "20")
+    try:
+        part = so.range_partitioned(df, ["k"])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
     counts = [r["count"] for r in part.groupBy(so.PID).count().collect()]
     assert min(counts) < 50  # precondition genuinely violated before fix-up
-    fixed = so._ensure_min_partition_rows(df, part, ["k"], need=50)
+    fixed = so._ensure_min_partition_rows(part, need=50)
     layout = [r["count"] for r in fixed.groupBy(so.PID).count().collect()]
     assert all(c >= 50 for c in layout)
 
@@ -1198,6 +1203,17 @@ def test_series_ewm_var_std(spark):
     np.testing.assert_allclose(
         got.to_numpy(), exp.to_numpy(), rtol=1e-7, atol=1e-10, equal_nan=True
     )
+
+
+def test_series_ewm_var_first_observation_is_nan(spark):
+    """One observation has no variance: pandas returns NaN there (and
+    while only one valid value has been seen), not a clamped 0.0."""
+    ps = pd.Series([4.0, float("nan"), 1.0, 2.5, 7.0], name="v")
+    s = from_pandas(spark, ps.to_frame())["v"]
+    for stat in ("var", "std"):
+        got = getattr(s.ewm(alpha=0.3), stat)().to_pandas()
+        exp = getattr(ps.ewm(alpha=0.3), stat)()
+        np.testing.assert_allclose(got.to_numpy(), exp.to_numpy(), rtol=1e-9, equal_nan=True)
 
 
 def test_groupby_ewm(spark):

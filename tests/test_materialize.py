@@ -1,10 +1,10 @@
 """The materialize() primitive: mode-independent correctness.
 
-The order machinery's correctness contract hangs on its intermediates
-being computed exactly once (range-boundary sampling must not re-run per
-plan branch). materialize() is that primitive; these tests flip the
-session mode config and pin that a boundary-sensitive scan query returns
-bit-identical results under localCheckpoint / persist / checkpoint.
+Operators that read one intermediate from several plan branches share a
+single computation of it through materialize()/materialize_lazy(); these
+tests flip the session mode config and pin that a cross-partition scan
+query returns bit-identical results under localCheckpoint / persist /
+checkpoint.
 """
 
 from __future__ import annotations
@@ -18,8 +18,9 @@ from sdc_spark.frame.core import from_pandas
 
 
 def _scan_result(spark) -> pd.DataFrame:
-    """A boundary-sensitive pipeline: distributed cumsum + shift over a
-    range-partitioned frame (exercises range_partitioned -> materialize)."""
+    """A cross-partition pipeline: distributed cumsum + shift over a
+    range-partitioned frame (exercises range_partitioned ->
+    materialize_lazy)."""
     pdf = pd.DataFrame(
         {"k": [i % 7 for i in range(5000)], "v": [float(i % 113) for i in range(5000)]}
     )

@@ -20,12 +20,12 @@ import pandas as pd
 import sdc_spark.plans.all  # noqa: F401
 from explain_audit import window_nodes
 from sdc_spark.frame import from_pandas
+from sdc_spark.materialize import plan_string
 from sdc_spark.plans.registry import QUERIES
 
 
 def plan_of(spark, sf_dir, name: str) -> str:
-    df = QUERIES[name](spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+    return plan_string(QUERIES[name](spark, sf_dir))
 
 
 def test_tpch_star_joins_broadcast_dims(spark, sf_dir):
@@ -192,7 +192,7 @@ def test_aqe_skew_split_fires(spark):
         assert sum(rows.values()) == 120_000 and rows["dim_0"] > 100_000, rows
         # collect() executed THIS DataFrame's queryExecution, so the
         # final adaptive plan carries the runtime skew annotation
-        plan = j._jdf.queryExecution().executedPlan().toString()
+        plan = plan_string(j)
         assert "skew=true" in plan, plan
         assert "AQEShuffleRead skewed" in plan, plan
     finally:
@@ -268,7 +268,7 @@ def repeated_window_exprs(df) -> list[str]:
     Python reference to ``agg.over(w)`` as its own window expression, and a
     sliding ROWS frame recomputes each one per row. The plan string is
     untruncated so that wide nodes list every expression."""
-    plan = df._jdf.queryExecution().executedPlan().treeString(True, False, 2**31 - 1, False, False)
+    plan = plan_string(df)
     nodes = window_nodes(plan)
     assert nodes, plan
     return [e for node in nodes for e, k in Counter(node).items() if k > 1]

@@ -21,7 +21,9 @@ from tests.conftest import spark  # noqa: F401  (fixture)
 
 
 def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+    from sdc_spark.materialize import plan_string
+
+    return plan_string(df)
 
 
 def test_order_scan_pid_exchange_is_pinned(spark):  # noqa: F811

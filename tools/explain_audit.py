@@ -27,8 +27,8 @@ def window_nodes(plan: str) -> list[list[str]]:
     exprIds and output aliases removed so that two evaluations of the same
     aggregate over the same spec compare equal. Only the final plan of an
     executed adaptive plan is read (its initial plan repeats every node).
-    The plan string must be untruncated (spark.sql.debug.maxToStringFields
-    above the widest node), or long nodes end in "... N more fields"."""
+    The plan string must be untruncated (``materialize.plan_string``), or
+    long nodes end in "... N more fields"."""
     plan = plan.split("== Initial Plan ==")[0]
     nodes = []
     for m in re.finditer(r"\bWindow \[", plan):
@@ -87,11 +87,9 @@ def main() -> None:
     import sdc_spark.plans.all  # noqa: F401
     from sdc_spark.plans.registry import QUERIES
 
-    from sdc_spark.materialize import start_plan_capture, stop_plan_capture
+    from sdc_spark.materialize import plan_string, start_plan_capture, stop_plan_capture
 
     spark = get_spark("explain_audit")
-    # untruncated plan strings, so every Window node lists all expressions
-    spark.conf.set("spark.sql.debug.maxToStringFields", 100000)
     for name, fn in QUERIES.items():
         if only and name not in only:
             continue
@@ -105,7 +103,7 @@ def main() -> None:
             # run the query so AQE finalizes stages — the pre-execution
             # adaptive plan hides codegen spans and runtime-replanned joins
             df.write.format("noop").mode("overwrite").save()
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = plan_string(df)
             seg_plans = list(cap)
         except Exception as e:  # noqa: BLE001
             print(f"{name}: ERROR {type(e).__name__}: {e}")

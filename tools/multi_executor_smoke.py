@@ -6,8 +6,8 @@ materialize mode (``persist`` + a reliable checkpoint dir).
 
 What it pins, and why these specifically:
 
-- the distributed total-order machinery (``with_position`` / ``scan``
-  / ``global_fill`` / ``scan_ewm``): its P-row per-partition offset
+- the distributed total-order machinery (``with_position`` / ``scan``,
+  its ``last`` fill included / ``scan_ewm``): its P-row per-partition offset
   tables are computed on executors and BROADCAST back — a single-JVM run
   cannot tell a real broadcast from a local reference — and the decay
   scan's Arrow passes call module-level ``order`` helpers, so executor
@@ -78,7 +78,7 @@ def main() -> None:
 
 
 def _order_machinery(spark) -> None:
-    """with_position / scan / global_fill / scan_ewm vs a driver-side oracle,
+    """with_position / scan (sum, max, last) / scan_ewm vs a driver-side oracle,
     on data laid out to straddle both executors."""
     import random
 
@@ -86,7 +86,7 @@ def _order_machinery(spark) -> None:
 
     import pandas as pd
 
-    from sdc_spark.operators.order import global_fill, scan, scan_ewm, with_position
+    from sdc_spark.operators.order import scan, scan_ewm, with_position
 
     rng = random.Random(7)
     rows = [
@@ -121,13 +121,13 @@ def _order_machinery(spark) -> None:
 
     got_fill = {
         r["id"]: r["v"]
-        for r in global_fill(df, ["k", "id"], ["v"]).select("id", "v").collect()
+        for r in scan(df, ["k", "id"], {"v": ("last", F.col("v"))}).select("id", "v").collect()
     }
     carry = None
     for i in expect_order:
         if by_id[i][1] is not None:
             carry = by_id[i][1]
-        assert got_fill[i] == carry, f"global_fill at id={i}"
+        assert got_fill[i] == carry, f"scan last at id={i}"
 
     got_ewm = (
         scan_ewm(df.select("k", "id", "v"), ["k", "id"], "v", 0.3, "e")

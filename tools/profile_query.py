@@ -74,46 +74,39 @@ def main() -> None:
 
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
-    if True:
-        for line in lines():
-            ev = json.loads(line)
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                jid = ev["Job ID"]
-                props = ev.get("Properties") or {}
-                jobs[jid] = {
-                    "start": ev["Submission Time"],
-                    "desc": props.get("spark.job.description", "")[:90],
-                    "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
-                }
-            elif e == "SparkListenerJobEnd":
-                jid = ev["Job ID"]
-                if jid in jobs:
-                    jobs[jid]["end"] = ev["Completion Time"]
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                stages[si["Stage ID"]] = {
-                    "name": si["Stage Name"].split("\n")[0][:70],
-                    "tasks": si["Number of Tasks"],
-                    "ms": si.get("Completion Time", 0) - si.get("Submission Time", 0),
-                }
+    for line in lines():
+        ev = json.loads(line)
+        e = ev.get("Event")
+        if e == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            jobs[ev["Job ID"]] = {
+                "start": ev["Submission Time"],
+                "desc": props.get("spark.job.description", "")[:90],
+                "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
+            }
+        elif e == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
+            jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
+        elif e == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            stages[si["Stage ID"]] = {
+                "name": si["Stage Name"].split("\n")[0][:70],
+                "tasks": si["Number of Tasks"],
+                "ms": si.get("Completion Time", 0) - si.get("Submission Time", 0),
+            }
 
     print(f"\n=== {name}: {wall:.2f}s/run (x{runs} timed, after warm) ===")
-    total_ms = 0
-    # attribute inter-job gaps (driver-side work: planning, catalog, commit)
-    prev_end = None
-    ordered = sorted(jobs.items(), key=lambda kv: kv[1]["start"])
-    gap_ms = 0
-    for jid, j in ordered:
-        if "end" not in j:
-            continue
+    # Jobs overlap (run_concurrently, async broadcasts), so executor time
+    # is the UNION of job intervals, and a driver gap is time after the
+    # running maximum job end in which no job ran.
+    busy_ms = gap_ms = 0
+    last_end = None
+    done = sorted((kv for kv in jobs.items() if "end" in kv[1]), key=lambda kv: kv[1]["start"])
+    for jid, j in done:
         ms = j["end"] - j["start"]
-        total_ms += ms
-        gap = 0
-        if prev_end is not None:
-            gap = max(0, j["start"] - prev_end)
-            gap_ms += gap
-        prev_end = j["end"]
+        gap = 0 if last_end is None else max(0, j["start"] - last_end)
+        busy_ms += max(0, j["end"] - max(j["start"], last_end or 0))
+        gap_ms += gap
+        last_end = max(last_end or 0, j["end"])
         stg = ", ".join(
             f"{stages[s]['tasks']}t/{stages[s]['ms']}ms:{stages[s]['name'][:40]}"
             for s in j["stages"]
@@ -123,9 +116,11 @@ def main() -> None:
             f"job {jid:>3} {ms:>6} ms  gap {gap:>5} ms  "
             f"{j['desc'] or '-':<40} [{stg}]"
         )
-    n = max(1, runs + 1)
-    print(f"jobs total {total_ms} ms over {len(ordered)} jobs (warm+timed), "
-          f"inter-job driver gaps {gap_ms} ms")
+    n = runs + 1
+    print(
+        f"jobs busy {busy_ms} ms (union of intervals) over {len(done)} jobs "
+        f"= {len(done) / n:g} jobs/run (warm+timed), inter-job driver gaps {gap_ms} ms"
+    )
     print(f"event log: {path}")
 
 

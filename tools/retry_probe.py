@@ -54,23 +54,19 @@ def main() -> int:
 
     flaky_base = base.mapInPandas(flaky, "k long, v double")
 
-    clean = sorder.scan_sum_intkey(base, "k", F.col("v"), "cum")
-    dirty = sorder.scan_sum_intkey(flaky_base, "k", F.col("v"), "cum")
-
-    a = clean.orderBy("k").toPandas()
-    b = dirty.orderBy("k").toPandas()
+    # a running sum and a forward fill (``last``) share one scan
+    spec = {
+        "cum": ("sum", F.col("v")),
+        "fill": ("last", F.when(F.col("k") % 5 == 0, F.col("v"))),
+    }
+    a = sorder.scan(base, ["k"], spec).orderBy("k").toPandas()
+    b = sorder.scan(flaky_base, ["k"], spec).orderBy("k").toPandas()
     pd.testing.assert_frame_equal(a, b)
 
-    # truth: plain pandas cumsum
-    exp = a.sort_values("k").reset_index(drop=True)
-    want = exp["v"].cumsum()
-    assert (exp["cum"] == want).all(), "scan result != pandas cumsum"
-
-    # also exercise the generic sampled-range scan under retry
-    spec = {"cum": ("sum", F.col("v"))}
-    clean2 = sorder.scan(base, ["k"], spec).orderBy("k").toPandas()
-    dirty2 = sorder.scan(flaky_base, ["k"], spec).orderBy("k").toPandas()
-    pd.testing.assert_frame_equal(clean2, dirty2)
+    # truth: plain pandas cumsum and ffill
+    assert (a["cum"] == a["v"].cumsum()).all(), "scan sum != pandas cumsum"
+    want = a["v"].where(a["k"] % 5 == 0).ffill()
+    assert (a["fill"] == want).all(), "scan last != pandas ffill"
 
     print("retry probe OK: scans bit-identical under injected task retries")
     spark.stop()
