@@ -262,9 +262,11 @@ class FrameGroupBy:
 
     def ewm(self, alpha: float, min_periods: int = 0):
         """df.groupby(keys).ewm(alpha) — per-group exponentially-weighted
-        kernels (mean/var/std). Group-local, so pandas' own ewm runs
-        Arrow-batched inside each group; the global series path uses the
-        segmented decay scan instead (order.scan_ewm)."""
+        kernels (mean/var/std) on the segmented decay scan that Series.ewm
+        also runs (order.scan_ewm): range-partitioned by (keys, index), so
+        a dominant group splits across partitions and its carry crosses
+        them; groups local to a partition run through pandas' own
+        groupby-ewm."""
         from sdc_spark.frame.rolling import GroupEwm
 
         return GroupEwm(self._frame, self._keys, alpha, min_periods)

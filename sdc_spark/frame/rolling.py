@@ -164,11 +164,6 @@ def _collect_apply(func):
     return kernel
 
 
-def _last_valid(x: Column, tag: str) -> Kernel:
-    k = f"__last_{tag}"
-    return {k: F.last(x, ignorenulls=True)}, F.col(k)
-
-
 def _per_column(cols, kernel_fn, minp: int) -> dict[str, Kernel]:
     """``kernel_fn(column, tag)`` for each column, guarded on ``minp``. The
     tag is the column's position, so aggregate keys stay plain
@@ -367,20 +362,16 @@ class GroupExpanding(GroupRolling):
 
 class GroupEwm:
     """df.groupby(keys).ewm(...) — per-group exponentially-weighted
-    kernels on the GROUPED segmented decay scan
-    (operators/order.py scan_ewm_grouped): range-partition by
-    (keys, __index__) so a skewed mega-group SPLITS across partitions
-    (no per-group memory bound — the round-5 hash-one-group-per-batch
-    path OOMed an executor on a dominant key at scale), per-partition
-    cython groupby-ewm for partition-local groups, and a P-row carry
-    composition for the at-most-one group straddling each boundary.
-    Output shape matches the other group windows:
-    (__index__, keys, numeric columns).
-
-    alpha == 1 (memoryless, q = 0) degenerates: mean is a per-group
-    forward-fill of the last valid value (one window pass, hash-partitioned
-    by group), var/std are all-null (pandas returns NaN — zero effective
-    history)."""
+    mean/var/std, one call of the segmented decay scan
+    (operators/order.py scan_ewm): range-partition by (keys, __index__)
+    so a skewed mega-group SPLITS across partitions (no per-group memory
+    bound — hashing one group per Arrow batch OOMs an executor on a
+    dominant key at scale), per-partition cython groupby-ewm for
+    partition-local groups, and a P-row carry composition for the
+    at-most-one group straddling each boundary. alpha == 1 runs in the
+    same scan (mean is the last valid value, var/std are null). Output
+    shape matches the other group windows: (__index__, keys, numeric
+    columns)."""
 
     def __init__(self, frame, keys, alpha: float, min_periods: int = 0):
         self._frame = frame
@@ -390,36 +381,11 @@ class GroupEwm:
 
     def _stat(self, name: str):
         from sdc_spark.frame.core import SparkFrame
-        from sdc_spark.operators import order as sorder
 
         cols = [c for c in self._frame._numeric_cols() if c not in self._keys]
-        keys, minp = self._keys, self._minp
-        src = self._frame._df.select(IDX, *keys, *cols)
-        if self._alpha == 1.0:
-            return self._memoryless(src, cols, name)
-        out = sorder.scan_ewm_grouped(
-            src, keys, [IDX], cols, self._alpha, name, min_periods=minp
-        )
-        return SparkFrame(out.select(IDX, *keys, *cols))
-
-    def _memoryless(self, src, cols, name: str):
-        """alpha == 1: weight is entirely on the last valid observation."""
-        from sdc_spark.frame.core import SparkFrame
-
-        cond = F.lit(True)
-        for k in self._keys:
-            cond = cond & F.col(k).isNotNull()
-        w = (
-            W.partitionBy(*self._keys)
-            .orderBy(IDX)
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        keep = [IDX, *self._keys]
-        if name != "mean":  # var/std of a single-weight window: NaN (pandas)
-            nan = [F.lit(None).cast("double").alias(c) for c in cols]
-            return SparkFrame(src.filter(cond).select(*keep, *nan))
-        aggs, fins = _merge(_per_column(cols, _last_valid, max(self._minp, 1)))
-        return SparkFrame(over_once(src.filter(cond), w, keep, aggs).select(*keep, *fins))
+        src = self._frame._df.select(IDX, *self._keys, *cols)
+        out = sorder.scan_ewm(src, self._keys, [IDX], cols, self._alpha, name, self._minp)
+        return SparkFrame(out.select(IDX, *self._keys, *cols))
 
     def mean(self):
         return self._stat("mean")

@@ -632,10 +632,8 @@ class SparkSeries:
         surviving rows only."""
         s = self.dropna() if self._floating else self
         top = s._df.orderBy(*keys).limit(n)
-        # non-foldable all-equal key: partitionBy(lit(0)) is folded away and
-        # WindowExec warns "No Partition Defined" even though this window
-        # runs over the n post-limit survivors only
-        w = W.partitionBy(F.pmod(F.spark_partition_id(), F.lit(1))).orderBy(*keys)
+        # the window runs over the n post-limit survivors only
+        w = W.partitionBy(sorder._one(F.spark_partition_id())).orderBy(*keys)
         out = top.select(IDX, VAL, F.row_number().over(w).alias("__ord__"))
         return SparkSeries(out, name=self.name, floating=self._floating)
 
@@ -759,10 +757,10 @@ class SparkSeries:
     ):
         """pandas Series.ewm (adjust=True, ignore_na=False). The reference
         only cross-references ewm in its rolling docs
-        (hpat_pandas_rolling_types.py:204) without implementing it; here it
-        runs distributed on the segmented decay scan (order.scan_ewm — a
-        linear recurrence carried across range partitions by one scalar
-        per partition)."""
+        (hpat_pandas_rolling_types.py:204) without implementing it; here
+        mean/var/std run distributed on the segmented decay scan
+        (order.scan_ewm with no group keys — a linear recurrence carried
+        across range partitions by a few decayed sums per partition)."""
         import math
 
         given = [x is not None for x in (com, span, halflife, alpha)]
@@ -1449,56 +1447,34 @@ class SeriesExpanding:
 
 
 class SeriesEwm:
-    """series.ewm(...).mean() — exponentially-weighted mean on the
-    segmented decay scan (operators/order.py scan_ewm): per-partition
-    decayed reductions + a P-scalar carry composition, never a
-    single-partition pass."""
+    """series.ewm(...).mean()/var()/std() — a Series is a groupby with no
+    keys, so each stat is one call of the segmented decay scan
+    (operators/order.py scan_ewm): per-partition decayed moment
+    reductions, a P-row carry composition on the driver, seeded
+    per-partition prefixes — never a single-partition pass."""
 
     def __init__(self, s: SparkSeries, alpha: float, min_periods: int):
         self._s = s
         self._alpha = alpha
         self._minp = min_periods
 
-    def mean(self) -> SparkSeries:
+    def _stat(self, stat: str, bias: bool = False) -> SparkSeries:
         df = self._s._df.select(IDX, VAL)
-        out = sorder.scan_ewm(
-            df, [IDX], VAL, self._alpha, "__e__", min_periods=self._minp
-        )
-        return SparkSeries(
-            out.select(IDX, F.col("__e__").alias(VAL)),
-            name=self._s.name,
-            floating=True,
-        )
-
-    def var(self, bias: bool = False) -> SparkSeries:
-        """Reliability-weighted ewm variance (pandas bias=False default):
-        var = (Σw·x²/Σw − mean²) · (Σw)²/((Σw)² − Σw²), all four decayed
-        sums from ONE pass of the segmented decay scan
-        (order.scan_ewm_moments). A single observation has (Σw)² == Σw² →
-        null, matching pandas."""
-        df = self._s._df.select(IDX, VAL)
-        m = sorder.scan_ewm_moments(df, [IDX], VAL, self._alpha, self._minp)
-        mean = F.col("__num__") / F.col("__den__")
-        biased = F.col("__num2__") / F.col("__den__") - mean * mean
-        if bias:
-            var = biased
-        else:
-            d2 = F.col("__den__") * F.col("__den__")
-            var = biased * F.try_divide(d2, d2 - F.col("__den2__"))
-        minp = max(self._minp, 1)
-        out = m.select(
-            IDX,
-            F.when(
-                (F.col("__den__") > 0) & (F.col("__cnt__") >= minp),
-                # clamp float-cancellation negatives; greatest() would also
-                # turn the first observation's null variance into 0.0
-                F.when(var < 0, F.lit(0.0)).otherwise(var),
-            ).alias(VAL),
-        )
+        out = sorder.scan_ewm(df, [], [IDX], [VAL], self._alpha, stat, self._minp, bias)
         return SparkSeries(out, name=self._s.name, floating=True)
 
+    def mean(self) -> SparkSeries:
+        return self._stat("mean")
+
+    def var(self, bias: bool = False) -> SparkSeries:
+        """Reliability-weighted ewm variance (pandas' bias=False default):
+        var = (Σw·x²/Σw − mean²) · (Σw)²/((Σw)² − Σw²). A single
+        observation has (Σw)² == Σw², so its variance is null, as in
+        pandas."""
+        return self._stat("var", bias)
+
     def std(self, bias: bool = False) -> SparkSeries:
-        return self.var(bias=bias)._unary(F.sqrt, floating=True)
+        return self._stat("std", bias)
 
 
 class _DtAccessor:

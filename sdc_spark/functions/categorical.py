@@ -11,13 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sdc_spark.operators.order import _one
+
 
 def categories_of(df: DataFrame, col: str) -> DataFrame:
     """Sorted distinct categories with dense codes 0..k-1 (the reference
     sorts categories, types.py ordered-categories model)."""
-    # dim-sized frame; partition on a non-foldable all-zero key so the
-    # "No Partition Defined" warning stays reserved for real regressions
-    w = Window.partitionBy(F.pmod(F.length(col), F.lit(1))).orderBy(col)
+    # dim-sized frame
+    w = Window.partitionBy(_one(F.length(col))).orderBy(col)
     return (
         df.select(col)
         .filter(F.col(col).isNotNull())  # null is not a category (code -1)

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from sdc_spark.operators.order import range_partitioned
+from sdc_spark.operators.order import _one, range_partitioned
 
 _RKEY = "__rkey__"
 
@@ -120,12 +120,8 @@ def _with_carries(
         # from their predecessor), then running carry over the P-row table.
         pid_axis = pid_axis_df
         ordp = F.col("__pid__").asc() if backward else F.col("__pid__").desc()
-        # pmod(pid, 1) == 0 but is not constant-foldable: partitionBy(lit(0))
-        # is folded away and WindowExec logs the scary "No Partition
-        # Defined" warning even though this window only ever sees P rows
-        # (same convention as operators/order.py _one)
         w2 = (
-            W.partitionBy(F.pmod(F.col("__pid__"), F.lit(1)))
+            W.partitionBy(_one("__pid__"))
             .orderBy(ordp)
             .rowsBetween(W.unboundedPreceding, -1)
         )

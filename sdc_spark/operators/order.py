@@ -18,9 +18,9 @@ a single-node array; this is their distributed re-expression.
 
 from __future__ import annotations
 
+import functools
 import sys
 from collections.abc import Callable, Sequence
-from functools import reduce
 
 from pyspark import SparkContext, cloudpickle
 from pyspark.sql import Column, DataFrame
@@ -150,19 +150,55 @@ def range_partitioned(df: DataFrame, order_cols: Sequence[str | Column]) -> Data
     return keyed.withColumn(PID, pid).drop(*names)
 
 
+def _murmur3_int(v: int, seed: int) -> int:
+    """Spark's ``Murmur3_x86_32.hashInt(v, seed)``, the hash of an int
+    column under ``hash`` and ``repartition``, as a signed 32-bit int."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k = (rotl((v * 0xCC9E2D51) & m, 15) * 0x1B873593) & m
+    h = (rotl((seed & m) ^ k, 13) * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & m
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@functools.cache
+def _task_keys(n: int) -> tuple[int, ...]:
+    """For each pid p < n, the smallest int key whose Spark hash partition
+    of the pair (p, key) among n is p: ``pmod(hash(p, key), n) == p``
+    (Murmur3, seed 42, chained over the two columns as Spark does)."""
+    keys = []
+    for p in range(n):
+        seed, k = _murmur3_int(p, 42), 0
+        while _murmur3_int(k, seed) % n != p:
+            k += 1
+        keys.append(k)
+    return tuple(keys)
+
+
 def _pid_grouped(part: DataFrame):
-    """``groupBy(PID)`` behind an EXPLICIT same-count hash repartition.
+    """Group by pid behind an EXPLICIT same-count hash repartition that
+    puts pid p on task p.
 
     The Arrow passes below run heavy vectorized per-pid compute (chunked
     2-D histograms, decay scans) over tiny (order_col, value)
     projections. A bare ``groupBy(PID)`` exchange is one AQE coalesces by
     SIZE, so at bench scale every pid landed on ONE task (profiled:
     series_expanding_quantile's pass B ran 10s single-task while 31
-    cores idled). AQE never coalesces a user-specified
-    ``repartition(n, PID)``, and ``groupBy`` on the same key reuses it:
-    still one shuffle, now >= session-parallelism wide."""
+    cores idled). AQE never coalesces a user-specified ``repartition(n,
+    ...)``, and a ``groupBy`` on the same columns reuses it: one shuffle.
+    Hashing the dense pids alone would still stack them (at n = 4 Murmur3
+    sends three of the four pids to one task), so each pid carries the
+    ``_task_keys`` key that hashes the pair to the pid's own task."""
     n = int(part.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return part.repartition(n, PID).groupBy(PID)
+    keys = ", ".join(map(str, _task_keys(n)))
+    part = part.withColumn("__task__", F.expr(f"element_at(array({keys}), {PID} + 1)"))
+    return part.repartition(n, PID, "__task__").groupBy(PID, "__task__")
 
 
 def _ddl(part: DataFrame, names: Sequence[str]) -> str:
@@ -174,12 +210,14 @@ def _ddl(part: DataFrame, names: Sequence[str]) -> str:
 
 
 def _one(pid: Column | str = PID) -> Column:
-    """Non-foldable all-equal partition key for the tiny P-row windows.
+    """Non-foldable all-equal partition key for windows over tiny frames
+    (the P-row tables here, post-limit top-k rows, a category list).
 
     ``partitionBy(lit(0))`` is constant-folded away, so WindowExec logs the
     scary "No Partition Defined" warning even though the window only ever
-    sees P rows; ``pmod(pid, 1)`` is value-identical (always 0) but not
-    foldable, keeping that warning meaningful for real regressions."""
+    sees a few rows; ``pmod(x, 1)`` of any non-null column ``x`` is
+    value-identical (always 0) but not foldable, keeping that warning
+    meaningful for real regressions."""
     return F.pmod(F.col(pid) if isinstance(pid, str) else pid, F.lit(1))
 
 
@@ -371,7 +409,7 @@ def with_context(
                 .withColumn(PID, F.col(PID) + step)
                 .withColumn(CTX, F.lit(True))
             )
-    return reduce(DataFrame.unionByName, pieces)
+    return functools.reduce(DataFrame.unionByName, pieces)
 
 
 def shifted(
@@ -536,10 +574,10 @@ def scan_quantile(
 def _chunk(dq: float) -> int:
     """Decay-scan chunk length: keeps dq^(-chunk) <= e^600 (~4e260), so
     even with the geometric cumsum growth and large |x| the scaled prefix
-    stays far from float64 overflow."""
+    stays far from float64 overflow (dq = 0 cannot overflow)."""
     import math
 
-    return max(16, min(4096, int(600.0 / -math.log(dq))))
+    return max(16, min(4096, int(600.0 / -math.log(dq)) if dq > 0.0 else 0))
 
 
 def _decay_tail(s: "np.ndarray", dq: float, chunk: int) -> float:
@@ -572,211 +610,20 @@ def _decay_prefix(s: "np.ndarray", dq: float, carry: float, chunk: int) -> "np.n
     return out
 
 
-def _moment_decays(q: float) -> dict:
-    """Decay of each ewm moment sum; den2, the sum of squared weights,
-    decays at q²."""
-    return {"num": q, "num2": q, "den": q, "den2": q * q}
-
-
-def _moment_series(x: "np.ndarray", q: float) -> dict:
-    """The four decayed-moment series of ewm var/std as name ->
-    (series, decay): num = Σ q^d·x, num2 = Σ q^d·x², den = Σ q^d,
-    den2 = Σ q^(2d) (d = steps back; NaNs add nothing but advance d)."""
+def _moment_series(x: "np.ndarray", decays: dict) -> dict:
+    """name -> (series, decay) of each decayed moment sum named in
+    ``decays``: num = Σ q^d·x, num2 = Σ q^d·x², den = Σ q^d and den2 =
+    Σ q^(2d), the sum of squared weights (d = steps back; NaNs add
+    nothing)."""
     import numpy as np
 
     v = ~np.isnan(x)
     xz, vz = np.where(v, x, 0.0), v.astype("float64")
     series = {"num": xz, "num2": xz * xz, "den": vz, "den2": vz}
-    return {m: (series[m], dq) for m, dq in _moment_decays(q).items()}
+    return {m: (series[m], dq) for m, dq in decays.items()}
 
 
 def scan_ewm(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    val_col: str,
-    alpha: float,
-    out_col: str,
-    min_periods: int = 0,
-) -> DataFrame:
-    """Exponentially-weighted mean (pandas ``ewm(alpha).mean()``,
-    adjust=True, ignore_na=False) over a global order — a linear
-    recurrence, i.e. the one windowed kernel that is neither
-    sum-decomposable nor bounded-context: every output depends on ALL
-    history, but the dependence is a single scalar carry.
-
-    Distributed form (segmented decay scan, two passes, no full-data
-    single partition):
-
-    1. Range-partition by the order keys (shared machinery).
-    2. Pass A: each partition reduces to THREE scalars — its
-       end-of-partition decayed numerator N_p = Σ q^(n_p-1-j)·x_j,
-       decayed weight D_p, and length n_p (q = 1-alpha). A P-row
-       driver-side scan composes carries: S_p = S_{p-1}·q^{n_p} + N_p.
-    3. Pass B: per partition, Arrow-batched; the within-partition prefix
-       is the chunk-renormalized ``_decay_prefix`` seeded with the
-       incoming carry S_{p-1}.
-
-    pandas semantics: NaN values contribute nothing but still advance the
-    decay clock (ignore_na=False); outputs before the first valid value
-    (or before ``min_periods`` valids) are null. Exact up to float
-    reassociation (~1 ulp vs pandas' sequential recurrence).
-    """
-    import numpy as np
-    import pandas as pd
-
-    if not (0.0 < alpha <= 1.0):
-        raise ValueError("alpha must be in (0, 1]")
-    q = 1.0 - alpha
-    base = df.select(*[F.col(c) for c in order_cols], F.col(val_col).cast("double"))
-    part = range_partitioned(base, order_cols)
-    chunk = _chunk(q) if q > 0.0 else 0
-
-    def _summary(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(list(order_cols), kind="mergesort")
-        x = pdf[val_col].to_numpy(dtype="float64")
-        v = ~np.isnan(x)
-        if q > 0.0:
-            num = _decay_tail(np.where(v, x, 0.0), q, chunk)
-            den = _decay_tail(v.astype("float64"), q, chunk)
-        else:
-            # alpha == 1 (memoryless): the carry is the LAST VALID value —
-            # pandas still carries it through trailing NaNs
-            idx = np.flatnonzero(v)
-            num, den = (float(x[idx[-1]]), 1.0) if len(idx) else (0.0, 0.0)
-        return pd.DataFrame(
-            {
-                "pid": [int(pdf[PID].iloc[0])],
-                "n": [len(x)],
-                "nvalid": [int(v.sum())],
-                "num": [num],
-                "den": [den],
-            }
-        )
-
-    rows = _pid_grouped(part).applyInPandas(
-        _summary, "pid int, n long, nvalid long, num double, den double"
-    ).collect()
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    info = {r["pid"]: r for r in rows}
-    # (decayed num, decayed den, valid count) ENTERING partition p
-    carries = []
-    cn = cd = 0.0
-    cc = 0
-    for p in range(n_part):
-        carries.append((cn, cd, cc))
-        r = info.get(p)
-        if r is not None:
-            if q == 0.0:
-                # memoryless: a partition with any valid value replaces the
-                # carry; an all-NaN partition passes it through unchanged
-                if r["den"] > 0.0:
-                    cn, cd = r["num"], r["den"]
-            else:
-                decay = q ** r["n"]
-                cn = cn * decay + r["num"]
-                cd = cd * decay + r["den"]
-            cc += r["nvalid"]
-
-    out_schema = f"{_ddl(part, order_cols)}, `{out_col}` double"
-    minp = max(min_periods, 1)
-
-    def _ewm(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(list(order_cols), kind="mergesort")
-        c_num, c_den, c_cnt = carries[int(pdf[PID].iloc[0])]
-        x = pdf[val_col].to_numpy(dtype="float64")
-        valid = ~np.isnan(x)
-        if q > 0.0:
-            num = _decay_prefix(np.where(valid, x, 0.0), q, c_num, chunk)
-            den = _decay_prefix(valid.astype("float64"), q, c_den, chunk)
-        else:
-            # alpha == 1: memoryless update, but pandas still CARRIES the
-            # last valid value through NaN rows — a forward fill seeded
-            # with the cross-partition carry
-            filled = np.maximum.accumulate(np.where(valid, np.arange(len(x)), -1))
-            has_prev = c_den > 0.0
-            num = np.where(filled >= 0, x[np.maximum(filled, 0)], c_num if has_prev else np.nan)
-            den = np.where((filled >= 0) | has_prev, 1.0, 0.0)
-        cum_valid = c_cnt + np.cumsum(valid.astype("int64"))
-        out = np.where((den > 0.0) & (cum_valid >= minp), num / np.maximum(den, 1e-300), np.nan)
-        res = pdf[list(order_cols)].copy()
-        res[out_col] = out
-        return res
-
-    return _pid_grouped(part).applyInPandas(_ewm, out_schema)
-
-
-def scan_ewm_moments(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    val_col: str,
-    alpha: float,
-    min_periods: int = 0,
-) -> DataFrame:
-    """Per-row decayed-moment sums for ewm var/std (adjust=True,
-    ignore_na=False, bias=False): the four ``_moment_series`` (num, num2,
-    den at q; den2 at q²). Same segmented decay-scan shape as scan_ewm —
-    per-partition scalar reductions, P-scalar carry composition,
-    chunk-renormalized vectorized prefixes. Returns (order_cols...,
-    __num__, __den__, __num2__, __den2__, __cnt__).
-
-    Requires alpha < 1: the memoryless case has an undefined
-    reliability-weight correction (pandas returns all-NaN var there too).
-    """
-    import numpy as np
-    import pandas as pd
-
-    if not (0.0 < alpha < 1.0):
-        raise ValueError("ewm moments require alpha in (0, 1)")
-    q = 1.0 - alpha
-    base = df.select(*[F.col(c) for c in order_cols], F.col(val_col).cast("double"))
-    part = range_partitioned(base, order_cols)
-    chunk = _chunk(q * q)
-
-    def _summary(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(list(order_cols), kind="mergesort")
-        x = pdf[val_col].to_numpy(dtype="float64")
-        row = {"pid": [int(pdf[PID].iloc[0])], "n": [len(x)]}
-        row["nvalid"] = [int((~np.isnan(x)).sum())]
-        for name, (s, dq) in _moment_series(x, q).items():
-            row[name] = [_decay_tail(s, dq, chunk)]
-        return pd.DataFrame(row)
-
-    rows = _pid_grouped(part).applyInPandas(
-        _summary,
-        "pid int, n long, nvalid long, num double, num2 double, den double, den2 double",
-    ).collect()
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    info = {r["pid"]: r for r in rows}
-    decays = _moment_decays(q)
-    carries = {}
-    state = dict.fromkeys(decays, 0.0) | {"cnt": 0}
-    for p in range(n_part):
-        carries[p] = dict(state)
-        r = info.get(p)
-        if r is not None:
-            for m, dq in decays.items():
-                state[m] = state[m] * dq ** r["n"] + r[m]
-            state["cnt"] += r["nvalid"]
-
-    out_schema = (
-        f"{_ddl(part, order_cols)}, `__num__` double, `__den__` double,"
-        " `__num2__` double, `__den2__` double, `__cnt__` long"
-    )
-
-    def _scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(list(order_cols), kind="mergesort")
-        carry = carries[int(pdf[PID].iloc[0])]
-        x = pdf[val_col].to_numpy(dtype="float64")
-        res = pdf[list(order_cols)].copy()
-        for name, (s, dq) in _moment_series(x, q).items():
-            res[f"__{name}__"] = _decay_prefix(s, dq, carry[name], chunk)
-        res["__cnt__"] = carry["cnt"] + np.cumsum((~np.isnan(x)).astype("int64"))
-        return res
-
-    return _pid_grouped(part).applyInPandas(_scan, out_schema)
-
-
-def scan_ewm_grouped(
     df: DataFrame,
     keys: Sequence[str],
     order_cols: Sequence[str],
@@ -784,89 +631,88 @@ def scan_ewm_grouped(
     alpha: float,
     stat: str,
     min_periods: int = 0,
+    bias: bool = False,
 ) -> DataFrame:
-    """Per-group ewm mean/var/std (pandas ``groupby(keys).ewm(alpha)``,
-    adjust=True, ignore_na=False, bias=False) with NO per-group memory
-    bound — the 100-TB-safe replacement for hashing each group into one
-    Arrow batch (which OOMs an executor on a skewed mega-group).
+    """Exponentially-weighted mean/var/std of each ``val_cols`` column in
+    (order_cols) order within each ``keys`` group: pandas
+    ``groupby(keys).ewm(alpha)``, adjust=True, ignore_na=False; with no
+    keys, ``Series.ewm(alpha)``. Every output depends on ALL earlier rows
+    of its group, but only through the decayed moment sums of
+    ``_moment_series``, so it runs as a segmented decay scan with no
+    per-group memory bound and no full-data single partition:
 
-    Shape: range-partition by (keys..., order) — a mega-group SPLITS
-    across many partitions, so partition size is ~data/P regardless of
-    group skew. Groups are then contiguous runs, and at most ONE group
-    straddles each partition boundary; so:
+    - Range-partition by (keys..., order): a mega-group SPLITS across
+      partitions, groups are contiguous runs, and at most ONE group
+      straddles each partition boundary (with no keys, one group
+      straddles them all).
+    - Pass A reduces each partition to one row: the decayed moment tails
+      and valid count of its LAST group's segment per value column, plus
+      its first and last key — a P-row collect.
+    - A driver-side P-step fold composes the carry entering each
+      partition: a group spanning p1..p2 contributes its p1 suffix and
+      its whole middle partitions, and p2's first segment consumes it.
+    - Pass B: each partition's first segment is the seeded
+      chunk-renormalized ``_decay_prefix`` (seeded with the carry, or
+      with zero where the segment starts its group); the partition-local
+      groups after it run through pandas' cython groupby-ewm, one call
+      per Arrow batch. With no keys the first segment is the whole
+      partition.
 
-    - Pass A reduces each partition to one summary row describing only
-      its LAST group's segment (decayed ``_moment_series`` tails + valid
-      count, per value column) plus its first/last key — a P-row
-      collect, bounded by the partition count exactly like scan_ewm.
-    - A driver-side P-step fold composes each straddling group's carry
-      entering every partition (a group spanning p1..p2 contributes its
-      p1-suffix, whole middle partitions, and is consumed by p2's
-      prefix).
-    - Pass B computes the stat per partition: every partition-LOCAL
-      segment runs through pandas' cython groupby-ewm (one call per
-      Arrow batch — fast even with millions of tiny groups); only the
-      single carry-continuing first segment (if any) is computed by the
-      seeded chunk-renormalized ``_decay_prefix``.
+    alpha == 1 (q = 0) weighs only the last valid value, so NaN rows do
+    not advance the decay clock: the carry is the last valid value's
+    moments, an all-NaN partition passes it through, and the seeded
+    segment is a forward fill of the carry. The mean is then the last
+    valid value and var/std are null (0.0 with ``bias``), as in pandas.
 
-    NaN group keys are dropped (pandas groupby semantics). Exact up to
-    float reassociation vs pandas' sequential recurrence.
-    """
+    Returns (keys..., order_cols..., val_cols...), each value column
+    replaced by its stat; rows with a null key are dropped (pandas
+    groupby). Exact up to float reassociation vs pandas' sequential
+    recurrence."""
     import numpy as np
     import pandas as pd
 
     if stat not in ("mean", "var", "std"):
         raise ValueError(stat)
-    if not (0.0 < alpha < 1.0):
-        raise ValueError("scan_ewm_grouped requires alpha in (0, 1)")
+    if not (0.0 < alpha <= 1.0):
+        raise ValueError("alpha must be in (0, 1]")
     q = 1.0 - alpha
-    keys = list(keys)
-    order_cols = list(order_cols)
-    val_cols = list(val_cols)
-    cond = F.lit(True)
-    for k in keys:
-        cond = cond & F.col(k).isNotNull()
-    base = df.filter(cond).select(
-        *keys, *order_cols, *[F.col(c).cast("double").alias(c) for c in val_cols]
-    )
-    part = range_partitioned(base, [*keys, *order_cols])
-    chunk = _chunk(q * q)
+    keys, val_cols = list(keys), list(val_cols)
     sort_cols = [*keys, *order_cols]
-    minp = max(min_periods, 1)
-    decays = _moment_decays(q)
+    for k in keys:
+        df = df.filter(F.col(k).isNotNull())
+    base = df.select(*sort_cols, *[F.col(c).cast("double").alias(c) for c in val_cols])
+    part = range_partitioned(base, sort_cols)
+    decays = {"num": q, "den": q} | ({} if stat == "mean" else {"num2": q, "den2": q * q})
+    chunk = _chunk(min(decays.values()))
+    zero = dict.fromkeys(decays, 0.0) | {"cnt": 0}
 
-    ktypes = {
-        f.name: f.dataType.simpleString()
-        for f in part.schema.fields
-        if f.name in keys
-    }
-    sum_schema = (
-        "pid int, n_seg long, "
-        + ", ".join(f"`__fk_{k}__` {ktypes[k]}, `__lk_{k}__` {ktypes[k]}" for k in keys)
-        + ", "
-        + ", ".join(
-            ", ".join(f"`__{m}_{c}__` double" for m in decays) + f", `__nv_{c}__` long"
-            for c in val_cols
-        )
+    def _lead(pdf: pd.DataFrame, key: tuple) -> int:
+        """The number of rows at the start of ``pdf`` in group ``key``."""
+        m = np.ones(len(pdf), dtype=bool)
+        for k, kv in zip(keys, key):
+            m &= (pdf[k] == kv).to_numpy()
+        brk = np.flatnonzero(~m)
+        return int(brk[0]) if len(brk) else len(m)
+
+    ktypes = {f.name: f.dataType.simpleString() for f in part.schema.fields}
+    sum_schema = ", ".join(
+        ["pid int", "n_seg long"]
+        + [f"`__{e}k_{k}__` {ktypes[k]}" for k in keys for e in "fl"]
+        + [f"`__{m}_{c}__` double" for c in val_cols for m in decays]
+        + [f"`__nv_{c}__` long" for c in val_cols]
     )
 
     def _summary(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        lastk = [pdf[k].iloc[-1] for k in keys]
-        seg_mask = np.ones(len(pdf), dtype=bool)
-        for k, kv in zip(keys, lastk):
-            seg_mask &= (pdf[k] == kv).to_numpy()
-        # last segment = trailing contiguous run of the last key
-        run = np.flatnonzero(~seg_mask)
-        start = (run[-1] + 1) if len(run) else 0
-        seg = pdf.iloc[start:]
+        first, last = (tuple(pdf[k].iloc[i] for k in keys) for i in (0, -1))
+        seg = pdf.iloc[len(pdf) - _lead(pdf.iloc[::-1], last) :]
         row: dict = {"pid": [int(pdf[PID].iloc[0])], "n_seg": [len(seg)]}
-        for k in keys:
-            row[f"__fk_{k}__"] = [pdf[k].iloc[0]]
-            row[f"__lk_{k}__"] = [pdf[k].iloc[-1]]
+        for k, fk, lk in zip(keys, first, last):
+            row[f"__fk_{k}__"], row[f"__lk_{k}__"] = [fk], [lk]
         for c in val_cols:
             x = seg[c].to_numpy(dtype="float64")
-            for m, (s, dq) in _moment_series(x, q).items():
+            clock = x if q > 0.0 else x[~np.isnan(x)]  # q = 0: valid rows only
+            for m, (s, dq) in _moment_series(clock, decays).items():
                 row[f"__{m}_{c}__"] = [_decay_tail(s, dq, chunk)]
             row[f"__nv_{c}__"] = [int((~np.isnan(x)).sum())]
         return pd.DataFrame(row)
@@ -874,76 +720,69 @@ def scan_ewm_grouped(
     rows = _pid_grouped(part).applyInPandas(_summary, sum_schema).collect()
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     info = {r["pid"]: r for r in rows}
-    # carries[p] = (open_key tuple | None, {col: {num, den, num2, den2, cnt}})
+    # carries[p] = (key of the group open entering p, {col: moment sums})
     carries: dict[int, tuple] = {}
     open_key: tuple | None = None
-    state = {c: dict.fromkeys(decays, 0.0) | {"cnt": 0} for c in val_cols}
+    state = {c: dict(zero) for c in val_cols}
     for p in range(n_part):
         carries[p] = (open_key, {c: dict(s) for c, s in state.items()})
         r = info.get(p)
         if r is None:
-            continue  # empty partition: open group passes through
+            continue  # empty partition: the open group passes through
         first = tuple(r[f"__fk_{k}__"] for k in keys)
         last = tuple(r[f"__lk_{k}__"] for k in keys)
-        # whole partition is one segment of the open group: compose;
-        # otherwise the open group ends inside p (or p starts a new
-        # group) and the new open group is p's last segment, carried fresh
-        compose = open_key is not None and first == open_key and first == last
+        # a partition that is one segment of the open group composes onto
+        # its carry; otherwise its last segment opens a fresh carry
+        compose = first == open_key == last
         for c in val_cols:
-            s = state[c]
+            s = state[c] if compose else dict(zero)
+            steps = r["n_seg"] if q > 0.0 else r[f"__nv_{c}__"]  # the clock's length
             for m, dq in decays.items():
-                tail = r[f"__{m}_{c}__"]
-                s[m] = s[m] * dq ** r["n_seg"] + tail if compose else tail
-            s["cnt"] = s["cnt"] + r[f"__nv_{c}__"] if compose else r[f"__nv_{c}__"]
+                s[m] = s[m] * dq**steps + r[f"__{m}_{c}__"]
+            s["cnt"] += r[f"__nv_{c}__"]
+            state[c] = s
         open_key = last
 
-    out_schema = _ddl(part, sort_cols) + ", " + ", ".join(f"`{c}` double" for c in val_cols)
+    out_schema = _ddl(part, sort_cols) + "".join(f", `{c}` double" for c in val_cols)
+    minp = max(min_periods, 1)
 
     def _seeded_stat(x: "np.ndarray", carry: dict) -> "np.ndarray":
-        """The stat for ONE carry-continuing segment, from seeded prefixes."""
-        pre = {
-            m: _decay_prefix(s, dq, carry[m], chunk) for m, (s, dq) in _moment_series(x, q).items()
-        }
-        num, den, num2, den2 = pre["num"], pre["den"], pre["num2"], pre["den2"]
-        cnt = carry["cnt"] + np.cumsum((~np.isnan(x)).astype("int64"))
+        """The stat of ONE segment whose state entering it is ``carry``."""
+        series = _moment_series(x, decays)
+        if q > 0.0:
+            pre = {m: _decay_prefix(s, dq, carry[m], chunk) for m, (s, dq) in series.items()}
+        else:  # each row's state is its last valid row's: a forward fill
+            last = np.maximum.accumulate(np.where(np.isnan(x), -1, np.arange(len(x))))
+            pre = {m: np.where(last >= 0, s[last], carry[m]) for m, (s, _) in series.items()}
+        den = pre["den"]
+        cnt = carry["cnt"] + np.cumsum(~np.isnan(x))
         with np.errstate(invalid="ignore", divide="ignore"):
-            if stat == "mean":
-                out = np.where((den > 0) & (cnt >= minp), num / np.maximum(den, 1e-300), np.nan)
-            else:
-                mean = num / np.maximum(den, 1e-300)
-                biased = num2 / np.maximum(den, 1e-300) - mean * mean
-                denom = den * den - den2
-                var = np.where(denom > 0, biased * (den * den) / np.where(denom > 0, denom, 1.0), np.nan)
-                var = np.maximum(var, 0.0)  # clamp float-cancellation negatives
-                out = np.where((den > 0) & (cnt >= minp), var, np.nan)
+            out = mean = pre["num"] / np.maximum(den, 1e-300)
+            if stat != "mean":
+                out = pre["num2"] / np.maximum(den, 1e-300) - mean * mean
+                if not bias:
+                    denom = den * den - pre["den2"]
+                    out = np.where(denom > 0, out * (den * den) / denom, np.nan)
+                out = np.maximum(out, 0.0)  # float-cancellation negatives; NaN stays NaN
                 if stat == "std":
                     out = np.sqrt(out)
-        return out
+        return np.where((den > 0) & (cnt >= minp), out, np.nan)
 
     def _stat_part(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        pid = int(pdf[PID].iloc[0])
-        open_k, carry = carries[pid]
-        # rows of the carry-continuing first segment (if the open group
-        # reaches into this partition)
+        open_k, carry = carries[int(pdf[PID].iloc[0])]
         first = tuple(pdf[k].iloc[0] for k in keys)
-        seed_len = 0
-        if open_k is not None and first == open_k:
-            m = np.ones(len(pdf), dtype=bool)
-            for k, kv in zip(keys, open_k):
-                m &= (pdf[k] == kv).to_numpy()
-            brk = np.flatnonzero(~m)
-            seed_len = int(brk[0]) if len(brk) else len(pdf)
+        if first != open_k:  # the first segment starts its group
+            carry = {c: zero for c in val_cols}
+        head = _lead(pdf, first)
+        rest = pdf.iloc[head:]
+        if len(rest):
+            ew = rest.groupby(keys, sort=False)[val_cols].ewm(alpha=alpha, min_periods=min_periods)
+            ew = ew.mean() if stat == "mean" else getattr(ew, stat)(bias=bias)
         res = pdf[sort_cols].copy()
-        gb = pdf.groupby(keys, sort=False)[val_cols]
-        ew = getattr(gb.ewm(alpha=alpha, min_periods=min_periods), stat)()
         for c in val_cols:
-            col = ew[c].to_numpy(dtype="float64")
-            if seed_len:
-                col[:seed_len] = _seeded_stat(
-                    pdf[c].to_numpy(dtype="float64")[:seed_len], carry[c]
-                )
-            res[c] = col
+            out = _seeded_stat(pdf[c].to_numpy(dtype="float64")[:head], carry[c])
+            res[c] = np.concatenate([out, ew[c].to_numpy(dtype="float64")]) if len(rest) else out
         return res
 
     return _pid_grouped(part).applyInPandas(_stat_part, out_schema)

@@ -50,6 +50,7 @@ from sdc_spark.operators.maintenance import (
     index_lock,
     run_concurrently,
 )
+from sdc_spark.operators.order import _one
 
 
 def _tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -532,11 +533,8 @@ def topk_ranking(
     ).limit(depth)
     from pyspark.sql.window import Window as W
 
-    # partitioned on a non-foldable always-zero key (the order.py
-    # convention): the window IS bounded (depth rows), and keeping it
-    # formally partitioned preserves the repo invariant that WindowExec's
-    # "No Partition Defined" warning only fires on real regressions
-    w = W.partitionBy(F.pmod(F.xxhash64(F.col(id_col)), F.lit(1))).orderBy(
+    # the window is bounded (depth rows)
+    w = W.partitionBy(_one(F.xxhash64(F.col(id_col)))).orderBy(
         F.col(score_col).desc(), F.col(id_col)
     )
     # Materialized: a rank list is consumed at least twice by any fusion

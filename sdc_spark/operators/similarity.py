@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from sdc_spark.materialize import materialize as _materialize
 from sdc_spark.operators.maintenance import _drop, index_lock, run_concurrently
+from sdc_spark.operators.order import _one
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -214,7 +215,7 @@ def ivf_centroids(v: DataFrame, n_cells: int) -> DataFrame:
             # unpartitioned window is safe here: it runs on the post-limit
             # n_cells-row frame, not the corpus
             F.row_number()
-            .over(W.partitionBy(F.pmod(F.col("h"), F.lit(1))).orderBy("h", "nid"))
+            .over(W.partitionBy(_one("h")).orderBy("h", "nid"))
             .alias("cell"),
             F.col("nvec").alias("cvec"),
             F.col("nrm").alias("cnrm"),
@@ -652,7 +653,7 @@ def pq_codebooks(v: DataFrame, dim: int, m: int = 8, ksub: int = 16) -> DataFram
             "nid",
             # post-limit frame is ksub rows; the window is not on the corpus
             F.row_number()
-            .over(W.partitionBy(F.pmod(F.col("h"), F.lit(1))).orderBy("h", "nid"))
+            .over(W.partitionBy(_one("h")).orderBy("h", "nid"))
             .alias("code"),
         )
     )

@@ -470,7 +470,7 @@ oracle(
 @query("series_ewm_mean")
 def series_ewm_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ewm(alpha=0.02).mean() through the Series API — the segmented decay
-    scan (operators/order.py scan_ewm). The oracle spells the same
+    scan (operators/order.py scan_ewm, with no group keys). The oracle spells the same
     adjust=True definition with the scaling identity
     q^i · Σ q^(-j)x_j; the slice is bounded to 5000 rows so q^(-j) stays
     far from float overflow in plain SQL (the engine path needs no such
@@ -505,9 +505,10 @@ oracle(
 @query("series_ewm_var")
 def series_ewm_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ewm(alpha=0.02).var() — the four decayed sums (num, num2, den at
-    decay q; den2 at q²) come from one pass of scan_ewm_moments; the
-    oracle spells the identical reliability-weighted definition with the
-    q^i scaling identity on the bounded slice."""
+    decay q; den2 at q²) come from the same segmented decay scan as the
+    mean (operators/order.py scan_ewm), which also finishes the variance;
+    the oracle spells the identical reliability-weighted definition with
+    the q^i scaling identity on the bounded slice."""
     ev = (
         read_table(spark, sf_dir, "events")
         .filter(F.col("event_id") < 5000)
@@ -549,9 +550,11 @@ oracle(
 @query("groupby_ewm_mean")
 def groupby_ewm_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.groupby(user).ewm(alpha=0.1).mean() through the frame layer —
-    group-local pandas ewm inside applyInPandas (one hash shuffle on the
-    key). Groups are <100 rows, so the oracle's q^i scaling identity is
-    overflow-safe without slicing."""
+    the segmented decay scan range-partitioned by (user, event_id)
+    (operators/order.py scan_ewm): pandas' groupby-ewm for the groups
+    inside a partition, a carried seed for the one group that straddles
+    each boundary. Groups are <100 rows, so the oracle's q^i scaling
+    identity is overflow-safe without slicing."""
     from sdc_spark.frame.core import SparkFrame
 
     ev = read_table(spark, sf_dir, "events").select(

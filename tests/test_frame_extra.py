@@ -1164,26 +1164,30 @@ def test_series_expanding_quantile_approx_bound(spark):
     assert err.iloc[50:].max() < 0.05
 
 
-def test_series_ewm_mean(spark):
+def test_series_ewm_mean(uncoalesced):
+    """At 1 and 8 uncoalesced shuffle partitions: one carry-continuing
+    segment per partition, and none."""
     rng = np.random.RandomState(31)
     ps = pd.Series(rng.randn(600) * 100, name="v")
     ps[ps.sample(50, random_state=3).index] = float("nan")
     ps.iloc[:4] = float("nan")  # leading NaNs exercise the carry seed
-    s = from_pandas(spark, ps.to_frame())["v"]
-    for kw in (
-        dict(alpha=0.1),
-        dict(alpha=0.9),
-        dict(span=20),
-        dict(com=5),
-        dict(halflife=10),
-        dict(alpha=0.001),
-        dict(alpha=1.0),  # memoryless: degenerates to forward-fill carry
-    ):
-        got = s.ewm(**kw, min_periods=3).mean().to_pandas()
-        exp = ps.ewm(**kw, min_periods=3).mean()
-        np.testing.assert_allclose(
-            got.to_numpy(), exp.to_numpy(), rtol=1e-9, atol=1e-12, equal_nan=True
-        )
+    for n in ("1", "8"):
+        uncoalesced.conf.set("spark.sql.shuffle.partitions", n)
+        s = from_pandas(uncoalesced, ps.to_frame())["v"]
+        for kw in (
+            dict(alpha=0.1),
+            dict(alpha=0.9),
+            dict(span=20),
+            dict(com=5),
+            dict(halflife=10),
+            dict(alpha=0.001),
+            dict(alpha=1.0),  # memoryless: degenerates to forward-fill carry
+        ):
+            got = s.ewm(**kw, min_periods=3).mean().to_pandas()
+            exp = ps.ewm(**kw, min_periods=3).mean()
+            np.testing.assert_allclose(
+                got.to_numpy(), exp.to_numpy(), rtol=1e-9, atol=1e-12, equal_nan=True
+            )
 
 
 def test_series_ewm_var_std(spark):
@@ -1191,7 +1195,8 @@ def test_series_ewm_var_std(spark):
     ps = pd.Series(rng.randn(500) * 50, name="v")
     ps[ps.sample(40, random_state=9).index] = float("nan")
     s = from_pandas(spark, ps.to_frame())["v"]
-    for kw in (dict(alpha=0.1), dict(span=20), dict(alpha=0.8)):
+    # alpha=1 weighs one observation only: var/std are all-NaN
+    for kw in (dict(alpha=0.1), dict(span=20), dict(alpha=0.8), dict(alpha=1.0)):
         for stat in ("var", "std"):
             got = getattr(s.ewm(**kw, min_periods=2), stat)().to_pandas()
             exp = getattr(ps.ewm(**kw, min_periods=2), stat)()
@@ -1660,28 +1665,31 @@ def test_series_corr_spearman(spark):
         s["x"].corr(s["y"], method="kendall")
 
 
-def test_groupby_ewm_dominant_group(spark):
+def test_groupby_ewm_dominant_group(uncoalesced):
     """A mega-group (80% of rows) must SPLIT across range partitions and
-    flow through the carry composition of scan_ewm_grouped — the scale
-    shape where the old hash-one-group-per-batch path would concentrate
-    all its rows in one Arrow batch."""
+    flow through the carry composition of order.scan_ewm — the scale
+    shape where a hash-one-group-per-batch path would concentrate all its
+    rows in one Arrow batch. At 8 uncoalesced shuffle partitions the
+    group straddles several boundaries; at 1 it straddles none."""
     rng = np.random.RandomState(7)
     k = np.where(rng.rand(5000) < 0.8, 3, rng.randint(0, 3, 5000))
     pdf = pd.DataFrame({"k": k, "v": rng.randn(5000) * 5, "u": rng.randn(5000)})
     pdf.loc[pdf.sample(400, random_state=3).index, "v"] = float("nan")
-    sf2 = from_pandas(spark, pdf)
-    for stat in ("mean", "var", "std"):
-        got = getattr(sf2.groupby("k").ewm(alpha=0.15, min_periods=1), stat)().to_pandas()
-        exp = getattr(pdf.groupby("k").ewm(alpha=0.15, min_periods=1), stat)()
-        for c in ("v", "u"):
-            exp_flat = exp[c].reset_index(level=0, drop=True).sort_index()
-            np.testing.assert_allclose(
-                got[c].sort_index().to_numpy(),
-                exp_flat.to_numpy(),
-                rtol=1e-8,
-                atol=1e-10,
-                equal_nan=True,
-            )
+    for n in ("1", "8"):
+        uncoalesced.conf.set("spark.sql.shuffle.partitions", n)
+        sf2 = from_pandas(uncoalesced, pdf)
+        for stat in ("mean", "var", "std"):
+            got = getattr(sf2.groupby("k").ewm(alpha=0.15, min_periods=1), stat)().to_pandas()
+            exp = getattr(pdf.groupby("k").ewm(alpha=0.15, min_periods=1), stat)()
+            for c in ("v", "u"):
+                exp_flat = exp[c].reset_index(level=0, drop=True).sort_index()
+                np.testing.assert_allclose(
+                    got[c].sort_index().to_numpy(),
+                    exp_flat.to_numpy(),
+                    rtol=1e-8,
+                    atol=1e-10,
+                    equal_nan=True,
+                )
 
 
 def test_groupby_ewm_alpha_one(spark):

@@ -6,7 +6,8 @@ Pins the two r11 mechanisms no other test observes directly:
    asof carry windows are USER-SPECIFIED (REPARTITION_BY_NUM), so AQE's
    size-based coalescing can never collapse the compute-heavy per-pid
    groups onto one task again (the observed failure mode: a 10s
-   single-task pass B while 31 cores idled).
+   single-task pass B while 31 cores idled), and the order-scan exchange
+   puts pid p on task p (Murmur3 of the bare pids stacks them).
 2. ``maintenance.run_concurrently`` re-raises a thunk failure after all
    threads finish (the overlapped two-table index writes depend on a
    failure never being swallowed).
@@ -43,6 +44,27 @@ def test_order_scan_pid_exchange_is_pinned(spark):  # noqa: F811
     ]
     assert pid_exchanges, "expected a pid exchange under the Arrow pass"
     assert all("REPARTITION_BY_NUM" in ln for ln in pid_exchanges), pid_exchanges
+
+
+@pytest.mark.parametrize("n", [4, 7, 8])
+def test_pid_grouped_puts_each_pid_on_its_own_task(uncoalesced, n):
+    """After ``_pid_grouped``'s exchange, ``spark_partition_id()`` equals
+    the pid on every row, so P pids keep P tasks busy. This checks
+    ``order._murmur3_int``, the Python port of Spark's Murmur3, against
+    Spark's own hash partitioning."""
+    from sdc_spark.operators import order as O
+
+    uncoalesced.conf.set("spark.sql.shuffle.partitions", str(n))
+    part = O.range_partitioned(uncoalesced.range(40 * n).select(F.col("id").alias("k")), ["k"])
+    out = (
+        O._pid_grouped(part)
+        .applyInPandas(lambda pdf: pdf[[O.PID]], f"{O.PID} int")
+        .select(O.PID, F.spark_partition_id().alias("task"))
+        .collect()
+    )
+    assert len(out) == 40 * n
+    assert {r[O.PID] for r in out} == set(range(n))
+    assert all(r[O.PID] == r["task"] for r in out)
 
 
 def test_asof_carry_window_exchange_is_pinned(spark):  # noqa: F811

@@ -130,9 +130,9 @@ def _order_machinery(spark) -> None:
         assert got_fill[i] == carry, f"scan last at id={i}"
 
     got_ewm = (
-        scan_ewm(df.select("k", "id", "v"), ["k", "id"], "v", 0.3, "e")
+        scan_ewm(df.select("k", "id", "v"), [], ["k", "id"], ["v"], 0.3, "mean")
         .orderBy("k", "id")
-        .toPandas()["e"]
+        .toPandas()["v"]
     )
     exp_ewm = pd.Series([by_id[i][1] for i in expect_order], dtype="float64").ewm(alpha=0.3).mean()
     pd.testing.assert_series_equal(

@@ -1,9 +1,11 @@
 """Per-job time attribution for one registry query (guide §1: measure
 first). Runs the query with the Spark event log enabled, then parses the
-log into a per-job table: wall time, task time, shuffle bytes, and the
-job group/description — so a multi-second query can be decomposed into
-its actual jobs (index writes, materializations, screens, aggregates)
-instead of guessed at from code.
+log into a per-job table: wall time, the job group/description, and per
+stage ``busy/total`` tasks (busy: read at least one shuffle or input
+record) and time — so a multi-second query can be decomposed into its
+actual jobs (index writes, materializations, screens, aggregates) and an
+exchange that leaves tasks idle shows, instead of being guessed at from
+code.
 
 Usage: python tools/profile_query.py <query> [sf_dir] [--runs N]
 """
@@ -74,6 +76,7 @@ def main() -> None:
 
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
+    nonempty: dict[int, int] = {}  # stage -> tasks that read any record
     for line in lines():
         ev = json.loads(line)
         e = ev.get("Event")
@@ -86,6 +89,11 @@ def main() -> None:
             }
         elif e == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
             jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
+        elif e == "SparkListenerTaskEnd":
+            m = ev.get("Task Metrics") or {}
+            read = (m.get("Shuffle Read Metrics") or {}).get("Total Records Read", 0)
+            read += (m.get("Input Metrics") or {}).get("Records Read", 0)
+            nonempty[ev["Stage ID"]] = nonempty.get(ev["Stage ID"], 0) + (read > 0)
         elif e == "SparkListenerStageCompleted":
             si = ev["Stage Info"]
             stages[si["Stage ID"]] = {
@@ -108,7 +116,8 @@ def main() -> None:
         gap_ms += gap
         last_end = max(last_end or 0, j["end"])
         stg = ", ".join(
-            f"{stages[s]['tasks']}t/{stages[s]['ms']}ms:{stages[s]['name'][:40]}"
+            f"{nonempty.get(s, 0)}/{stages[s]['tasks']}t/{stages[s]['ms']}ms:"
+            f"{stages[s]['name'][:40]}"
             for s in j["stages"]
             if s in stages
         )
