@@ -8,16 +8,15 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import re
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as _W
 from pyspark.sql import functions as F
 
-from sdc_spark.frame.series import IDX, VAL, SparkSeries
+from sdc_spark.frame.series import IDX, NUMERIC, VAL, SparkSeries, floats, valid
 from sdc_spark.functions import expressions as sexpr
+from sdc_spark.operators import order as sorder
 
 
 _PD_TO_SPARK = {
@@ -132,21 +131,22 @@ class SparkFrame:
         raise TypeError(f"unsupported key {type(key)}")
 
     def _islice(self, key: slice) -> SparkFrame:
-        """General positional slice via distributed positions."""
-        from sdc_spark.operators import order as sorder
-
+        """Positional slice (pandas iloc[a:b:c]) via distributed positions
+        in the current row order; the result carries its own order as
+        ``__ord__`` (reversed for a negative step)."""
         start, stop, step = key.start, key.stop, key.step or 1
         if step == 0:
             raise ValueError("slice step cannot be zero")
-        pos = sorder.with_position(self._df, [IDX], "__pos__")
+        pos = sorder.with_position(self._df, [self._row_order()[0]], "__pos__")
+        p = F.col("__pos__")
         if step > 0 and (start or 0) >= 0 and (stop is None or stop >= 0):
             start = start or 0
-            cond = F.col("__pos__") >= start
+            cond = p >= start
             if stop is not None:
-                cond = cond & (F.col("__pos__") < stop)
+                cond = cond & (p < stop)
             if step != 1:
-                cond = cond & ((F.col("__pos__") - start) % step == 0)
-            return SparkFrame(pos.filter(cond).drop("__pos__"))
+                cond = cond & ((p - start) % step == 0)
+            return SparkFrame(pos.filter(cond).withColumn("__ord__", p).drop("__pos__"))
         # negative offsets / reverse step: resolve against the total count,
         # carried as a broadcast 1-row column (plan stays lazy)
         n_df = self._df.agg(F.count(F.lit(1)).alias("__n__"))
@@ -161,20 +161,16 @@ class SparkFrame:
 
         if step > 0:
             lo, hi = norm(start, F.lit(0)), norm(stop, n)
-            cond = (
-                (F.col("__pos__") >= lo)
-                & (F.col("__pos__") < hi)
-                & ((F.col("__pos__") - lo) % step == 0)
-            )
+            cond = (p >= lo) & (p < hi) & ((p - lo) % step == 0)
+            rank = p
         else:
             lo = F.least(norm(start, n - 1), n - 1)
             hi = norm(stop, F.lit(-1))
-            cond = (
-                (F.col("__pos__") <= lo)
-                & (F.col("__pos__") > hi)
-                & ((lo - F.col("__pos__")) % (-step) == 0)
-            )
-        return SparkFrame(b.filter(cond).drop("__pos__", "__n__"))
+            cond = (p <= lo) & (p > hi) & ((lo - p) % (-step) == 0)
+            rank = lo - p  # reversed enumeration order
+        return SparkFrame(
+            b.filter(cond).withColumn("__ord__", rank).drop("__pos__", "__n__")
+        )
 
     def __getattr__(self, name: str):
         # df.A → df['A'] (ref rewrite dataframe_getitem_attribute.py:37-100)
@@ -226,10 +222,9 @@ class SparkFrame:
         return SparkFrame(self._df.withColumnsRenamed(columns))
 
     def head(self, n: int = 5) -> SparkFrame:
-        # frames carrying an explicit row order (post-sort_values) take
-        # their first n rows in THAT order (TakeOrdered — no full sort)
-        key = "__ord__" if "__ord__" in self._df.columns else IDX
-        return SparkFrame(self._df.orderBy(key).limit(n))
+        # the first n rows in the current row order (TakeOrdered — no full
+        # sort)
+        return SparkFrame(self._df.orderBy(self._row_order()[0]).limit(n))
 
     def copy(self) -> SparkFrame:
         return SparkFrame(self._df)
@@ -243,8 +238,6 @@ class SparkFrame:
         sort order if present, else __index__ order) via the distributed
         position machinery; the request list is broadcast, never the
         data."""
-        from sdc_spark.operators import order as sorder
-
         from sdc_spark.materialize import materialize as _mat
 
         idx = [int(i) for i in indices]
@@ -258,8 +251,7 @@ class SparkFrame:
             validate = False
         else:
             validate = True
-        key = "__ord__" if "__ord__" in self._df.columns else IDX
-        pos = sorder.with_position(self._df, [key], "__pos__")
+        pos = sorder.with_position(self._df, [self._row_order()[0]], "__pos__")
         spark = self._df.sparkSession
         from sdc_spark.sources.readers import local_rows
 
@@ -285,8 +277,6 @@ class SparkFrame:
         materialized with the distributed position machinery
         (operators/order.py) — range partition + P-row offset broadcast,
         no full-data single partition."""
-        from sdc_spark.operators import order as sorder
-
         cols = self.columns
         pos = sorder.with_position(self._df, [IDX], "__new__")
         if drop:
@@ -306,15 +296,38 @@ class SparkFrame:
             return "__ord__", [IDX, "__ord__"]
         return IDX, [IDX]
 
+    def _shifted(self, cols: list[str], periods: int, fn, fill_value=None) -> SparkFrame:
+        """Each of ``cols`` as ``fn(value, value periods rows earlier)`` in
+        the current row order: ONE boundary-context pass (order.shifted)
+        for all of them — k columns cost the shuffles of one. Rows with no
+        row ``periods`` back see ``fill_value``; a missing value inside
+        the frame stays missing, as in pandas."""
+        key, keep = self._row_order()
+        sh = {c: f"__sh_{c}__" for c in cols}
+        out = sorder.shifted(
+            self._df.select(*keep, *cols), [key],
+            {sh[c]: F.col(c) for c in cols}, periods, fill_value,
+        )
+        return SparkFrame(
+            out.select(*keep, *[fn(F.col(c), F.col(sh[c])).alias(c) for c in cols])
+        )
+
+    def shift(self, periods: int = 1, fill_value=None) -> SparkFrame:
+        """pandas df.shift: every column lagged (led, for periods < 0)."""
+        return self._shifted(self.columns, periods, lambda v, s: s, fill_value)
+
+    def diff(self, periods: int = 1) -> SparkFrame:
+        """pandas df.diff: numeric columns minus their shift (non-numeric
+        columns are dropped, as pandas raises on them)."""
+        return self._shifted(self._numeric_cols(), periods, lambda v, s: v - s)
+
     def pct_change(
         self, periods: int = 1, fill_method: str | None = "pad"
     ) -> SparkFrame:
         """Per-numeric-column fractional change (ref
         …dataframe_functions.py:2503): fill gaps first (pandas classic
-        default 'pad'), then ONE boundary-context pass shifts every column
-        together — no per-column re-shuffle."""
-        from sdc_spark.operators import order as sorder
-
+        default 'pad'), then one shift of every column; pandas_div gives
+        ±inf / NaN on zero divisors (ANSI `/` would raise)."""
         base: SparkFrame = self
         if fill_method in ("pad", "ffill"):
             base = self.ffill()
@@ -322,42 +335,18 @@ class SparkFrame:
             base = self.bfill()
         elif fill_method is not None:
             raise ValueError(f"unsupported fill_method {fill_method!r}")
-        from sdc_spark.functions.expressions import pandas_div
-
-        cols = self._numeric_cols()
-        key, keep = self._row_order()
-        out = sorder.shifted(
-            base._df.select(*keep, *cols), [key], {f"__sh_{c}__": F.col(c) for c in cols}, periods
-        )
-        # pandas_div: ±inf / NaN on zero divisors (ANSI `/` would raise)
-        return SparkFrame(
-            out.select(
-                *keep,
-                *[
-                    F.when(
-                        F.col(f"__sh_{c}__").isNotNull(),
-                        pandas_div(F.col(c), F.col(f"__sh_{c}__")) - 1,
-                    ).alias(c)
-                    for c in cols
-                ],
-            )
+        return base._shifted(
+            self._numeric_cols(), periods,
+            lambda v, s: F.when(s.isNotNull(), sexpr.pandas_div(v, s) - 1),
         )
 
     def _fill(self, *direction: str) -> SparkFrame:
         """ffill (no ``direction``) / bfill (``"suffix"``): a ``last`` scan
         per column over the row order, NaN masked to missing first."""
-        from sdc_spark.operators import order as sorder
-
         key, keep = self._row_order()
-        floats = {c for c, t in self._df.dtypes if t in ("double", "float")}
+        fl = floats(self._df)
         masked = self._df.select(
-            *keep,
-            *[
-                F.when(~F.isnan(c) & F.col(c).isNotNull(), F.col(c)).alias(c)
-                if c in floats
-                else F.col(c)
-                for c in self.columns
-            ],
+            *keep, *[valid(c, True).alias(c) if c in fl else c for c in self.columns]
         )
         specs = {c: ("last", F.col(c), *direction) for c in self.columns}
         return SparkFrame(sorder.scan(masked, [key], specs))
@@ -367,6 +356,38 @@ class SparkFrame:
 
     def bfill(self) -> SparkFrame:
         return self._fill("suffix")
+
+    def _cum(self, kind: str) -> SparkFrame:
+        """pandas cum* (ref series kernel numpy_like.py:875-958, lifted per
+        column): every numeric column in ONE prefix-scan pass
+        (order.scan) in the current row order. Missing cells (NaN, or null
+        in a nullable int) never advance their column's scan and re-emit
+        as missing (pandas skipna)."""
+        cols = self._numeric_cols()
+        fl = floats(self._df)
+        scans = {f"__s_{c}__": (kind, valid(c, c in fl)) for c in cols}
+        key, keep = self._row_order()
+        scanned = sorder.scan(self._df.select(*keep, *cols), [key], scans)
+        return SparkFrame(
+            scanned.select(
+                *keep,
+                *[
+                    F.when(sexpr.notna(F.col(c), c in fl), F.col(f"__s_{c}__"))
+                    .otherwise(F.lit(float("nan")) if c in fl else F.lit(None))
+                    .alias(c)
+                    for c in cols
+                ],
+            )
+        )
+
+    def cumsum(self, numeric_only: bool = True) -> SparkFrame:
+        return self._cum("sum")
+
+    def cummax(self, numeric_only: bool = True) -> SparkFrame:
+        return self._cum("max")
+
+    def cummin(self, numeric_only: bool = True) -> SparkFrame:
+        return self._cum("min")
 
     def drop_duplicates(
         self, subset: Sequence[str] | None = None, keep: str = "first"
@@ -410,8 +431,6 @@ class SparkFrame:
         subset-key was seen before ('first'/'last' resolve as min/max
         __index__, as in drop_duplicates; keep=False flags whole >1
         groups). Shuffles (keys, index) only — never the wide rows."""
-        from sdc_spark.frame.series import VAL, SparkSeries
-
         keys = list(subset) if subset else self.columns
         slim = self._df.select(IDX, *keys)
         # window over the key partition: nulls group together (pandas
@@ -424,15 +443,27 @@ class SparkFrame:
             flag = F.col(IDX) != pick(F.col(IDX)).over(w)
         return SparkSeries(slim.select(F.col(IDX), flag.alias(VAL)), name=None, floating=False)
 
+    def _topk(self, n: int, columns: str | Sequence[str], largest: bool) -> SparkFrame:
+        """The first ``n`` rows in ``columns`` order, missing values (NaN
+        too) last and ties by index, as pandas nlargest/nsmallest; their
+        rank is the result's ``__ord__``. orderBy + limit is Spark's
+        TakeOrdered — per-partition top-n then a driver merge of P
+        candidate sets; the rank window runs over the n survivors only."""
+        fl = floats(self._df)
+        keys = []
+        for c in [columns] if isinstance(columns, str) else columns:
+            v = valid(c, c in fl)
+            keys += [v.isNull(), v.desc() if largest else v.asc()]
+        keys.append(F.col(IDX))
+        w = _W.partitionBy(sorder._one(F.spark_partition_id())).orderBy(*keys)
+        top = self._df.orderBy(*keys).limit(n)
+        return SparkFrame(top.withColumn("__ord__", F.row_number().over(w)))
+
     def nlargest(self, n: int, columns: str | Sequence[str]) -> SparkFrame:
-        cols = [columns] if isinstance(columns, str) else list(columns)
-        keys = [F.col(c).desc_nulls_last() for c in cols] + [F.col(IDX)]
-        return SparkFrame(self._df.orderBy(*keys).limit(n))
+        return self._topk(n, columns, True)
 
     def nsmallest(self, n: int, columns: str | Sequence[str]) -> SparkFrame:
-        cols = [columns] if isinstance(columns, str) else list(columns)
-        keys = [F.col(c).asc_nulls_last() for c in cols] + [F.col(IDX)]
-        return SparkFrame(self._df.orderBy(*keys).limit(n))
+        return self._topk(n, columns, False)
 
     def sample(self, frac: float, seed: int | None = None) -> SparkFrame:
         """Bernoulli row sample (approximate count, like pandas
@@ -462,14 +493,12 @@ class SparkFrame:
         )
 
     def iloc(self, pos: int) -> dict:
-        """Positional row access — a total order over __index__ defines
-        position (forces an ordered limit; O(pos) rows move)."""
-        rows = self._df.orderBy(IDX).offset(pos).limit(1).take(1)
+        """Positional row access in the current row order (an ordered
+        limit; O(pos) rows move)."""
+        rows = pos >= 0 and self._df.orderBy(self._row_order()[0]).offset(pos).limit(1).take(1)
         if not rows:
             raise IndexError(pos)
-        d = rows[0].asDict()
-        d.pop(IDX, None)
-        return d
+        return {c: rows[0][c] for c in self.columns}
 
     def at(self, index_value, col: str):
         rows = self._df.filter(F.col(IDX) == F.lit(index_value)).select(col).take(1)
@@ -480,10 +509,11 @@ class SparkFrame:
     # -- missing data ------------------------------------------------------
 
     def isna(self) -> SparkFrame:
-        floats = {c for c, t in self._df.dtypes if t in ("double", "float")}
+        fl = floats(self._df)
         return SparkFrame(
             self._df.select(
-                IDX, *[sexpr.isna(F.col(c), c in floats).alias(c) for c in self.columns]
+                *self._row_order()[1],
+                *[sexpr.isna(F.col(c), c in fl).alias(c) for c in self.columns],
             )
         )
 
@@ -491,22 +521,13 @@ class SparkFrame:
         """Scalar fill (float columns only — integer columns carry no NaN)
         or pandas dict form ``{col: fill}`` filling exactly the named
         columns."""
-        floats = {c for c, t in self._df.dtypes if t in ("double", "float")}
-        if isinstance(value, dict):
-            cols = [
-                sexpr.fillna(F.col(c), value[c], c in floats).alias(c)
-                if c in value
-                else F.col(c)
-                for c in self.columns
-            ]
-            return SparkFrame(self._df.select(IDX, *cols))
+        fl = floats(self._df)
+        fills = value if isinstance(value, dict) else dict.fromkeys(fl, value)
         return SparkFrame(
             self._df.select(
-                IDX,
+                *self._row_order()[1],
                 *[
-                    sexpr.fillna(F.col(c), value, c in floats).alias(c)
-                    if c in floats
-                    else F.col(c)
+                    sexpr.fillna(F.col(c), fills[c], c in fl).alias(c) if c in fills else c
                     for c in self.columns
                 ],
             )
@@ -523,9 +544,9 @@ class SparkFrame:
         missing; ``thresh=k`` keeps rows with at least k non-missing
         (overrides ``how``, as in pandas). Row-local predicate — no
         shuffle."""
-        floats = {c for c, t in self._df.dtypes if t in ("double", "float")}
+        fl = floats(self._df)
         cols = list(subset) if subset else self.columns
-        oks = [sexpr.notna(F.col(c), c in floats) for c in cols]
+        oks = [sexpr.notna(F.col(c), c in fl) for c in cols]
         if thresh is not None:
             n_ok = sum((ok.cast("int") for ok in oks), F.lit(0))
             cond = n_ok >= thresh
@@ -843,8 +864,6 @@ class SparkFrame:
                 keys.append(
                     col.desc_nulls_last() if na_position == "last" else col.desc_nulls_first()
                 )
-        from sdc_spark.operators import order as sorder
-
         base = (
             self._df.drop("__ord__")
             if "__ord__" in self._df.columns
@@ -867,8 +886,6 @@ class SparkFrame:
         )
         if ascending:
             return SparkFrame(base)
-        from sdc_spark.operators import order as sorder
-
         return SparkFrame(
             sorder.with_position(base, [F.col(IDX).desc()], "__ord__")
         )
@@ -904,29 +921,20 @@ class SparkFrame:
     # sdc_pandas_dataframe_reduce_columns, …dataframe_functions.py:465-533) --
 
     def _numeric_cols(self) -> list[str]:
-        num = {"tinyint", "smallint", "int", "bigint", "float", "double"}
-        return [
-            c for c, t in self._df.dtypes
-            if c not in (IDX, "__ord__") and t in num
-        ]
+        return [c for c, t in self._df.dtypes if c in self.columns and t in NUMERIC]
+
+    def _reduce(self, fn, cols: list[str]) -> dict:
+        """``fn`` over each of ``cols`` in ONE aggregate pass, missing
+        values masked to null first: Spark aggregates propagate or sort NaN
+        (sum -> NaN, max -> NaN, percentile counts it as the largest value)
+        while pandas reductions skip it. ``fn`` maps a Column to an
+        aggregate Column."""
+        fl = floats(self._df)
+        row = self._df.agg(*[fn(valid(c, c in fl)).alias(c) for c in cols]).collect()[0]
+        return {c: row[c] for c in cols}
 
     def _reduce_all(self, fn) -> pd.Series:
-        """One aggregate pass over all numeric columns. Float NaNs are
-        masked to null first: Spark aggregates propagate/sort NaN (sum ->
-        NaN, max -> NaN, percentile counts it as the largest value) while
-        pandas reductions skip missing values."""
-        cols = self._numeric_cols()
-        floats = {c for c, t in self._df.dtypes if t in ("double", "float")}
-        arg = {
-            c: (
-                F.when(~F.isnan(c) & F.col(c).isNotNull(), F.col(c))
-                if c in floats
-                else F.col(c)
-            )
-            for c in cols
-        }
-        row = self._df.agg(*[fn(arg[c]).alias(c) for c in cols]).collect()[0]
-        return pd.Series({c: row[c] for c in cols})
+        return pd.Series(self._reduce(fn, self._numeric_cols()))
 
     def sum(self):
         return self._reduce_all(F.sum)
@@ -974,23 +982,15 @@ class SparkFrame:
         return pd.Series({c: row[c] for c in shared})
 
     def nunique(self, dropna: bool = True) -> pd.Series:
-        """Per-column distinct counts in ONE aggregate pass (exact)."""
-        cols = [c for c in self.columns]
-        exprs = []
-        floats = {c for c, t in self._df.dtypes if t in ("double", "float")}
-        for c in cols:
-            v = F.col(c)
-            if c in floats:  # NaN and null form ONE missing group, pandas-style
-                v = F.when(~F.isnan(c) & v.isNotNull(), v)
+        """Per-column exact distinct counts in ONE aggregate pass; NaN and
+        null form one missing group, counted when ``dropna=False``."""
+
+        def fn(v):
             if dropna:
-                exprs.append(F.count_distinct(v).alias(c))
-            else:
-                any_missing = F.when(
-                    F.count(F.when(v.isNull(), 1)) > 0, F.lit(1)
-                ).otherwise(F.lit(0))
-                exprs.append((F.count_distinct(v) + any_missing).alias(c))
-        row = self._df.agg(*exprs).collect()[0]
-        return pd.Series({c: row[c] for c in cols})
+                return F.count_distinct(v)
+            return F.count_distinct(v) + F.coalesce(F.max(v.isNull().cast("int")), F.lit(0))
+
+        return pd.Series(self._reduce(fn, self.columns))
 
     def quantile(self, q: float = 0.5) -> pd.Series:
         """Per-numeric-column exact quantile (linear interpolation), one
@@ -1003,17 +1003,9 @@ class SparkFrame:
         you want for wide-but-bounded k (the k x k result is driver-sized
         by definition, like describe)."""
         cols = self._numeric_cols()
-        floats = {c for c, t in self._df.dtypes if t in ("double", "float")}
-        clean = {
-            c: (
-                F.when(~F.isnan(c) & F.col(c).isNotNull(), F.col(c))
-                if c in floats
-                else F.col(c)
-            )
-            for c in cols
-        }
+        fl = floats(self._df)
         exprs = [
-            fn(clean[a], clean[b]).alias(f"{i}_{j}")
+            fn(valid(a, a in fl), valid(b, b in fl)).alias(f"{i}_{j}")
             for i, a in enumerate(cols)
             for j, b in enumerate(cols)
             if i <= j
@@ -1036,60 +1028,45 @@ class SparkFrame:
         return self._pairwise(F.covar_samp)
 
     def describe(self, include: str | None = None) -> pd.DataFrame:
-        """ref …series_functions.py:4351 lifted per-column. Numeric columns
-        get count/mean/std/min/quartiles/max; ``include='object'`` switches
-        to the reference's string-series shape count/unique/top/freq
-        (pandas tie-break on ``top`` is encounter order, which a
-        distributed table doesn't define — we pin max-count then min-value,
-        the same convention as value_counts)."""
+        """ref …series_functions.py:4351 lifted per column, in ONE
+        aggregate job either way. Numeric columns get count/mean/std/min/
+        quartiles/max over their non-missing values; ``include='object'``
+        switches to the string columns and the reference's
+        count/unique/top/freq shape, ``top`` tied by first appearance (min
+        index), as pandas' encounter order."""
         if include == "object":
-            cols = [
-                f.name
-                for f in self._df.schema.fields
-                if f.name != "__index__" and f.dataType.simpleString() == "string"
-            ]
-            aggs = []
-            for c in cols:
-                aggs += [
-                    F.count(c).alias(f"{c}__count"),
-                    F.count_distinct(F.col(c)).alias(f"{c}__unique"),
-                ]
-            row = self._df.agg(*aggs).collect()[0]
-            tops = {}
-            for c in cols:
-                t = (
-                    self._df.filter(F.col(c).isNotNull())
-                    .groupBy(c)
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .orderBy(F.col("n").desc(), F.col(c))
-                    .limit(1)
-                    .collect()
-                )
-                tops[c] = (t[0][c], t[0]["n"]) if t else (None, None)
+            cols = [c for c, t in self._df.dtypes if c in self.columns and t == "string"]
             stats = ["count", "unique", "top", "freq"]
+            got = {}
+            if cols:
+                per_val = (
+                    self._df.unpivot(IDX, cols, "__c__", "__v__")
+                    .filter(F.col("__v__").isNotNull())
+                    .groupBy("__c__", "__v__")
+                    .agg(F.count(F.lit(1)).alias("__n__"), F.min(IDX).alias("__first__"))
+                )
+                rows = per_val.groupBy("__c__").agg(
+                    F.sum("__n__"),
+                    F.count(F.lit(1)),
+                    F.min_by("__v__", F.struct(-F.col("__n__"), F.col("__first__"))),
+                    F.max("__n__"),
+                ).collect()
+                got = {r[0]: list(r[1:]) for r in rows}
             return pd.DataFrame(
-                {
-                    c: [row[f"{c}__count"], row[f"{c}__unique"], tops[c][0], tops[c][1]]
-                    for c in cols
-                },
-                index=stats,
+                {c: got.get(c, [0, 0, None, None]) for c in cols}, index=stats
             )
         cols = self._numeric_cols()
+        fl = floats(self._df)
+        stats = ["count", "mean", "std", "min", "25%", "50%", "75%", "max"]
         aggs = []
         for c in cols:
-            aggs += [
-                F.count(c).alias(f"{c}__count"),
-                F.avg(c).alias(f"{c}__mean"),
-                F.stddev_samp(c).alias(f"{c}__std"),
-                F.min(c).alias(f"{c}__min"),
-                F.percentile(F.col(c), F.lit(0.25)).alias(f"{c}__25%"),
-                F.percentile(F.col(c), F.lit(0.5)).alias(f"{c}__50%"),
-                F.percentile(F.col(c), F.lit(0.75)).alias(f"{c}__75%"),
-                F.max(c).alias(f"{c}__max"),
-            ]
-        row = self._df.agg(*aggs).collect()[0]
-        stats = ["count", "mean", "std", "min", "25%", "50%", "75%", "max"]
-        return pd.DataFrame({c: [row[f"{c}__{s}"] for s in stats] for c in cols}, index=stats)
+            v = valid(c, c in fl)
+            q = F.percentile(v, F.array(*[F.lit(p) for p in (0.25, 0.5, 0.75)]))
+            aggs += [F.count(v), F.avg(v), F.stddev_samp(v), F.min(v), q[0], q[1], q[2], F.max(v)]
+        row = self._df.agg(*[a.alias(str(i)) for i, a in enumerate(aggs)]).collect()[0]
+        return pd.DataFrame(
+            {c: list(row[i * 8 : i * 8 + 8]) for i, c in enumerate(cols)}, index=stats
+        )
 
 
 def merge(
@@ -1108,102 +1085,3 @@ def merge(
         right, on=on, how=how, suffixes=suffixes, indicator=indicator,
         validate=validate,
     )
-
-
-def _frame_scan(sf: "SparkFrame", kind: str) -> "SparkFrame":
-    """Shared frame-level prefix-scan driver: ALL numeric columns in ONE
-    range-partition pass (operators/order.scan) — k columns cost the
-    same shuffles as one. NaN/null cells emit NaN and do not advance
-    their column's scan (pandas skipna). Scans run in the frame's CURRENT
-    row order (carried ``__ord__`` after sort_values, else index order),
-    matching pandas' df.sort_values(...).cumsum()."""
-    num_types = {"tinyint", "smallint", "int", "bigint", "float", "double"}
-    dts = dict(sf._df.dtypes)
-    cols = [c for c in sf.columns if dts[c] in num_types]
-    floats = {c for c in cols if dts[c] in ("float", "double")}
-    scans = {}
-    for c in cols:
-        v = F.col(c)
-        # missing cells (NaN for floats, null for nullable ints) never
-        # advance the scan and re-emit as missing (pandas skipna)
-        scans[f"__s_{c}__"] = (kind, F.when(sexpr.notna(v, c in floats), v))
-    from sdc_spark.operators import order as sorder
-
-    key, keep = sf._row_order()
-    scanned = sorder.scan(sf._df.select(*keep, *cols), [key], scans)
-    sel = [F.col(c) for c in keep]
-    for c in cols:
-        s = F.col(f"__s_{c}__")
-        missing = F.lit(float("nan")) if c in floats else F.lit(None)
-        s = F.when(sexpr.notna(F.col(c), c in floats), s).otherwise(missing)
-        sel.append(s.alias(c))
-    return SparkFrame(scanned.select(*sel))
-
-
-def _add_frame_scans() -> None:
-    def cumsum(self, numeric_only: bool = True) -> SparkFrame:
-        """pandas df.cumsum (ref series kernel numpy_like.py:875-958,
-        frame-level via per-column codegen): all numeric columns in one
-        distributed prefix-scan pass; numeric_only result, like
-        df.cumsum(numeric_only=True)."""
-        return _frame_scan(self, "sum")
-
-    def cummax(self, numeric_only: bool = True) -> SparkFrame:
-        return _frame_scan(self, "max")
-
-    def cummin(self, numeric_only: bool = True) -> SparkFrame:
-        return _frame_scan(self, "min")
-
-    SparkFrame.cumsum = cumsum
-    SparkFrame.cummax = cummax
-    SparkFrame.cummin = cummin
-
-
-_add_frame_scans()
-
-
-def _add_frame_shift_ops() -> None:
-    from sdc_spark.operators import order as sorder
-
-    def shift(self, periods: int = 1, fill_value=None) -> SparkFrame:
-        """pandas df.shift: every data column lagged/led in ONE
-        boundary-context pass (order.shifted) — k columns cost the
-        same shuffles as one. Shifts run in the frame's CURRENT row order
-        (carried ``__ord__`` after sort_values, else index order)."""
-        cols = self.columns
-        dts = dict(self._df.dtypes)
-        key, keep = self._row_order()
-        out = sorder.shifted(
-            self._df.select(*keep, *cols), [key], {f"__sh_{c}__": F.col(c) for c in cols}, periods
-        )
-        sel = [F.col(c) for c in keep]
-        for c in cols:
-            s = F.col(f"__sh_{c}__")
-            if fill_value is not None:
-                # fill literal cast to the COLUMN's type: bare coalesce
-                # would coerce a string column toward the literal's type
-                s = F.coalesce(s, F.lit(fill_value).cast(dts[c]))
-            sel.append(s.alias(c))
-        return SparkFrame(out.select(*sel))
-
-    def diff(self, periods: int = 1) -> SparkFrame:
-        """pandas df.diff: numeric columns minus their shift, one context
-        pass for all columns (non-numeric columns are dropped, as pandas
-        raises on them), in the frame's CURRENT row order."""
-        num_types = {"tinyint", "smallint", "int", "bigint", "float", "double"}
-        dts = dict(self._df.dtypes)
-        cols = [c for c in self.columns if dts[c] in num_types]
-        key, keep = self._row_order()
-        out = sorder.shifted(
-            self._df.select(*keep, *cols), [key], {f"__sh_{c}__": F.col(c) for c in cols}, periods
-        )
-        sel = [F.col(c) for c in keep] + [
-            (F.col(c) - F.col(f"__sh_{c}__")).alias(c) for c in cols
-        ]
-        return SparkFrame(out.select(*sel))
-
-    SparkFrame.shift = shift
-    SparkFrame.diff = diff
-
-
-_add_frame_shift_ops()

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sdc_spark.frame.series import IDX
+from sdc_spark.frame.series import IDX, NUMERIC, floats, valid
 
 
 class FrameGroupBy:
@@ -40,11 +40,10 @@ class FrameGroupBy:
     def _value_cols(self) -> list[str]:
         if self._cols:
             return self._cols
-        num = {"tinyint", "smallint", "int", "bigint", "float", "double"}
         return [
             c
             for c, t in self._frame._df.dtypes
-            if c not in self._keys and c != IDX and t in num
+            if c not in self._keys and c != IDX and t in NUMERIC
         ]
 
     def _agg(self, kind: str):
@@ -52,11 +51,11 @@ class FrameGroupBy:
 
         fn = self._AGGS[kind]
         df = self._frame._df
-        floats = {c for c, t in df.dtypes if t in ("double", "float")}
+        fl = floats(df)
         cond = F.lit(True)
         for k in self._keys:
             cond = cond & F.col(k).isNotNull()
-            if k in floats:
+            if k in fl:
                 cond = cond & ~F.isnan(F.col(k))
         out = (
             df.filter(cond)
@@ -113,9 +112,8 @@ class FrameGroupBy:
         return SparkFrame(out)
 
     def _numeric_value_cols(self) -> list[str]:
-        num = {"tinyint", "smallint", "int", "bigint", "float", "double"}
         dts = dict(self._frame._df.dtypes)
-        return [c for c in self._value_cols() if dts[c] in num]
+        return [c for c in self._value_cols() if dts[c] in NUMERIC]
 
     def cumcount(self):
         """groupby().cumcount() — 0-based position of each row within its
@@ -144,20 +142,11 @@ class FrameGroupBy:
             raise ValueError(f"unsupported rank method {method!r}")
         cols = self._value_cols()
         base = self._frame._df
-        floats = {c for c, t in base.dtypes if t in ("double", "float")}
+        fl = floats(base)
         # NaN -> null so missing values form one group; nulls-LAST order
         # keys so missing values never consume the leading ranks
         clean = base.select(
-            IDX,
-            *self._keys,
-            *[
-                (
-                    F.when(~F.isnan(c) & F.col(c).isNotNull(), F.col(c))
-                    if c in floats
-                    else F.col(c)
-                ).alias(c)
-                for c in cols
-            ],
+            IDX, *self._keys, *[valid(c, True).alias(c) if c in fl else c for c in cols]
         )
         sel = [IDX, *self._keys]
         for c in cols:
@@ -215,11 +204,11 @@ class FrameGroupBy:
         here, at execution)."""
         from pyspark.sql import Window as W
 
-        floats = {c for c, t in self._frame._df.dtypes if t in ("double", "float")}
+        fl = floats(self._frame._df)
 
         def fn(c, w):
             run = F.sum(c).over(w.rowsBetween(W.unboundedPreceding, 0))
-            if c in floats:
+            if c in fl:
                 # pandas: NaN rows stay NaN but don't poison the running sum
                 return F.when(F.col(c).isNotNull() & ~F.isnan(c), run).otherwise(
                     F.lit(float("nan"))
@@ -236,12 +225,7 @@ class FrameGroupBy:
         + exploded sequence (span-bounded, not data-bounded)."""
         from sdc_spark.frame.resample import GroupResampler
 
-        num = {"tinyint", "smallint", "int", "bigint", "float", "double"}
-        cols = self._cols or [
-            c
-            for c, t in self._frame._df.dtypes
-            if c not in self._keys and c not in (on, IDX) and t in num
-        ]
+        cols = self._cols or [c for c in self._value_cols() if c != on]
         return GroupResampler(self._frame._df, on, rule, cols, keys=self._keys)
 
     def rolling(self, window: int, min_periods: int | None = None):

@@ -6,8 +6,15 @@ DataFrame (__index__, value).
 Binary ops align on the index via a full outer join — exactly the
 reference's ``_sdc_internal_join`` semantics
 (sdc/datatypes/common_functions.py:225-456). Reductions return Python
-scalars (the reference returns numpy scalars). Order-dependent ops
-(shift/cumsum/rolling) order by __index__.
+scalars (the reference returns numpy scalars).
+
+A Series is a one-column frame: the methods a DataFrame also has (fills,
+cum*, shift/diff/pct_change, head/take, the reductions, describe,
+nlargest/nsmallest, duplicated, isna/fillna/dropna) run the SparkFrame
+kernel on ``SparkFrame(self._df)``, whose only column is ``__value__``,
+and re-wrap the result with the Series' name. Order-dependent ops run in
+the current row order: a carried ``__ord__`` rank (after sort_values,
+take, nlargest, ...), else ``__index__``.
 """
 
 from __future__ import annotations
@@ -18,7 +25,6 @@ from typing import Any
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sdc_spark.functions import dt as sdt
@@ -28,6 +34,19 @@ from sdc_spark.operators import order as sorder
 
 IDX = "__index__"
 VAL = "__value__"
+NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
+
+
+def floats(df: DataFrame) -> set[str]:
+    """The float/double columns of ``df``: the ones that can hold NaN."""
+    return {c for c, t in df.dtypes if t in ("float", "double")}
+
+
+def valid(c: str, floating: bool) -> Column:
+    """Column ``c`` with every missing value as null: NaN too when
+    ``floating`` (Spark aggregates and sorts treat NaN as a number larger
+    than any other; pandas skips it)."""
+    return F.when(sexpr.notna(F.col(c), floating), F.col(c))
 
 
 class LazyIndex:
@@ -107,6 +126,18 @@ class SparkSeries:
         s = pd.Series(pdf[VAL].values, index=pdf[IDX].values, name=self.name)
         return s
 
+    def _frame(self):
+        """This Series as a one-column SparkFrame (its column is VAL)."""
+        from sdc_spark.frame.core import SparkFrame
+
+        return SparkFrame(self._df)
+
+    def _rewrap(self, frame, floating: bool | None = None) -> SparkSeries:
+        """A one-column frame result as a Series with this one's name."""
+        return SparkSeries(
+            frame._df, name=self.name, floating=self._floating if floating is None else floating
+        )
+
     # -- elementwise -------------------------------------------------------
 
     def _unary(self, fn, floating: bool | None = None) -> SparkSeries:
@@ -129,7 +160,7 @@ class SparkSeries:
         return self._unary(lambda c: c.cast(dtype))
 
     def isna(self) -> SparkSeries:
-        return self._unary(lambda c: sexpr.isna(c, self._floating), floating=False)
+        return self._rewrap(self._frame().isna(), floating=False)
 
     def notna(self) -> SparkSeries:
         return self._unary(lambda c: sexpr.notna(c, self._floating), floating=False)
@@ -141,23 +172,16 @@ class SparkSeries:
             if method in ("bfill", "backfill"):
                 return self.bfill()
             raise ValueError(f"unsupported fill method {method!r}")
-        return self._unary(lambda c: sexpr.fillna(c, value, self._floating))
-
-    def _fill(self, *direction: str) -> SparkSeries:
-        """ffill (no ``direction``) / bfill (``"suffix"``): one ``last``
-        scan, NaN masked to missing first so the carry skips it."""
-        ok = F.when(sexpr.notna(F.col(VAL), self._floating), F.col(VAL))
-        out = sorder.scan(self._df.select(IDX, VAL), [IDX], {VAL: ("last", ok, *direction)})
-        return SparkSeries(out, name=self.name, floating=self._floating)
+        return self._rewrap(self._frame().fillna({VAL: value}))
 
     def ffill(self) -> SparkSeries:
-        """Forward fill over the global index order — range-partitioned
+        """Forward fill in the current row order — range-partitioned
         carry + P-row boundary broadcast (operators/order.py), no
         single-partition window."""
-        return self._fill()
+        return self._rewrap(self._frame().ffill())
 
     def bfill(self) -> SparkSeries:
-        return self._fill("suffix")
+        return self._rewrap(self._frame().bfill())
 
     def interpolate(self, method: str = "linear") -> SparkSeries:
         """pandas Series.interpolate(method='linear'): interior NaN runs
@@ -202,11 +226,7 @@ class SparkSeries:
         )
 
     def dropna(self) -> SparkSeries:
-        return SparkSeries(
-            self._df.filter(sexpr.notna(F.col(VAL), self._floating)),
-            name=self.name,
-            floating=self._floating,
-        )
+        return self._rewrap(self._frame().dropna())
 
     def isin(self, values) -> SparkSeries:
         return self._unary(lambda c: c.isin(*list(values)), floating=False)
@@ -311,44 +331,42 @@ class SparkSeries:
 
     # -- reductions (ref §2.4) --------------------------------------------
 
-    def _reduce(self, expr) -> Any:
-        return self._df.agg(expr.alias("r")).collect()[0]["r"]
+    def _reduce(self, fn) -> Any:
+        """``fn`` (Column -> aggregate Column) over the non-missing values:
+        the frame's reduction kernel on this one column."""
+        return self._frame()._reduce(fn, [VAL])[VAL]
 
     def sum(self):
-        return self._reduce(F.sum(VAL))
+        return self._reduce(F.sum)
 
     def prod(self):
-        return self._reduce(F.product(VAL))
+        return self._reduce(F.product)
 
     def min(self):
-        return self._reduce(F.min(VAL))
+        return self._reduce(F.min)
 
     def max(self):
-        return self._reduce(F.max(VAL))
+        return self._reduce(F.max)
 
     def mean(self):
-        return self._reduce(F.avg(VAL))
+        return self._reduce(F.avg)
 
     def median(self):
-        return self._reduce(F.median(VAL))
+        return self._reduce(F.median)
 
     def std(self, ddof: int = 1):
-        return self._reduce(F.stddev_samp(VAL) if ddof == 1 else F.stddev_pop(VAL))
+        return self._reduce(F.stddev_samp if ddof == 1 else F.stddev_pop)
 
     def var(self, ddof: int = 1):
-        return self._reduce(F.var_samp(VAL) if ddof == 1 else F.var_pop(VAL))
+        return self._reduce(F.var_samp if ddof == 1 else F.var_pop)
 
     def count(self) -> int:
-        return self._reduce(F.count(F.when(sexpr.notna(F.col(VAL), self._floating), 1)))
+        return self._reduce(F.count)
 
     def nunique(self, dropna: bool = True) -> int:
         """ref …series_functions.py:3513 — dropna=False counts the null/NaN
         group as one extra distinct value when present."""
-        valid = F.countDistinct(F.when(sexpr.notna(F.col(VAL), self._floating), F.col(VAL)))
-        if dropna:
-            return self._reduce(valid)
-        has_na = F.max(sexpr.isna(F.col(VAL), self._floating).cast("int"))
-        return self._reduce(valid + F.coalesce(has_na, F.lit(0)))
+        return int(self._frame().nunique(dropna)[VAL])
 
     def quantile(self, q: float, approx: bool = False, accuracy: int = 10000):
         """Exact linear-interpolation quantile (pandas). ``approx=True``
@@ -356,14 +374,15 @@ class SparkSeries:
         full per-group sort buffer; the sketch path is the 100 TB
         default-off fast path, error ≤ 1/accuracy)."""
         if approx:
-            return self._reduce(
-                F.approx_percentile(F.col(VAL), F.lit(q), F.lit(accuracy))
-            )
-        return self._reduce(F.percentile(F.col(VAL), F.lit(q)))
+            return self._reduce(lambda v: F.approx_percentile(v, F.lit(q), F.lit(accuracy)))
+        return self._reduce(lambda v: F.percentile(v, F.lit(q)))
 
     def skew(self):
-        n = F.count(VAL)
-        return self._reduce(F.skewness(VAL) * F.sqrt(n * (n - 1)) / (n - 2))
+        def fn(v):
+            n = F.count(v)
+            return F.skewness(v) * F.sqrt(n * (n - 1)) / (n - 2)
+
+        return self._reduce(fn)
 
     def corr(self, other: SparkSeries, method: str = "pearson"):
         """pandas Series.corr (ref …series_functions.py corr): pearson via
@@ -431,10 +450,10 @@ class SparkSeries:
         )
 
     def idxmax(self):
-        return self._reduce(F.max_by(IDX, VAL))
+        return self._reduce(lambda v: F.max_by(F.col(IDX), v))
 
     def idxmin(self):
-        return self._reduce(F.min_by(IDX, VAL))
+        return self._reduce(lambda v: F.min_by(F.col(IDX), v))
 
     def where(self, cond: SparkSeries, other=None) -> SparkSeries:
         """Keep values where cond holds, else ``other`` (default null/NaN) —
@@ -471,18 +490,7 @@ class SparkSeries:
     # partition) ------------------------------------------------------------
 
     def shift(self, periods: int = 1, fill_value=None) -> SparkSeries:
-        out = sorder.shifted(
-            self._df.drop("__ord__") if "__ord__" in self._df.columns else self._df,
-            [IDX],
-            {"__sh__": F.col(VAL)},
-            periods,
-            fill_value,
-        )
-        return SparkSeries(
-            out.select(IDX, F.col("__sh__").alias(VAL)),
-            name=self.name,
-            floating=self._floating,
-        )
+        return self._rewrap(self._frame().shift(periods, fill_value))
 
     def _monotonic(self, increasing: bool) -> bool:
         """One boundary-context pass: any adjacent inversion (or missing
@@ -535,30 +543,17 @@ class SparkSeries:
         row = out.agg(F.corr(F.col(VAL), F.col("__sh__")).alias("c")).collect()[0]
         return float("nan") if row["c"] is None else row["c"]
 
-    def _scan(self, kind: str) -> SparkSeries:
-        """pandas cum*: missing values (NaN, or NA in a nullable int) never
-        advance the scan and re-emit as missing."""
-        notna = sexpr.notna(F.col(VAL), self._floating)
-        out = sorder.scan(
-            self._df.select(IDX, VAL), [IDX], {"__cs__": (kind, F.when(notna, F.col(VAL)))}
-        )
-        missing = F.lit(float("nan")) if self._floating else F.lit(None)
-        keep = F.when(notna, F.col("__cs__")).otherwise(missing)
-        return SparkSeries(
-            out.select(IDX, keep.alias(VAL)), name=self.name, floating=self._floating
-        )
-
     def cumsum(self) -> SparkSeries:
-        return self._scan("sum")
+        return self._rewrap(self._frame().cumsum())
 
     def cummax(self) -> SparkSeries:
-        return self._scan("max")
+        return self._rewrap(self._frame().cummax())
 
     def cummin(self) -> SparkSeries:
-        return self._scan("min")
+        return self._rewrap(self._frame().cummin())
 
     def cumprod(self) -> SparkSeries:
-        return self._scan("prod")
+        return self._rewrap(self._frame()._cum("prod"))
 
     def pct_change(
         self, periods: int = 1, fill_method: str | None = "pad"
@@ -567,24 +562,7 @@ class SparkSeries:
         …series_functions.py:4233 carries the full signature).
         ``fill_method`` fills missing values BEFORE differencing (pandas
         classic default 'pad'); None leaves gaps NaN-propagating."""
-        base = self
-        if fill_method in ("pad", "ffill"):
-            base = self.ffill()
-        elif fill_method in ("bfill", "backfill"):
-            base = self.bfill()
-        elif fill_method is not None:
-            raise ValueError(f"unsupported fill_method {fill_method!r}")
-        out = sorder.shifted(base._df, [IDX], {"__sh__": F.col(VAL)}, periods)
-        # pandas_div: ±inf / NaN on zero divisors (ANSI `/` would raise)
-        change = F.when(
-            F.col("__sh__").isNotNull(),
-            sexpr.pandas_div(F.col(VAL), F.col("__sh__")) - 1,
-        )
-        return SparkSeries(
-            out.select(IDX, change.alias(VAL)),
-            name=self.name,
-            floating=True,
-        )
+        return self._rewrap(self._frame().pct_change(periods, fill_method), floating=True)
 
     def reindex(self, labels) -> SparkSeries:
         """Conform to a new index (ref common_functions.py:603-695): result
@@ -626,27 +604,14 @@ class SparkSeries:
             return self._ordered(nan_last, key, F.col(IDX))
         return self._ordered(key, F.col(IDX))
 
-    def _topk(self, n: int, keys) -> SparkSeries:
-        """orderBy + limit is Spark's TakeOrdered — per-partition top-n then
-        a driver merge of P candidate sets; the rank window runs over the n
-        surviving rows only."""
-        s = self.dropna() if self._floating else self
-        top = s._df.orderBy(*keys).limit(n)
-        # the window runs over the n post-limit survivors only
-        w = W.partitionBy(sorder._one(F.spark_partition_id())).orderBy(*keys)
-        out = top.select(IDX, VAL, F.row_number().over(w).alias("__ord__"))
-        return SparkSeries(out, name=self.name, floating=self._floating)
-
     def nlargest(self, n: int = 5) -> SparkSeries:
-        return self._topk(n, [F.col(VAL).desc_nulls_last(), F.col(IDX)])
+        return self._rewrap(self._frame().nlargest(n, VAL))
 
     def nsmallest(self, n: int = 5) -> SparkSeries:
-        return self._topk(n, [F.col(VAL).asc_nulls_last(), F.col(IDX)])
+        return self._rewrap(self._frame().nsmallest(n, VAL))
 
     def head(self, n: int = 5) -> SparkSeries:
-        return SparkSeries(
-            self._df.orderBy(IDX).limit(n), name=self.name, floating=self._floating
-        )
+        return self._rewrap(self._frame().head(n))
 
     def unique(self) -> list:
         """pandas parity: returns a driver-side list (pandas returns an
@@ -720,6 +685,8 @@ class SparkSeries:
         value-bucketed prefix-histogram scan (operators/order.py
         scan_quantile) — exact when the column has <= max_buckets distinct
         values, bounded rank error otherwise."""
+        from sdc_spark.frame.rolling import SeriesExpanding
+
         return SeriesExpanding(self, min_periods)
 
     def rolling(
@@ -774,6 +741,8 @@ class SparkSeries:
             a = 1.0 - math.exp(-math.log(2.0) / halflife)
         else:
             a = float(alpha)
+        from sdc_spark.frame.rolling import SeriesEwm
+
         return SeriesEwm(self, a, min_periods)
 
     def map(
@@ -837,19 +806,6 @@ class SparkSeries:
     # -- positional / label access (ref …series_functions.py:85-499,
     # 834-1085, 2651, 3735) -------------------------------------------------
 
-    def _with_pos(self) -> DataFrame:
-        """(IDX, VAL, __pos__): 0-based position in __index__ order via the
-        distributed position machinery."""
-        return sorder.with_position(self._df.select(IDX, VAL), [IDX], "__pos__")
-
-    def _pos_rows(self, cond) -> SparkSeries:
-        out = self._with_pos().filter(cond)
-        return SparkSeries(
-            out.select(IDX, VAL, F.col("__pos__").alias("__ord__")),
-            name=self.name,
-            floating=self._floating,
-        )
-
     @property
     def iloc(self):
         return _SeriesILoc(self)
@@ -859,10 +815,7 @@ class SparkSeries:
         return _SeriesLoc(self)
 
     def iat(self, pos: int):
-        rows = self._with_pos().filter(F.col("__pos__") == pos).select(VAL).take(1)
-        if not rows:
-            raise IndexError(pos)
-        return rows[0][0]
+        return self._frame().iloc(pos)[VAL]
 
     def at(self, label):
         rows = self._df.filter(F.col(IDX) == F.lit(label)).select(VAL).take(1)
@@ -871,25 +824,15 @@ class SparkSeries:
         return rows[0][0]
 
     def take(self, indices) -> SparkSeries:
-        """Positional gather preserving the given order (ref
-        …series_functions.py:2651). The positions list is driver-side
-        (pandas signature) — broadcast as a literal pos→rank map."""
-        idx = list(indices)
-        rank = F.create_map(
-            *[F.lit(x) for p, r in zip(idx, range(len(idx))) for x in (p, r)]
-        )
-        out = (
-            self._with_pos()
-            .filter(F.col("__pos__").isin(idx))
-            .select(IDX, VAL, rank.getItem(F.col("__pos__")).alias("__ord__"))
-        )
-        return SparkSeries(out, name=self.name, floating=self._floating)
+        """Positional gather in the requested order (ref
+        …series_functions.py:2651): SparkFrame.take on this column."""
+        return self._rewrap(self._frame().take(indices))
 
     def argsort(self) -> SparkSeries:
         """ref …series_functions.py:3735 / pandas 2.x: result position i
         holds the original POSITION of the i-th smallest value, NaNs sorted
         last (numpy convention), index labels unchanged."""
-        base = self._with_pos()
+        base = sorder.with_position(self._df.select(IDX, VAL), [IDX], "__pos__")
         nan_last = (
             [F.when(F.isnan(VAL) | F.col(VAL).isNull(), 1).otherwise(0).asc()]
             if self._floating
@@ -974,12 +917,7 @@ class SparkSeries:
 
     def diff(self, periods: int = 1) -> SparkSeries:
         """x - shift(x, periods) — NaN-propagating first differences."""
-        out = sorder.shifted(self._df, [IDX], {"__sh__": F.col(VAL)}, periods)
-        return SparkSeries(
-            out.select(IDX, (F.col(VAL) - F.col("__sh__")).alias(VAL)),
-            name=self.name,
-            floating=True,
-        )
+        return self._rewrap(self._frame().diff(periods), floating=True)
 
     def clip(self, lower=None, upper=None) -> SparkSeries:
         def f(c):
@@ -1057,33 +995,12 @@ class SparkSeries:
         )
 
     def drop_duplicates(self, keep: str = "first") -> SparkSeries:
-        """Distinct values keeping the first (min-index) occurrence —
-        encounter order made deterministic as min/max index per value
-        (same convention as exact_dedup)."""
-        pick = F.min if keep == "first" else F.max
-        kept = self._df.groupBy(VAL).agg(pick(IDX).alias(IDX))
-        return SparkSeries(
-            kept.select(IDX, VAL), name=self.name, floating=self._floating
-        )
+        """Distinct values keeping the first (min-index) occurrence."""
+        return self._rewrap(self._frame().drop_duplicates(keep=keep))
 
     def duplicated(self, keep: str | bool = "first") -> SparkSeries:
-        """pandas series.duplicated: boolean series flagging repeated
-        values. 'first'/'last' keep the min/max-index occurrence unflagged
-        (the deterministic stand-in for encounter order, as in
-        drop_duplicates); keep=False flags every member of a >1 group.
-        One hash shuffle on the value; the join back ships (value, index)
-        pairs only."""
-        w = W.partitionBy(VAL)
-        if keep is False:
-            flag = F.count(F.lit(1)).over(w) > 1
-        else:
-            pick = F.min if keep == "first" else F.max
-            flag = F.col(IDX) != pick(IDX).over(w)
-        return SparkSeries(
-            self._df.select(F.col(IDX), flag.alias(VAL)),
-            name=self.name,
-            floating=False,
-        )
+        """pandas series.duplicated: SparkFrame.duplicated on this column."""
+        return self._rewrap(self._frame().duplicated(keep=keep), floating=False)
 
     def mode(self) -> SparkSeries:
         """pandas series.mode: every maximally-frequent value, ascending.
@@ -1176,53 +1093,10 @@ class SparkSeries:
     def describe(self) -> pd.Series:
         """Series describe (ref …series_functions.py:4351): numeric ->
         count/mean/std/min/25%/50%/75%/max; string -> count/unique/top/freq
-        (top ties broken by first appearance = min index, deterministic)."""
-        if dict(self._df.dtypes)[VAL] == "string":
-            per_val = (
-                self._df.filter(F.col(VAL).isNotNull())
-                .groupBy(VAL)
-                .agg(F.count(F.lit(1)).alias("__n__"), F.min(IDX).alias("__first__"))
-            )
-            row = per_val.agg(
-                F.sum("__n__").alias("count"),
-                F.count(F.lit(1)).alias("unique"),
-                F.max_by(
-                    F.col(VAL),
-                    F.struct(F.col("__n__"), (-F.col("__first__")).alias("__nf__")),
-                ).alias("top"),
-                F.max("__n__").alias("freq"),
-            ).collect()[0]
-            return pd.Series(
-                {
-                    "count": row["count"] or 0,
-                    "unique": row["unique"],
-                    "top": row["top"],
-                    "freq": row["freq"],
-                },
-                name=self.name,
-            )
-        qs = F.percentile(F.col(VAL), F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
-        row = self._df.agg(
-            F.count(F.when(sexpr.notna(F.col(VAL), self._floating), 1)).alias("count"),
-            F.avg(VAL).alias("mean"),
-            F.stddev_samp(VAL).alias("std"),
-            F.min(VAL).alias("min"),
-            qs.alias("q"),
-            F.max(VAL).alias("max"),
-        ).collect()[0]
-        return pd.Series(
-            {
-                "count": row["count"],
-                "mean": row["mean"],
-                "std": row["std"],
-                "min": row["min"],
-                "25%": row["q"][0],
-                "50%": row["q"][1],
-                "75%": row["q"][2],
-                "max": row["max"],
-            },
-            name=self.name,
-        )
+        (SparkFrame.describe on this column)."""
+        strings = dict(self._df.dtypes)[VAL] == "string"
+        got = self._frame().describe(include="object" if strings else None)
+        return got[VAL].rename(self.name)
 
     # -- accessors ---------------------------------------------------------
 
@@ -1354,129 +1228,6 @@ class _StrAccessor:
         return self._wrap(sstr.isdecimal)
 
 
-class SeriesExpanding:
-    """Expanding (prefix) windows from distributed scans — every kernel is
-    an algebra over running Σ1[valid], Σx, Σx², running min/max."""
-
-    def __init__(self, s: SparkSeries, min_periods: int):
-        self._s = s
-        self._minp = max(min_periods, 1)
-
-    def _masked(self):
-        s = self._s
-        val = F.when(sexpr.notna(F.col(VAL), s._floating), F.col(VAL))
-        return s._df.select(IDX, val.alias("__v__"))
-
-    def _scanned(self, *stats: str):
-        """(IDX, __v__, __n__, *__stat__) — the running valid count plus
-        each requested running statistic ("sum", "sumsq", "min", "max")
-        from ONE range partition + ONE P-row prior broadcast (order.scan)
-        — a per-kernel scan would re-shuffle and re-checkpoint once per
-        statistic (observed: expanding sum+mean = 4 exchanges; this is 1)."""
-        v = F.col("__v__")
-        kinds = {"sum": ("sum", v), "sumsq": ("sum", v * v), "min": ("min", v), "max": ("max", v)}
-        n = F.when(v.isNotNull(), F.lit(1)).otherwise(F.lit(0))
-        specs = {"__n__": ("sum", n), **{f"__{s}__": kinds[s] for s in stats}}
-        return sorder.scan(self._masked(), [IDX], specs)
-
-    def _finish(self, df, expr) -> SparkSeries:
-        out = df.select(
-            IDX, F.when(F.col("__n__") >= self._minp, expr).alias(VAL)
-        )
-        return SparkSeries(out, name=self._s.name, floating=True)
-
-    def count(self) -> SparkSeries:
-        return self._finish(self._scanned(), F.col("__n__").cast("double"))
-
-    def sum(self) -> SparkSeries:
-        return self._finish(self._scanned("sum"), F.col("__sum__"))
-
-    def mean(self) -> SparkSeries:
-        return self._finish(self._scanned("sum"), F.col("__sum__") / F.col("__n__"))
-
-    def min(self) -> SparkSeries:
-        return self._finish(self._scanned("min"), F.col("__min__"))
-
-    def max(self) -> SparkSeries:
-        return self._finish(self._scanned("max"), F.col("__max__"))
-
-    def var(self, ddof: int = 1) -> SparkSeries:
-        n = F.col("__n__").cast("double")
-        s = F.col("__sum__")
-        var = F.try_divide(F.col("__sumsq__") - s * s / n, n - ddof)
-        return self._finish(self._scanned("sum", "sumsq"), var)
-
-    def std(self, ddof: int = 1) -> SparkSeries:
-        return self.var(ddof)._unary(F.sqrt)
-
-    def quantile(self, q: float = 0.5, max_buckets: int = 1024) -> SparkSeries:
-        """Expanding quantile with pandas linear interpolation, via the
-        value-bucketed prefix-histogram scan (order.scan_quantile): EXACT
-        whenever the series has <= max_buckets distinct values, otherwise
-        rank error <= n/max_buckets. Closes the round-2 VERDICT gap
-        ("expanding median/quantile unsupported")."""
-        df = self._s._df.select(IDX, VAL)
-        out = sorder.scan_quantile(
-            df, [IDX], VAL, q, "__q__", min_periods=self._minp, max_buckets=max_buckets
-        )
-        return SparkSeries(
-            out.select(IDX, F.col("__q__").alias(VAL)),
-            name=self._s.name,
-            floating=True,
-        )
-
-    def median(self, max_buckets: int = 1024) -> SparkSeries:
-        return self.quantile(0.5, max_buckets=max_buckets)
-
-    def quantiles(self, qs: dict[str, float], max_buckets: int = 1024):
-        """Several expanding quantiles in ONE histogram scan (extension —
-        pandas recomputes per call): ``qs`` maps output column name -> q.
-        Returns a DataFrame of (index, *named quantile columns); the
-        range partition, per-partition histograms, and chunked prefix
-        cumsum are shared, each extra q costs only a rank lookup."""
-        df = self._s._df.select(IDX, VAL)
-        return sorder.scan_quantile(
-            df,
-            [IDX],
-            VAL,
-            list(qs.values()),
-            list(qs.keys()),
-            min_periods=self._minp,
-            max_buckets=max_buckets,
-        )
-
-
-class SeriesEwm:
-    """series.ewm(...).mean()/var()/std() — a Series is a groupby with no
-    keys, so each stat is one call of the segmented decay scan
-    (operators/order.py scan_ewm): per-partition decayed moment
-    reductions, a P-row carry composition on the driver, seeded
-    per-partition prefixes — never a single-partition pass."""
-
-    def __init__(self, s: SparkSeries, alpha: float, min_periods: int):
-        self._s = s
-        self._alpha = alpha
-        self._minp = min_periods
-
-    def _stat(self, stat: str, bias: bool = False) -> SparkSeries:
-        df = self._s._df.select(IDX, VAL)
-        out = sorder.scan_ewm(df, [], [IDX], [VAL], self._alpha, stat, self._minp, bias)
-        return SparkSeries(out, name=self._s.name, floating=True)
-
-    def mean(self) -> SparkSeries:
-        return self._stat("mean")
-
-    def var(self, bias: bool = False) -> SparkSeries:
-        """Reliability-weighted ewm variance (pandas' bias=False default):
-        var = (Σw·x²/Σw − mean²) · (Σw)²/((Σw)² − Σw²). A single
-        observation has (Σw)² == Σw², so its variance is null, as in
-        pandas."""
-        return self._stat("var", bias)
-
-    def std(self, bias: bool = False) -> SparkSeries:
-        return self._stat("std", bias)
-
-
 class _DtAccessor:
     """series.dt — datetime field extraction (ref pd_timestamp_ext.py:120-160
     via sdc_spark.functions.dt, pandas numbering conventions)."""
@@ -1553,57 +1304,7 @@ class _SeriesILoc:
         if isinstance(key, int):
             return s.iat(key)
         if isinstance(key, slice):
-            start, stop, step = key.start, key.stop, key.step or 1
-            if step == 0:
-                raise ValueError("slice step cannot be zero")
-            neg = (
-                step < 0
-                or (start is not None and start < 0)
-                or (stop is not None and stop < 0)
-            )
-            if not neg:
-                start = start or 0
-                cond = F.col("__pos__") >= start
-                if stop is not None:
-                    cond = cond & (F.col("__pos__") < stop)
-                if step != 1:
-                    cond = cond & ((F.col("__pos__") - start) % step == 0)
-                return s._pos_rows(cond)
-            # Negative offsets / reverse slices (ref …series_functions.py:
-            # 85-499 supports arbitrary slices): resolved against the total
-            # count, carried as a broadcast 1-row column so the plan stays
-            # lazy — position arithmetic only, no driver-side collect.
-            base = s._with_pos()
-            n_df = s._df.agg(F.count(F.lit(1)).alias("__n__"))
-            b = base.crossJoin(F.broadcast(n_df))
-            n = F.col("__n__")
-
-            def norm(v, default):
-                if v is None:
-                    return default
-                lit = F.lit(v)
-                return F.when(lit < 0, F.greatest(n + lit, F.lit(-1))).otherwise(lit)
-
-            if step > 0:
-                lo = norm(start, F.lit(0))
-                hi = norm(stop, n)
-                cond = (
-                    (F.col("__pos__") >= lo)
-                    & (F.col("__pos__") < hi)
-                    & ((F.col("__pos__") - lo) % step == 0)
-                )
-                ordc = F.col("__pos__")
-            else:
-                lo = F.least(norm(start, n - 1), n - 1)
-                hi = norm(stop, F.lit(-1))
-                cond = (
-                    (F.col("__pos__") <= lo)
-                    & (F.col("__pos__") > hi)
-                    & ((lo - F.col("__pos__")) % (-step) == 0)
-                )
-                ordc = lo - F.col("__pos__")  # reversed enumeration order
-            out = b.filter(cond).select(IDX, VAL, ordc.alias("__ord__"))
-            return SparkSeries(out, name=s.name, floating=s._floating)
+            return s._rewrap(s._frame()._islice(key))
         if isinstance(key, (list, tuple)):
             return s.take(list(key))
         if isinstance(key, SparkSeries):  # boolean mask by position order

@@ -116,7 +116,8 @@ def isna(x, floating: bool = False) -> Column:
 
 
 def notna(x, floating: bool = False) -> Column:
-    return ~isna(x, floating)
+    c = _c(x)
+    return (~F.isnan(c) & c.isNotNull()) if floating else c.isNotNull()
 
 
 def fillna(x, value, floating: bool = False) -> Column:

@@ -16,12 +16,8 @@ from sdc_spark.materialize import materialize as _materialize
 from sdc_spark.functions.categorical import encode
 from sdc_spark.functions.expressions import pandas_floordiv
 from sdc_spark.plans.registry import oracle, query
-from sdc_spark.sources.readers import local_rows, read_csv, read_table
+from sdc_spark.sources.readers import local_rows, read_csv, read_table, read_table as _t
 from sdc_spark.sources.writers import to_csv
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
 
 
 @query("src_read_csv")

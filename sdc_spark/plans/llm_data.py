@@ -17,7 +17,7 @@ from sdc_spark.operators import dedup as sdedup
 from sdc_spark.operators import multimodal as smm
 from sdc_spark.operators import similarity as ssim
 from sdc_spark.plans.registry import oracle, query
-from sdc_spark.sources.readers import read_table
+from sdc_spark.sources.readers import read_table as _t
 
 
 def _sf_tag(sf_dir: str) -> str:
@@ -98,10 +98,6 @@ def offset_dupe_id(doc_id: Column) -> Column:
             )
         )
     )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
 
 
 @query("dedup_exact")

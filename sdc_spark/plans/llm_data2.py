@@ -30,11 +30,7 @@ from sdc_spark.operators.scan import spread_scan_py
 from sdc_spark.operators import similarity as ssim
 from sdc_spark.operators.similarity import semantic_dedup
 from sdc_spark.plans.registry import oracle, query
-from sdc_spark.sources.readers import read_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
+from sdc_spark.sources.readers import read_table as _t
 
 
 @query("text_gopher_filter")

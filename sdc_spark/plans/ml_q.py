@@ -15,11 +15,7 @@ from pyspark.sql import functions as F
 
 from sdc_spark.operators.ml import kde_log_density, kmeans_fit, linreg_fit, logreg_fit_gd
 from sdc_spark.plans.registry import oracle, query
-from sdc_spark.sources.readers import local_rows, read_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
+from sdc_spark.sources.readers import local_rows, read_table, read_table as _t
 
 
 @query("ml_linreg_group")

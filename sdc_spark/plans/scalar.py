@@ -15,11 +15,7 @@ from sdc_spark.functions import dt as sdt
 from sdc_spark.functions import expressions as sexpr
 from sdc_spark.functions import strings as sstr
 from sdc_spark.plans.registry import oracle, query
-from sdc_spark.sources.readers import read_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
+from sdc_spark.sources.readers import read_table as _t
 
 
 @query("str_basic")

@@ -9,11 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sdc_spark.plans.registry import oracle, query
-from sdc_spark.sources.readers import read_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
+from sdc_spark.sources.readers import read_table as _t
 
 
 @query("q3_shipping_priority")

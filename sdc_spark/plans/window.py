@@ -29,11 +29,7 @@ from sdc_spark.operators.rolling import (
     scaled_long,
 )
 from sdc_spark.plans.registry import oracle, query
-from sdc_spark.sources.readers import read_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
+from sdc_spark.sources.readers import read_table as _t
 
 
 @query("window_topk_per_group")

@@ -468,12 +468,12 @@ def test_drop_duplicates(spark):
 def test_frame_nlargest_sample(spark):
     pdf = pd.DataFrame({"a": [5, 3, 9, 1, 7], "b": list("vwxyz")})
     sf2 = from_pandas(spark, pdf)
-    # to_pandas presents rows in index order; compare the selected SET
-    got = sf2.nlargest(3, "a").to_pandas().sort_index()
-    exp = pdf.nlargest(3, "a").sort_index()
+    # the rows come back in rank order, as pandas returns them
+    got = sf2.nlargest(3, "a").to_pandas()
+    exp = pdf.nlargest(3, "a")
     pd.testing.assert_frame_equal(got, exp, check_dtype=False, check_index_type=False)
-    got = sf2.nsmallest(2, "a").to_pandas().sort_index()
-    exp = pdf.nsmallest(2, "a").sort_index()
+    got = sf2.nsmallest(2, "a").to_pandas()
+    exp = pdf.nsmallest(2, "a")
     pd.testing.assert_frame_equal(got, exp, check_dtype=False, check_index_type=False)
     assert 0 <= len(sf2.sample(0.5, seed=1)) <= 5
 
@@ -681,7 +681,7 @@ def test_negative_reverse_slices(spark):
     f = from_pandas(spark, pdf)
     for sl in [slice(-4, None), slice(2, -2), slice(None, None, -2)]:
         got = f[sl].to_pandas()
-        exp = pdf.iloc[sl].sort_index()
+        exp = pdf.iloc[sl]  # a reverse slice comes back reversed, as in pandas
         assert got["x"].tolist() == exp["x"].tolist(), f"frame slice {sl}"
 
 
@@ -1805,3 +1805,60 @@ def test_nullable_int_cum_scans_emit_na_at_na_rows(uncoalesced):
             exp.to_numpy(dtype="float64", na_value=np.nan),
             err_msg=m,
         )
+
+
+def _sorted(o):
+    return o.sort_values("a") if hasattr(o, "columns") else o.sort_values()
+
+
+def _topk(o, how, n):
+    return getattr(o, how)(n, "a") if hasattr(o, "columns") else getattr(o, how)(n)
+
+
+# each case runs on the Series a and on the one-column frame [a]
+_ONE_COLUMN_CASES = {
+    "sorted_head": lambda o: _sorted(o).head(3),
+    "sorted_shift": lambda o: _sorted(o).shift(1),
+    "sorted_cumsum": lambda o: _sorted(o).cumsum(),
+    "sorted_diff": lambda o: _sorted(o).diff(),
+    "sorted_ffill": lambda o: _sorted(o).ffill(),
+    "sorted_take": lambda o: _sorted(o).take([0, 1]),
+    **{r: (lambda o, r=r: getattr(o, r)()) for r in (
+        "sum", "mean", "max", "std", "var", "median", "prod", "describe"
+    )},
+    "quantile": lambda o: o.quantile(0.5),
+    "nlargest": lambda o: _topk(o, "nlargest", 3),
+    "nsmallest": lambda o: _topk(o, "nsmallest", 5),
+}
+
+
+@pytest.fixture(scope="module")
+def nan_column(spark):
+    """7 rows whose column a holds NaN values made by computation (from
+    pandas they would arrive as nulls): a = x where x <= 5, else NaN."""
+    from pyspark.sql import functions as F
+
+    pdf = pd.DataFrame({"x": [5.0, 9.0, 3.0, 8.0, 4.0, 7.0, 6.0]})
+    pdf["a"] = pdf["x"].where(pdf["x"] <= 5)
+    a = F.when(F.col("x") <= 5, F.col("x")).otherwise(F.lit(float("nan")))
+    return from_pandas(spark, pdf[["x"]]).assign(a=a)[["a"]], pdf[["a"]]
+
+
+@pytest.mark.parametrize("case", list(_ONE_COLUMN_CASES))
+def test_series_and_one_column_frame_match_pandas(nan_column, case):
+    """A Series and a one-column frame run one kernel per method, so both
+    must give pandas' answer: order ops in the sorted row order,
+    reductions and describe skipping NaN, top-k in rank order with NaN
+    last."""
+    sf, pdf = nan_column
+    fn = _ONE_COLUMN_CASES[case]
+    for got, exp in ((fn(sf["a"]), fn(pdf["a"])), (fn(sf), fn(pdf))):
+        got = got.to_pandas() if hasattr(got, "to_pandas") else got
+        if isinstance(exp, pd.DataFrame):
+            pd.testing.assert_frame_equal(got, exp, check_dtype=False, check_index_type=False)
+        elif isinstance(exp, pd.Series):
+            pd.testing.assert_series_equal(
+                got, exp, check_dtype=False, check_names=False, check_index_type=False
+            )
+        else:
+            assert got == pytest.approx(exp)
