@@ -32,4 +32,13 @@ Layout
 
 __version__ = "0.1.0"
 
-from sdc_spark.session import get_spark  # noqa: F401
+import sys
+
+from pyspark import cloudpickle
+
+# Arrow stages ship closures that call module-level sdc_spark functions.
+# Pickle the whole package by value so executor Python workers never have
+# to import sdc_spark: they need no PYTHONPATH and may start in any cwd.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+from sdc_spark.session import get_spark  # noqa: E402, F401

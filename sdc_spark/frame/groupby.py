@@ -60,7 +60,12 @@ class FrameGroupBy:
         out = (
             df.filter(cond)
             .groupBy(*self._keys)
-            .agg(*[fn(c).alias(c) for c in self._value_cols()])
+            .agg(
+                *[
+                    fn(valid(c, True) if c in fl else F.col(c)).alias(c)
+                    for c in self._value_cols()
+                ]
+            )
         )
         if self._sort:
             out = out.orderBy(*self._keys)

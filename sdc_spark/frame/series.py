@@ -141,8 +141,10 @@ class SparkSeries:
     # -- elementwise -------------------------------------------------------
 
     def _unary(self, fn, floating: bool | None = None) -> SparkSeries:
+        # an elementwise op keeps the row order, so a carried __ord__ stays
+        order = [c for c in self._df.columns if c == "__ord__"]
         return SparkSeries(
-            self._df.select(IDX, fn(F.col(VAL)).alias(VAL)),
+            self._df.select(IDX, *order, fn(F.col(VAL)).alias(VAL)),
             name=self.name,
             floating=self._floating if floating is None else floating,
         )
@@ -1346,7 +1348,10 @@ class SeriesGroupBy:
         self._floating = floating
 
     def _agg(self, expr, floating: bool | None = None) -> SparkSeries:
-        out = self._df.groupBy("__key__").agg(expr.alias("__v__")).select(
+        df = self._df
+        if self._floating:  # pandas skips NaN values; Spark would aggregate them
+            df = df.withColumn(VAL, valid(VAL, True))
+        out = df.groupBy("__key__").agg(expr.alias("__v__")).select(
             F.col("__key__").alias(IDX), F.col("__v__").alias(VAL)
         )
         return SparkSeries(
@@ -1374,9 +1379,7 @@ class SeriesGroupBy:
         return self._agg(F.median(VAL), floating=True)
 
     def count(self):
-        return self._agg(
-            F.count(F.when(sexpr.notna(F.col(VAL), self._floating), 1)), floating=False
-        )
+        return self._agg(F.count(VAL), floating=False)
 
     def std(self, ddof: int = 1):
         return self._agg(

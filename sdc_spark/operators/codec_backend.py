@@ -1,8 +1,8 @@
 """Codec backend selection: opportunistic native decoders, pure-numpy floor.
 
-The pure-Python/numpy codecs (operators/jpeg.py, gif.py, the PNG path in
-multimodal.py) are correct but ~100-1000x slower than libjpeg/zlib-native
-decode loops; at 100 TB the decode stage dominates the pipeline. This
+The pure-Python/numpy codecs (operators/jpeg.py, gif.py, and the PNG,
+BMP and Y4M parsers below) are correct but ~100-1000x slower than
+libjpeg/zlib-native decode loops; at 100 TB the decode stage dominates the pipeline. This
 container ships no PIL/soundfile, so pure-numpy is the honest floor HERE —
 but the same pipeline must run at production speed off the sandbox. Every
 image decode/resize therefore routes through this module:
@@ -13,8 +13,9 @@ image decode/resize therefore routes through this module:
   different site-packages).
 - ``SDC_CODEC_BACKEND=numpy``: force the pure path (reproducibility pins,
   the hash-pinned codec tests).
-- ``SDC_CODEC_BACKEND=pil``: require PIL; raise if missing (fail loudly
-  when a production deployment silently lost its native codecs).
+- ``SDC_CODEC_BACKEND=pil``: require PIL; raise NotImplementedError if
+  missing, which fails the Arrow task (fail loudly when a production
+  deployment silently lost its native codecs).
 
 Both backends produce the same (h, w, 3) uint8 pixel arrays; tests assert
 equality wherever both exist (skipped in this container).
@@ -38,8 +39,12 @@ explicitly (their oracles depend on exact decoder semantics); the
 from __future__ import annotations
 
 import os
+import zlib
 
 import numpy as np
+
+from sdc_spark.operators.gif import gif_decode
+from sdc_spark.operators.jpeg import jpeg_decode
 
 _ENV = "SDC_CODEC_BACKEND"
 _AUDIO_ENV = "SDC_AUDIO_BACKEND"  # auto|numpy|soundfile
@@ -80,7 +85,7 @@ def backend() -> str:
         return "numpy"
     if mode == "pil":
         if _pil() is None:
-            raise RuntimeError(
+            raise NotImplementedError(
                 f"{_ENV}=pil but PIL is not importable on this worker"
             )
         return "pil"
@@ -98,7 +103,7 @@ def _resolve_media_backend(env: str, native: str, probe) -> str:
         return "numpy"
     if mode == native:
         if probe() is None:
-            raise RuntimeError(f"{env}={native} but {native} is not importable on this worker")
+            raise NotImplementedError(f"{env}={native} but {native} is not importable on this worker")
         return native
     if mode != "auto":
         raise ValueError(f"{env}={mode!r}; expected auto|numpy|{native}")
@@ -177,9 +182,7 @@ def iter_video_luma(buf: bytes, force: str | None = None):
             "compressed video needs ffmpeg (install pyav for the native "
             "backend) — only Y4M has a library-free decode path"
         )
-    from sdc_spark.operators.multimodal import _y4m_iter_frames
-
-    for _w, _h, _m, y, _u, _v in _y4m_iter_frames(buf):
+    for _w, _h, _m, y, _u, _v in y4m_frames(buf):
         yield y
 
 
@@ -196,24 +199,16 @@ def decode_image_pixels(buf: bytes, force: str | None = None) -> np.ndarray:
 
         im = _pil().open(io.BytesIO(buf)).convert("RGB")
         return np.asarray(im, dtype=np.uint8)
-    if buf[:8] == b"\x89PNG\r\n\x1a\n":
-        from sdc_spark.operators.multimodal import _png_pixels
-
+    if buf[:8] == _PNG_MAGIC:
         px = _png_pixels(buf)
         if px.shape[-1] < 3:  # gray / gray+alpha -> RGB
             px = np.repeat(px[..., :1], 3, axis=-1)
         return px
     if buf[:2] == b"\xff\xd8":
-        from sdc_spark.operators.jpeg import jpeg_decode
-
         return jpeg_decode(buf)
     if buf[:2] == b"BM":
-        from sdc_spark.operators.multimodal import _bmp_pixels
-
-        return _bmp_pixels(buf)
+        return bmp_pixels(buf)
     if buf[:6] in (b"GIF87a", b"GIF89a"):
-        from sdc_spark.operators.gif import gif_decode
-
         return gif_decode(buf)[2][0]  # first frame RGB
     raise ValueError("unknown image format")
 
@@ -263,3 +258,152 @@ def resize_pixels(
         )
     out = bilinear_resize(px, out_w, out_h)
     return np.clip(np.rint(out), 0, 255).astype(np.uint8)
+
+
+# -- library-free raster/video parsers ---------------------------------------
+# PNG (stdlib zlib inflate + numpy un-filtering), 24-bit BMP and Y4M video
+# are pure header + raster formats, so the numpy floor decodes them exactly.
+
+_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
+
+
+def png_info(buf: bytes) -> tuple:
+    """Walk a PNG's chunks: (w, h, depth, color_type, n_channels, the
+    concatenated IDAT zlib stream). Supports 8-bit depth, color types
+    0 (gray) / 2 (RGB) / 4 (gray+A) / 6 (RGBA), non-interlaced — the
+    pure-numpy subset; palette and Adam7 raise."""
+    if buf[:8] != _PNG_MAGIC:
+        raise ValueError("not PNG")
+    pos, w, h, depth, ctype, interlace, idat = 8, None, None, None, None, 0, []
+    n = len(buf)
+    while pos + 8 <= n:
+        ln = int.from_bytes(buf[pos : pos + 4], "big")
+        cid = buf[pos + 4 : pos + 8]
+        body = buf[pos + 8 : pos + 8 + ln]
+        if cid == b"IHDR":
+            w = int.from_bytes(body[0:4], "big")
+            h = int.from_bytes(body[4:8], "big")
+            depth, ctype, interlace = body[8], body[9], body[12]
+        elif cid == b"IDAT":
+            idat.append(body)
+        elif cid == b"IEND":
+            break
+        pos += 12 + ln  # length + type + body + crc
+    if w is None or not idat:
+        raise ValueError("missing chunks")
+    if depth != 8 or interlace != 0:
+        raise ValueError("only 8-bit non-interlaced supported")
+    nch = {0: 1, 2: 3, 4: 2, 6: 4}.get(ctype)
+    if nch is None:
+        raise ValueError(f"unsupported color type {ctype}")
+    return w, h, int(depth), int(ctype), nch, b"".join(idat)
+
+
+def _png_unfilter(raw: bytes, w: int, h: int, nch: int) -> np.ndarray:
+    """Reverse the per-row PNG filters (types 0-4) on inflated IDAT bytes.
+    Filters none/sub/up are vectorized (sub via per-channel cumsum mod
+    256); average/paeth fall back to the spec's sequential recurrence."""
+    stride = w * nch
+    rows = np.frombuffer(raw, np.uint8).reshape(h, stride + 1)
+    filters = rows[:, 0]
+    recon = np.zeros((h, stride), np.int32)
+    prior = np.zeros(stride, np.int32)
+    for r in range(h):
+        f = int(filters[r])
+        line = rows[r, 1:].astype(np.int32)
+        if f == 0:
+            rec = line
+        elif f == 1:  # sub: per-channel prefix sum mod 256
+            rec = line
+            for c in range(nch):
+                rec[c::nch] = np.cumsum(rec[c::nch]) & 0xFF
+        elif f == 2:  # up
+            rec = (line + prior) & 0xFF
+        elif f == 3:  # average
+            rec = line
+            for x in range(stride):
+                left = rec[x - nch] if x >= nch else 0
+                rec[x] = (rec[x] + ((left + prior[x]) >> 1)) & 0xFF
+        elif f == 4:  # paeth
+            rec = line
+            for x in range(stride):
+                left = rec[x - nch] if x >= nch else 0
+                up = prior[x]
+                ul = prior[x - nch] if x >= nch else 0
+                p = left + up - ul
+                pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
+                pred = left if (pa <= pb and pa <= pc) else (up if pb <= pc else ul)
+                rec[x] = (rec[x] + pred) & 0xFF
+        else:
+            raise ValueError(f"bad PNG filter {f}")
+        recon[r] = rec
+        prior = recon[r]
+    return recon.astype(np.uint8).reshape(h, w, nch)
+
+
+def _png_pixels(buf: bytes) -> np.ndarray:
+    """Full-pixel PNG decode: (h, w, 1..3) uint8, alpha dropped."""
+    w, h, _depth, _ctype, nch, idat = png_info(buf)
+    raw = zlib.decompress(idat)
+    if len(raw) != h * (w * nch + 1):
+        raise ValueError("IDAT size mismatch")
+    return _png_unfilter(raw, w, h, nch)[..., : min(nch, 3)]
+
+
+def bmp_pixels(buf: bytes) -> np.ndarray:
+    """24-bit uncompressed BMP to (h, w, 3) uint8 RGB: dimensions from the
+    BITMAPINFOHEADER, rows 4-byte aligned and stored bottom-up."""
+    a = np.frombuffer(buf, dtype=np.uint8)
+    if a.size < 54 or a[:2].tobytes() != b"BM":
+        raise ValueError("not BMP")
+    off = int(np.frombuffer(a[10:14].tobytes(), "<u4")[0])
+    w = int(np.frombuffer(a[18:22].tobytes(), "<i4")[0])
+    h = int(np.frombuffer(a[22:26].tobytes(), "<i4")[0])
+    bpp = int(np.frombuffer(a[28:30].tobytes(), "<u2")[0])
+    if bpp != 24:
+        raise ValueError("only 24-bit BMP")
+    stride = (w * 3 + 3) & ~3
+    px = a[off : off + stride * abs(h)].reshape(abs(h), stride)[:, : w * 3]
+    px = px.reshape(abs(h), w, 3)[::-1]  # bottom-up -> top-down, BGR
+    return px[..., ::-1]  # -> RGB
+
+
+def y4m_frames(buf: bytes):
+    """Parse a Y4M payload; yield (w, h, mono, y, u, v) numpy planes per
+    frame. Supports Cmono and the C420* family (420jpeg/420mpeg2/420paldv
+    share plane sizes); C absent defaults to 420jpeg per spec."""
+    nl = buf.index(b"\n")
+    head = buf[:nl].decode("ascii", "replace").split(" ")
+    if head[0] != "YUV4MPEG2":
+        raise ValueError("not Y4M")
+    w = h = None
+    cs = "420jpeg"
+    for p in head[1:]:
+        if p.startswith("W"):
+            w = int(p[1:])
+        elif p.startswith("H"):
+            h = int(p[1:])
+        elif p.startswith("C"):
+            cs = p[1:]
+    if not w or not h:
+        raise ValueError("missing dimensions")
+    mono = cs == "mono"
+    if not mono and not cs.startswith("420"):
+        raise ValueError(f"unsupported colorspace {cs}")
+    ysz = w * h
+    csz = 0 if mono else (w // 2) * (h // 2)
+    a = np.frombuffer(buf, dtype=np.uint8)
+    pos = nl + 1
+    while pos < len(a):
+        fnl = buf.index(b"\n", pos)
+        if buf[pos : pos + 5] != b"FRAME":
+            raise ValueError("bad frame marker")
+        pos = fnl + 1
+        y = a[pos : pos + ysz].reshape(h, w)
+        pos += ysz
+        u = v = None
+        if not mono:
+            u = a[pos : pos + csz].reshape(h // 2, w // 2)
+            v = a[pos + csz : pos + 2 * csz].reshape(h // 2, w // 2)
+            pos += 2 * csz
+        yield w, h, mono, y, u, v

@@ -3,38 +3,58 @@ with typed metadata.
 
 Convention: a modality column is a struct
   {content: binary, meta: struct<mime: string, width: int, height: int, …>}
-carried through relational ops untouched; decode/feature steps run as
-Arrow-batched ``mapInPandas`` over partitions so bytes never pass through
-Python row-by-row.
+carried through relational ops untouched. Every decode/feature step is a
+per-row function of one payload, run over the ``{id, content}`` columns
+by ``sdc_spark.arrow.map_rows``: one Arrow-batched stage that owns the
+batching, the poison-pill nulls and the output dtypes.
 
-Codec status: BMP, WAV, PNG (stdlib zlib + numpy), baseline JPEG
-(pure-numpy huffman + IDCT, operators/jpeg.py), GIF (pure-Python LZW,
-operators/gif.py) and Y4M video (YUV4MPEG2 raw-plane parsing, mono +
-C420) are REAL decodes —
-hash-verified against analytic oracles. The generic stages
-(decode_and_featurize / resize_images / sample_frames) route their
-``stub=False`` path through operators/codec_backend (PIL/native when
-importable on the worker, pure-numpy floor here). Only codecs with no
-library-free path (MP3, H.264/VP9/MP4, progressive JPEG) still raise
-NotImplementedError; the default stub derives deterministic
-pseudo-features from the raw bytes, keeping schema, batching,
-partitioning, and downstream plumbing fully real and testable for
-payload-agnostic demos.
+Codec status: BMP, WAV, PNG (stdlib zlib + numpy), baseline and
+progressive JPEG (pure-numpy huffman + IDCT, operators/jpeg.py), GIF
+(pure-Python LZW, operators/gif.py) and Y4M video (YUV4MPEG2 raw-plane
+parsing, mono + C420) are REAL decodes, hash-verified against analytic
+oracles; the raster and Y4M parsers live in operators/codec_backend. The
+generic stages (decode_and_featurize / resize_images / sample_frames)
+route their ``stub=False`` path through operators/codec_backend (PIL/
+native when importable on the worker, pure-numpy floor here). Formats
+with no library-free path decode only where the worker has the native
+library: non-WAV audio without soundfile yields nulls like any malformed
+payload, and compressed video (H.264/VP9/MP4) without pyav raises
+NotImplementedError, which fails the task. The default stub derives
+deterministic pseudo-features from the raw bytes, keeping schema,
+batching, partitioning, and downstream plumbing fully real and testable
+for payload-agnostic demos.
 
 Scale notes: binary payloads dominate row size — repartition by size
 budget, not row count (``maxRecordsPerBatch`` low for Arrow transfers);
-feature extraction is embarrassingly parallel (mapInPandas, no shuffle).
+feature extraction is embarrassingly parallel (one Arrow stage, no
+shuffle).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import io
+import struct
+import zlib
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from sdc_spark.arrow import map_rows
+from sdc_spark.operators.codec_backend import backend as resolve_backend
+from sdc_spark.operators.codec_backend import (
+    bilinear_resize,
+    bmp_pixels,
+    decode_audio_samples,
+    decode_image_pixels,
+    iter_video_luma,
+    png_info,
+    resize_pixels,
+    y4m_frames,
+)
+from sdc_spark.operators.gif import gif_decode
+from sdc_spark.operators.jpeg import jpeg_decode
 
 FEATURE_SCHEMA = (
     "id long, n_bytes long, byte_mean double, byte_std double, feat array<float>"
@@ -60,6 +80,17 @@ def attach_binary(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
+def _stage(df: DataFrame, fn, schema: str) -> DataFrame:
+    """Run ``fn(content)`` over every ``{id, content}`` row (arrow.map_rows)."""
+    return map_rows(df.select("id", "content"), fn, schema)
+
+
+def _rgb_means(px: np.ndarray) -> tuple:
+    """Per-channel means of an (h, w, c) raster; one channel is gray, so
+    it stands for r, g and b alike."""
+    return tuple(float(px[..., min(c, px.shape[-1] - 1)].mean()) for c in range(3))
+
+
 def _stub_features(buf: bytes, dim: int = 8) -> np.ndarray:
     """Deterministic pseudo-embedding from raw bytes (stand-in for a real
     image/audio encoder)."""
@@ -70,78 +101,41 @@ def _stub_features(buf: bytes, dim: int = 8) -> np.ndarray:
     return np.array([c.mean() if c.size else 0.0 for c in chunks], dtype=np.float32)
 
 
+def _byte_features(buf: bytes) -> tuple:
+    """The stub featurizer: byte statistics of the raw payload."""
+    a = np.frombuffer(buf, dtype=np.uint8)
+    mean, std = (float(a.mean()), float(a.std())) if a.size else (0.0, 0.0)
+    return a.size, mean, std, _stub_features(buf)
+
+
 def decode_and_featurize(
     df: DataFrame, stub: bool = True, backend: str | None = None
 ) -> DataFrame:
-    """mapInPandas decode + feature-extraction stage.
+    """Decode + feature-extraction stage.
 
     ``stub=False`` is the REAL image path: sniff-decode PNG/JPEG/BMP/GIF
     (operators/codec_backend — PIL fast path off-sandbox, pure-numpy
     here), features = an 8-dim 4x2 grayscale thumbnail (bilinear),
-    byte_mean/std over the DECODED pixels. Undecodable payloads yield
-    null metrics (poison-pill). The default stub path derives
-    deterministic pseudo-features from the raw bytes for payload-agnostic
-    plumbing demos; both share schema, batching, and partitioning.
-    ``backend`` pins the codec backend ('numpy'/'pil') regardless of the
-    worker environment — graded queries pin 'numpy' so their oracles
-    hold on PIL-equipped deployments too."""
+    byte_mean/std over the DECODED pixels. Undecodable payloads keep
+    n_bytes and yield null metrics (poison-pill). The default stub path
+    derives deterministic pseudo-features from the raw bytes for
+    payload-agnostic plumbing demos; both share schema, batching, and
+    partitioning. ``backend`` pins the codec backend ('numpy'/'pil')
+    regardless of the worker environment — graded queries pin 'numpy'
+    so their oracles hold on PIL-equipped deployments too."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not stub:
-                from sdc_spark.operators.codec_backend import (
-                    bilinear_resize,
-                    decode_image_pixels,
-                )
+    def featurize(buf: bytes) -> tuple:
+        try:
+            px = decode_image_pixels(buf, force=backend)
+        except NotImplementedError:
+            raise
+        except Exception:  # noqa: BLE001 — poison pill that keeps n_bytes
+            return len(buf), None, None, None
+        gray = px.astype(np.float64).mean(axis=-1)
+        thumb = bilinear_resize(gray, 4, 2).reshape(-1).astype(np.float32)
+        return len(buf), float(gray.mean()), float(gray.std()), thumb
 
-                ids, nb, bm, bs, ft = [], [], [], [], []
-                for i, buf in zip(pdf["id"], pdf["content"]):
-                    ids.append(i)
-                    nb.append(len(buf))
-                    try:
-                        px = decode_image_pixels(
-                            bytes(buf), force=backend
-                        ).astype(np.float64)
-                        gray = px.mean(axis=-1)
-                        bm.append(float(gray.mean()))
-                        bs.append(float(gray.std()))
-                        ft.append(
-                            bilinear_resize(gray, 4, 2)
-                            .reshape(-1)
-                            .astype(np.float32)
-                        )
-                    except Exception:  # noqa: BLE001 — poison pill
-                        bm.append(None)
-                        bs.append(None)
-                        ft.append(None)
-                yield pd.DataFrame(
-                    {
-                        "id": pd.Series(ids, dtype="int64"),
-                        "n_bytes": pd.Series(nb, dtype="int64"),
-                        "byte_mean": pd.Series(bm, dtype="float64"),
-                        "byte_std": pd.Series(bs, dtype="float64"),
-                        "feat": ft,
-                    }
-                )
-                continue
-            content = pdf["content"]
-            n_bytes = content.map(len)
-            feats = content.map(_stub_features)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "n_bytes": n_bytes.astype("int64"),
-                    "byte_mean": content.map(
-                        lambda b: float(np.frombuffer(b, dtype=np.uint8).mean()) if b else 0.0
-                    ),
-                    "byte_std": content.map(
-                        lambda b: float(np.frombuffer(b, dtype=np.uint8).std()) if b else 0.0
-                    ),
-                    "feat": feats,
-                }
-            )
-
-    return df.mapInPandas(run, FEATURE_SCHEMA)
+    return _stage(df, _byte_features if stub else featurize, FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = "id long, width int, height int, content binary"
@@ -154,7 +148,7 @@ def resize_images(
     stub: bool = True,
     backend: str | None = None,
 ) -> DataFrame:
-    """mapInPandas image-resize stage over {id, content, meta} rows.
+    """Image-resize stage over {id, content, meta} rows.
 
     ``stub=False`` is the REAL path: sniff-decode the payload (PNG/JPEG/
     BMP/GIF via operators/codec_backend — PIL when present, pure-numpy
@@ -166,56 +160,19 @@ def resize_images(
     mode (a deterministic nearest-index gather to width*height bytes) for
     pipelines whose binary column is not a raster image — the multimodal
     plumbing demo over text-bytes payloads uses this."""
+    target = width * height
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        target = width * height
-        for pdf in batches:
-            if not stub:
-                from sdc_spark.operators.codec_backend import (
-                    decode_image_pixels,
-                    resize_pixels,
-                )
+    def resample(buf: bytes) -> tuple:
+        a = np.frombuffer(buf, dtype=np.uint8)
+        if a.size == 0:
+            return width, height, bytes(target)
+        return width, height, a[(np.arange(target) * a.size) // target].tobytes()
 
-                ids, ws, hs, outs = [], [], [], []
-                for i, buf in zip(pdf["id"], pdf["content"]):
-                    ids.append(i)
-                    try:
-                        px = decode_image_pixels(bytes(buf))
-                        out = resize_pixels(px, width, height, force=backend)
-                        outs.append(encode_png(out))
-                        ws.append(width)
-                        hs.append(height)
-                    except Exception:  # noqa: BLE001 — poison pill
-                        outs.append(None)
-                        ws.append(None)
-                        hs.append(None)
-                yield pd.DataFrame(
-                    {
-                        "id": pd.Series(ids, dtype="int64"),
-                        "width": pd.Series(ws, dtype="Int32"),
-                        "height": pd.Series(hs, dtype="Int32"),
-                        "content": outs,
-                    }
-                )
-                continue
+    def resize(buf: bytes) -> tuple:
+        px = resize_pixels(decode_image_pixels(buf), width, height, force=backend)
+        return width, height, encode_png(px)
 
-            def resample(buf: bytes) -> bytes:
-                a = np.frombuffer(buf, dtype=np.uint8)
-                if a.size == 0:
-                    return bytes(target)
-                idx = (np.arange(target) * a.size) // target
-                return a[idx].tobytes()
-
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "width": np.full(len(pdf), width, dtype=np.int32),
-                    "height": np.full(len(pdf), height, dtype=np.int32),
-                    "content": pdf["content"].map(resample),
-                }
-            )
-
-    return df.mapInPandas(run, RESIZE_SCHEMA)
+    return _stage(df, resample if stub else resize, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = "id long, frame_idx int, frame binary"
@@ -228,9 +185,9 @@ def sample_frames(
     stub: bool = True,
     backend: str | None = None,
 ) -> DataFrame:
-    """mapInPandas video frame-sampling stage: one output row per sampled
-    frame (row explosion happens INSIDE the Arrow batch, not via a Python
-    UDF per row).
+    """Video frame-sampling stage: one output row per sampled frame (the
+    row explosion happens INSIDE the Arrow batch, not via a Python UDF
+    per row).
 
     ``stub=False`` is the REAL path, routed through
     operators/codec_backend.iter_video_luma: pyav (ffmpeg) decodes any
@@ -239,71 +196,43 @@ def sample_frames(
     is needed). Takes n_frames evenly spaced frames, emits each frame's
     luma plane (at most frame_bytes bytes). Compressed containers with
     NO pyav still raise NotImplementedError: silently emitting garbage
-    would be worse than failing loudly. ``backend`` pins a decoder —
-    the graded query pins 'numpy'. The default stub treats the payload
-    as a concatenation of equal 'frames' and takes n_frames
-    evenly-spaced slices, preserving the real operator's fan-out shape
-    (id multiplicity, frame ordering, bounded frame size)."""
-    from sdc_spark.operators.codec_backend import iter_video_luma
+    would be worse than failing loudly. A malformed Y4M payload yields
+    one null row (poison pill). ``backend`` pins a decoder — the graded
+    query pins 'numpy'. The default stub treats the payload as a
+    concatenation of equal 'frames' and takes n_frames evenly-spaced
+    slices, preserving the real operator's fan-out shape (id
+    multiplicity, frame ordering, bounded frame size)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not stub:
-                ids, idxs, frames = [], [], []
-                for i, buf in zip(pdf["id"], pdf["content"]):
-                    planes = list(iter_video_luma(bytes(buf), force=backend))
-                    n = len(planes)
-                    if n == 0:
-                        continue
-                    # denominator uses the EMITTED count (min(n_frames, n)),
-                    # not n_frames: with n_frames-1 a 2-frame clip at
-                    # n_frames=3 would map both picks to frame 0 and drop
-                    # the last frame entirely
-                    m = min(n_frames, n)
-                    picks = sorted(
-                        {(k * (n - 1)) // max(m - 1, 1) for k in range(m)}
-                    )
-                    for k, fi in enumerate(picks):
-                        ids.append(i)
-                        idxs.append(k)
-                        frames.append(
-                            planes[fi].astype(np.uint8).tobytes()[:frame_bytes]
-                        )
-                yield pd.DataFrame(
-                    {
-                        "id": pd.Series(ids, dtype="int64"),
-                        "frame_idx": pd.Series(idxs, dtype="int32"),
-                        "frame": frames,
-                    }
-                )
-                continue
-            ids, idxs, frames = [], [], []
-            for i, buf in zip(pdf["id"], pdf["content"]):
-                a = np.frombuffer(buf, dtype=np.uint8)
-                for k in range(n_frames):
-                    start = (k * max(a.size - frame_bytes, 0)) // max(n_frames - 1, 1)
-                    ids.append(i)
-                    idxs.append(k)
-                    frames.append(a[start : start + frame_bytes].tobytes())
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame": frames,
-                }
-            )
+    def sample(buf: bytes) -> list:
+        planes = list(iter_video_luma(buf, force=backend))
+        n = len(planes)
+        # denominator uses the EMITTED count (min(n_frames, n)), not
+        # n_frames: with n_frames-1 a 2-frame clip at n_frames=3 would map
+        # both picks to frame 0 and drop the last frame entirely
+        m = min(n_frames, n)
+        picks = sorted({(k * (n - 1)) // max(m - 1, 1) for k in range(m)})
+        return [
+            (k, planes[fi].astype(np.uint8).tobytes()[:frame_bytes])
+            for k, fi in enumerate(picks)
+        ]
 
-    return df.mapInPandas(run, FRAME_SCHEMA)
+    def slices(buf: bytes) -> list:
+        a = np.frombuffer(buf, dtype=np.uint8)
+        span, gaps = max(a.size - frame_bytes, 0), max(n_frames - 1, 1)
+        starts = [k * span // gaps for k in range(n_frames)]
+        return [(k, a[s : s + frame_bytes].tobytes()) for k, s in enumerate(starts)]
+
+    return _stage(df, slices if stub else sample, FRAME_SCHEMA)
 
 
 # -- real decoders ----------------------------------------------------------
 # BMP (24-bit uncompressed) and WAV (PCM) are pure header+raster formats
 # needing numpy only; PNG is decodable with stdlib zlib (IDAT inflate) +
-# numpy un-filtering; baseline JPEG with pure-numpy huffman + IDCT
-# (operators/jpeg.py); GIF with pure-Python LZW (operators/gif.py);
-# Y4M video with raw-plane parsing — all REAL decodes. The
-# NotImplementedError stubs above remain only for codecs whose libraries
-# aren't in the container (MP3/H.264, progressive JPEG).
+# numpy un-filtering; baseline and progressive JPEG with pure-numpy
+# huffman + IDCT (operators/jpeg.py); GIF with pure-Python LZW
+# (operators/gif.py); Y4M video with raw-plane parsing — all REAL decodes.
+# Malformed or unsupported payloads yield null rows; none of these stages
+# raises for want of a library.
 
 BMP_SCHEMA = (
     "id long, width int, height int, bpp int, "
@@ -314,50 +243,15 @@ BMP_SCHEMA = (
 def decode_bmp(df: DataFrame) -> DataFrame:
     """Decode 24-bit uncompressed BMP payloads: dimensions from the
     BITMAPINFOHEADER, per-channel means over the raster (rows are
-    4-byte-aligned bottom-up, handled exactly). Arrow-batched mapInPandas;
-    malformed payloads yield null dimensions rather than failing the batch
-    (the poison-pill discipline any 100-TB ingest needs)."""
+    4-byte-aligned bottom-up, handled exactly). Malformed payloads yield
+    null dimensions rather than failing the batch (the poison-pill
+    discipline any 100-TB ingest needs)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("id", "width", "height", "bpp", "mean_r", "mean_g", "mean_b")}
-            for i, buf in zip(pdf["id"], pdf["content"]):
-                out["id"].append(i)
-                try:
-                    a = np.frombuffer(buf, dtype=np.uint8)
-                    if a.size < 54 or bytes(a[:2].tobytes()) != b"BM":
-                        raise ValueError("not BMP")
-                    off = int(np.frombuffer(a[10:14].tobytes(), "<u4")[0])
-                    w = int(np.frombuffer(a[18:22].tobytes(), "<i4")[0])
-                    h = int(np.frombuffer(a[22:26].tobytes(), "<i4")[0])
-                    bpp = int(np.frombuffer(a[28:30].tobytes(), "<u2")[0])
-                    if bpp != 24:
-                        raise ValueError("only 24-bit supported")
-                    stride = (w * 3 + 3) & ~3
-                    px = a[off : off + stride * abs(h)].reshape(abs(h), stride)[:, : w * 3]
-                    px = px.reshape(abs(h), w, 3).astype(np.float64)  # BGR
-                    out["width"].append(w)
-                    out["height"].append(abs(h))
-                    out["bpp"].append(bpp)
-                    out["mean_b"].append(float(px[..., 0].mean()))
-                    out["mean_g"].append(float(px[..., 1].mean()))
-                    out["mean_r"].append(float(px[..., 2].mean()))
-                except Exception:  # noqa: BLE001 — poison-pill rows -> nulls
-                    for k in ("width", "height", "bpp", "mean_r", "mean_g", "mean_b"):
-                        out[k].append(None)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out["id"], dtype="int64"),
-                    "width": pd.Series(out["width"], dtype="Int32"),
-                    "height": pd.Series(out["height"], dtype="Int32"),
-                    "bpp": pd.Series(out["bpp"], dtype="Int32"),
-                    "mean_r": pd.Series(out["mean_r"], dtype="float64"),
-                    "mean_g": pd.Series(out["mean_g"], dtype="float64"),
-                    "mean_b": pd.Series(out["mean_b"], dtype="float64"),
-                }
-            )
+    def bmp_row(buf: bytes) -> tuple:
+        px = bmp_pixels(buf)
+        return (px.shape[1], px.shape[0], 24, *_rgb_means(px))
 
-    return df.mapInPandas(run, BMP_SCHEMA)
+    return _stage(df, bmp_row, BMP_SCHEMA)
 
 
 WAV_SCHEMA = (
@@ -367,94 +261,18 @@ WAV_SCHEMA = (
 
 
 def decode_wav(df: DataFrame) -> DataFrame:
-    """Decode PCM WAV payloads: fmt chunk (rate/channels/depth) + data
-    chunk; RMS amplitude over 16-bit samples. Real decode via numpy;
-    malformed rows become nulls."""
+    """Decode 16-bit PCM WAV payloads: fmt chunk (rate/channels/depth) +
+    data chunk, RMS amplitude over all samples — the numpy floor of
+    operators/codec_backend.decode_audio_samples. Malformed rows become
+    nulls."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = ("sample_rate", "channels", "bit_depth", "n_samples", "duration_s", "rms")
-            out = {k: [] for k in ("id", *cols)}
-            for i, buf in zip(pdf["id"], pdf["content"]):
-                out["id"].append(i)
-                try:
-                    a = np.frombuffer(buf, dtype=np.uint8)
-                    if a.size < 44 or a[:4].tobytes() != b"RIFF" or a[8:12].tobytes() != b"WAVE":
-                        raise ValueError("not WAV")
-                    pos, fmt, data = 12, None, None
-                    while pos + 8 <= a.size:
-                        cid = a[pos : pos + 4].tobytes()
-                        sz = int(np.frombuffer(a[pos + 4 : pos + 8].tobytes(), "<u4")[0])
-                        body = a[pos + 8 : pos + 8 + sz]
-                        if cid == b"fmt ":
-                            fmt = body
-                        elif cid == b"data":
-                            data = body
-                        pos += 8 + sz + (sz & 1)
-                    if fmt is None or data is None:
-                        raise ValueError("missing chunks")
-                    ch = int(np.frombuffer(fmt[2:4].tobytes(), "<u2")[0])
-                    rate = int(np.frombuffer(fmt[4:8].tobytes(), "<u4")[0])
-                    depth = int(np.frombuffer(fmt[14:16].tobytes(), "<u2")[0])
-                    if depth != 16:
-                        raise ValueError("only 16-bit PCM supported")
-                    samples = np.frombuffer(data.tobytes(), "<i2").astype(np.float64)
-                    n = samples.size // ch
-                    out["sample_rate"].append(rate)
-                    out["channels"].append(ch)
-                    out["bit_depth"].append(depth)
-                    out["n_samples"].append(n)
-                    out["duration_s"].append(n / rate if rate else None)
-                    out["rms"].append(float(np.sqrt((samples**2).mean())) if n else 0.0)
-                except Exception:  # noqa: BLE001
-                    for k in cols:
-                        out[k].append(None)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out["id"], dtype="int64"),
-                    "sample_rate": pd.Series(out["sample_rate"], dtype="Int32"),
-                    "channels": pd.Series(out["channels"], dtype="Int32"),
-                    "bit_depth": pd.Series(out["bit_depth"], dtype="Int32"),
-                    "n_samples": pd.Series(out["n_samples"], dtype="Int64"),
-                    "duration_s": pd.Series(out["duration_s"], dtype="float64"),
-                    "rms": pd.Series(out["rms"], dtype="float64"),
-                }
-            )
+    def wav_row(buf: bytes) -> tuple:
+        samples, rate = decode_audio_samples(buf, force="numpy")
+        n, ch = samples.shape
+        rms = float(np.sqrt((samples**2).mean())) if n else 0.0
+        return rate, ch, 16, n, n / rate if rate else None, rms
 
-    return df.mapInPandas(run, WAV_SCHEMA)
-
-
-def decode_and_featurize_arrow(df: DataFrame) -> DataFrame:
-    """mapInArrow twin of ``decode_and_featurize`` (stub path): consumes
-    raw ``pyarrow.RecordBatch``es — no pandas materialization at all, the
-    zero-copy shape for payload-heavy modality columns where even the
-    Arrow→pandas conversion of big binary cells costs real memory.
-    Output matches decode_and_featurize bit-for-bit (tests pin it)."""
-    import pyarrow as pa
-
-    def run(batches):
-        for rb in batches:
-            ids = rb.column(0).to_pylist()
-            contents = rb.column(1).to_pylist()
-            n_bytes, means, stds, feats = [], [], [], []
-            for buf in contents:
-                a = np.frombuffer(buf, dtype=np.uint8) if buf else np.array([], np.uint8)
-                n_bytes.append(len(buf) if buf else 0)
-                means.append(float(a.mean()) if a.size else 0.0)
-                stds.append(float(a.std()) if a.size else 0.0)
-                feats.append([float(x) for x in _stub_features(buf or b"")])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(n_bytes, pa.int64()),
-                    pa.array(means, pa.float64()),
-                    pa.array(stds, pa.float64()),
-                    pa.array(feats, pa.list_(pa.float32())),
-                ],
-                names=["id", "n_bytes", "byte_mean", "byte_std", "feat"],
-            )
-
-    return df.select("id", "content").mapInArrow(run, FEATURE_SCHEMA)
+    return _stage(df, wav_row, WAV_SCHEMA)
 
 
 PNG_SCHEMA = (
@@ -463,137 +281,18 @@ PNG_SCHEMA = (
 )
 
 
-def _png_unfilter(raw: bytes, w: int, h: int, nch: int) -> "np.ndarray":
-    """Reverse the per-row PNG filters (types 0-4) on inflated IDAT bytes.
-    Filters none/sub/up are vectorized (sub via per-channel cumsum mod
-    256); average/paeth fall back to the spec's sequential recurrence."""
-    stride = w * nch
-    rows = np.frombuffer(raw, np.uint8).reshape(h, stride + 1)
-    filters = rows[:, 0]
-    recon = np.zeros((h, stride), np.int32)
-    prior = np.zeros(stride, np.int32)
-    for r in range(h):
-        f = int(filters[r])
-        line = rows[r, 1:].astype(np.int32)
-        if f == 0:
-            rec = line
-        elif f == 1:  # sub: per-channel prefix sum mod 256
-            rec = line
-            for c in range(nch):
-                rec[c::nch] = np.cumsum(rec[c::nch]) & 0xFF
-        elif f == 2:  # up
-            rec = (line + prior) & 0xFF
-        elif f == 3:  # average
-            rec = line
-            for x in range(stride):
-                left = rec[x - nch] if x >= nch else 0
-                rec[x] = (rec[x] + ((left + prior[x]) >> 1)) & 0xFF
-        elif f == 4:  # paeth
-            rec = line
-            for x in range(stride):
-                left = rec[x - nch] if x >= nch else 0
-                up = prior[x]
-                ul = prior[x - nch] if x >= nch else 0
-                p = left + up - ul
-                pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
-                pred = left if (pa <= pb and pa <= pc) else (up if pb <= pc else ul)
-                rec[x] = (rec[x] + pred) & 0xFF
-        else:
-            raise ValueError(f"bad PNG filter {f}")
-        recon[r] = rec
-        prior = recon[r]
-    return recon.astype(np.uint8).reshape(h, w, nch)
-
-
-def _png_decode(buf: bytes) -> tuple:
-    """Parse one PNG: IHDR dims, inflate IDAT (stdlib zlib), un-filter.
-    Supports 8-bit depth, color types 0 (gray) / 2 (RGB) / 4 (gray+A) /
-    6 (RGBA), non-interlaced — the pure-numpy subset; palette and Adam7
-    raise (poison-pill null row)."""
-    import zlib
-
-    if buf[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not PNG")
-    pos, w, h, depth, ctype, interlace, idat = 8, None, None, None, None, 0, []
-    n = len(buf)
-    while pos + 8 <= n:
-        ln = int.from_bytes(buf[pos : pos + 4], "big")
-        cid = buf[pos + 4 : pos + 8]
-        body = buf[pos + 8 : pos + 8 + ln]
-        if cid == b"IHDR":
-            w = int.from_bytes(body[0:4], "big")
-            h = int.from_bytes(body[4:8], "big")
-            depth, ctype, interlace = body[8], body[9], body[12]
-        elif cid == b"IDAT":
-            idat.append(body)
-        elif cid == b"IEND":
-            break
-        pos += 12 + ln  # length + type + body + crc
-    if w is None or not idat:
-        raise ValueError("missing chunks")
-    if depth != 8 or interlace != 0:
-        raise ValueError("only 8-bit non-interlaced supported")
-    nch = {0: 1, 2: 3, 4: 2, 6: 4}.get(ctype)
-    if nch is None:
-        raise ValueError(f"unsupported color type {ctype}")
-    from sdc_spark.operators.codec_backend import backend
-
-    if backend() == "pil":  # native inflate+unfilter; header stays parsed
-        import io as _io
-
-        from PIL import Image as _Image
-
-        arr = np.asarray(
-            _Image.open(_io.BytesIO(buf)).convert("RGB"), dtype=np.uint8
-        )
-        means = tuple(float(arr[..., c].mean()) for c in range(3))
-        return w, h, int(depth), int(ctype), means
-    raw = zlib.decompress(b"".join(idat))
-    if len(raw) != h * (w * nch + 1):
-        raise ValueError("IDAT size mismatch")
-    px = _png_unfilter(raw, w, h, nch)
-    if ctype in (0, 4):  # gray (+alpha): replicate gray into r/g/b
-        g = float(px[..., 0].mean())
-        means = (g, g, g)
-    else:
-        means = tuple(float(px[..., c].mean()) for c in range(3))
-    return w, h, int(depth), int(ctype), means
-
-
 def decode_png(df: DataFrame) -> DataFrame:
     """REAL PNG decode over {id, content} rows — stdlib ``zlib`` IDAT
-    inflate + numpy per-row un-filtering, no PIL. Arrow-batched
-    mapInPandas, embarrassingly parallel; malformed/unsupported payloads
-    yield null metric columns (poison-pill discipline)."""
+    inflate + numpy per-row un-filtering (PIL when importable on the
+    worker), embarrassingly parallel. Supports 8-bit depth, color types
+    0/2/4/6, non-interlaced; malformed/unsupported payloads (palette,
+    Adam7) yield null metric columns (poison-pill discipline)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("width", "height", "bit_depth", "color_type", "mean_r", "mean_g", "mean_b")
-        for pdf in batches:
-            out = {k: [] for k in ("id", *cols)}
-            for i, buf in zip(pdf["id"], pdf["content"]):
-                out["id"].append(i)
-                try:
-                    w, h, depth, ctype, (mr, mg, mb) = _png_decode(bytes(buf))
-                    vals = (w, h, depth, ctype, mr, mg, mb)
-                    for k, v in zip(cols, vals):
-                        out[k].append(v)
-                except Exception:  # noqa: BLE001 — poison-pill rows -> nulls
-                    for k in cols:
-                        out[k].append(None)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out["id"], dtype="int64"),
-                    "width": pd.Series(out["width"], dtype="Int32"),
-                    "height": pd.Series(out["height"], dtype="Int32"),
-                    "bit_depth": pd.Series(out["bit_depth"], dtype="Int32"),
-                    "color_type": pd.Series(out["color_type"], dtype="Int32"),
-                    "mean_r": pd.Series(out["mean_r"], dtype="float64"),
-                    "mean_g": pd.Series(out["mean_g"], dtype="float64"),
-                    "mean_b": pd.Series(out["mean_b"], dtype="float64"),
-                }
-            )
+    def png_row(buf: bytes) -> tuple:
+        w, h, depth, ctype, _nch, _idat = png_info(buf)
+        return (w, h, depth, ctype, *_rgb_means(decode_image_pixels(buf)))
 
-    return df.mapInPandas(run, PNG_SCHEMA)
+    return _stage(df, png_row, PNG_SCHEMA)
 
 
 def encode_png(px: "np.ndarray", filters: "list[int] | None" = None) -> bytes:
@@ -602,9 +301,6 @@ def encode_png(px: "np.ndarray", filters: "list[int] | None" = None) -> bytes:
     0). The forward filters here and the decoder's un-filtering are
     independent transforms, so an encode→decode round-trip is a real
     correctness check, not a tautology."""
-    import struct
-    import zlib
-
     h, w, nch = px.shape
     ctype = {1: 0, 2: 4, 3: 2, 4: 6}[nch]
     filters = filters or [0] * h
@@ -663,65 +359,26 @@ def decode_jpeg(df: DataFrame, backend: str | None = None) -> DataFrame:
     {id, content} rows — pure numpy + stdlib huffman/IDCT
     (operators/jpeg.py) as the floor, PIL (libjpeg) automatically when
     importable on the worker (operators/codec_backend —
-    SDC_CODEC_BACKEND pins either). Arrow-batched mapInPandas,
-    embarrassingly parallel; arithmetic-coded / lossless / malformed
-    payloads yield null metric columns
-    (poison-pill discipline). ``backend`` pins a backend regardless of
-    the environment — the graded query pins 'numpy' because its analytic
-    oracle depends on the pure decoder's exact IDCT rounding, which
-    libjpeg does not reproduce bit-for-bit."""
-    from sdc_spark.operators.codec_backend import backend as _resolve
-    from sdc_spark.operators.jpeg import jpeg_decode
+    SDC_CODEC_BACKEND pins either). Embarrassingly parallel;
+    arithmetic-coded / lossless / malformed payloads yield null metric
+    columns (poison-pill discipline). ``backend`` pins a backend
+    regardless of the environment — the graded query pins 'numpy'
+    because its analytic oracle depends on the pure decoder's exact IDCT
+    rounding, which libjpeg does not reproduce bit-for-bit."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        use_pil = (backend or _resolve()) == "pil"
-        if use_pil:
-            import io as _io
+    def jpeg_row(buf: bytes) -> tuple:
+        if (backend or resolve_backend()) == "pil":
+            from PIL import Image
 
-            from PIL import Image as _Image
-        cols = ("width", "height", "n_components", "mean_r", "mean_g", "mean_b")
-        for pdf in batches:
-            out = {k: [] for k in ("id", *cols)}
-            for i, buf in zip(pdf["id"], pdf["content"]):
-                out["id"].append(i)
-                try:
-                    if use_pil:
-                        im = _Image.open(_io.BytesIO(bytes(buf)))
-                        nc_src = len(im.getbands())
-                        px = np.asarray(im.convert("RGB"), dtype=np.uint8)
-                        h, w = px.shape[:2]
-                        nc = nc_src
-                        means = tuple(
-                            float(px[..., c].mean()) for c in range(3)
-                        )
-                        for k, v in zip(cols, (w, h, nc, *means)):
-                            out[k].append(v)
-                        continue
-                    px = jpeg_decode(bytes(buf))
-                    h, w, nc = px.shape
-                    if nc == 1:
-                        m = float(px[..., 0].mean())
-                        means = (m, m, m)
-                    else:
-                        means = tuple(float(px[..., c].mean()) for c in range(3))
-                    for k, v in zip(cols, (w, h, nc, *means)):
-                        out[k].append(v)
-                except Exception:  # noqa: BLE001 — poison-pill rows -> nulls
-                    for k in cols:
-                        out[k].append(None)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out["id"], dtype="int64"),
-                    "width": pd.Series(out["width"], dtype="Int32"),
-                    "height": pd.Series(out["height"], dtype="Int32"),
-                    "n_components": pd.Series(out["n_components"], dtype="Int32"),
-                    "mean_r": pd.Series(out["mean_r"], dtype="float64"),
-                    "mean_g": pd.Series(out["mean_g"], dtype="float64"),
-                    "mean_b": pd.Series(out["mean_b"], dtype="float64"),
-                }
-            )
+            im = Image.open(io.BytesIO(buf))
+            nc = len(im.getbands())
+            px = np.asarray(im.convert("RGB"), dtype=np.uint8)
+        else:
+            px = jpeg_decode(buf)
+            nc = px.shape[2]
+        return (px.shape[1], px.shape[0], nc, *_rgb_means(px))
 
-    return df.mapInPandas(run, JPEG_SCHEMA)
+    return _stage(df, jpeg_row, JPEG_SCHEMA)
 
 
 AUDIO_FEAT_SCHEMA = (
@@ -737,52 +394,28 @@ def audio_features(df: DataFrame, backend: str | None = None) -> DataFrame:
     Decode routes through operators/codec_backend.decode_audio_samples:
     soundfile (libsndfile — WAV/FLAC/OGG) when importable on the worker,
     else the pure-numpy 16-bit-PCM-WAV floor. First channel of
-    multi-channel. Arrow-batched mapInPandas, embarrassingly parallel;
-    malformed rows -> nulls. ``backend`` pins a decoder — the graded
-    query pins 'numpy' so its analytic oracle holds on a
-    soundfile-equipped deployment."""
-    from sdc_spark.operators.codec_backend import decode_audio_samples
+    multi-channel. Embarrassingly parallel; malformed rows -> nulls.
+    ``backend`` pins a decoder — the graded query pins 'numpy' so its
+    analytic oracle holds on a soundfile-equipped deployment."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("sample_rate", "n_samples", "zcr", "spectral_centroid_hz", "dominant_freq_hz", "rms")
-        for pdf in batches:
-            out = {k: [] for k in ("id", *cols)}
-            for i, buf in zip(pdf["id"], pdf["content"]):
-                out["id"].append(i)
-                try:
-                    samples, rate = decode_audio_samples(bytes(buf), force=backend)
-                    x = samples[:, 0]  # first channel
-                    n = x.size
-                    if n < 2:
-                        raise ValueError("too short")
-                    # zero-crossing rate: fraction of adjacent sign flips
-                    s = np.signbit(x)
-                    zcr = float(np.count_nonzero(s[1:] != s[:-1])) / (n - 1)
-                    spec = np.abs(np.fft.rfft(x))
-                    freqs = np.fft.rfftfreq(n, d=1.0 / rate)
-                    power = spec[1:]  # drop DC for centroid/dominant
-                    tot = power.sum()
-                    cent = float((freqs[1:] * power).sum() / tot) if tot > 0 else 0.0
-                    dom = float(freqs[1:][int(np.argmax(power))]) if tot > 0 else 0.0
-                    rms = float(np.sqrt((x**2).mean()))
-                    for k, v in zip(cols, (rate, n, zcr, cent, dom, rms)):
-                        out[k].append(v)
-                except Exception:  # noqa: BLE001 — poison-pill rows -> nulls
-                    for k in cols:
-                        out[k].append(None)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out["id"], dtype="int64"),
-                    "sample_rate": pd.Series(out["sample_rate"], dtype="Int32"),
-                    "n_samples": pd.Series(out["n_samples"], dtype="Int64"),
-                    "zcr": pd.Series(out["zcr"], dtype="float64"),
-                    "spectral_centroid_hz": pd.Series(out["spectral_centroid_hz"], dtype="float64"),
-                    "dominant_freq_hz": pd.Series(out["dominant_freq_hz"], dtype="float64"),
-                    "rms": pd.Series(out["rms"], dtype="float64"),
-                }
-            )
+    def features(buf: bytes) -> tuple:
+        samples, rate = decode_audio_samples(buf, force=backend)
+        x = samples[:, 0]  # first channel
+        n = x.size
+        if n < 2:
+            raise ValueError("too short")
+        # zero-crossing rate: fraction of adjacent sign flips
+        s = np.signbit(x)
+        zcr = float(np.count_nonzero(s[1:] != s[:-1])) / (n - 1)
+        spec = np.abs(np.fft.rfft(x))
+        freqs = np.fft.rfftfreq(n, d=1.0 / rate)
+        power = spec[1:]  # drop DC for centroid/dominant
+        tot = power.sum()
+        cent = float((freqs[1:] * power).sum() / tot) if tot > 0 else 0.0
+        dom = float(freqs[1:][int(np.argmax(power))]) if tot > 0 else 0.0
+        return rate, n, zcr, cent, dom, float(np.sqrt((x**2).mean()))
 
-    return df.mapInPandas(run, AUDIO_FEAT_SCHEMA)
+    return _stage(df, features, AUDIO_FEAT_SCHEMA)
 
 
 def phash64(px: "np.ndarray") -> int:
@@ -830,75 +463,19 @@ def image_phash(df: DataFrame, backend: str | None = None) -> DataFrame:
     ``backend`` pins the codec backend — the graded query pins 'numpy'
     (phash bits flip with sub-LSB decode differences, so the oracle is
     only exact under one decoder)."""
-    from sdc_spark.operators.codec_backend import decode_image_pixels
 
-    _decode_any = decode_image_pixels  # sniff + backend routing (PIL/numpy)
+    def phash_row(buf: bytes) -> tuple:
+        return (phash64(decode_image_pixels(buf, force=backend)),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hs = [], []
-            for i, buf in zip(pdf["id"], pdf["content"]):
-                ids.append(i)
-                try:
-                    hs.append(phash64(_decode_any(bytes(buf), force=backend)))
-                except Exception:  # noqa: BLE001
-                    hs.append(None)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "phash": pd.Series(hs, dtype="Int64"),
-                }
-            )
-
-    return df.mapInPandas(run, PHASH_SCHEMA)
-
-
-def _png_pixels(buf: bytes) -> np.ndarray:
-    """Full-pixel PNG decode (shared parse with _png_decode)."""
-    import zlib
-
-    pos, w, h, depth, ctype, interlace, idat = 8, None, None, None, None, 0, []
-    n = len(buf)
-    while pos + 8 <= n:
-        ln = int.from_bytes(buf[pos : pos + 4], "big")
-        cid = buf[pos + 4 : pos + 8]
-        body = buf[pos + 8 : pos + 8 + ln]
-        if cid == b"IHDR":
-            w = int.from_bytes(body[0:4], "big")
-            h = int.from_bytes(body[4:8], "big")
-            depth, ctype, interlace = body[8], body[9], body[12]
-        elif cid == b"IDAT":
-            idat.append(body)
-        elif cid == b"IEND":
-            break
-        pos += 12 + ln
-    if w is None or not idat or depth != 8 or interlace != 0:
-        raise ValueError("unsupported PNG")
-    nch = {0: 1, 2: 3, 4: 2, 6: 4}[ctype]
-    raw = zlib.decompress(b"".join(idat))
-    return _png_unfilter(raw, w, h, nch)[..., : min(nch, 3)]
-
-
-def _bmp_pixels(buf: bytes) -> np.ndarray:
-    a = np.frombuffer(buf, dtype=np.uint8)
-    off = int(np.frombuffer(a[10:14].tobytes(), "<u4")[0])
-    w = int(np.frombuffer(a[18:22].tobytes(), "<i4")[0])
-    h = int(np.frombuffer(a[22:26].tobytes(), "<i4")[0])
-    bpp = int(np.frombuffer(a[28:30].tobytes(), "<u2")[0])
-    if bpp != 24:
-        raise ValueError("only 24-bit BMP")
-    stride = (w * 3 + 3) & ~3
-    px = a[off : off + stride * abs(h)].reshape(abs(h), stride)[:, : w * 3]
-    px = px.reshape(abs(h), w, 3)[::-1]  # bottom-up -> top-down, BGR
-    return px[..., ::-1]  # -> RGB
+    return _stage(df, phash_row, PHASH_SCHEMA)
 
 
 # -- video: YUV4MPEG2 (Y4M) ------------------------------------------------
 # Y4M is the uncompressed video interchange container (raw YUV planes with
 # a one-line ASCII header — the format ffmpeg/mjpegtools pipe between
 # stages), so frame sampling over it is a REAL video decode path that
-# needs numpy only. The ffmpeg stub above remains solely for compressed
-# codecs (H.264/VP9).
+# needs numpy only (operators/codec_backend.y4m_frames). Compressed codecs
+# (H.264/VP9) need pyav.
 
 VIDEO_FEAT_SCHEMA = (
     "id long, frame_idx int, n_frames int, width int, height int, "
@@ -930,104 +507,36 @@ def encode_y4m(
     return b"".join(out)
 
 
-def _y4m_iter_frames(buf: bytes):
-    """Parse a Y4M payload; yield (w, h, mono, y, u, v) numpy planes per
-    frame. Supports Cmono and the C420* family (420jpeg/420mpeg2/420paldv
-    share plane sizes); C absent defaults to 420jpeg per spec."""
-    nl = buf.index(b"\n")
-    head = buf[:nl].decode("ascii", "replace").split(" ")
-    if head[0] != "YUV4MPEG2":
-        raise ValueError("not Y4M")
-    w = h = None
-    cs = "420jpeg"
-    for p in head[1:]:
-        if p.startswith("W"):
-            w = int(p[1:])
-        elif p.startswith("H"):
-            h = int(p[1:])
-        elif p.startswith("C"):
-            cs = p[1:]
-    if not w or not h:
-        raise ValueError("missing dimensions")
-    mono = cs == "mono"
-    if not mono and not cs.startswith("420"):
-        raise ValueError(f"unsupported colorspace {cs}")
-    ysz = w * h
-    csz = 0 if mono else (w // 2) * (h // 2)
-    a = np.frombuffer(buf, dtype=np.uint8)
-    pos = nl + 1
-    while pos < len(a):
-        fnl = buf.index(b"\n", pos)
-        if buf[pos : pos + 5] != b"FRAME":
-            raise ValueError("bad frame marker")
-        pos = fnl + 1
-        y = a[pos : pos + ysz].reshape(h, w)
-        pos += ysz
-        u = v = None
-        if not mono:
-            u = a[pos : pos + csz].reshape(h // 2, w // 2)
-            v = a[pos + csz : pos + 2 * csz].reshape(h // 2, w // 2)
-            pos += 2 * csz
-        yield w, h, mono, y, u, v
-
-
 def video_frame_features(df: DataFrame, stride: int = 2) -> DataFrame:
     """REAL video frame sampling + per-frame features over Y4M payloads:
     every ``stride``-th frame's luma/chroma means plus ``delta_prev`` —
     the mean-luma jump vs the previously SAMPLED frame (the standard
     cheap scene-change signal a video curation pipeline buckets clips
     by). One output row per sampled frame; the explosion happens inside
-    the Arrow batch (mapInPandas), never per-row Python.
+    the Arrow batch, never per-row Python UDFs.
 
     Scale: payloads stream through executors partition-parallel with no
     shuffle; only (id, frame_idx, 7 scalars) leave the stage, so a
     100-TB clip corpus reduces to a few GB of per-frame stats.
     Reference parity: the reference has no video surface — this extends
     its typed-column model (SURVEY §1) to the modality a multimodal
-    training pipeline needs. Malformed payloads -> null feature rows."""
+    training pipeline needs. Malformed payloads -> one null feature row."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("frame_idx", "n_frames", "width", "height", "mean_y", "mean_u", "mean_v", "delta_prev")
-        for pdf in batches:
-            out = {k: [] for k in ("id", *cols)}
-            for i, buf in zip(pdf["id"], pdf["content"]):
-                try:
-                    frames = list(_y4m_iter_frames(bytes(buf)))
-                    if not frames:
-                        raise ValueError("no frames")
-                    prev_y = None
-                    for k in range(0, len(frames), stride):
-                        w, h, mono, y, u, v = frames[k]
-                        my = float(y.mean())
-                        out["id"].append(i)
-                        out["frame_idx"].append(k)
-                        out["n_frames"].append(len(frames))
-                        out["width"].append(w)
-                        out["height"].append(h)
-                        out["mean_y"].append(my)
-                        out["mean_u"].append(None if mono else float(u.mean()))
-                        out["mean_v"].append(None if mono else float(v.mean()))
-                        out["delta_prev"].append(None if prev_y is None else abs(my - prev_y))
-                        prev_y = my
-                except Exception:  # noqa: BLE001 — poison-pill rows -> nulls
-                    out["id"].append(i)
-                    for k in cols:
-                        out[k].append(None)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out["id"], dtype="int64"),
-                    "frame_idx": pd.Series(out["frame_idx"], dtype="Int32"),
-                    "n_frames": pd.Series(out["n_frames"], dtype="Int32"),
-                    "width": pd.Series(out["width"], dtype="Int32"),
-                    "height": pd.Series(out["height"], dtype="Int32"),
-                    "mean_y": pd.Series(out["mean_y"], dtype="float64"),
-                    "mean_u": pd.Series(out["mean_u"], dtype="float64"),
-                    "mean_v": pd.Series(out["mean_v"], dtype="float64"),
-                    "delta_prev": pd.Series(out["delta_prev"], dtype="float64"),
-                }
-            )
+    def frame_rows(buf: bytes) -> list:
+        frames = list(y4m_frames(buf))
+        if not frames:
+            raise ValueError("no frames")
+        out, prev_y = [], None
+        for k in range(0, len(frames), stride):
+            w, h, mono, y, u, v = frames[k]
+            my = float(y.mean())
+            chroma = (None, None) if mono else (float(u.mean()), float(v.mean()))
+            delta = None if prev_y is None else abs(my - prev_y)
+            out.append((k, len(frames), w, h, my, *chroma, delta))
+            prev_y = my
+        return out
 
-    return df.mapInPandas(run, VIDEO_FEAT_SCHEMA)
+    return _stage(df, frame_rows, VIDEO_FEAT_SCHEMA)
 
 
 GIF_SCHEMA = (
@@ -1040,35 +549,12 @@ def decode_gif(df: DataFrame) -> DataFrame:
     """REAL GIF decode over {id, content} rows — pure-Python LZW
     (variable-width codes, dictionary growth, deferred clear) + numpy
     palette mapping, every frame of animated GIFs composited and
-    averaged (operators/gif.py). Arrow-batched mapInPandas,
-    embarrassingly parallel; malformed payloads yield null metrics."""
-    from sdc_spark.operators.gif import gif_decode
+    averaged (operators/gif.py). Embarrassingly parallel; malformed
+    payloads yield null metrics."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("width", "height", "n_frames", "mean_r", "mean_g", "mean_b")
-        for pdf in batches:
-            out = {k: [] for k in ("id", *cols)}
-            for i, buf in zip(pdf["id"], pdf["content"]):
-                out["id"].append(i)
-                try:
-                    w, h, frames = gif_decode(bytes(buf))
-                    px = np.stack(frames).reshape(-1, 3).astype(np.float64)
-                    vals = (w, h, len(frames), *px.mean(axis=0))
-                    for k, v in zip(cols, vals):
-                        out[k].append(v)
-                except Exception:  # noqa: BLE001 — poison-pill rows -> nulls
-                    for k in cols:
-                        out[k].append(None)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(out["id"], dtype="int64"),
-                    "width": pd.Series(out["width"], dtype="Int32"),
-                    "height": pd.Series(out["height"], dtype="Int32"),
-                    "n_frames": pd.Series(out["n_frames"], dtype="Int32"),
-                    "mean_r": pd.Series(out["mean_r"], dtype="float64"),
-                    "mean_g": pd.Series(out["mean_g"], dtype="float64"),
-                    "mean_b": pd.Series(out["mean_b"], dtype="float64"),
-                }
-            )
+    def gif_row(buf: bytes) -> tuple:
+        w, h, frames = gif_decode(buf)
+        px = np.stack(frames).reshape(-1, 3).astype(np.float64)
+        return (w, h, len(frames), *px.mean(axis=0))
 
-    return df.mapInPandas(run, GIF_SCHEMA)
+    return _stage(df, gif_row, GIF_SCHEMA)

@@ -19,10 +19,9 @@ a single-node array; this is their distributed re-expression.
 from __future__ import annotations
 
 import functools
-import sys
 from collections.abc import Callable, Sequence
 
-from pyspark import SparkContext, cloudpickle
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -36,11 +35,6 @@ CTX = "__ctx__"
 
 # sampled rows per pid for the bounds, as Spark's RangePartitioner
 _SAMPLE_PER_PID = 20
-
-# The Arrow passes ship closures that call this module's helpers (the
-# decay kernels); pickle those by value so executor Python workers never
-# have to import sdc_spark.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _cols(order_cols: Sequence[str | Column]) -> list[Column]:

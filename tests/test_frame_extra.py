@@ -1862,3 +1862,37 @@ def test_series_and_one_column_frame_match_pandas(nan_column, case):
             )
         else:
             assert got == pytest.approx(exp)
+
+
+def test_elementwise_series_ops_keep_sorted_order(nan_column):
+    """abs and a scalar op after sort_values keep the sorted row order
+    (the carried rank), as pandas does."""
+    sf, pdf = nan_column
+    for fn in (lambda s: s.sort_values().abs(), lambda s: s.sort_values() * 2):
+        pd.testing.assert_series_equal(
+            fn(sf["a"]).to_pandas(), fn(pdf["a"]),
+            check_dtype=False, check_names=False, check_index_type=False,
+        )
+
+
+def test_groupby_aggregates_skip_nan_values(spark):
+    """Frame and Series groupby aggregates skip NaN values made by
+    computation, as pandas does: group 1 holds one NaN and one 1.0."""
+    from pyspark.sql import functions as F
+
+    pdf = pd.DataFrame({"k": [1, 1, 2, 2, 2], "x": [1.0, 9.0, 2.0, 3.0, 2.0]})
+    pdf["a"] = pdf["x"].where(pdf["x"] <= 5)
+    a = F.when(F.col("x") <= 5, F.col("x")).otherwise(F.lit(float("nan")))
+    sf = from_pandas(spark, pdf[["k", "x"]]).assign(a=a)[["k", "a"]]
+    pdf = pdf[["k", "a"]]
+    for agg in ("sum", "count", "mean", "min", "max", "std", "median", "prod"):
+        got = getattr(sf.groupby("k"), agg)().to_pandas()
+        exp = getattr(pdf.groupby("k"), agg)()
+        pd.testing.assert_frame_equal(
+            got, exp, check_dtype=False, check_names=False, check_index_type=False, obj=agg
+        )
+        got = getattr(sf["a"].groupby(sf["k"]), agg)().to_pandas()
+        exp = getattr(pdf["a"].groupby(pdf["k"]), agg)()
+        pd.testing.assert_series_equal(
+            got, exp, check_dtype=False, check_names=False, check_index_type=False, obj=agg
+        )

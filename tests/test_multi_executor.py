@@ -6,8 +6,11 @@ cluster-durable mode — runs green on a REAL 2-executor cluster
 (local-cluster[2,2,2048]: two separate executor JVMs with their own
 block managers), not just local[32]'s single JVM.
 
-The pytest session already owns a local[32] SparkContext, so the cluster
-session runs in a subprocess (tools/multi_executor_smoke.py)."""
+The pytest session already owns a local SparkContext, so the cluster
+session runs in a subprocess (tools/multi_executor_smoke.py). It starts
+in a temporary cwd with PYTHONPATH unset, so executor Python workers can
+reach sdc_spark only through the closures pickled by value, as on a real
+cluster."""
 
 from __future__ import annotations
 
@@ -18,13 +21,15 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_local_cluster_smoke():
+def test_local_cluster_smoke(tmp_path):
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "multi_executor_smoke.py")],
         capture_output=True,
         text=True,
         timeout=540,
-        cwd=REPO,
+        cwd=tmp_path,
+        env=env,
     )
     out = proc.stdout + proc.stderr
     assert proc.returncode == 0, out[-4000:]

@@ -9,9 +9,14 @@ What it pins, and why these specifically:
 - the distributed total-order machinery (``with_position`` / ``scan``,
   its ``last`` fill included / ``scan_ewm``): its P-row per-partition offset
   tables are computed on executors and BROADCAST back — a single-JVM run
-  cannot tell a real broadcast from a local reference — and the decay
-  scan's Arrow passes call module-level ``order`` helpers, so executor
-  Python workers must import ``sdc_spark`` (``spark.executorEnv.PYTHONPATH``);
+  cannot tell a real broadcast from a local reference;
+- the Arrow stages whose closures call module-level ``sdc_spark``
+  functions (``scan_ewm``'s decay passes, the multimodal decoders through
+  ``arrow.map_rows``, the ``npbin`` Python data source), five of them as
+  whole queries checked against their DuckDB oracles at sf0.001. The
+  executors get no ``PYTHONPATH`` and their Python workers start outside
+  the repo, as on a real cluster: ``sdc_spark`` registers itself with
+  cloudpickle by value, so no worker ever imports it;
 - a full persisted posting-index lifecycle (write → serve → append →
   serve → tombstone delete → serve → compact → serve), with the index
   ``path_root`` on a directory every executor can reach. On this
@@ -22,9 +27,10 @@ What it pins, and why these specifically:
   for ``truncate=True``), the long-running-cluster configuration,
   exercised across executor boundaries instead of local[N].
 
-Run directly (``python tools/multi_executor_smoke.py``) or through
-tests/test_multi_executor.py, which subprocesses it (the pytest session
-already owns a local[32] JVM; a second master needs its own).
+Run directly (``python tools/multi_executor_smoke.py``, from any cwd) or
+through tests/test_multi_executor.py, which subprocesses it from a
+temporary cwd with ``PYTHONPATH`` unset (the pytest session already owns
+a local JVM; a second master needs its own).
 
 Prints ``MULTI_EXECUTOR_SMOKE_OK`` on success; any assertion raises.
 """
@@ -42,7 +48,6 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     work = tempfile.mkdtemp(prefix="sdc_mx_smoke_")
     spark = (
         SparkSession.builder.master("local-cluster[2,2,2048]")
@@ -53,7 +58,6 @@ def main() -> None:
         # cluster-durable materialization: persist + reliable checkpoints
         .config("spark.sdc.materialize.mode", "persist")
         .config("spark.sdc.checkpoint.dir", f"{work}/checkpoints")
-        .config("spark.executorEnv.PYTHONPATH", repo)
         .getOrCreate()
     )
     try:
@@ -71,6 +75,7 @@ def main() -> None:
         assert n_exec >= 3, f"expected 2 executors + driver, saw {n_exec}"
 
         _order_machinery(spark)
+        _arrow_queries(spark)
         _posting_lifecycle(spark, f"{work}/postidx")
         print("MULTI_EXECUTOR_SMOKE_OK")
     finally:
@@ -138,6 +143,41 @@ def _order_machinery(spark) -> None:
     pd.testing.assert_series_equal(
         got_ewm, exp_ewm, check_names=False, check_index=False, rtol=1e-9
     )
+
+
+# queries whose Arrow closures call module-level sdc_spark functions: the
+# multimodal row stages and payload synthesizers, and the npbin data source
+ARROW_QUERIES = (
+    "multimodal_decode_png",
+    "multimodal_resize",
+    "dedup_image_phash",
+    "multimodal_video_frames",
+    "src_np_datasource",
+)
+
+
+def _arrow_queries(spark) -> None:
+    """Each of ARROW_QUERIES against its DuckDB oracle (the correctness
+    gate's canonical value hash)."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from sdc_spark.sources.readers import TABLES, table_path
+
+    # after the package: check_correctness puts its own checkout first on
+    # sys.path, and this checkout's modules are already imported
+    from check_correctness import canonicalize, frame_hash
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SMOKE_SF", "/root/testdata/sf0.001")
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')")
+    for name in ARROW_QUERIES:
+        got = canonicalize(queries[name](spark, sf_dir).toPandas())
+        want = canonicalize(con.sql(oracles[name]).df())
+        assert list(got.columns) == list(want.columns), f"{name}: columns"
+        assert frame_hash(got) == frame_hash(want), f"{name}: values differ from the oracle"
 
 
 def _posting_lifecycle(spark, path_root: str) -> None:
